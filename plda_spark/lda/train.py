@@ -1,43 +1,62 @@
 """Distributed LDA training — AD-LDA on Spark (the reference's mpi_lda on
 DataFrames).
 
-Per iteration, exactly like ``mpi_lda.cc:213-235``:
+One driver loop, shaped like ``mpi_lda.cc:213-235``: each iteration every
+partition sweeps its documents against a local copy of the model, then the
+partitions' counts are summed into the next model (the reference's
+AllReduce).  Deployments differ only in how the model moves between those
+two steps, which is a private *exchange* with three implementations:
 
-1. broadcast the current V×K model to all partitions (the reference
-   replicates it per rank, ``README.md:125``);
-2. each partition sweeps its documents sequentially with a *local* model
-   copy (``applyInPandas``-free: a ``mapInPandas`` pass — no shuffle, the
-   packed corpus keeps its hash partitioning across iterations);
-3. rebuild the global model from the new assignments with Spark's
-   partial+final aggregation — the ``groupBy(word_id, topic).count``
-   shuffle is the moral equivalent of the reference's chunked
-   SUM-AllReduce (``mpi_lda.cc:58-110``); map-side combine bounds the
-   shuffle at ≤ V·K rows per partition regardless of corpus size;
-4. collect (≤ V·K rows) and re-broadcast.
+- ``broadcast`` (``model_mode='broadcast'``): the driver holds n_wk and
+  broadcasts it each iteration (the reference replicates it per rank,
+  ``README.md:125``).  The sweep is a shuffle-free ``mapInPandas`` over the
+  hash-partitioned assignments, and the reduce collects one sparse count
+  row per partition — pre-summed by a shuffle once P ≥ 256, the tree end of
+  the reference's recursive AllReduce (``mpi_lda.cc:58-92``).
+- ``words`` (``model_mode='join'``): the model is a ``(word_id, cnts)``
+  DataFrame that never touches the driver.  Each partition receives only
+  the rows for the words it contains (an equi-join with a persisted
+  ``(pid, word_id)`` table) cogrouped with its documents; the reduce is a
+  distributed groupBy + pivot.
+- ``chunks`` (``model_mode='join'``): the model is C dense binary chunk rows
+  that every partition receives through a pid × chunk cross join; the
+  reduce is a per-chunk buffer sum.  ``join_exchange='auto'`` picks it when
+  partitions see most of the vocabulary and the dense block is affordable
+  (:func:`_resolve_join_exchange`).
+
+The three share one z-init, one sweep core, one sparse count payload and one
+checkpoint format, and they run the same Markov chain: a document belongs
+to pid = pmod(hash(doc_id), P), each pid takes its documents in doc_id
+order, RNG streams are keyed by (seed, pid, iteration), and each
+document's likelihood is scored against the iteration's input model before
+the sweep (``lda.cc:128-136``).  So the exchanges agree bit for bit on the
+counts and on the likelihoods, and a run resumed from a checkpoint equals
+an uninterrupted one.
 
 Within an iteration cross-partition counts are one iteration stale —
 precisely the AD-LDA relaxation the reference itself makes across MPI
 ranks (Newman et al., NIPS 2007; ``README.md:267``).
 
 Two output modes (SURVEY.md §3.2): post-burn-in averaging (single-node
-``lda`` semantics, ``lda.cc:137-145``) and raw final-iteration counts
-(``mpi_lda`` semantics — no averaging, ``mpi_lda.cc:234-241``).
+``lda`` semantics, ``lda.cc:137-145``), which needs the driver-held model
+of the broadcast exchange, and raw final-iteration counts (``mpi_lda``
+semantics — no averaging, ``mpi_lda.cc:234-241``).
 
 Unlike the reference (``srand(time(NULL))``, ``lda.cc:114``) training is
-deterministic for a fixed (seed, num_partitions): RNG streams are keyed
-by (seed, partition, iteration).
+deterministic for a fixed (seed, num_partitions).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import kernel
@@ -47,12 +66,14 @@ from .vocab import remap_words
 
 __all__ = ["TrainConfig", "TrainResult", "train", "train_documents"]
 
-# word_occ / z travel as raw little-endian int32 bytes, not array<int>:
-# binary columns cross the Arrow boundary as one buffer per row
-# (np.frombuffer decode, ~zero-copy) instead of a Python list/ndarray
-# materialization per row — a large constant-factor win when the corpus
-# round-trips the JVM<->Python boundary every Gibbs iteration.
-_SWEEP_SCHEMA = "doc_id long, word_occ binary, z binary, ll double"
+# Every generation of every exchange has this layout: document rows
+# (doc_id >= 0) plus count payload rows (doc_id < 0).  word_occ / z travel
+# as raw little-endian int32 bytes, not array<int>: binary columns cross
+# the Arrow boundary as one buffer per row (np.frombuffer decode, ~zero-
+# copy) instead of a Python list/ndarray materialization per row — a large
+# constant-factor win when the corpus round-trips the JVM<->Python boundary
+# every Gibbs iteration.
+_SWEEP_SCHEMA = "pid int, doc_id long, word_occ binary, z binary, ll double"
 
 
 @dataclass
@@ -73,56 +94,18 @@ class TrainConfig:
     # ``checkpoint_dir``; ``train(..., resume_from=dir)`` continues there.
     checkpoint_dir: str | None = None
     checkpoint_every: int = 10
-    # Model distribution strategy.  "broadcast": driver-held numpy V×K
-    # re-broadcast each iteration (the reference's per-rank replica,
-    # README.md:125 — right while V·K·8B fits one machine).  "join": the
-    # model lives as a DataFrame (word_id, cnts) and each iteration
-    # ships ONLY the rows a partition's words need via a word_id
-    # equi-join + cogroup — no driver copy, no V×K broadcast, no
-    # ceiling (see _train_join).  Join mode implies mpi_lda output
-    # semantics (raw final counts, average_model=False — the MPI path
-    # does no averaging either, mpi_lda.cc:234-241).
+    # How the model moves each iteration (see the module docstring).
+    # "broadcast": the driver-held V×K model is re-broadcast — right while
+    # V·K·8 B fits one machine.  "join": the model stays a DataFrame and
+    # rides the shuffle, so no machine holds more than the slices it
+    # needs; it implies mpi_lda output semantics (average_model=False —
+    # the MPI path does no averaging either, mpi_lda.cc:234-241).
     model_mode: str = "broadcast"
-    # Model-rebuild reduce strategy.  "driver": read the P sparse payload
-    # rows straight to the driver and sum there (one job, no shuffle —
-    # best while P·nnz fits driver bandwidth).  "shuffle": pre-combine
-    # payloads with a groupBy(flat_idx).sum so the driver receives at
-    # most nnz(V×K) rows no matter how many partitions exist — the
-    # tree-reduce analog of the reference's recursive AllReduce
-    # (mpi_lda.cc:58-92), one extra shuffle per iteration.  "auto" cuts
-    # over at _SHUFFLE_AGG_MIN_PARTITIONS.
-    aggregate_mode: str = "auto"
-    # model_mode='join' only: HOW model state rides the per-iteration
-    # shuffle.  "words": each partition receives only the (word_id,
-    # cnts) rows for words its documents contain — a word_id equi-join
-    # with the static (pid, word_id) membership table.  Fully general,
-    # but when every partition contains (nearly) the whole vocabulary —
-    # the common case, since a partition with ≥V tokens of Zipfian text
-    # sees almost every word — it degenerates into shipping P full
-    # model copies as P·V tiny array rows (measured: the row/sort/Arrow
-    # overhead, not the kernel, dominated the iteration).  "chunks":
-    # the model is C dense binary chunk rows (chunk c = words
-    # [c·W, (c+1)·W) as a flat int64 count block); each partition
-    # receives all C chunks via a pid×chunk cross join — the same bytes
-    # as "words" in the dense case but ~P·C rows instead of P·V, no
-    # join, no pivot, and the rebuild is a per-chunk buffer sum (the
-    # closest Spark shape to the reference's chunked AllReduce,
-    # mpi_lda.cc:58-92).  "auto" picks chunks when the dense model fits
-    # the per-task budget AND partitions are token-rich enough to see
-    # most of the vocabulary; words otherwise (giant V·K, where dense
-    # per-task state is unaffordable and slicing genuinely prunes).
+    # model_mode='join' only: "words" ships each partition the model rows
+    # of the words it contains; "chunks" ships every partition the whole
+    # model as dense binary chunk rows; "auto" picks from V, K, P and the
+    # token count (_resolve_join_exchange).
     join_exchange: str = "auto"
-    # 'auto' only: per-iteration WIRE-VOLUME cap for the chunks
-    # exchange.  Chunks replicate the dense V·K block to every
-    # partition — P·V·K·8 bytes on the shuffle per iteration — while
-    # words route each partition only its own word slices; a block that
-    # comfortably fits one task (the dense_ok test) can still be a
-    # multi-TB per-iteration exchange at P=1000.  'auto' falls back to
-    # words once P·V·K·8 exceeds this budget.  8 GiB default: at the
-    # single-digit-GiB level a 1000-executor shuffle absorbs the
-    # replication cheaply, beyond it the words format's slice routing
-    # wins.  Ignored unless join_exchange='auto'.
-    join_exchange_budget_bytes: int = 8 << 30
 
     def validate(self) -> None:
         if self.num_topics < 2:
@@ -133,14 +116,10 @@ class TrainConfig:
             raise ValueError("total_iterations must be > 0")
         if not (0 <= self.burn_in_iterations < self.total_iterations):
             raise ValueError("need 0 <= burn_in_iterations < total_iterations")
-        if self.aggregate_mode not in ("auto", "driver", "shuffle"):
-            raise ValueError("aggregate_mode must be auto|driver|shuffle")
         if self.model_mode not in ("broadcast", "join"):
             raise ValueError("model_mode must be broadcast|join")
         if self.join_exchange not in ("auto", "words", "chunks"):
             raise ValueError("join_exchange must be auto|words|chunks")
-        if self.join_exchange_budget_bytes <= 0:
-            raise ValueError("join_exchange_budget_bytes must be > 0")
         if self.model_mode == "join" and self.average_model:
             raise ValueError(
                 "model_mode='join' keeps the model distributed and emits "
@@ -181,272 +160,33 @@ class TrainResult:
     model_table: DataFrame | None = None
 
 
-def _count_payload_row(
-    pid: int, acc_flat: np.ndarray, ll_total: float = 0.0
-) -> pd.DataFrame:
-    """Encode a partition's sparse (word,topic) counts as one synthetic
-    row: ``doc_id = -(pid+1)``, ``z`` = interleaved [flat_idx, count, …],
-    ``ll`` = the partition's summed pre-sweep log-likelihood.
+class _Lineage:
+    """Lazy local checkpoints of one generation, released together.
 
-    This rides the sweep's own output schema, so the per-iteration model
-    rebuild reads P tiny payload rows from the checkpoint instead of
-    re-decoding every token array in a second Arrow pass — the shuffle-
-    free end of the reference's local-count-then-AllReduce
-    (mpi_lda.cc:99-110).  Piggybacking the LL partial on the same row
-    means a likelihood-enabled iteration still launches exactly ONE
-    post-sweep job (the payload read), not a second full-scan agg.
-    """
-    nz = np.flatnonzero(acc_flat)
-    if acc_flat.shape[0] >= 2**31:
-        raise RuntimeError("V*K exceeds int32 payload indexing")
-    if nz.shape[0] and acc_flat[nz].max() >= 2**31:
-        raise RuntimeError("a model count delta exceeds int32 payload range")
-    packed = np.empty(2 * nz.shape[0], dtype=np.int32)
-    packed[0::2] = nz
-    packed[1::2] = acc_flat[nz]
-    return pd.DataFrame(
-        {
-            "doc_id": np.array([-(pid + 1)], dtype=np.int64),
-            "word_occ": [b""],
-            "z": [packed.tobytes()],
-            "ll": np.array([ll_total], dtype=np.float64),
-        }
-    )
+    ``cut`` truncates a plan's lineage without running it: the first action
+    that computes the frame also persists its blocks, so ONE job runs the
+    plan, saves its output and returns whatever that action asked for.
+    ``release`` unpersists the RDD behind each checkpoint.
+    ``DataFrame.unpersist()`` would not: a checkpoint is not in the cache
+    manager, so its RDD stays in ``getPersistentRDDs()`` until a JVM GC
+    happens to run the ContextCleaner."""
 
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
 
-def _zinit_fn(num_topics: int, vocab_size: int, seed: int):
-    """Consumes packed ``(doc_id, word_occ: array<int>)``; emits the
-    binary-column sweep layout plus this partition's count payload."""
+    def cut(self, df: DataFrame) -> DataFrame:
+        ckpt = df.localCheckpoint(eager=False)
+        self._frames.append(ckpt)
+        return ckpt
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rng = kernel.make_rng(seed, pid, 0)
-        acc = np.zeros(vocab_size * num_topics, dtype=np.int64)
-        for pdf in batches:
-            occs = [np.asarray(o, dtype=np.int32) for o in pdf["word_occ"]]
-            zs = [kernel.init_assignments(len(o), num_topics, rng) for o in occs]
-            if occs:
-                occ_all = (
-                    np.concatenate(occs).astype(np.int64)
-                    if occs else np.empty(0, np.int64)
-                )
-                z_all = np.concatenate(zs) if zs else np.empty(0, np.int64)
-                if occ_all.shape[0]:
-                    acc += np.bincount(
-                        occ_all * num_topics + z_all, minlength=acc.shape[0]
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "word_occ": [o.tobytes() for o in occs],
-                    "z": [zz.tobytes() for zz in zs],
-                    "ll": np.zeros(len(pdf)),
-                }
-            )
-        yield _count_payload_row(pid, acc)
+    def keep(self, df: DataFrame) -> None:
+        """Exempt ``df`` from :meth:`release`; the caller now owns it."""
+        self._frames = [f for f in self._frames if f is not df]
 
-    return fn
-
-
-def _sweep_fn(bc_nwk, bc_nk, alpha: float, beta: float, seed: int, iteration: int,
-              compute_likelihood: bool):
-    """mapInPandas sweep: partition-local model copy, sequential Gibbs.
-
-    The local copy is made once per partition and shared across Arrow
-    batches, matching the reference's per-rank replica; the pre-sweep
-    log-likelihood (lda.cc:128-136 computes LL before the sweep) is
-    emitted per doc in the ``ll`` column.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rng = kernel.make_rng(seed, pid, iteration + 1)
-        local_nwk = None
-        local_nk = None
-        acc = None
-        ll_total = 0.0
-        for pdf in batches:
-            if local_nwk is None:
-                local_nwk = bc_nwk.value.copy()
-                local_nk = bc_nk.value.copy()
-                acc = np.zeros(local_nwk.size, dtype=np.int64)
-            # Binary columns: one frombuffer over the batch-concatenated
-            # bytes (no per-row ndarray materialization).
-            lens = (pdf["word_occ"].map(len).to_numpy() // 4).astype(np.int64)
-            offsets = np.zeros(len(pdf) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            word_occ = np.frombuffer(
-                b"".join(pdf["word_occ"]), dtype=np.int32
-            ).copy() if len(pdf) else np.empty(0, np.int32)
-            z = np.frombuffer(
-                b"".join(pdf["z"]), dtype=np.int32
-            ).copy() if len(pdf) else np.empty(0, np.int32)
-            lls = np.zeros(len(pdf))
-            if compute_likelihood:
-                K = local_nk.shape[0]
-                for d in range(len(pdf)):
-                    s, e = offsets[d], offsets[d + 1]
-                    ndk = np.bincount(z[s:e], minlength=K).astype(np.float64)
-                    uw, cnt = np.unique(word_occ[s:e], return_counts=True)
-                    lls[d] = kernel.doc_log_likelihood(
-                        uw, cnt.astype(np.float64), ndk, local_nwk, local_nk, alpha, beta
-                    )
-                ll_total += float(lls.sum())
-            kernel.sweep_docs(
-                word_occ, z, offsets, local_nwk, local_nk, alpha, beta, rng,
-                update_model=True,
-            )
-            if word_occ.shape[0]:
-                K = local_nk.shape[0]
-                acc += np.bincount(
-                    word_occ.astype(np.int64) * K + z, minlength=acc.shape[0]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "word_occ": pdf["word_occ"],
-                    "z": [
-                        z[offsets[d]:offsets[d + 1]].tobytes()
-                        for d in range(len(pdf))
-                    ],
-                    "ll": lls,
-                }
-            )
-        if acc is None:  # empty partition still reports (zero) counts
-            acc = np.zeros(bc_nwk.value.size, dtype=np.int64)
-        yield _count_payload_row(pid, acc, ll_total)
-
-    return fn
-
-
-# "auto" aggregate_mode switches from driver-side payload summing to the
-# shuffle pre-combine at this partition count: below it, one collect of
-# P sparse rows beats an extra shuffle; above it, driver bandwidth
-# (P·nnz ints) becomes the bottleneck the pre-combine removes.
-_SHUFFLE_AGG_MIN_PARTITIONS = 256
-
-
-def _aggregate_model_shuffle(
-    df_z: DataFrame, vocab_size: int, num_topics: int
-) -> tuple[np.ndarray, float]:
-    """Shuffle-combined model rebuild: decode each payload row into
-    (flat_idx, count) pairs executor-side, groupBy(flat_idx).sum (map-side
-    combined), and collect at most nnz(V×K) summed rows — driver traffic
-    independent of partition count, the tree end of the reference's
-    chunked AllReduce (mpi_lda.cc:58-92)."""
-    import pandas as pd
-
-    payload = df_z.where(F.col("doc_id") < 0).select("z", "ll")
-
-    def decode(batches):
-        for pdf in batches:
-            for buf, ll_part in zip(pdf["z"], pdf["ll"]):
-                a = np.frombuffer(buf, dtype=np.int32)
-                n = a.shape[0] // 2
-                yield pd.DataFrame(
-                    {
-                        "idx": a[0::2].astype(np.int64),
-                        "cnt": a[1::2].astype(np.int64),
-                        # the LL partial rides the FIRST pair row of its
-                        # payload (zero elsewhere), so one aggregation
-                        # job returns counts AND likelihood — no second
-                        # per-iteration job when likelihood is on, and
-                        # none at all when it is off.
-                        "ll": np.concatenate(
-                            ([float(ll_part)], np.zeros(max(n - 1, 0)))
-                        )
-                        if n
-                        else np.empty(0),
-                    }
-                )
-
-    pairs = payload.mapInPandas(decode, schema="idx long, cnt long, ll double")
-    summed = pairs.groupBy("idx").agg(
-        F.sum("cnt").alias("cnt"), F.sum("ll").alias("ll")
-    ).toPandas()
-    flat = np.zeros(vocab_size * num_topics, dtype=np.int64)
-    if len(summed):
-        flat[summed["idx"].to_numpy()] = summed["cnt"].to_numpy()
-    ll = float(summed["ll"].sum()) if len(summed) else 0.0
-    return flat.reshape(vocab_size, num_topics), ll
-
-
-def _aggregate_model(
-    df_z: DataFrame, vocab_size: int, num_topics: int
-) -> tuple[np.ndarray, float]:
-    """Rebuild n_wk from the per-partition count payloads emitted by the
-    z-init / sweep passes — the reduce end of the reference's AllReduce
-    (mpi_lda.cc:58-110).  Reads P payload rows from the checkpoint (no
-    token-array re-decode, no shuffle) and sums the sparse partials
-    driver-side; driver traffic is ≤ P·nnz(V×K) ints, the same volume
-    the reference's rank-0 receives per AllReduce.  Returns
-    ``(n_wk, corpus_ll)`` — the LL partial rides the same rows, so the
-    whole reduce is one job.  Payloads are summed in pid order for a
-    deterministic float result."""
-    pdf = (
-        df_z.where(F.col("doc_id") < 0)
-        .select("doc_id", "z", "ll")
-        .toPandas()
-        .sort_values("doc_id", ascending=False)
-    )
-    flat = np.zeros(vocab_size * num_topics, dtype=np.int64)
-    for buf in pdf["z"]:
-        a = np.frombuffer(buf, dtype=np.int32).astype(np.int64)
-        flat[a[0::2]] += a[1::2]
-    return flat.reshape(vocab_size, num_topics), float(pdf["ll"].sum())
-
-
-def _save_checkpoint(df_z: DataFrame, path: str, it: int, nwk, accum, lls, words) -> None:
-    df_z.write.mode("overwrite").parquet(f"{path}/assignments")
-    np.savez(
-        f"{path}/state.npz",
-        next_iteration=it + 1,
-        nwk=nwk,
-        accum=accum,
-        lls=np.asarray(lls, dtype=np.float64),
-        words=np.asarray(words, dtype=object),
-    )
-
-
-# ---------------------------------------------------------------------------
-# model_mode="join": model-as-DataFrame AD-LDA (no V·K broadcast, no driver
-# copy).  The broadcast path is the reference's design (model replicated per
-# rank, README.md:125) and its ceiling is the reference's own documented
-# ceiling; this path removes it for vocabularies/topic-counts whose V·K·8B
-# exceeds a single machine:
-#
-#   - the model is a DataFrame ``(word_id, cnts: array<long>)`` (V rows);
-#   - per iteration each logical partition receives ONLY the model rows for
-#     words its documents contain — a word_id equi-join of the (static)
-#     ``(pid, word_id)`` membership table with the model, cogrouped with the
-#     assignments by ``pid``; shipped volume is Σ_w K·|partitions(w)| ≤ P·V·K
-#     but concentrated near nnz for the rare-word mass, and it flows through
-#     a SHUFFLE (scales with the cluster), not a driver broadcast;
-#   - the sweep remaps the partition's word ids into a dense local sub-model
-#     (searchsorted), runs the identical kernel with the true-V smoothing
-#     override, and emits sparse global (word,topic) deltas as payload rows;
-#   - the rebuild is a distributed groupBy(word,topic) + pivot back to the
-#     (word_id, cnts) table — the driver never holds or ships V·K numbers;
-#     only the K-vector n_k (the reference's global vector) is collected.
-#
-# That word-sliced wire format (join_exchange='words') is the general
-# case.  When every partition contains (nearly) the whole vocabulary —
-# which a partition holding ≥V tokens of Zipfian text almost always does
-# — the slice join ships P near-full model copies as P·V tiny array
-# rows, and profiling showed the row/sort/Arrow machinery (not the
-# kernel, ~0.2 s of a ~10 s iteration) dominating.  join_exchange=
-# 'chunks' (the 'auto' pick in that regime) moves the same bytes as C
-# dense binary chunk rows via a pid×chunk cross join and reduces the
-# rebuild to a per-chunk buffer sum — measured ~2× faster per iteration
-# at NYTimes scale with bit-identical output (see TrainConfig and
-# BENCH_LDA_SCALE.json).
-#
-# Partition identity is the LOGICAL pid = pmod(hash(doc_id), P) carried as a
-# column, so RNG streams (seed, pid, iteration) are independent of physical
-# scheduling.  Output is mpi_lda semantics (raw final counts, no averaging).
-# ---------------------------------------------------------------------------
-
-_JOIN_SWEEP_SCHEMA = "pid int, doc_id long, word_occ binary, z binary, ll double"
+    def release(self) -> None:
+        for f in self._frames:
+            f._jdf.queryExecution().logical().rdd().unpersist(False)
+        self._frames = []
 
 
 def _fresh_stats(df: DataFrame) -> DataFrame:
@@ -455,18 +195,18 @@ def _fresh_stats(df: DataFrame) -> DataFrame:
 
     Spark 4's ``Dataset.checkpoint`` copies the child plan's *estimated*
     statistics onto the checkpoint's LogicalRDD
-    (``LogicalRDD.rewriteStatsAndConstraints``).  Join-mode's
+    (``LogicalRDD.rewriteStatsAndConstraints``).  The join exchanges'
     per-iteration plan MULTIPLIES child sizes (cogroup × equi-join both
     use the product-of-children default estimator), so the inherited
     ``sizeInBytes`` compounds double-exponentially across iterations —
     by ~iteration 10 every plan-stats query is multiplying million-digit
     BigIntegers and the driver spins forever in
     ``BigInteger.multiplyToomCook3`` (observed via jstack).  The
-    broadcast path never hits this because its per-iteration plan is a
-    unary chain.  Scanning the same checkpointed RDD through
+    broadcast exchange never hits this because its per-iteration plan is
+    a unary chain.  Scanning the same checkpointed RDD through
     ``internalCreateDataFrame`` resets the leaf to
     ``defaultSizeInBytes``, keeping every iteration's stats O(1); the
-    returned frame shares the checkpoint blocks (unpersist the ORIGINAL
+    returned frame shares the checkpoint blocks (release the ORIGINAL
     handle, not this one)."""
     spark = df.sparkSession
     jdf = df._jdf
@@ -475,55 +215,109 @@ def _fresh_stats(df: DataFrame) -> DataFrame:
     return DataFrame(new_jdf, spark)
 
 
-def _join_payload_row(pid: int, local_words: np.ndarray, acc_local: np.ndarray,
-                      K: int, ll_total: float = 0.0) -> pd.DataFrame:
-    """Sparse LOCAL counts → one payload row of global flat (word·K+topic)
-    pairs (same wire format as the broadcast path's payload rows)."""
-    nz = np.flatnonzero(acc_local)
-    gword = local_words[nz // K].astype(np.int64)
-    gidx = gword * K + (nz % K)
+# ---------------------------------------------------------------------------
+# Executor side: one z-init, one sweep core, and the count payloads.
+# ---------------------------------------------------------------------------
+
+
+def _payload_row(pid: int, acc: np.ndarray, rows: np.ndarray | None, ll: float,
+                 num_topics: int) -> pd.DataFrame:
+    """A pid's (word, topic) counts as ONE sparse payload row:
+    ``doc_id = -(pid+1)``, ``z`` = interleaved int64 [flat_idx, count, …]
+    with flat_idx = word·K + topic, ``ll`` = the pid's summed pre-sweep
+    log-likelihood.
+
+    ``acc`` is the flat count array of a model whose row r holds global
+    word ``rows[r]`` (``rows=None``: row r is word r).  The payload rides
+    the sweep's own output, so the reduce reads P tiny rows from the
+    checkpoint instead of re-decoding every token array — the shuffle-
+    free end of the reference's local-count-then-AllReduce
+    (mpi_lda.cc:99-110) — and a likelihood-enabled iteration needs no
+    second full pass for the LL partials."""
+    K = num_topics
+    nz = np.flatnonzero(acc)
     packed = np.empty(2 * nz.shape[0], dtype=np.int64)
-    packed[0::2] = gidx
-    packed[1::2] = acc_local[nz]
+    packed[0::2] = nz if rows is None else rows[nz // K] * K + nz % K
+    packed[1::2] = acc[nz]
     return pd.DataFrame(
         {
             "pid": np.array([pid], dtype=np.int32),
             "doc_id": np.array([-(pid + 1)], dtype=np.int64),
             "word_occ": [b""],
-            "z": [packed.astype(np.int64).tobytes()],
-            "ll": np.array([ll_total], dtype=np.float64),
+            "z": [packed.tobytes()],
+            "ll": np.array([ll], dtype=np.float64),
         }
     )
 
 
-# Shared doc-side mechanics for BOTH join-mode wire formats.  The two
-# exchanges are bit-identical precisely because these blocks are the
-# SAME code: same doc sort, same RNG consumption order, same unpack
-# math, same LL loop, same kernel call.  Only the model representation
-# (sparse local slice vs dense global block) differs, and each sweep fn
-# contributes exactly that part.
-
-
-def _zinit_docs(pdf: pd.DataFrame, num_topics: int, seed: int):
-    """Sorted docs + per-occurrence initial assignments + the doc output
-    frame.  Returns (pid, occ_all, z_all, out_frame)."""
-    pid = int(pdf["pid"].iloc[0])
-    pdf = pdf.sort_values("doc_id")
-    rng = kernel.make_rng(seed, pid, 0)
-    occs = [np.asarray(o, dtype=np.int32) for o in pdf["word_occ"]]
-    zs = [kernel.init_assignments(len(o), num_topics, rng) for o in occs]
-    occ_all = np.concatenate(occs) if occs else np.empty(0, np.int32)
-    z_all = np.concatenate(zs) if zs else np.empty(0, np.int32)
-    out = pd.DataFrame(
+def _chunk_rows(pid: int, acc: np.ndarray, rows: np.ndarray | None, ll: float,
+                num_topics: int, chunk_width: int, vocab_size: int) -> pd.DataFrame:
+    """The chunks exchange's payload: a pid's counts (same ``acc``/``rows``
+    contract as :func:`_payload_row`) as one dense binary row per NONZERO
+    chunk — ``doc_id = -(chunk_id+1)``, ``z`` = the flat int64 block of
+    words [c·W, (c+1)·W).  The LL partial rides the first emitted row."""
+    K, W = num_topics, chunk_width
+    if rows is not None:
+        dense = np.zeros((vocab_size, K), dtype=np.int64)
+        dense[rows] = acc.reshape(-1, K)
+        acc = dense
+    acc2 = acc.reshape(-1, K)
+    chunks, bufs = [], []
+    for c in range(-(-vocab_size // W)):
+        block = acc2[c * W : (c + 1) * W]
+        if block.any():
+            chunks.append(c)
+            bufs.append(np.ascontiguousarray(block, dtype=np.int64).tobytes())
+    lls = np.zeros(len(chunks))
+    if len(lls):
+        lls[0] = ll
+    return pd.DataFrame(
         {
-            "pid": np.full(len(pdf), pid, dtype=np.int32),
-            "doc_id": pdf["doc_id"].to_numpy(),
-            "word_occ": [o.tobytes() for o in occs],
-            "z": [zz.tobytes() for zz in zs],
-            "ll": np.zeros(len(pdf)),
+            "pid": np.full(len(chunks), pid, dtype=np.int32),
+            "doc_id": np.array([-(c + 1) for c in chunks], dtype=np.int64),
+            "word_occ": [b""] * len(chunks),
+            "z": bufs,
+            "ll": lls,
         }
     )
-    return pid, occ_all, z_all, out
+
+
+def _zinit_pass(batches: Iterable[pd.DataFrame], num_topics: int, seed: int,
+                encode: Callable) -> Iterator[pd.DataFrame]:
+    """Random z-init of ONE pid's packed docs ``(pid, doc_id, word_occ:
+    array<int>)``, taken in doc_id order: one iid topic per occurrence
+    (lda.cc:66-69) from the (seed, pid, 0) stream.  Yields the docs in the
+    sweep layout, then the pid's initial counts through ``encode``."""
+    pid = None
+    occ_parts: list[np.ndarray] = []
+    z_parts: list[np.ndarray] = []
+    for docs in batches:
+        if not len(docs):
+            continue
+        if pid is None:
+            pid = int(docs["pid"].iloc[0])
+            rng = kernel.make_rng(seed, pid, 0)
+        occs = [np.asarray(o, dtype=np.int32) for o in docs["word_occ"]]
+        zs = [kernel.init_assignments(len(o), num_topics, rng) for o in occs]
+        occ_parts += occs
+        z_parts += zs
+        yield pd.DataFrame(
+            {
+                "pid": np.full(len(docs), pid, dtype=np.int32),
+                "doc_id": docs["doc_id"].to_numpy(),
+                "word_occ": [o.tobytes() for o in occs],
+                "z": [zz.tobytes() for zz in zs],
+                "ll": np.zeros(len(docs)),
+            }
+        )
+    if pid is not None:
+        occ = np.concatenate(occ_parts).astype(np.int64)
+        rows = np.unique(occ)
+        acc = np.bincount(
+            np.searchsorted(rows, occ) * num_topics + np.concatenate(z_parts),
+            minlength=rows.shape[0] * num_topics,
+        )
+        yield encode(pid, acc, rows, 0.0)
 
 
 def _unpack_docs(docs: pd.DataFrame):
@@ -542,159 +336,455 @@ def _unpack_docs(docs: pd.DataFrame):
     return offsets, word_occ, z
 
 
-def _ll_sweep_docs(pid, docs, offsets, occ_idx, z, nwk, nk, alpha, beta, rng,
-                   vocab_size, compute_likelihood):
-    """Pre-sweep LL loop + the Gibbs sweep + the doc output frame.
-    ``occ_idx`` indexes ``nwk`` rows — partition-local ids in the words
-    exchange, global word ids in the chunks exchange; the sampled values
-    are identical either way.  Returns (out_frame, ll_total)."""
-    K = nk.shape[0]
-    lls = np.zeros(len(docs))
-    ll_total = 0.0
-    if compute_likelihood:
-        for d in range(len(docs)):
-            s, e = offsets[d], offsets[d + 1]
-            ndk = np.bincount(z[s:e], minlength=K).astype(np.float64)
-            uw, cnt = np.unique(occ_idx[s:e], return_counts=True)
-            lls[d] = kernel.doc_log_likelihood(
-                uw, cnt.astype(np.float64), ndk, nwk, nk, alpha, beta,
-                vocab_size=vocab_size,
-            )
-        ll_total = float(lls.sum())
+def _sweep_pass(batches: Iterable[pd.DataFrame], nwk0: np.ndarray, nk0: np.ndarray,
+                rows: np.ndarray | None, index: Callable[[np.ndarray], np.ndarray],
+                encode: Callable, config: TrainConfig, vocab_size: int,
+                iteration: int) -> Iterator[pd.DataFrame]:
+    """One pid's Gibbs sweep — the core every exchange runs.
 
-    kernel.sweep_docs(
-        occ_idx, z, offsets, nwk, nk, alpha, beta, rng,
-        update_model=True, vocab_size=vocab_size,
-    )
-    out = pd.DataFrame(
-        {
-            "pid": np.full(len(docs), pid, dtype=np.int32),
-            "doc_id": docs["doc_id"].to_numpy(),
-            "word_occ": docs["word_occ"],
-            "z": [z[offsets[d]:offsets[d + 1]].tobytes() for d in range(len(docs))],
-            "ll": lls,
-        }
-    )
-    return out, ll_total
-
-
-def _join_zinit_fn(num_topics: int, seed: int):
-    """applyInPandas per-pid z-init: packed arrays → binary layout +
-    payload row of this pid's initial counts (global indices)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid, occ_all, z_all, out = _zinit_docs(pdf, num_topics, seed)
-        local_words = np.unique(occ_all.astype(np.int64))
-        acc = np.zeros(local_words.shape[0] * num_topics, dtype=np.int64)
-        if occ_all.shape[0]:
-            loc = np.searchsorted(local_words, occ_all.astype(np.int64))
-            np.add.at(acc, loc * num_topics + z_all, 1)
-        return pd.concat(
-            [out, _join_payload_row(pid, local_words, acc, num_topics)],
-            ignore_index=True,
+    ``batches`` are the pid's docs in doc_id order; ``(nwk0, nk0)`` is the
+    iteration's input model, n_wk row r holding global word ``rows[r]``
+    (``rows=None``: all V words in order), and ``index`` maps global word
+    ids to those rows (raising if one is missing).  Every doc's likelihood
+    is scored against the INPUT model before the sweep (lda.cc:128-136),
+    so it does not depend on how the docs are batched; the sweep runs on a
+    private copy that carries over from batch to batch, like the
+    reference's per-rank replica.  Yields the swept doc rows, then the
+    pid's new counts and summed likelihood through ``encode``."""
+    K = nk0.shape[0]
+    nwk, nk = nwk0.copy(), nk0.copy()
+    acc = np.zeros(nwk.size, dtype=np.int64)
+    pid = None
+    lls: list[np.ndarray] = []
+    for docs in batches:
+        if not len(docs):
+            continue
+        if pid is None:
+            pid = int(docs["pid"].iloc[0])
+            rng = kernel.make_rng(config.seed, pid, iteration + 1)
+        offsets, word_occ, z = _unpack_docs(docs)
+        occ = index(word_occ)
+        ll = np.zeros(len(docs))
+        if config.compute_likelihood:
+            for d in range(len(docs)):
+                s, e = offsets[d], offsets[d + 1]
+                ndk = np.bincount(z[s:e], minlength=K).astype(np.float64)
+                uw, cnt = np.unique(occ[s:e], return_counts=True)
+                ll[d] = kernel.doc_log_likelihood(
+                    uw, cnt.astype(np.float64), ndk, nwk0, nk0,
+                    config.alpha, config.beta, vocab_size=vocab_size,
+                )
+        kernel.sweep_docs(
+            occ, z, offsets, nwk, nk, config.alpha, config.beta, rng,
+            update_model=True, vocab_size=vocab_size,
         )
+        acc += np.bincount(occ.astype(np.int64) * K + z, minlength=acc.shape[0])
+        lls.append(ll)
+        yield pd.DataFrame(
+            {
+                "pid": np.full(len(docs), pid, dtype=np.int32),
+                "doc_id": docs["doc_id"].to_numpy(),
+                "word_occ": docs["word_occ"].to_numpy(),
+                "z": [z[offsets[d]:offsets[d + 1]].tobytes() for d in range(len(docs))],
+                "ll": ll,
+            }
+        )
+    if pid is not None:
+        yield encode(pid, acc, rows, float(np.concatenate(lls).sum()))
+
+
+def _same_ids(word_occ: np.ndarray) -> np.ndarray:
+    """The n_wk row of a word when the model holds all V words in order."""
+    return word_occ
+
+
+def _broadcast_sweep_fn(bc_nwk, encode: Callable, config: TrainConfig, vocab_size: int,
+                        iteration: int):
+    """mapInPandas sweep of one hash partition (= one pid, docs already in
+    doc_id order) against the broadcast model."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        nwk0 = bc_nwk.value
+        return _sweep_pass(batches, nwk0, nwk0.sum(axis=0), None, _same_ids, encode,
+                           config, vocab_size, iteration)
 
     return fn
 
 
-def _join_sweep_fn(nk_global: list[int], vocab_size: int, alpha: float, beta: float,
-                   seed: int, iteration: int, compute_likelihood: bool):
-    """Cogrouped sweep: (docs for pid) × (model rows for pid's words)."""
-    K = len(nk_global)
+def _words_slice(model: pd.DataFrame, num_topics: int):
+    """Words exchange: the pid's model rows sorted by word id, and the
+    global-id → slice-row map for its docs."""
+    order = np.argsort(model["word_id"].to_numpy())
+    rows = model["word_id"].to_numpy()[order].astype(np.int64)
+    nwk = (
+        np.stack([np.asarray(c, dtype=np.int64) for c in model["cnts"].to_numpy()[order]])
+        if len(model)
+        else np.zeros((0, num_topics), dtype=np.int64)
+    )
 
-    def fn(key, docs: pd.DataFrame, model: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        rng = kernel.make_rng(seed, pid, iteration + 1)
-        docs = docs.sort_values("doc_id")
-        order = np.argsort(model["word_id"].to_numpy())
-        local_words = model["word_id"].to_numpy()[order].astype(np.int64)
-        local_nwk = (
-            np.stack([np.asarray(c, dtype=np.int64) for c in model["cnts"].to_numpy()[order]])
-            if len(model)
-            else np.zeros((0, K), dtype=np.int64)
-        )
-        nk = np.asarray(nk_global, dtype=np.int64)
-
-        offsets, word_occ, z = _unpack_docs(docs)
-        loc_occ = np.searchsorted(local_words, word_occ.astype(np.int64)).astype(np.int32)
+    def index(word_occ: np.ndarray) -> np.ndarray:
+        loc = np.searchsorted(rows, word_occ.astype(np.int64))
         # Invariant: every word occurring in this partition has a model
         # row in the slice.  Checked with a real raise (not assert — that
         # vanishes under ``python -O``), and searchsorted can return
-        # len(local_words) for past-the-end words, so bounds-check before
+        # len(rows) for past-the-end words, so bounds-check before
         # fancy-indexing or the error surfaces as an opaque IndexError.
-        if loc_occ.shape[0]:
-            in_range = loc_occ < len(local_words)
-            ok = in_range.copy()
-            ok[in_range] = local_words[loc_occ[in_range]] == word_occ[in_range]
-            if not ok.all():
-                missing = np.unique(word_occ[~ok])[:20]
-                raise RuntimeError(
-                    "partition word(s) missing from model slice: "
-                    f"{missing.tolist()}"
-                )
+        in_range = loc < len(rows)
+        ok = in_range.copy()
+        ok[in_range] = rows[loc[in_range]] == word_occ[in_range]
+        if not ok.all():
+            missing = np.unique(word_occ[~ok])[:20]
+            raise RuntimeError(
+                f"partition word(s) missing from model slice: {missing.tolist()}"
+            )
+        return loc.astype(np.int32)
 
-        out, ll_total = _ll_sweep_docs(
-            pid, docs, offsets, loc_occ, z, local_nwk, nk, alpha, beta, rng,
-            vocab_size, compute_likelihood,
-        )
-        acc = np.zeros(local_words.shape[0] * K, dtype=np.int64)
-        if loc_occ.shape[0]:
-            np.add.at(acc, loc_occ.astype(np.int64) * K + z, 1)
-        return pd.concat(
-            [out, _join_payload_row(pid, local_words, acc, K, ll_total)],
-            ignore_index=True,
-        )
+    return nwk, rows, index
+
+
+def _chunks_block(model: pd.DataFrame, num_topics: int, vocab_size: int, chunk_width: int):
+    """Chunks exchange: the dense V×K model assembled from the chunk rows;
+    word ids index it directly."""
+    K, W = num_topics, chunk_width
+    nwk = np.zeros((vocab_size, K), dtype=np.int64)
+    for cid, buf in zip(model["chunk_id"], model["cnts"]):
+        block = np.frombuffer(buf, dtype=np.int64).reshape(-1, K)
+        nwk[cid * W : cid * W + block.shape[0]] = block
+
+    def index(word_occ: np.ndarray) -> np.ndarray:
+        # Invariant (the chunks counterpart of the words-slice guard):
+        # every word occurring here was counted at init, so its model row
+        # must be nonzero.  A zero row means a chunk went missing
+        # (lost/partial checkpoint, pid-geometry mismatch) and sweeping
+        # against it would drive counts negative and corrupt the model
+        # SILENTLY — raise instead (a real raise, not assert).
+        present = np.unique(word_occ.astype(np.int64))
+        covered = nwk[present].sum(axis=1) > 0
+        if not covered.all():
+            missing = present[~covered][:20]
+            raise RuntimeError(
+                f"partition word(s) have empty model chunks: {missing.tolist()}"
+            )
+        return word_occ
+
+    return nwk, None, index
+
+
+def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainConfig,
+                      vocab_size: int, iteration: int):
+    """Cogrouped sweep of the join exchanges: (docs of a pid) × (the model
+    rows it receives), the model assembled by ``assemble``."""
+
+    def fn(key, docs: pd.DataFrame, model: pd.DataFrame) -> pd.DataFrame:
+        if not len(docs):  # chunks reach every pid, with docs or not
+            return docs
+        nwk0, rows, index = assemble(model)
+        out = _sweep_pass([docs.sort_values("doc_id")], nwk0, nk, rows, index, encode,
+                          config, vocab_size, iteration)
+        return pd.concat(list(out), ignore_index=True)
 
     return fn
 
 
-def _join_model_df(df_z: DataFrame, num_topics: int) -> DataFrame:
-    """Payload rows → the ``(word_id, cnts: array<long>)`` model table.
+# ---------------------------------------------------------------------------
+# Driver side: the three exchanges.  Each has the same four steps — init
+# from the packed docs, the per-iteration sweep, a reduce action returning
+# (n_k, n_wk or None, likelihood), and the final model — and keeps its own
+# Spark job shape: one job per iteration for broadcast, the cogroup plus
+# the n_k collect for the join exchanges.
+# ---------------------------------------------------------------------------
 
-    Distributed end-to-end: decode each payload's int64 (idx, cnt) pairs
-    executor-side, sum by (word, topic) (map-side combined), pivot the K
-    known topics into a dense array.  The driver touches nothing."""
-    K = num_topics
+# The broadcast reduce sums the P payload rows on the driver below this
+# partition count — one collect of P sparse rows beats an extra shuffle.
+# From it on, driver bandwidth (P·nnz ints) is the bottleneck, and a
+# map-side-combined groupBy pre-sums the payloads so the driver receives at
+# most nnz(V×K) rows however many partitions exist.
+_SHUFFLE_AGG_MIN_PARTITIONS = 256
+
+
+def _payload_ll(df_z: DataFrame) -> float:
+    """The summed pre-sweep likelihood of a generation, from its payload
+    rows.  ``fsum`` is exact, so the result does not depend on row order
+    or on how the exchange split the partials across rows."""
+    pdf = df_z.where(F.col("doc_id") < 0).select("ll").toPandas()
+    return math.fsum(pdf["ll"])
+
+
+def _reduce_shuffle(df_z: DataFrame, size: int) -> tuple[np.ndarray, float]:
+    """Shuffle-combined model rebuild: decode each payload row into
+    (flat_idx, count) pairs executor-side, groupBy(flat_idx).sum (map-side
+    combined), and collect at most nnz(V×K) summed rows — driver traffic
+    independent of partition count, the tree end of the reference's
+    chunked AllReduce (mpi_lda.cc:58-92)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            for buf, ll_part in zip(pdf["z"], pdf["ll"]):
+                a = np.frombuffer(buf, dtype=np.int64)
+                n = a.shape[0] // 2
+                # the LL partial rides the FIRST pair row of its payload
+                # (zero elsewhere), so one aggregation job returns counts
+                # AND likelihood.
+                ll = np.zeros(n)
+                if n:
+                    ll[0] = ll_part
+                yield pd.DataFrame({"idx": a[0::2], "cnt": a[1::2], "ll": ll})
+
+    summed = (
+        df_z.where(F.col("doc_id") < 0)
+        .select("z", "ll")
+        .mapInPandas(decode, schema="idx long, cnt long, ll double")
+        .groupBy("idx")
+        .agg(F.sum("cnt").alias("cnt"), F.sum("ll").alias("ll"))
+        .toPandas()
+    )
+    flat = np.zeros(size, dtype=np.int64)
+    flat[summed["idx"].to_numpy()] = summed["cnt"].to_numpy()
+    return flat, math.fsum(summed["ll"])
+
+
+class _Broadcast:
+    """model_mode='broadcast': the driver-held n_wk, re-broadcast each
+    iteration; the sweep, its checkpoint and the payload collect are ONE
+    job."""
+
+    name = "broadcast"
+
+    def __init__(self, spark, vocab_size: int, num_partitions: int, chunk_width: int,
+                 config: TrainConfig) -> None:
+        self.sc = spark.sparkContext
+        self.V, self.P, self.W, self.config = vocab_size, num_partitions, 0, config
+        self.encode = partial(_payload_row, num_topics=config.num_topics)
+        self._bc = None
+
+    def init(self, packed: DataFrame) -> DataFrame:
+        # The one sort: checkpoints keep row order, so from here on every
+        # sweep streams its partition in doc_id order without a shuffle.
+        zinit = partial(_zinit_pass, num_topics=self.config.num_topics,
+                        seed=self.config.seed, encode=self.encode)
+        return packed.sortWithinPartitions("doc_id").mapInPandas(zinit, schema=_SWEEP_SCHEMA)
+
+    def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
+        self._bc = self.sc.broadcast(nwk)
+        # Payload rows carry the previous pass's counts and must not enter
+        # the sweep; the filter is narrow (no shuffle).
+        return df_z.where(F.col("doc_id") >= 0).mapInPandas(
+            _broadcast_sweep_fn(self._bc, self.encode, self.config, self.V, it),
+            schema=_SWEEP_SCHEMA,
+        )
+
+    def reduce(self, df_z: DataFrame, lineage: _Lineage):
+        """Rebuild n_wk from the per-partition payloads — the reduce end of
+        the reference's AllReduce (mpi_lda.cc:58-110)."""
+        K = self.config.num_topics
+        if self.P >= _SHUFFLE_AGG_MIN_PARTITIONS:
+            flat, ll = _reduce_shuffle(df_z, self.V * K)
+        else:
+            pdf = df_z.where(F.col("doc_id") < 0).select("z", "ll").toPandas()
+            flat = np.zeros(self.V * K, dtype=np.int64)
             for buf in pdf["z"]:
                 a = np.frombuffer(buf, dtype=np.int64)
-                yield pd.DataFrame(
-                    {
-                        "word_id": a[0::2] // K,
-                        "topic": (a[0::2] % K).astype(np.int32),
-                        "cnt": a[1::2],
-                    }
-                )
+                flat[a[0::2]] += a[1::2]
+            ll = math.fsum(pdf["ll"])
+        # The sweep that read the broadcast has run; its checkpoint holds
+        # the output, so nothing can recompute through the closure.
+        self.close()
+        nwk = flat.reshape(self.V, K)
+        return nwk.sum(axis=0), nwk, ll
 
-    pairs = (
-        df_z.where(F.col("doc_id") < 0)
-        .select("z")
-        .mapInPandas(decode, schema="word_id long, topic int, cnt long")
-    )
-    pivoted = (
-        pairs.groupBy("word_id")
-        .pivot("topic", list(range(K)))
-        .agg(F.sum("cnt"))
-    )
-    return pivoted.select(
-        "word_id",
-        F.array(
-            *[F.coalesce(F.col(str(t)), F.lit(0)).cast("long") for t in range(K)]
-        ).alias("cnts"),
-    )
+    def final(self, nwk, lineage: _Lineage):
+        return nwk, None
+
+    def close(self) -> None:
+        if self._bc is not None:
+            self._bc.destroy()
+            self._bc = None
 
 
-# --- join_exchange='chunks': dense binary chunk model exchange ----------
-# The model is C rows (chunk_id, cnts: binary), chunk c = the flat int64
-# count block for words [c·W, min(V,(c+1)·W)).  Per iteration each pid
-# receives all C chunks (pid×chunk cross join, the broadcast side being
-# the P-row pid table — the model itself NEVER rides a driver broadcast),
-# and emits its local counts back as per-chunk binary delta rows that a
-# per-chunk buffer sum reduces into the next model.  Identical kernel,
-# identical RNG streams — bit-identical output to join_exchange='words'
-# (pinned in tests).
+class _Join:
+    """model_mode='join': the model table is rebuilt executor-side from the
+    payload rows and only the K-vector n_k (model.cc:147-151) reaches the
+    driver.  Subclasses define the wire format."""
+
+    def __init__(self, spark, vocab_size: int, num_partitions: int, chunk_width: int,
+                 config: TrainConfig) -> None:
+        self.spark = spark
+        self.V, self.P, self.W, self.config = vocab_size, num_partitions, chunk_width, config
+        self.model: DataFrame | None = None
+        self._model_ckpt: DataFrame | None = None
+
+    def init(self, packed: DataFrame) -> DataFrame:
+        zinit = partial(_zinit_pass, num_topics=self.config.num_topics,
+                        seed=self.config.seed, encode=self.encode)
+
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            return pd.concat(list(zinit([pdf.sort_values("doc_id")])), ignore_index=True)
+
+        return packed.groupBy("pid").applyInPandas(fn, schema=_SWEEP_SCHEMA)
+
+    def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
+        fn = _cogroup_sweep_fn(self.assemble, nk, self.encode, self.config, self.V, it)
+        return (
+            df_z.where(F.col("doc_id") >= 0)
+            .groupby("pid")
+            .cogroup(self._slices().groupby("pid"))
+            .applyInPandas(fn, schema=_SWEEP_SCHEMA)
+        )
+
+    def reduce(self, df_z: DataFrame, lineage: _Lineage):
+        # Lazy model checkpoint: the n_k read below is a full pass over the
+        # model table, so it is the materializing action — ONE job runs
+        # sweep → persist z blocks → model rebuild → persist model blocks →
+        # n_k collect.  No _fresh_stats on df_z: its checkpoint keeps the
+        # cogroup's output partitioning, and its inherited stats grow only
+        # linearly; the model's rebase is what breaks the exponential
+        # squaring (it would otherwise inherit the corpus product and feed
+        # it back in).
+        self._model_ckpt = lineage.cut(self._model_of(df_z))
+        self.model = _fresh_stats(self._model_ckpt)
+        nk = self._nk()
+        ll = _payload_ll(df_z) if self.config.compute_likelihood else 0.0
+        return nk, None, ll
+
+    def final(self, nwk, lineage: _Lineage):
+        """Driver materialization for API parity (tests, describe_topics,
+        serde).  At true scale, use the returned table with
+        model-as-DataFrame inference and skip this collect."""
+        K = self.config.num_topics
+        rows = self._rows()
+        mpdf = rows.toPandas()
+        nwk = np.zeros((self.V, K), dtype=np.int64)
+        if len(mpdf):
+            nwk[mpdf["word_id"].to_numpy().astype(np.int64)] = np.stack(
+                [np.asarray(c, dtype=np.int64) for c in mpdf["cnts"]]
+            )
+        # The returned table reads the final model's blocks.
+        lineage.keep(self._model_ckpt)
+        # model_table in the exact shape transform_model_df consumes
+        # ((word_id, topic_counts: array<double>)) so the documented
+        # at-scale hand-off needs no rename or cast.
+        return nwk, rows.select(
+            "word_id",
+            F.transform("cnts", lambda c: c.cast("double")).alias("topic_counts"),
+        )
+
+    def close(self) -> None:
+        pass
+
+
+class _Words(_Join):
+    """Each partition receives ONLY the model rows for words its documents
+    contain — an equi-join of the static ``(pid, word_id)`` membership
+    table with the model, cogrouped with the assignments by pid.  Shipped
+    volume is Σ_w K·|partitions(w)| ≤ P·V·K through a shuffle; the sweep
+    remaps the partition's word ids into a dense local sub-model with the
+    true-V smoothing override."""
+
+    name = "words"
+
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
+        self.encode = partial(_payload_row, num_topics=self.config.num_topics)
+        self.assemble = partial(_words_slice, num_topics=self.config.num_topics)
+        self.word_pid: DataFrame | None = None
+
+    def reduce(self, df_z: DataFrame, lineage: _Lineage):
+        if self.word_pid is None:
+            # First reduce (fresh or resumed): docs never move between
+            # pids, so the membership table is built once, from the
+            # assignments.  Pre-partitioned by word_id and PERSISTED (not
+            # localCheckpoint: a checkpoint's Scan ExistingRDD reports
+            # UnknownPartitioning, so the per-iteration slice join would
+            # re-exchange this table — the LARGEST relation in that join —
+            # every iteration; an InMemoryRelation keeps the hash
+            # partitioning, so the join reuses it, plan-verified).  At
+            # local scale AQE simply broadcasts the cached table instead.
+            self.word_pid = (
+                df_z.where(F.col("doc_id") >= 0)
+                .select("pid", "word_occ", "z")
+                .mapInPandas(_members, schema="pid int, word_id long")
+                .distinct()
+                .repartition("word_id")
+                .persist()
+            )
+            self.word_pid.count()
+        return super().reduce(df_z, lineage)
+
+    def _model_of(self, df_z: DataFrame) -> DataFrame:
+        """Payload rows → the ``(word_id, cnts: array<long>)`` model table:
+        decode the int64 (idx, cnt) pairs executor-side, sum by (word,
+        topic) (map-side combined), pivot the K known topics into a dense
+        array.  The driver touches nothing."""
+        K = self.config.num_topics
+
+        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for buf in pdf["z"]:
+                    a = np.frombuffer(buf, dtype=np.int64)
+                    yield pd.DataFrame(
+                        {
+                            "word_id": a[0::2] // K,
+                            "topic": (a[0::2] % K).astype(np.int32),
+                            "cnt": a[1::2],
+                        }
+                    )
+
+        pivoted = (
+            df_z.where(F.col("doc_id") < 0)
+            .select("z")
+            .mapInPandas(decode, schema="word_id long, topic int, cnt long")
+            .groupBy("word_id")
+            .pivot("topic", list(range(K)))
+            .agg(F.sum("cnt"))
+        )
+        return pivoted.select(
+            "word_id",
+            F.array(
+                *[F.coalesce(F.col(str(t)), F.lit(0)).cast("long") for t in range(K)]
+            ).alias("cnts"),
+        )
+
+    def _nk(self) -> np.ndarray:
+        nk = np.zeros(self.config.num_topics, dtype=np.int64)
+        for r in (
+            self.model.select(F.posexplode("cnts").alias("t", "c"))
+            .groupBy("t")
+            .agg(F.sum("c").alias("c"))
+            .collect()
+        ):
+            nk[r["t"]] = r["c"]
+        return nk
+
+    def _slices(self) -> DataFrame:
+        return self.word_pid.join(self.model, "word_id").select("pid", "word_id", "cnts")
+
+    def _rows(self) -> DataFrame:
+        return self.model
+
+    def close(self) -> None:
+        if self.word_pid is not None:
+            self.word_pid.unpersist()
+            self.word_pid = None
+
+
+def _members(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Doc rows → the distinct (pid, word_id) pairs they contain."""
+    for pdf in batches:
+        offsets, word_occ, _ = _unpack_docs(pdf)
+        pid = np.repeat(pdf["pid"].to_numpy().astype(np.int64), np.diff(offsets))
+        key = np.unique((pid << 32) | word_occ.astype(np.int64))
+        yield pd.DataFrame({"pid": (key >> 32).astype(np.int32), "word_id": key & 0xFFFFFFFF})
+
+
+# --- chunks: dense binary chunk model exchange ---------------------------
+# When every partition contains (nearly) the whole vocabulary — which a
+# partition holding ≥V tokens of Zipfian text almost always does — the
+# words exchange ships P near-full model copies as P·V tiny array rows, and
+# profiling showed the row/sort/Arrow machinery (not the kernel, ~0.2 s of
+# a ~10 s iteration) dominating.  The chunks exchange moves the same bytes
+# as C dense binary chunk rows and reduces the rebuild to a per-chunk
+# buffer sum — measured ~2× faster per iteration at NYTimes scale (see
+# BENCH_LDA_SCALE.json).
 
 _CHUNK_TARGET_BYTES = 4 << 20     # aim ~4 MB per chunk row
 # 'auto' per-task memory budget for the chunks exchange.  A chunk-mode
@@ -704,6 +794,14 @@ _CHUNK_TARGET_BYTES = 4 << 20     # aim ~4 MB per chunk row
 # (384 MB/task → dense blocks up to 128 MB qualify).
 _CHUNK_TASK_BUDGET_BYTES = 384 << 20
 _CHUNK_DENSE_COPIES = 3
+# 'auto' per-iteration WIRE-VOLUME cap for the chunks exchange.  Chunks
+# replicate the dense V·K block to every partition — P·V·K·8 bytes on the
+# shuffle per iteration — while words route each partition only its own
+# word slices; a block that comfortably fits one task can still be a
+# multi-TB per-iteration exchange at P=1000.  At the single-digit-GiB
+# level a 1000-executor shuffle absorbs the replication cheaply; beyond
+# it the words format's slice routing wins.
+_CHUNK_EXCHANGE_BUDGET_BYTES = 8 << 30
 
 
 def _chunk_grid(vocab_size: int, num_topics: int, parallelism: int) -> tuple[int, int]:
@@ -717,603 +815,256 @@ def _chunk_grid(vocab_size: int, num_topics: int, parallelism: int) -> tuple[int
     return -(-vocab_size // w), w
 
 
-def _chunk_delta_rows(pid: int, acc_flat: np.ndarray, num_topics: int,
-                      chunk_width: int, ll_total: float = 0.0) -> pd.DataFrame:
-    """Dense local counts → one binary row per NONZERO chunk:
-    ``doc_id = -(chunk_id+1)``, ``z`` = the chunk's flat int64 block.
-    The partition's LL partial rides the first emitted row."""
-    K, W = num_topics, chunk_width
-    acc2 = acc_flat.reshape(-1, K)
-    V = acc2.shape[0]
-    chunks, bufs = [], []
-    for c in range(-(-V // W)):
-        block = acc2[c * W : (c + 1) * W]
-        if block.any():
-            chunks.append(c)
-            bufs.append(np.ascontiguousarray(block, dtype=np.int64).tobytes())
-    lls = np.zeros(len(chunks))
-    if len(lls):
-        lls[0] = ll_total
-    return pd.DataFrame(
-        {
-            "pid": np.full(len(chunks), pid, dtype=np.int32),
-            "doc_id": np.array([-(c + 1) for c in chunks], dtype=np.int64),
-            "word_occ": [b""] * len(chunks),
-            "z": bufs,
-            "ll": lls,
-        }
-    )
+class _Chunks(_Join):
+    """The model is C rows (chunk_id, cnts: binary), chunk c = the flat
+    int64 count block for words [c·W, min(V,(c+1)·W)).  Per iteration each
+    pid receives all C chunks through a pid×chunk cross join whose
+    BROADCAST side is the P-row pid table (the model itself only ever
+    rides the shuffle) and emits its counts back as per-chunk binary rows
+    that a per-chunk buffer sum reduces into the next model — the closest
+    Spark shape to the reference's chunked AllReduce (mpi_lda.cc:58-92)."""
 
+    name = "chunks"
 
-def _chunk_zinit_fn(num_topics: int, seed: int, vocab_size: int, chunk_width: int):
-    """applyInPandas per-pid z-init, chunk wire format."""
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
+        K = self.config.num_topics
+        self.encode = partial(_chunk_rows, num_topics=K, chunk_width=self.W,
+                              vocab_size=self.V)
+        self.assemble = partial(_chunks_block, num_topics=K, vocab_size=self.V,
+                                chunk_width=self.W)
+        self.pids = self.spark.range(self.P).select(F.col("id").cast("int").alias("pid"))
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid, occ_all, z_all, out = _zinit_docs(pdf, num_topics, seed)
-        acc = np.zeros(vocab_size * num_topics, dtype=np.int64)
-        if occ_all.shape[0]:
-            np.add.at(acc, occ_all.astype(np.int64) * num_topics + z_all, 1)
-        return pd.concat(
-            [out, _chunk_delta_rows(pid, acc, num_topics, chunk_width)],
-            ignore_index=True,
+    def _model_of(self, df_z: DataFrame) -> DataFrame:
+        """Per-pid chunk rows → the (chunk_id, cnts, tsum) model table: one
+        buffer sum per chunk (groups are ≤P rows of one chunk's block).
+        ``tsum`` is the chunk's K-vector of per-topic totals, computed here
+        while the summed block is already in hand, so the n_k read is a
+        narrow C-row collect instead of a re-decode of the count blocks."""
+        K = self.config.num_topics
+
+        def sum_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            cid = -int(key[0]) - 1
+            bufs = [np.frombuffer(b, dtype=np.int64) for b in pdf["z"]]
+            width = max(b.shape[0] for b in bufs)
+            total = np.zeros(width, dtype=np.int64)
+            for b in bufs:
+                total[: b.shape[0]] += b
+            tsum = total.reshape(-1, K).sum(axis=0)
+            return pd.DataFrame(
+                {"chunk_id": [cid], "cnts": [total.tobytes()], "tsum": [tsum.tobytes()]}
+            )
+
+        return (
+            df_z.where(F.col("doc_id") < 0)
+            .select("doc_id", "z")
+            .groupBy("doc_id")
+            .applyInPandas(sum_fn, schema="chunk_id int, cnts binary, tsum binary")
         )
 
-    return fn
+    def _nk(self) -> np.ndarray:
+        nk = np.zeros(self.config.num_topics, dtype=np.int64)
+        for r in self.model.select("tsum").collect():
+            nk += np.frombuffer(r["tsum"], dtype=np.int64)
+        return nk
+
+    def _slices(self) -> DataFrame:
+        return F.broadcast(self.pids).crossJoin(self.model.select("chunk_id", "cnts"))
+
+    def _rows(self) -> DataFrame:
+        """Chunk table → (word_id, cnts: array<long>) rows, decoded
+        executor-side."""
+        K, W = self.config.num_topics, self.W
+
+        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for cid, buf in zip(pdf["chunk_id"], pdf["cnts"]):
+                    block = np.frombuffer(buf, dtype=np.int64).reshape(-1, K)
+                    yield pd.DataFrame(
+                        {
+                            "word_id": cid * W + np.arange(block.shape[0], dtype=np.int64),
+                            "cnts": list(block),
+                        }
+                    )
+
+        return self.model.mapInPandas(decode, schema="word_id long, cnts array<long>")
 
 
-def _chunk_sweep_fn(nk_global: list[int], vocab_size: int, alpha: float, beta: float,
-                    seed: int, iteration: int, compute_likelihood: bool,
-                    chunk_width: int):
-    """Cogrouped sweep, chunk wire format: (docs for pid) × (all model
-    chunks).  The kernel input is the FULL dense n_wk, so word ids need
-    no local remap (occ_idx = global id) — everything else is the SAME
-    code as the words-mode sweep (shared helpers), which makes the two
-    modes bit-identical."""
-    K, W = len(nk_global), chunk_width
-
-    def fn(key, docs: pd.DataFrame, model: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        rng = kernel.make_rng(seed, pid, iteration + 1)
-        docs = docs.sort_values("doc_id")
-        nwk = np.zeros((vocab_size, K), dtype=np.int64)
-        for cid, buf in zip(model["chunk_id"], model["cnts"]):
-            block = np.frombuffer(buf, dtype=np.int64).reshape(-1, K)
-            nwk[cid * W : cid * W + block.shape[0]] = block
-        nk = np.asarray(nk_global, dtype=np.int64)
-
-        offsets, word_occ, z = _unpack_docs(docs)
-        # Invariant (the chunks counterpart of the words-mode slice
-        # guard): every word occurring here was counted at init, so its
-        # model row must be nonzero.  A zero row means a chunk went
-        # missing (lost/partial checkpoint, pid-geometry mismatch) and
-        # sweeping against it would drive counts negative and corrupt
-        # the model SILENTLY — raise instead (a real raise, not assert).
-        if word_occ.shape[0]:
-            present = np.unique(word_occ.astype(np.int64))
-            covered = nwk[present].sum(axis=1) > 0
-            if not covered.all():
-                missing = present[~covered][:20]
-                raise RuntimeError(
-                    "partition word(s) have empty model chunks: "
-                    f"{missing.tolist()}"
-                )
-
-        out, ll_total = _ll_sweep_docs(
-            pid, docs, offsets, word_occ, z, nwk, nk, alpha, beta, rng,
-            vocab_size, compute_likelihood,
-        )
-        acc = np.zeros(vocab_size * K, dtype=np.int64)
-        if word_occ.shape[0]:
-            np.add.at(acc, word_occ.astype(np.int64) * K + z, 1)
-        return pd.concat(
-            [out, _chunk_delta_rows(pid, acc, K, W, ll_total)],
-            ignore_index=True,
-        )
-
-    return fn
-
-
-def _chunk_model_df(df_z: DataFrame, num_topics: int) -> DataFrame:
-    """Per-pid chunk delta rows → the (chunk_id, cnts, tsum) model
-    table: one buffer sum per chunk (groups are ≤P rows of one chunk's
-    block).  ``tsum`` is the chunk's K-vector of per-topic totals,
-    computed here while the summed block is already in hand, so the
-    per-iteration n_k read (:func:`_chunk_nk`) is a narrow C-row
-    collect instead of a re-decode + shuffle of the count blocks."""
-    K = num_topics
-
-    def sum_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cid = -int(key[0]) - 1
-        bufs = [np.frombuffer(b, dtype=np.int64) for b in pdf["z"]]
-        width = max(b.shape[0] for b in bufs)
-        total = np.zeros(width, dtype=np.int64)
-        for b in bufs:
-            total[: b.shape[0]] += b
-        tsum = total.reshape(-1, K).sum(axis=0)
-        return pd.DataFrame(
-            {
-                "chunk_id": [cid],
-                "cnts": [total.tobytes()],
-                "tsum": [tsum.tobytes()],
-            }
-        )
-
-    return (
-        df_z.where(F.col("doc_id") < 0)
-        .select("doc_id", "z")
-        .groupBy("doc_id")
-        .applyInPandas(sum_fn, schema="chunk_id int, cnts binary, tsum binary")
-    )
-
-
-def _chunk_nk(model_chunks: DataFrame, num_topics: int) -> list[int]:
-    """The global K-vector: the C pre-summed ``tsum`` rows (K longs
-    each) collected and added on the driver — one narrow job over the
-    checkpointed chunk table, no shuffle."""
-    nk = np.zeros(num_topics, dtype=np.int64)
-    for r in model_chunks.select("tsum").collect():
-        nk += np.frombuffer(r["tsum"], dtype=np.int64)
-    return [int(x) for x in nk]
-
-
-def _chunk_rows_df(model_chunks: DataFrame, num_topics: int, chunk_width: int) -> DataFrame:
-    """Chunk table → (word_id, cnts: array<long>) rows (the words-mode /
-    model_table shape), decoded executor-side."""
-    K, W = num_topics, chunk_width
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for cid, buf in zip(pdf["chunk_id"], pdf["cnts"]):
-                block = np.frombuffer(buf, dtype=np.int64).reshape(-1, K)
-                yield pd.DataFrame(
-                    {
-                        "word_id": cid * W + np.arange(block.shape[0], dtype=np.int64),
-                        "cnts": list(block),
-                    }
-                )
-
-    return model_chunks.mapInPandas(decode, schema="word_id long, cnts array<long>")
-
-
-def _save_join_checkpoint(
-    path: str, df_z: DataFrame, word_pid: DataFrame | None, it: int, lls, words,
-    exchange: str, chunk_width: int, num_partitions: int,
-) -> None:
-    """Join-mode fault-tolerance state: the assignments (parquet), the
-    static word-membership table (parquet; words exchange only), and
-    driver metadata (npz — including the exchange mode, chunk grid, and
-    partition count, so a resumed run always continues in the geometry
-    it started with: assignment rows carry pids baked from the original
-    P, and a resume-time P from a different machine/config would
-    otherwise leave pids ≥ P without model chunks).  The model table is
-    NOT saved — it is a pure function of the assignment payload rows
-    and is rebuilt on resume."""
-    df_z.write.mode("overwrite").parquet(f"{path}/assignments")
-    if word_pid is not None:
-        word_pid.write.mode("overwrite").parquet(f"{path}/word_pid")
-    np.savez(
-        f"{path}/join_state.npz",
-        next_iteration=it + 1,
-        lls=np.asarray(lls, dtype=np.float64),
-        words=np.asarray(words, dtype=object),
-        exchange=exchange,
-        chunk_width=chunk_width,
-        num_partitions=num_partitions,
-    )
+_EXCHANGES = {"broadcast": _Broadcast, "words": _Words, "chunks": _Chunks}
 
 
 def _resolve_join_exchange(config: TrainConfig, vocab_size: int,
                            total_tokens: int, num_partitions: int) -> str:
-    """'auto' picks chunks when (a) the dense V·K block fits the
-    per-task budget, (b) partitions average ≥V tokens — the regime
-    where word-slicing degenerates into shipping near-full model copies
-    row by row — and (c) the per-iteration replication volume P·V·K·8
-    stays inside ``config.join_exchange_budget_bytes`` (chunks ship the
-    whole model to EVERY partition each iteration; a block that fits
-    one task is still a multi-TB exchange at P=1000).  Words otherwise
-    (see TrainConfig.join_exchange)."""
+    """'auto' picks chunks when (a) the dense V·K block fits the per-task
+    budget, (b) partitions average ≥V tokens — the regime where
+    word-slicing degenerates into shipping near-full model copies row by
+    row — and (c) the per-iteration replication volume P·V·K·8 stays
+    inside _CHUNK_EXCHANGE_BUDGET_BYTES.  Words otherwise: giant V·K,
+    where dense per-task state is unaffordable and slicing genuinely
+    prunes."""
     if config.join_exchange != "auto":
         return config.join_exchange
     nbytes = vocab_size * config.num_topics * 8
     dense_ok = nbytes * _CHUNK_DENSE_COPIES <= _CHUNK_TASK_BUDGET_BYTES
     token_rich = total_tokens >= vocab_size * num_partitions
-    volume_ok = nbytes * num_partitions <= config.join_exchange_budget_bytes
+    volume_ok = nbytes * num_partitions <= _CHUNK_EXCHANGE_BUDGET_BYTES
     return "chunks" if (dense_ok and token_rich and volume_ok) else "words"
 
 
-def _train_join(
-    corpus: DataFrame, config: TrainConfig, resume_from: str | None = None,
-    total_tokens: int | None = None,
-) -> TrainResult:
-    """model_mode='join' driver loop — see the block comment above."""
-    spark = corpus.sparkSession
-    sc = spark.sparkContext
-    if config.num_partitions:
-        P = config.num_partitions
-    else:
-        if total_tokens is None:
-            total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
-        P = _auto_partitions(total_tokens, sc.defaultParallelism)
-
-    chunk_w = 0  # chunks exchange only; saved in checkpoints
-    if resume_from is None:
-        # The sorted word list is collected to the driver regardless
-        # (API parity + checkpoint metadata), and word_id is BY
-        # CONTRACT the lexicographic rank — so collect the sorted
-        # distinct words directly and rebuild the (word, word_id)
-        # frame from the driver list (round 12): one distributed
-        # distinct+sort job instead of the build_vocab plan running
-        # once for this collect and AGAIN inside every consumer of the
-        # remap join.  The vocab is broadcast by remap_words either
-        # way, so the driver list is within the existing memory
-        # envelope; ids are identical (enumerate == rank).
-        words = [
-            r["word"]
-            for r in corpus.select("word").distinct().orderBy("word").collect()
-        ]
-        V, K = len(words), config.num_topics
-        if V == 0:
-            raise ValueError("empty vocabulary")
-        vocab = spark.createDataFrame(
-            [(w, i) for i, w in enumerate(words)], "word string, word_id long"
-        )
-        if total_tokens is None and config.join_exchange == "auto":
-            total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
-        exch = _resolve_join_exchange(config, V, total_tokens or 0, P)
-
-        pid = F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
-        corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
-        packed = pack_docs(corpus_ids, P).withColumn("pid", pid)
-        if exch == "words":
-            # Static word-membership table: which partitions contain which words.
-            # Docs never move between pids, so this is built once and reused every
-            # iteration (≤ P·V slim rows; in practice near the corpus's distinct
-            # (doc-hash, word) mass).
-            # Pre-partitioned by word_id and PERSISTED (not localCheckpoint:
-            # a checkpoint's Scan ExistingRDD reports UnknownPartitioning,
-            # so the per-iteration slice join would re-exchange this table —
-            # the LARGEST relation in that join — every iteration; an
-            # InMemoryRelation keeps the hash partitioning, so the join
-            # reuses it, plan-verified).  At local bench scale AQE simply
-            # broadcasts the cached table instead — also exchange-free.
-            word_pid = (
-                corpus_ids.select(pid.alias("pid"), "word_id")
-                .distinct()
-                .repartition("word_id")
-                .persist()
-            )
-            word_pid.count()  # materialize once, before the iteration loop
-            zinit = _join_zinit_fn(K, config.seed)
-        else:
-            word_pid = None
-            _, chunk_w = _chunk_grid(V, K, sc.defaultParallelism)
-            zinit = _chunk_zinit_fn(K, config.seed, V, chunk_w)
-
-        z_ckpt = (
-            packed.select("pid", "doc_id", "word_occ")
-            .groupBy("pid")
-            .applyInPandas(zinit, schema=_JOIN_SWEEP_SCHEMA)
-            .localCheckpoint(eager=False)
-        )
-        df_z = _fresh_stats(z_ckpt)
-        lls: list[float] = []
-        start_it = 0
-    else:
-        state = np.load(f"{resume_from}/join_state.npz", allow_pickle=True)
-        words = [str(w) for w in state["words"]]
-        V, K = len(words), config.num_topics
-        lls = [float(x) for x in state["lls"]]
-        start_it = int(state["next_iteration"])
-        # The checkpoint's exchange geometry wins over config — a chain
-        # must continue in the wire format AND partition count it
-        # started with: assignment rows carry pids baked from the
-        # original P, so a resume-time P (different machine, changed
-        # num_partitions) would leave pids ≥ P without model chunks.
-        # (Older checkpoints predate these fields and are
-        # words-exchange; their pid geometry rides in word_pid.)
-        exch = str(state["exchange"]) if "exchange" in state.files else "words"
-        if "num_partitions" in state.files:
-            P = int(state["num_partitions"])
-        if exch == "words":
-            word_pid = (
-                spark.read.parquet(f"{resume_from}/word_pid")
-                .repartition("word_id")  # same join-side partitioning as a fresh run
-                .persist()
-            )
-            word_pid.count()
-        else:
-            word_pid = None
-            chunk_w = int(state["chunk_width"])
-        z_ckpt = spark.read.parquet(f"{resume_from}/assignments").localCheckpoint(
-            eager=True
-        )
-        df_z = z_ckpt
-    _model_of = _join_model_df if exch == "words" else _chunk_model_df
-    # LAZY model checkpoint (the graph_hits lesson, round 12): the
-    # per-iteration n_k read below is a full pass over the model table,
-    # so it is the materializing action — ONE job per iteration now
-    # runs sweep → persist z blocks → model rebuild → persist model
-    # blocks → n_k collect, where the eager checkpoint previously split
-    # that into a materialization job plus a separate n_k job.  Values
-    # are unchanged (same kernel, same RNG streams, same payload
-    # decode); only the job boundary moves — broadcast≡join≡chunks
-    # bit-parity re-proven in tests/test_train.py after this change.
-    m_ckpt = _model_of(df_z, K).localCheckpoint(eager=False)
-    model_df = _fresh_stats(m_ckpt)
-    # chunks exchange: every pid receives every chunk — a cross join
-    # whose BROADCAST side is the P-row pid table, so the model itself
-    # only ever rides the shuffle.
-    pids_df = spark.range(P).select(F.col("id").cast("int").alias("pid"))
-    # Generation awaiting release: with a lazy model checkpoint the
-    # sweep that CONSUMES generation g's blocks only runs inside
-    # generation g+1's first action (the n_k collect), so g may not be
-    # unpersisted at the bottom of its own iteration — it is parked
-    # here and released right after the next action completes.
-    pending: list = []
-
-    for it in range(start_it, config.total_iterations):
-        # n_k (the reference's global K-vector, model.cc:147-151): K numbers
-        # — the ONLY model state that touches the driver per iteration.
-        # This collect is ALSO the action that materializes the lazily
-        # checkpointed (z, model) generation built last iteration.
-        if exch == "words":
-            nk_rows = (
-                model_df.select(F.posexplode("cnts").alias("t", "c"))
-                .groupBy("t")
-                .agg(F.sum("c").alias("c"))
-                .collect()
-            )
-            nk_global = [0] * K
-            for r in nk_rows:
-                nk_global[r["t"]] = int(r["c"])
-            slices = word_pid.join(model_df, "word_id").select("pid", "word_id", "cnts")
-            sweep_fn = _join_sweep_fn(
-                nk_global, V, config.alpha, config.beta, config.seed, it,
-                config.compute_likelihood,
-            )
-        else:
-            nk_global = _chunk_nk(model_df, K)
-            slices = F.broadcast(pids_df).crossJoin(model_df.select("chunk_id", "cnts"))
-            sweep_fn = _chunk_sweep_fn(
-                nk_global, V, config.alpha, config.beta, config.seed, it,
-                config.compute_likelihood, chunk_w,
-            )
-        # The n_k action above materialized this iteration's inputs, so
-        # the generation parked last iteration is no longer referenced.
-        for h in pending:
-            h.unpersist()
-        pending = []
-        if it == start_it:
-            # first action of the loop also materialized z-init — the
-            # corpus triples' setup checkpoint has no readers left
-            # (no-op on resume, where the corpus was never persisted)
-            corpus.unpersist()
-        swept = (
-            df_z.where(F.col("doc_id") >= 0)
-            .groupby("pid")
-            .cogroup(slices.groupby("pid"))
-            .applyInPandas(sweep_fn, schema=_JOIN_SWEEP_SCHEMA)
-        )
-        new_z_ckpt = swept.localCheckpoint(eager=False)
-        # No _fresh_stats on df_z: keeping the checkpoint's own plan
-        # preserves whatever output partitioning/ordering metadata the
-        # checkpoint captured from the cogroup (measured ~6% faster per
-        # run at sf0.1 than rebasing both frames).  Its inherited stats
-        # grow only LINEARLY in digit count per iteration (each
-        # iteration multiplies by the bounded slices product — ~+40
-        # digits, harmless); only the model's rebase below is needed to
-        # break the exponential squaring (the model would otherwise
-        # inherit the corpus product and feed it back in).
-        new_df_z = new_z_ckpt
-        # Lazy model build: no job is launched here — the NEXT
-        # iteration's n_k collect (or the final model read) runs sweep,
-        # z persistence, model rebuild, and model persistence as one
-        # job.  The old generation's blocks are exactly what that job
-        # reads, so they are parked in `pending`, not unpersisted.
-        new_m_ckpt = _model_of(new_df_z, K).localCheckpoint(eager=False)
-        new_model_df = _fresh_stats(new_m_ckpt)
-        if config.compute_likelihood:
-            ll = (
-                new_df_z.where(F.col("doc_id") < 0).agg(F.sum("ll")).collect()[0][0]
-                or 0.0
-            )
-            lls.append(float(ll))
-        pending = [z_ckpt, m_ckpt]
-        z_ckpt, m_ckpt = new_z_ckpt, new_m_ckpt
-        df_z, model_df = new_df_z, new_model_df
-        if config.checkpoint_dir and (it + 1) % config.checkpoint_every == 0:
-            _save_join_checkpoint(
-                config.checkpoint_dir, df_z, word_pid, it, lls, words,
-                exch, chunk_w, P,
-            )
-
-    # Driver materialization for API parity (tests, describe_topics, serde).
-    # At true scale, use `model_table` + model-as-DataFrame inference and
-    # skip this collect.
-    model_rows = (
-        model_df if exch == "words" else _chunk_rows_df(model_df, K, chunk_w)
+def _save_checkpoint(path: str, df_z: DataFrame, it: int, lls, words, accum, ex) -> None:
+    """The assignments (parquet, payload rows included) plus one npz of
+    driver state.  The exchange, its partition count and chunk width are
+    saved because a resumed run must continue in the geometry it started
+    with: rows carry pids baked from the original P.  n_wk is not saved —
+    the payload rows rebuild it."""
+    df_z.write.mode("overwrite").parquet(f"{path}/assignments")
+    np.savez(
+        f"{path}/state.npz",
+        next_iteration=it + 1,
+        lls=np.asarray(lls, dtype=np.float64),
+        words=np.asarray(words, dtype=object),
+        accum=np.zeros(0) if accum is None else accum,
+        exchange=ex.name,
+        num_partitions=ex.P,
+        chunk_width=ex.W,
     )
-    mpdf = model_rows.toPandas()
-    nwk = np.zeros((V, K), dtype=np.int64)
-    if len(mpdf):
-        nwk[mpdf["word_id"].to_numpy().astype(np.int64)] = np.stack(
-            [np.asarray(c, dtype=np.int64) for c in mpdf["cnts"]]
-        )
-    if word_pid is not None:
-        word_pid.unpersist()
-    # toPandas above materialized the final generation; release the
-    # parked one and the final z (the final MODEL stays persisted — the
-    # returned model_table reads it).
-    for h in pending:
-        h.unpersist()
-    z_ckpt.unpersist()
-    raw_model = LDAModel(nwk, words, config.alpha, config.beta)
-    # model_table in the exact shape transform_model_df consumes
-    # ((word_id, topic_counts: array<double>)) so the documented
-    # at-scale hand-off needs no rename or cast.
-    return TrainResult(
-        model=raw_model, raw_model=raw_model, log_likelihood=lls,
-        model_table=model_rows.select(
-            "word_id",
-            F.transform("cnts", lambda c: c.cast("double")).alias("topic_counts"),
-        ),
+
+
+def _load_checkpoint(spark, path: str):
+    """Inverse of :func:`_save_checkpoint`: (state npz, assignments), the
+    assignments hash-partitioned and sorted the way a fresh run lays them
+    out."""
+    with np.load(f"{path}/state.npz", allow_pickle=True) as npz:
+        state = dict(npz)
+    df_z = (
+        spark.read.parquet(f"{path}/assignments")
+        .repartition(int(state["num_partitions"]), "doc_id")
+        .sortWithinPartitions("doc_id")
     )
+    return state, df_z
 
 
 def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None) -> TrainResult:
     """Train on canonical ``(doc_id, word, count)`` triples.
 
     ``resume_from`` restarts from a checkpoint written by
-    ``config.checkpoint_dir`` (assignments re-hashed to the same
-    partition count, so the continued run is a valid AD-LDA chain;
-    results are statistically — not bit — identical to an uninterrupted
-    run because shuffle gather order differs after the restart).
+    ``config.checkpoint_dir``.  The checkpoint's exchange and partition
+    count win over ``config``, and the resumed run is bit-identical to an
+    uninterrupted one: every sweep depends only on (assignments, model,
+    seed, pid, iteration), all of which the checkpoint reproduces.
     """
     config.validate()
-    total_tokens: int | None = None
-    if resume_from is None:
-        # LAZY checkpoint on the corpus triples (round 12): three setup
-        # passes consume this frame — the guard/token aggregate below,
-        # build_vocab's distinct, and the remap+pack feeding z-init.
-        # When the triples arrive as doc_term_counts(tokenize(docs))
-        # (the train_documents path), each pass re-ran the full
-        # tokenize explode + count aggregation over the corpus; the
-        # checkpoint materializes it ONCE (the guard agg is the first
-        # action) and the other passes read the persisted blocks.  The
-        # blocks are released as soon as the initial assignments are
-        # materialized (z-init is the last reader).  Values are
-        # untouched — the same triples, same partition layout, feed
-        # every pass.
-        corpus = corpus.localCheckpoint(eager=False)
-        # doc_id < 0 is the internal payload-row sentinel: a negative
-        # user doc_id would be excluded from every sweep AND decoded as
-        # count-payload garbage into the model.  One cheap columnar agg
-        # up front rejects it loudly — and the token total every
-        # non-resume path needs (auto partition sizing, join exchange
-        # resolution) rides the SAME aggregation, so the guard no
-        # longer costs a second full corpus pass.
-        guard = corpus.agg(
-            F.min("doc_id").alias("__min_id"), F.sum("count").alias("__tokens")
-        ).collect()[0]
-        min_id = guard["__min_id"]
-        total_tokens = int(guard["__tokens"] or 0)
-        if min_id is not None and min_id < 0:
-            raise ValueError(
-                f"doc_id must be >= 0 (got {min_id}); negative ids are "
-                "reserved for internal payload rows"
-            )
-    if config.model_mode == "join":
-        return _train_join(corpus, config, resume_from, total_tokens)
     spark = corpus.sparkSession
-    sc = spark.sparkContext
-    if config.num_partitions:
-        P = config.num_partitions
-    else:
-        if total_tokens is None:
-            total_tokens = int(
-                corpus.agg(F.sum("count")).collect()[0][0] or 0
+    K = config.num_topics
+    setup, prev, lineage = _Lineage(), _Lineage(), _Lineage()
+    ex = None
+    try:
+        if resume_from is None:
+            # LAZY checkpoint on the corpus triples: three setup passes
+            # consume this frame — the guard/token aggregate below, the
+            # vocabulary's distinct, and the remap+pack feeding z-init.
+            # When the triples arrive as doc_term_counts(tokenize(docs))
+            # (the train_documents path), each pass would re-run the full
+            # tokenize explode + count aggregation; the checkpoint
+            # materializes it ONCE (the guard agg is the first action).
+            corpus = setup.cut(corpus)
+            # doc_id < 0 is the internal payload-row sentinel: a negative
+            # user doc_id would be excluded from every sweep AND decoded as
+            # count-payload garbage into the model.  One cheap columnar agg
+            # up front rejects it loudly, and the token total (auto
+            # partition sizing, join exchange resolution) rides it.
+            guard = corpus.agg(
+                F.min("doc_id").alias("__min_id"), F.sum("count").alias("__tokens")
+            ).collect()[0]
+            min_id = guard["__min_id"]
+            total_tokens = int(guard["__tokens"] or 0)
+            if min_id is not None and min_id < 0:
+                raise ValueError(
+                    f"doc_id must be >= 0 (got {min_id}); negative ids are "
+                    "reserved for internal payload rows"
+                )
+            parallelism = spark.sparkContext.defaultParallelism
+            P = config.num_partitions or _auto_partitions(total_tokens, parallelism)
+            # word_id is BY CONTRACT the lexicographic rank, and the sorted
+            # word list is needed on the driver anyway (model + checkpoint),
+            # so one distinct+sort collect builds the vocabulary.
+            words = [
+                r["word"]
+                for r in corpus.select("word").distinct().orderBy("word").collect()
+            ]
+            V = len(words)
+            if V == 0:
+                raise ValueError("empty vocabulary")
+            name = (
+                "broadcast" if config.model_mode == "broadcast"
+                else _resolve_join_exchange(config, V, total_tokens, P)
             )
-        P = _auto_partitions(total_tokens, sc.defaultParallelism)
-    if config.aggregate_mode == "shuffle" or (
-        config.aggregate_mode == "auto" and P >= _SHUFFLE_AGG_MIN_PARTITIONS
-    ):
-        agg_model = _aggregate_model_shuffle
-    else:
-        agg_model = _aggregate_model
+            W = _chunk_grid(V, K, parallelism)[1] if name == "chunks" else 0
+            ex = _EXCHANGES[name](spark, V, P, W, config)
+            vocab = spark.createDataFrame(
+                [(w, i) for i, w in enumerate(words)], "word string, word_id long"
+            )
+            corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
+            # pack_docs hash-partitions by doc_id into P, so partition p
+            # holds exactly the docs of pid p.
+            packed = pack_docs(corpus_ids, P).withColumn(
+                "pid", F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
+            )
+            df_z = lineage.cut(ex.init(packed))
+            lls: list[float] = []
+            accum = np.zeros((V, K)) if name == "broadcast" else None
+            start_it = 0
+        else:
+            state, df_z = _load_checkpoint(spark, resume_from)
+            words = [str(w) for w in state["words"]]
+            V = len(words)
+            name = str(state["exchange"])
+            ex = _EXCHANGES[name](
+                spark, V, int(state["num_partitions"]), int(state["chunk_width"]), config
+            )
+            df_z = lineage.cut(df_z)
+            lls = [float(x) for x in state["lls"]]
+            accum = state["accum"] if name == "broadcast" else None
+            start_it = int(state["next_iteration"])
+            if config.average_model and accum is None:
+                raise ValueError(
+                    f"checkpoint was written by the {name} exchange, which keeps "
+                    "no running average; set average_model=False"
+                )
 
-    if resume_from is None:
-        # same driver-list vocab rebuild as _train_join (one
-        # distinct+sort job; ids are the lexicographic rank either way)
-        words = [
-            r["word"]
-            for r in corpus.select("word").distinct().orderBy("word").collect()
-        ]
-        V, K = len(words), config.num_topics
-        if V == 0:
-            raise ValueError("empty vocabulary")
-        vocab = spark.createDataFrame(
-            [(w, i) for i, w in enumerate(words)], "word string, word_id long"
-        )
-
-        corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
-        packed = pack_docs(corpus_ids, P)
-
-        # z-init (O1's random init, distributed) then initial model (O4).
-        df_z = packed.select("doc_id", "word_occ").mapInPandas(
-            _zinit_fn(K, V, config.seed), schema=_SWEEP_SCHEMA
-        )
-        # LAZY checkpoint: the payload collect inside agg_model is the
-        # first action, so one job computes the init pass, persists the
-        # blocks (truncating lineage), and returns the payload rows —
-        # no separate materialization job.
-        df_z = df_z.localCheckpoint(eager=False)
-        nwk, _ = agg_model(df_z, V, K)
-        # z-init just materialized — nothing reads the corpus triples
-        # again; release the setup checkpoint's blocks.
-        corpus.unpersist()
-        accum = np.zeros((V, K), dtype=np.float64)
-        lls: list[float] = []
-        start_it = 0
-    else:
-        state = np.load(f"{resume_from}/state.npz", allow_pickle=True)
-        words = [str(w) for w in state["words"]]
-        V, K = len(words), config.num_topics
-        nwk = state["nwk"]
-        accum = state["accum"]
-        lls = [float(x) for x in state["lls"]]
-        start_it = int(state["next_iteration"])
-        df_z = (
-            spark.read.parquet(f"{resume_from}/assignments")
-            .repartition(P, "doc_id")
-            .localCheckpoint(eager=True)
-        )
-
-    n_avg = config.total_iterations - config.burn_in_iterations
-
-    for it in range(start_it, config.total_iterations):
-        bc_nwk = sc.broadcast(nwk)
-        bc_nk = sc.broadcast(nwk.sum(axis=0))
-        # Payload rows (doc_id < 0) carry the previous pass's counts and
-        # must not enter the sweep; the filter is narrow (no shuffle).
-        swept = df_z.where(F.col("doc_id") >= 0).mapInPandas(
-            _sweep_fn(
-                bc_nwk, bc_nk, config.alpha, config.beta, config.seed, it,
-                config.compute_likelihood,
-            ),
-            schema=_SWEEP_SCHEMA,
-        )
-        # localCheckpoint (not persist): it truncates lineage, which is
-        # REQUIRED here — the sweep closure captures this iteration's
-        # broadcasts, which are destroyed below, so any retained lineage
-        # would reference dead broadcasts and fail on recompute
-        # (persist(MEMORY_AND_DISK) crashes by iteration 2 for that
-        # reason).  The checkpoint is LAZY: agg_model's payload collect
-        # is the first action, so ONE job runs the sweep, persists the
-        # blocks, and returns the payload rows — fusing what were a
-        # materialization job and a payload-scan job (~25% of steady
-        # iteration wall at sf0.1).  The old generation is unpersisted
-        # only AFTER that job: its blocks are the checkpoint data the
-        # sweep reads, and its truncated lineage cannot recompute them.
-        new_df_z = swept.localCheckpoint(eager=False)
-        nwk, ll = agg_model(new_df_z, V, K)
-        df_z.unpersist()
-        df_z = new_df_z
-        if config.compute_likelihood:
-            lls.append(ll)
-        bc_nwk.destroy()
-        bc_nk.destroy()
-        if it >= config.burn_in_iterations:
-            accum += nwk
-        if config.checkpoint_dir and (it + 1) % config.checkpoint_every == 0:
-            _save_checkpoint(df_z, config.checkpoint_dir, it, nwk, accum, lls, words)
+        nk, nwk, _ = ex.reduce(df_z, lineage)
+        # The reduce materialized the first generation — nothing reads the
+        # corpus triples again.
+        setup.release()
+        for it in range(start_it, config.total_iterations):
+            prev, lineage = lineage, _Lineage()
+            df_z = lineage.cut(ex.sweep(df_z, it, nk, nwk))
+            nk, nwk, ll = ex.reduce(df_z, lineage)
+            # The reduce was the iteration's one action and the new
+            # checkpoint now holds its output: the previous generation has
+            # no readers left.
+            prev.release()
+            if config.compute_likelihood:
+                lls.append(ll)
+            if accum is not None and it >= config.burn_in_iterations:
+                accum += nwk
+            if config.checkpoint_dir and (it + 1) % config.checkpoint_every == 0:
+                _save_checkpoint(config.checkpoint_dir, df_z, it, lls, words, accum, ex)
+        nwk, model_table = ex.final(nwk, lineage)
+    finally:
+        for held in (setup, prev, lineage):
+            held.release()
+        if ex is not None:
+            ex.close()
 
     raw_model = LDAModel(nwk, words, config.alpha, config.beta)
     if config.average_model:
+        n_avg = config.total_iterations - config.burn_in_iterations
         model = LDAModel(accum / n_avg, words, config.alpha, config.beta)
     else:
         model = raw_model
-    df_z.unpersist()
-    return TrainResult(model=model, raw_model=raw_model, log_likelihood=lls)
+    return TrainResult(model=model, raw_model=raw_model, log_likelihood=lls,
+                       model_table=model_table)
 
 
 def train_documents(

@@ -24,7 +24,9 @@ def pytest_configure(config):
 # ``PLDA_RUN_SLOW=1`` is set (the builder's end-of-round run) or any
 # ``-m`` expression is passed (the caller chose markers explicitly).
 # Names, not markers, so the list lives in one place; a stale name
-# simply stops matching.
+# simply stops matching.  The LDA trainer tests (tests/test_train.py and
+# the CLI round trip) are deliberately NOT listed: they pin the exchange
+# parity, resume and release behaviour and must run in the default gate.
 SLOW_TESTS = {
     "test_as_of_join_matches_pandas_merge_asof",
     "test_association_rules_semantics",
@@ -33,15 +35,12 @@ SLOW_TESTS = {
     "test_bootstrap_ci_properties",
     "test_bpe_train_matches_reference",
     "test_byte_bpe_matches_reference",
-    "test_checkpoint_resume",
     "test_chi2_and_winsorize_semantics",
     "test_cms_upper_bound_and_mergeability",
     "test_compact_dedup_ledger_preserves_semantics",
     "test_connected_components",
-    "test_counts_conserved",
     "test_curriculum_order_semantics",
     "test_cvm_two_sample_semantics",
-    "test_determinism",
     "test_domain_filter_block_allow_partition",
     "test_dp_quantile_and_pareto_semantics",
     "test_drift_test_cardinality_guard_and_bins",
@@ -69,15 +68,6 @@ SLOW_TESTS = {
     "test_ivf_pq_append_equals_build_on_union",
     "test_ivf_pq_delete_equals_build_on_remainder",
     "test_ivf_pq_index_persist_prune_and_exactness",
-    "test_join_exchange_checkpoint_geometry_wins",
-    "test_join_exchange_parity_words_vs_chunks",
-    "test_join_exchange_words_checkpoint_resume",
-    "test_join_mode_checkpoint_resume_bit_identical",
-    "test_join_mode_deterministic_and_validated",
-    "test_join_mode_model_feeds_dataframe_inference",
-    "test_join_mode_trains_and_recovers_topics",
-    "test_join_resume_from_legacy_checkpoint_format",
-    "test_join_resume_uses_checkpointed_partition_count",
     "test_kcenter_literal_budget_cap",
     "test_kcore_semantics",
     "test_kmeans_fit_exact_wcss_partition_invariant",
@@ -109,7 +99,6 @@ SLOW_TESTS = {
     "test_roc_auc_and_kappa_semantics",
     "test_round10_new_ops_are_single_pass_rollups",
     "test_sessionize_stateful",
-    "test_shuffle_aggregate_mode_identical",
     "test_spearman_matches_pandas_average_ranks",
     "test_srm_from_ledger_matches_designed_split",
     "test_streaming_sink_idempotence_check_is_o1",
@@ -117,9 +106,7 @@ SLOW_TESTS = {
     "test_tokenizer_save_load_roundtrip_all_families",
     "test_tost_xi_and_capture_semantics",
     "test_train_matches_sequential_reference",
-    "test_train_view_infer_roundtrip",
     "test_trainer_parity_with_sequential_reference",
-    "test_umass_coherence",
     "test_warc_roundtrip_html_payloads",
     "test_warc_stream_ingest_extract_and_dedup",
     "test_wet_stream_ingest_exactly_once_dedup",

@@ -182,46 +182,49 @@ def test_umass_coherence(spark, tiny_result):
     assert sum(res.values()) > sum(bad.values())
 
 
-def test_checkpoint_resume(spark, tmp_path):
-    """Kill-and-resume: a run checkpointed at iteration 4 resumes and
-    finishes with conserved counts and sane topics."""
+EXCHANGES = {
+    "broadcast": dict(model_mode="broadcast"),
+    "words": dict(model_mode="join", join_exchange="words"),
+    "chunks": dict(model_mode="join", join_exchange="chunks"),
+}
+
+
+@pytest.mark.parametrize("exchange", sorted(EXCHANGES))
+def test_checkpoint_resume_bit_identical(spark, tmp_path, exchange):
+    """Kill-and-resume equals an uninterrupted run: every sweep depends
+    only on (assignments, model, seed, pid, iteration), all of which the
+    checkpoint reproduces.  Broadcast also carries the running average."""
     corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
     ckpt = str(tmp_path / "ckpt")
-    cfg = TrainConfig(
-        num_topics=3, total_iterations=4, burn_in_iterations=2,
-        seed=11, num_partitions=2, checkpoint_dir=ckpt, checkpoint_every=2,
-    )
-    train(corpus, cfg)  # writes checkpoints at iterations 2 and 4
+    base = dict(num_topics=3, burn_in_iterations=1, compute_likelihood=True,
+                average_model=exchange == "broadcast", seed=31, num_partitions=2,
+                **EXCHANGES[exchange])
+    straight = train(corpus, TrainConfig(**base, total_iterations=4))
+    train(corpus, TrainConfig(**base, total_iterations=2,
+                              checkpoint_dir=ckpt, checkpoint_every=2))
+    resumed = train(corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt)
 
-    cfg2 = TrainConfig(
-        num_topics=3, total_iterations=8, burn_in_iterations=2,
-        seed=11, num_partitions=2,
-    )
-    res = train(corpus, cfg2, resume_from=ckpt)
-    m = res.raw_model
-    assert m.nwk.sum() == 30 * 20
-    assert np.array_equal(m.nk, m.nwk.sum(axis=0))
-    assert m.words == sorted(m.words)
+    assert np.array_equal(straight.raw_model.nwk, resumed.raw_model.nwk)
+    assert straight.raw_model.words == resumed.raw_model.words
+    assert resumed.log_likelihood == straight.log_likelihood
+    if exchange == "broadcast":
+        assert np.array_equal(straight.model.nwk, resumed.model.nwk)
 
 
-def test_shuffle_aggregate_mode_identical(spark):
-    """The shuffle pre-combine rebuild (large-P mode) must produce the
-    same model bit-for-bit as the driver-side payload sum, and an
-    invalid mode must be rejected."""
-    from plda_spark.lda.train import TrainConfig, train
-
-    import numpy as np
+def test_shuffle_aggregate_mode_identical(spark, monkeypatch):
+    """The shuffle pre-combine reduce (the broadcast exchange at P >= 256)
+    must produce the same model bit-for-bit as the driver-side payload
+    sum."""
+    from plda_spark.lda import train as train_mod
 
     triples = synthetic_corpus(spark, n_docs=30)
-    base = dict(num_topics=4, total_iterations=3, burn_in_iterations=1,
-                seed=9, num_partitions=3, compute_likelihood=True)
-    a = train(triples, TrainConfig(**base, aggregate_mode="driver"))
-    b = train(triples, TrainConfig(**base, aggregate_mode="shuffle"))
+    cfg = TrainConfig(num_topics=4, total_iterations=3, burn_in_iterations=1,
+                      seed=9, num_partitions=3, compute_likelihood=True)
+    a = train(triples, cfg)
+    monkeypatch.setattr(train_mod, "_SHUFFLE_AGG_MIN_PARTITIONS", 1)
+    b = train(triples, cfg)
     assert np.array_equal(a.raw_model.nwk, b.raw_model.nwk)
-    assert a.log_likelihood == pytest.approx(b.log_likelihood)
-
-    with pytest.raises(ValueError):
-        TrainConfig(num_topics=4, aggregate_mode="bogus").validate()
+    assert a.log_likelihood == pytest.approx(b.log_likelihood, rel=1e-12)
 
 
 def test_join_mode_trains_and_recovers_topics(spark):
@@ -315,63 +318,87 @@ def test_join_mode_model_feeds_dataframe_inference(spark):
         assert int(a[d].argmax()) == int(b[d].argmax())
 
 
-def test_join_mode_checkpoint_resume_bit_identical(spark, tmp_path):
-    """Join-mode resume is BIT-identical to an uninterrupted run: the
-    sweep depends only on (assignments, model, iteration, pid) — all of
-    which the checkpoint reproduces exactly (RNG streams are keyed by
-    (seed, pid, iteration), not wall-clock or scheduling)."""
-    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
-    ckpt = str(tmp_path / "join_ckpt")
-    base = dict(num_topics=3, burn_in_iterations=0, average_model=False,
-                seed=31, num_partitions=2, model_mode="join")
-
-    straight = train(corpus, TrainConfig(**base, total_iterations=4)).raw_model
-
-    train(corpus, TrainConfig(**base, total_iterations=2,
-                              checkpoint_dir=ckpt, checkpoint_every=2))
-    resumed = train(
-        corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt
-    ).raw_model
-
-    assert np.array_equal(straight.nwk, resumed.nwk)
-    assert straight.words == resumed.words
-
-
-def test_join_exchange_parity_words_vs_chunks(spark):
-    """The two join-mode wire formats are BIT-identical: same RNG
-    streams, same kernel inputs (chunk mode's dense n_wk holds the same
-    values the words-mode slice holds for every word that occurs), so z
-    evolution — and therefore model, LLs, and model_table — match
-    exactly."""
+def test_exchange_parity_broadcast_words_chunks(spark):
+    """The three exchanges run the same Markov chain: same RNG streams,
+    same doc order per pid, same kernel inputs (the words slice and the
+    chunks' dense n_wk hold the broadcast model's values for every word
+    that occurs), and the likelihood is scored against the input model —
+    so counts match bit for bit, the likelihoods to rounding, and the two
+    join exchanges hand back equal model tables."""
     corpus = synthetic_corpus(spark, n_docs=30)
     base = dict(num_topics=3, total_iterations=4, burn_in_iterations=0,
                 average_model=False, compute_likelihood=True, seed=7,
-                num_partitions=3, model_mode="join")
-    a = train(corpus, TrainConfig(**base, join_exchange="words"))
-    b = train(corpus, TrainConfig(**base, join_exchange="chunks"))
-    assert np.array_equal(a.raw_model.nwk, b.raw_model.nwk)
-    assert a.log_likelihood == b.log_likelihood
-    mt_a = sorted((r["word_id"], list(r["topic_counts"])) for r in a.model_table.collect())
-    mt_b = sorted((r["word_id"], list(r["topic_counts"])) for r in b.model_table.collect())
+                num_partitions=3)
+    res = {name: train(corpus, TrainConfig(**base, **kw)) for name, kw in EXCHANGES.items()}
+    ref = res["broadcast"]
+    assert ref.model_table is None
+    for name in ("words", "chunks"):
+        assert np.array_equal(ref.raw_model.nwk, res[name].raw_model.nwk), name
+        assert res[name].log_likelihood == pytest.approx(ref.log_likelihood, rel=1e-12)
+    mt_a, mt_b = (
+        sorted((r["word_id"], list(r["topic_counts"])) for r in res[n].model_table.collect())
+        for n in ("words", "chunks")
+    )
     assert mt_a == mt_b
 
 
-def test_join_exchange_words_checkpoint_resume(spark, tmp_path):
-    """Explicit words-exchange resume stays bit-identical (the auto
-    default on tiny corpora is chunks, so the words path needs its own
-    resume pin)."""
+def test_likelihood_independent_of_arrow_batch_size(spark):
+    """The broadcast sweep streams a partition in Arrow batches; scoring
+    each doc against the iteration's input model (lda.cc:128-136) makes
+    both the counts and the likelihood independent of the batch size."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    corpus = synthetic_corpus(spark)
+    cfg = TrainConfig(num_topics=3, total_iterations=3, burn_in_iterations=1,
+                      compute_likelihood=True, seed=7, num_partitions=2)
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "10000")
+        big = train(corpus, cfg)
+        spark.conf.set(conf, "3")
+        small = train(corpus, cfg)
+    finally:
+        spark.conf.set(conf, old)
+    assert np.array_equal(big.raw_model.nwk, small.raw_model.nwk)
+    assert big.log_likelihood == small.log_likelihood
+
+
+def test_more_partitions_than_documents(spark):
+    """Empty pids: the chunks exchange hands every pid the model, so a pid
+    with no documents must sweep nothing rather than fail; counts still
+    match the broadcast exchange."""
+    corpus = synthetic_corpus(spark, n_docs=4, doc_len=10)
+    base = dict(num_topics=3, total_iterations=2, burn_in_iterations=0,
+                average_model=False, seed=1, num_partitions=9)
+    a = train(corpus, TrainConfig(**base, **EXCHANGES["broadcast"])).raw_model
+    b = train(corpus, TrainConfig(**base, **EXCHANGES["chunks"])).raw_model
+    assert a.nwk.sum() == 40
+    assert np.array_equal(a.nwk, b.nwk)
+
+
+@pytest.mark.parametrize("exchange", sorted(EXCHANGES))
+def test_train_releases_persisted_blocks(spark, tmp_path, exchange):
+    """train() leaves no persisted RDD behind — checked without forcing a
+    GC, so a release that only drops the Python handle would fail — on a
+    fresh run and on a zero-iteration resume.  Join mode keeps exactly
+    the one RDD behind the returned model_table.  Ids, not counts: a GC
+    during the call may clean up RDDs that earlier tests left behind."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
     corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
-    ckpt = str(tmp_path / "join_ckpt_words")
-    base = dict(num_topics=3, burn_in_iterations=0, average_model=False,
-                seed=31, num_partitions=2, model_mode="join",
-                join_exchange="words")
-    straight = train(corpus, TrainConfig(**base, total_iterations=4)).raw_model
-    train(corpus, TrainConfig(**base, total_iterations=2,
-                              checkpoint_dir=ckpt, checkpoint_every=2))
-    resumed = train(
-        corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt
-    ).raw_model
-    assert np.array_equal(straight.nwk, resumed.nwk)
+    ckpt = str(tmp_path / "ckpt")
+    base = dict(num_topics=3, total_iterations=3, burn_in_iterations=1,
+                average_model=exchange == "broadcast", seed=5, num_partitions=2,
+                **EXCHANGES[exchange])
+    kept = 0 if exchange == "broadcast" else 1
+    for resume_from, extra in ((None, dict(checkpoint_dir=ckpt, checkpoint_every=3)),
+                               (ckpt, {})):
+        before = persisted()
+        res = train(corpus, TrainConfig(**base, **extra), resume_from=resume_from)
+        assert len(persisted() - before) == kept, resume_from
+        assert res.raw_model.nwk.sum() == 30 * 20
 
 
 def test_join_exchange_checkpoint_geometry_wins(spark, tmp_path):
@@ -412,16 +439,10 @@ def test_join_exchange_auto_resolution():
     # copies per iteration (P·V·K·8 wire bytes); past the budget 'auto'
     # must fall back to words even though the block fits one task.
     # V=100k, K=10: dense 8 MB (dense_ok), token-rich.  P=1000 ->
-    # 8 GB volume, inside the 8 GiB default -> still chunks; V=200k at
+    # 8 GB volume, inside the 8 GiB budget -> still chunks; V=200k at
     # P=1000 -> 16 GB -> words.
     assert _resolve_join_exchange(cfg, 100_000, 100_000 * 1000, 1000) == "chunks"
     assert _resolve_join_exchange(cfg, 200_000, 200_000 * 1000, 1000) == "words"
-    # and the budget is configurable: shrink it and the same geometry
-    # that picked chunks cuts over to words
-    tight = TrainConfig(num_topics=10, average_model=False, model_mode="join",
-                        join_exchange_budget_bytes=1 << 30)
-    assert _resolve_join_exchange(tight, 100_000, 100_000 * 1000, 1000) == "words"
-    assert _resolve_join_exchange(tight, 100_000, 100_000 * 4, 4) == "chunks"
     # explicit settings win over the heuristic
     for forced in ("words", "chunks"):
         f = TrainConfig(num_topics=10, average_model=False, model_mode="join",
@@ -430,9 +451,6 @@ def test_join_exchange_auto_resolution():
     with pytest.raises(ValueError):
         TrainConfig(num_topics=3, model_mode="join", average_model=False,
                     join_exchange="bogus").validate()
-    with pytest.raises(ValueError):
-        TrainConfig(num_topics=3, model_mode="join", average_model=False,
-                    join_exchange_budget_bytes=0).validate()
 
 
 def test_chunk_grid_geometry():
@@ -467,31 +485,5 @@ def test_join_resume_uses_checkpointed_partition_count(spark, tmp_path):
         corpus,
         TrainConfig(**base, total_iterations=4, num_partitions=2),
         resume_from=ckpt,
-    ).raw_model
-    assert np.array_equal(straight.nwk, resumed.nwk)
-
-
-def test_join_resume_from_legacy_checkpoint_format(spark, tmp_path):
-    """A round-3-era join checkpoint (npz without exchange /
-    chunk_width / num_partitions fields) must resume on the words
-    exchange with the word_pid table — the pre-field layout."""
-    import os
-
-    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
-    ckpt = str(tmp_path / "legacy_ckpt")
-    base = dict(num_topics=3, burn_in_iterations=0, average_model=False,
-                seed=31, num_partitions=2, model_mode="join",
-                join_exchange="words")
-    straight = train(corpus, TrainConfig(**base, total_iterations=4)).raw_model
-    train(corpus, TrainConfig(**base, total_iterations=2,
-                              checkpoint_dir=ckpt, checkpoint_every=2))
-    # strip the round-4 fields to simulate the legacy npz layout
-    p = os.path.join(ckpt, "join_state.npz")
-    state = dict(np.load(p, allow_pickle=True))
-    for k in ("exchange", "chunk_width", "num_partitions"):
-        state.pop(k)
-    np.savez(p, **state)
-    resumed = train(
-        corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt
     ).raw_model
     assert np.array_equal(straight.nwk, resumed.nwk)

@@ -1,51 +1,80 @@
 """Per-iteration LDA training cost at NYTimes scale (README.md:102: 300k
-docs, ~100k vocab, ~100M tokens, K=10).
+docs, ~100k vocab, ~100M tokens, K=10), through the public ``train()``.
 
-Generates a synthetic packed corpus distributed (no driver data pass),
-then times the real per-iteration pipeline: broadcast model → C-kernel
-Gibbs sweep (mapInPandas) → localCheckpoint → partial/final count
-aggregation → collect.  This is the cost model the reference's speedup
-chart describes (one AllReduce per iteration, mpi_lda.cc:213-235).
+Generates ``(doc_id, word, count)`` triples distributed (no driver data
+pass) into a temporary parquet directory, then times ``train()`` on them at
+two iteration counts per mode.  ``t = fixed + n * per_iteration``, so the
+difference of the two calls over the difference of their iteration counts
+is the marginal cost of one Gibbs iteration (``iter_s``) and the intercept
+is what a call pays whatever its length (``fixed_s``: setup, z-init, the
+final model collect) — the split perfbench's ``iter_s`` / ``fixed_s``
+report.  One untimed one-iteration call warms the JVM and compiles the C
+sweep kernel first.
 
-Usage: python tools/bench_lda_scale.py [n_docs] [avg_len] [vocab] [k] [iters] [mode] [budget_bytes]
+Usage (from the repository root, so the Python workers import the
+package from the working directory):
 
-``mode`` is ``broadcast`` (default — the reference's replicated-model
-design), ``join`` (model-as-DataFrame with the word-sliced exchange,
-``join_exchange='words'``: no V·K broadcast or driver copy; model-slice
-rows ride shuffles — the beyond-broadcast-ceiling path), ``chunks``
-(``join_exchange='chunks'``: the model rides the shuffle as dense
-binary chunk rows — the 'auto' pick in token-rich regimes, ~2× faster
-than the words exchange with bit-identical output), or ``auto`` (let
-``_resolve_join_exchange`` pick — the pick lands in the output JSON;
-``budget_bytes`` overrides ``join_exchange_budget_bytes`` to probe the
-replication-volume cutover a P=1000 cluster would hit).
+    python tools/bench_lda_scale.py [n_docs] [avg_len] [vocab] [k] [iters] [mode]
+
+``iters`` is the higher iteration count (the lower is 1).  ``mode`` is
+``broadcast`` (default — the reference's replicated-model design),
+``words`` or ``chunks`` (``model_mode='join'`` with that
+``join_exchange``) or ``auto`` (``model_mode='join'``, exchange picked by
+``train()``).  Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 import sys
+import tempfile
 import time
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark import TaskContext
-from pyspark.sql import functions as F
+from plda_spark import TrainConfig, get_spark, train  # noqa: E402
 
-from plda_spark.lda import train as T
-from plda_spark.session import get_spark
+MODES = {
+    "broadcast": dict(model_mode="broadcast"),
+    "words": dict(model_mode="join", join_exchange="words"),
+    "chunks": dict(model_mode="join", join_exchange="chunks"),
+    "auto": dict(model_mode="join", join_exchange="auto"),
+}
 
 
-def _driver_mem(spark) -> str:
-    """Heap actually used, read from the LIVE conf (local mode = ONE JVM
-    for driver+executors, so this bounds executor memory too; join/chunks
-    modes keep two checkpoint generations + a model exchange live, and an
-    undersized heap GC-thrashes at NYTimes scale)."""
-    return spark.sparkContext.getConf().get("spark.driver.memory", "default")
+def _triples_fn(avg_len: int, vocab: int):
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["id"].to_numpy()
+            if not len(ids):
+                continue
+            rng = np.random.Generator(np.random.PCG64(1234 + int(ids[0])))
+            lens = rng.poisson(avg_len, len(ids)).clip(min=1)
+            doc = np.repeat(ids, lens)
+            # Zipf-ish word frequencies via squared uniform (hot head).
+            word = (rng.random(doc.shape[0]) ** 2 * vocab).astype(np.int64).clip(max=vocab - 1)
+            key, cnt = np.unique(doc * vocab + word, return_counts=True)
+            yield pd.DataFrame(
+                {
+                    "doc_id": key // vocab,
+                    "word": [f"w{w:07d}" for w in key % vocab],
+                    "count": cnt.astype(np.int32),
+                }
+            )
+
+    return gen
+
+
+def _timed_train(spark, path: str, cfg: TrainConfig) -> tuple[float, int]:
+    t0 = time.perf_counter()
+    raw = train(spark.read.parquet(path), cfg).raw_model
+    return time.perf_counter() - t0, int(raw.nwk.sum())
 
 
 def main() -> None:
@@ -53,230 +82,49 @@ def main() -> None:
     avg_len = int(sys.argv[2]) if len(sys.argv) > 2 else 333
     V = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
     K = int(sys.argv[4]) if len(sys.argv) > 4 else 10
-    iters = int(sys.argv[5]) if len(sys.argv) > 5 else 3
+    n_hi = int(sys.argv[5]) if len(sys.argv) > 5 else 3
     mode = sys.argv[6] if len(sys.argv) > 6 else "broadcast"
+    if n_hi < 2 or mode not in MODES:
+        raise SystemExit(f"need iters >= 2 and mode in {sorted(MODES)}")
+    n_lo = 1
 
     spark = get_spark("lda-scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    P = sc.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rng = np.random.Generator(np.random.PCG64(1234 + pid))
-        for pdf in batches:
-            n = len(pdf)
-            lens = rng.poisson(avg_len, n).clip(min=1)
-            # Zipf-ish word frequencies via squared uniform (hot head).
-            occ = [
-                (rng.random(l) ** 2 * V).astype(np.int32).clip(max=V - 1)
-                for l in lens
-            ]
-            yield pd.DataFrame({"doc_id": pdf["id"], "word_occ": occ})
-
-    packed = (
-        spark.range(n_docs, numPartitions=P)
-        .mapInPandas(gen, schema="doc_id long, word_occ array<int>")
-    )
-    auto_pick = None
-    if mode == "auto":
-        from plda_spark.lda.train import TrainConfig, _resolve_join_exchange
-
-        kw = {}
-        if len(sys.argv) > 7:
-            kw["join_exchange_budget_bytes"] = int(sys.argv[7])
-        cfg = TrainConfig(num_topics=K, model_mode="join",
-                          average_model=False, **kw)
-        tok = packed.select(F.sum(F.size("word_occ"))).collect()[0][0]
-        auto_pick = _resolve_join_exchange(cfg, V, int(tok), P)
-        mode = "join" if auto_pick == "words" else "chunks"
-        print(json.dumps({"auto_pick": auto_pick, "vocab": V, "k": K,
-                          "cores": P, "n_tokens": int(tok),
-                          "budget_bytes": kw.get(
-                              "join_exchange_budget_bytes",
-                              cfg.join_exchange_budget_bytes)}))
-    if mode == "join":
-        _run_join(spark, packed, V, K, iters, n_docs, auto_pick)
-        return
-    if mode == "chunks":
-        _run_chunks(spark, packed, V, K, iters, n_docs, auto_pick)
-        return
-
-    t0 = time.time()
-    df_z = packed.mapInPandas(T._zinit_fn(K, V, 42), schema=T._SWEEP_SCHEMA)
-    # Mirrors train.py: LAZY checkpoint, materialized by the first
-    # aggregation's payload collect — init + persist + collect fuse
-    # into one job.
-    df_z = df_z.localCheckpoint(eager=False)
-    t_init = time.time() - t0
-    t0 = time.time()
-    nwk, _ = T._aggregate_model(df_z, V, K)
-    t_agg0 = time.time() - t0
-    n_tokens = (
-        df_z.where(F.col("doc_id") >= 0)
-        .select(F.sum(F.length("word_occ") / 4))
-        .collect()[0][0]
-    )
-
-    iter_times = []
-    for it in range(iters):
-        t0 = time.time()
-        bn = sc.broadcast(nwk)
-        bk = sc.broadcast(nwk.sum(axis=0))
-        swept = df_z.where(F.col("doc_id") >= 0).mapInPandas(
-            T._sweep_fn(bn, bk, 0.1, 0.01, 42, it, False), schema=T._SWEEP_SCHEMA
+    P = spark.sparkContext.defaultParallelism
+    # local mode = ONE JVM for driver + executors, so this bounds executor
+    # memory too; join exchanges keep two checkpoint generations and a
+    # model exchange live, and an undersized heap GC-thrashes at scale.
+    driver_mem = spark.sparkContext.getConf().get("spark.driver.memory", "default")
+    tmp = tempfile.mkdtemp(prefix="lda-scale-")
+    try:
+        path = f"{tmp}/triples"
+        (
+            spark.range(n_docs, numPartitions=P)
+            .mapInPandas(_triples_fn(avg_len, V), schema="doc_id long, word string, count int")
+            .write.parquet(path)
         )
-        new_z = swept.localCheckpoint(eager=False)
-        nwk, _ = T._aggregate_model(new_z, V, K)
-        df_z.unpersist()
-        df_z = new_z
-        bn.destroy()
-        bk.destroy()
-        iter_times.append(round(time.time() - t0, 2))
+        n_tokens = int(spark.read.parquet(path).selectExpr("sum(count)").collect()[0][0])
 
-    print(json.dumps({
-        "n_docs": n_docs, "vocab": V, "k": K, "n_tokens": int(n_tokens),
-        "cores": P, "driver_mem": _driver_mem(spark), "init_s": round(t_init, 2), "first_agg_s": round(t_agg0, 2),
-        "iteration_s": iter_times,
-        "tokens_per_sec_per_iter": int(n_tokens / (sum(iter_times) / len(iter_times))),
-    }))
-    spark.stop()
+        def config(n: int) -> TrainConfig:
+            return TrainConfig(num_topics=K, total_iterations=n, burn_in_iterations=n - 1,
+                               average_model=False, seed=42, num_partitions=P, **MODES[mode])
 
-
-def _run_join(spark, packed, V: int, K: int, iters: int, n_docs: int,
-              auto_pick: str | None = None) -> None:
-    """Join-mode per-iteration cost at the same scale: cogroup sweep +
-    distributed model rebuild, no broadcast, no driver model copy."""
-    sc = spark.sparkContext
-    P = sc.defaultParallelism
-
-    t0 = time.time()
-    pid = F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
-    with_pid = packed.withColumn("pid", pid)
-    # Mirrors train.py: word_id-partitioned + persisted so the
-    # per-iteration slice join reuses the cached partitioning instead of
-    # re-exchanging the membership table every iteration.
-    word_pid = (
-        with_pid.select("pid", F.explode(F.array_distinct("word_occ")).alias("word_id"))
-        .distinct()
-        .repartition("word_id")
-        .persist()
-    )
-    word_pid.count()
-    z_ckpt = (
-        with_pid.select("pid", "doc_id", "word_occ")
-        .groupBy("pid")
-        .applyInPandas(T._join_zinit_fn(K, 42), schema=T._JOIN_SWEEP_SCHEMA)
-        .localCheckpoint(eager=False)
-    )
-    df_z = z_ckpt
-    m_ckpt = T._join_model_df(df_z, K).localCheckpoint(eager=True)
-    model_df = T._fresh_stats(m_ckpt)
-    t_init = time.time() - t0
-
-    n_tokens = (
-        df_z.where(F.col("doc_id") >= 0)
-        .select(F.sum(F.length("word_occ") / 4))
-        .collect()[0][0]
-    )
-
-    iter_times = []
-    for it in range(iters):
-        t0 = time.time()
-        nk_rows = (
-            model_df.select(F.posexplode("cnts").alias("t", "c"))
-            .groupBy("t").agg(F.sum("c").alias("c")).collect()
-        )
-        nk = [0] * K
-        for r in nk_rows:
-            nk[r["t"]] = int(r["c"])
-        slices = word_pid.join(model_df, "word_id").select("pid", "word_id", "cnts")
-        swept = (
-            df_z.where(F.col("doc_id") >= 0)
-            .groupby("pid")
-            .cogroup(slices.groupby("pid"))
-            .applyInPandas(
-                T._join_sweep_fn(nk, V, 0.1, 0.01, 42, it, False),
-                schema=T._JOIN_SWEEP_SCHEMA,
-            )
-        )
-        new_z = swept.localCheckpoint(eager=False)
-        new_m_ckpt = T._join_model_df(new_z, K).localCheckpoint(eager=True)
-        z_ckpt.unpersist()
-        m_ckpt.unpersist()
-        df_z, z_ckpt, m_ckpt = new_z, new_z, new_m_ckpt
-        model_df = T._fresh_stats(new_m_ckpt)
-        iter_times.append(round(time.time() - t0, 2))
-
-    print(json.dumps({
-        "mode": "join", "auto_pick": auto_pick, "n_docs": n_docs, "vocab": V, "k": K,
-        "n_tokens": int(n_tokens), "cores": P, "driver_mem": _driver_mem(spark), "init_s": round(t_init, 2),
-        "iteration_s": iter_times,
-        "tokens_per_sec_per_iter": int(n_tokens / (sum(iter_times) / len(iter_times))),
-    }))
-    spark.stop()
-
-
-def _run_chunks(spark, packed, V: int, K: int, iters: int, n_docs: int,
-                auto_pick: str | None = None) -> None:
-    """join_exchange='chunks' per-iteration cost at the same scale: the
-    model rides the shuffle as C dense binary chunk rows (pid×chunk
-    cross join), the rebuild is a per-chunk buffer sum — same bytes as
-    the words exchange in the dense regime, ~P·C rows instead of P·V."""
-    sc = spark.sparkContext
-    P = sc.defaultParallelism
-
-    t0 = time.time()
-    _, W = T._chunk_grid(V, K, P)
-    pid = F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
-    with_pid = packed.withColumn("pid", pid)
-    z_ckpt = (
-        with_pid.select("pid", "doc_id", "word_occ")
-        .groupBy("pid")
-        .applyInPandas(T._chunk_zinit_fn(K, 42, V, W), schema=T._JOIN_SWEEP_SCHEMA)
-        .localCheckpoint(eager=False)
-    )
-    df_z = z_ckpt
-    m_ckpt = T._chunk_model_df(df_z, K).localCheckpoint(eager=True)
-    model_df = T._fresh_stats(m_ckpt)
-    pids_df = spark.range(P).select(F.col("id").cast("int").alias("pid"))
-    t_init = time.time() - t0
-
-    n_tokens = (
-        df_z.where(F.col("doc_id") >= 0)
-        .select(F.sum(F.length("word_occ") / 4))
-        .collect()[0][0]
-    )
-
-    iter_times = []
-    for it in range(iters):
-        t0 = time.time()
-        nk = T._chunk_nk(model_df, K)
-        slices = F.broadcast(pids_df).crossJoin(model_df.select("chunk_id", "cnts"))
-        swept = (
-            df_z.where(F.col("doc_id") >= 0)
-            .groupby("pid")
-            .cogroup(slices.groupby("pid"))
-            .applyInPandas(
-                T._chunk_sweep_fn(nk, V, 0.1, 0.01, 42, it, False, W),
-                schema=T._JOIN_SWEEP_SCHEMA,
-            )
-        )
-        new_z = swept.localCheckpoint(eager=False)
-        new_m_ckpt = T._chunk_model_df(new_z, K).localCheckpoint(eager=True)
-        z_ckpt.unpersist()
-        m_ckpt.unpersist()
-        df_z, z_ckpt, m_ckpt = new_z, new_z, new_m_ckpt
-        model_df = T._fresh_stats(new_m_ckpt)
-        iter_times.append(round(time.time() - t0, 2))
-
-    print(json.dumps({
-        "mode": "chunks", "auto_pick": auto_pick, "n_docs": n_docs, "vocab": V, "k": K,
-        "n_tokens": int(n_tokens), "cores": P, "driver_mem": _driver_mem(spark), "init_s": round(t_init, 2),
-        "iteration_s": iter_times,
-        "tokens_per_sec_per_iter": int(n_tokens / (sum(iter_times) / len(iter_times))),
-    }))
-    spark.stop()
+        _timed_train(spark, path, config(n_lo))  # warm-up, untimed
+        t_lo, tok_lo = _timed_train(spark, path, config(n_lo))
+        t_hi, tok_hi = _timed_train(spark, path, config(n_hi))
+        if tok_lo != n_tokens or tok_hi != n_tokens:
+            raise SystemExit(f"model counts {tok_lo}, {tok_hi} != {n_tokens} tokens")
+        iter_s = (t_hi - t_lo) / (n_hi - n_lo)
+        print(json.dumps({
+            "mode": mode, "n_docs": n_docs, "vocab": V, "k": K, "n_tokens": n_tokens,
+            "cores": P, "driver_mem": driver_mem, "iterations": [n_lo, n_hi],
+            "wall_s": [round(t_lo, 2), round(t_hi, 2)],
+            "iter_s": round(iter_s, 3), "fixed_s": round(t_lo - n_lo * iter_s, 3),
+            "tokens_per_sec_per_iter": int(n_tokens / iter_s) if iter_s > 0 else None,
+        }))
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
