@@ -8437,7 +8437,7 @@ WITH pv AS (
   SELECT CAST(value AS DOUBLE) AS v,
          sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
          sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-  FROM events WHERE event_type IN ('click', 'purchase')
+  FROM events WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
   GROUP BY 1
 ), e AS (
   SELECT sum(ca) OVER (ORDER BY v) / sum(ca) OVER () AS fa,
@@ -8559,7 +8559,7 @@ WITH pv AS (
   SELECT CAST(value AS DOUBLE) AS v,
          sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
          sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-  FROM events WHERE event_type IN ('click', 'purchase')
+  FROM events WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
   GROUP BY 1
 ), st AS (
   SELECT ca, ca + cb AS t,

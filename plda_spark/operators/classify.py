@@ -388,15 +388,15 @@ def roc_auc_report(
 
     Scale shape: the KS/Mann-Whitney family contract — ONE per-
     distinct-score (positives, negatives) count aggregation through
-    ``stats._two_sample_per_value_counts`` (``max_distinct``
-    pre-check ENFORCED; pass ``bins=`` for continuous scores), then
+    ``stats._drift_cells`` (``max_distinct`` pre-check ENFORCED;
+    pass ``bins=`` for continuous scores), then
     the tie-corrected U from one ordered window over the |distinct
     scores| rows; Brier/log-loss are one map-side-combined
     aggregation over the raw rows.  Nothing unbounded survives
     either aggregation."""
     from pyspark.sql import Window
 
-    from plda_spark.operators.stats import _two_sample_per_value_counts
+    from plda_spark.operators.stats import _drift_cells
 
     lab = F.col(label_col).cast("int")
     base = df.where(
@@ -404,8 +404,9 @@ def roc_auc_report(
     ).select(
         F.col(score_col).cast("double").alias("__p"), lab.alias("__y")
     )
-    cells = _two_sample_per_value_counts(
-        base, "__y", "__p", 1, 0, bins, max_distinct, "roc_auc_report"
+    cells = _drift_cells(
+        base, "__y", "__p", 1, 0, "roc_auc_report", bins, max_distinct,
+        empty_ok=True,
     )
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     u = cells.select(
@@ -586,13 +587,13 @@ def pr_auc_report(
 
     Scale shape: the KS-family contract — ONE per-distinct-score
     (positives, negatives) count aggregation through
-    ``stats._two_sample_per_value_counts`` (``max_distinct``
-    pre-check ENFORCED; pass ``bins=`` for continuous scores), then
+    ``stats._drift_cells`` (``max_distinct`` pre-check ENFORCED;
+    pass ``bins=`` for continuous scores), then
     one descending cumulative window over the |distinct scores|
     rows."""
     from pyspark.sql import Window
 
-    from plda_spark.operators.stats import _two_sample_per_value_counts
+    from plda_spark.operators.stats import _drift_cells
 
     lab = F.col(label_col).cast("int")
     base = df.where(
@@ -600,8 +601,9 @@ def pr_auc_report(
     ).select(
         F.col(score_col).cast("double").alias("__p"), lab.alias("__y")
     )
-    cells = _two_sample_per_value_counts(
-        base, "__y", "__p", 1, 0, bins, max_distinct, "pr_auc_report"
+    cells = _drift_cells(
+        base, "__y", "__p", 1, 0, "pr_auc_report", bins, max_distinct,
+        empty_ok=True,
     )
     wd = Window.orderBy(F.col("v").desc()).rowsBetween(
         Window.unboundedPreceding, 0

@@ -596,6 +596,41 @@ def hll_daily_sketches(
     )
 
 
+def _day_range(
+    rollup: DataFrame, start_day: str | None = None, end_day: str | None = None
+) -> DataFrame:
+    """The one day-range filter of every rollup reader: rows with
+    ``start_day <= day <= end_day`` (inclusive; a ``None`` bound is
+    open).  Days are ISO strings (zero-padded batch ids for ledgers),
+    so string order is time order and the predicate prunes at the
+    scan."""
+    if start_day is not None:
+        rollup = rollup.where(F.col("day") >= start_day)
+    if end_day is not None:
+        rollup = rollup.where(F.col("day") <= end_day)
+    return rollup
+
+
+def _bin_fold(
+    rollup: DataFrame,
+    start_day: str | None = None,
+    end_day: str | None = None,
+    alias: str = "bins",
+) -> DataFrame:
+    """ONE row: the elementwise sum of a day range's ``bin_counts``
+    arrays from a :func:`hist_daily_sketches` rollup (histogram
+    merging is lossless); NULL when the range matches no rows."""
+    return _day_range(rollup, start_day, end_day).agg(
+        F.aggregate(
+            F.collect_list("bin_counts"),
+            F.lit(None).cast("array<long>"),
+            lambda acc, x: F.when(acc.isNull(), x).otherwise(
+                F.zip_with(acc, x, lambda p, q: p + q)
+            ),
+        ).alias(alias)
+    )
+
+
 def hll_estimate_range(
     sketches: DataFrame,
     start_day: str | None = None,
@@ -606,12 +641,7 @@ def hll_estimate_range(
     union, estimate — ``(n_distinct)``, one row.  Never touches the raw
     log; the range filter prunes sketch rows, and the union is a
     single-row aggregation."""
-    src = sketches
-    if start_day is not None:
-        src = src.where(F.col("day") >= start_day)
-    if end_day is not None:
-        src = src.where(F.col("day") <= end_day)
-    return src.agg(
+    return _day_range(sketches, start_day, end_day).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("n_distinct")
     )
 
@@ -706,12 +736,11 @@ def cms_estimate(
     range), so a range with no sketch rows still yields one ``est = 0``
     row per query key instead of an empty frame.
     """
-    src = sketches
-    if start_day is not None:
-        src = src.where(F.col("day") >= start_day)
-    if end_day is not None:
-        src = src.where(F.col("day") <= end_day)
-    merged = src.groupBy("d", "bucket").agg(F.sum("c").alias("c"))
+    merged = (
+        _day_range(sketches, start_day, end_day)
+        .groupBy("d", "bucket")
+        .agg(F.sum("c").alias("c"))
+    )
     depth_df = sketches.agg((F.max("d") + 1).alias("__depth"))
     probes = (
         keys.crossJoin(F.broadcast(depth_df))
@@ -801,19 +830,7 @@ def hist_quantile_range(
         raise ValueError("qs must be non-empty")
     if any(not (0.0 <= q <= 1.0) for q in qs):
         raise ValueError("quantiles must be in [0, 1]")
-    src = sketches
-    if start_day is not None:
-        src = src.where(F.col("day") >= start_day)
-    if end_day is not None:
-        src = src.where(F.col("day") <= end_day)
-    nbins_col = F.size(F.first("bin_counts"))
-    merged = src.agg(
-        F.aggregate(
-            F.collect_list("bin_counts"),
-            F.array_repeat(F.lit(0).cast("long"), nbins_col),
-            lambda acc, a: F.zip_with(acc, a, lambda x, y: x + y),
-        ).alias("bins")
-    )
+    merged = _bin_fold(sketches, start_day, end_day)
     bins = merged.select(F.posexplode("bins").alias("bin", "n"))
     cum_w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     tot_w = Window.partitionBy()
@@ -948,12 +965,7 @@ def kmv_estimate_range(
     """Distinct-count estimate over a day range from a
     :func:`kmv_daily_sketches` rollup — ``(n_distinct)``, one row; only
     |days| kB-sized sketch rows are touched, never the raw log."""
-    src = sketches
-    if start_day is not None:
-        src = src.where(F.col("day") >= start_day)
-    if end_day is not None:
-        src = src.where(F.col("day") <= end_day)
-    merged = _kmv_merge(src, k)
+    merged = _kmv_merge(_day_range(sketches, start_day, end_day), k)
     return merged.select(
         F.round(_kmv_estimate(F.col("kmin"), k), 4).alias("n_distinct")
     )
@@ -975,12 +987,12 @@ def kmv_intersect_ranges(
     when both sides hold everything (< k) the count of shared hashes is
     exact.  HLL sketches cannot answer this without lossy
     inclusion-exclusion.  Returns ``(n_common)``, one row."""
-    a = _kmv_merge(
-        sketches.where((F.col("day") >= a_start) & (F.col("day") <= a_end)), k
-    ).select(F.col("kmin").alias("ka"))
-    b = _kmv_merge(
-        sketches.where((F.col("day") >= b_start) & (F.col("day") <= b_end)), k
-    ).select(F.col("kmin").alias("kb"))
+    a = _kmv_merge(_day_range(sketches, a_start, a_end), k).select(
+        F.col("kmin").alias("ka")
+    )
+    b = _kmv_merge(_day_range(sketches, b_start, b_end), k).select(
+        F.col("kmin").alias("kb")
+    )
     both = a.crossJoin(F.broadcast(b))  # two 1-row sketch frames
     na, nb = F.size("ka"), F.size("kb")
     # a side that holds < k hashes covers the whole space
@@ -1227,12 +1239,7 @@ def bloom_union_range(
     """OR-merge the day sketches in [start_day, end_day] into ONE
     ``bits`` row (lossless — the merged filter is exactly the filter of
     the union of the days' key sets).  Touches |days| slim rows."""
-    src = sketches
-    if start_day is not None:
-        src = src.where(F.col("day") >= start_day)
-    if end_day is not None:
-        src = src.where(F.col("day") <= end_day)
-    return src.agg(
+    return _day_range(sketches, start_day, end_day).agg(
         F.aggregate(
             F.collect_list("bits"),
             F.array_repeat(
@@ -1449,43 +1456,79 @@ def decayed_moments(
     )
 
 
-def _two_sample_per_value_counts(
+# Two-sample drift core.  KS, Mann-Whitney, CvM, AD and PSI all read
+# one shape: per-cell (value or bin) counts ``ca``/``cb`` of the two
+# samples plus the aligned running counts ``cum_a``/``cum_b`` and the
+# totals ``n_a``/``n_b``.  The raw form builds those cells from rows
+# (:func:`_drift_cells`), the rollup form from two folded bin arrays
+# (:func:`_drift_ranges`); each statistic is one per-cell term plus
+# one readout, written once for both forms.  A term takes ``c``, which
+# maps a cell field name to its Column: ``F.col`` over raw cell rows,
+# the struct's ``getField`` inside an array lambda over rollup cells.
+
+
+def _drift_cells(
     df: DataFrame,
     group_col: str,
     value_col: str,
     group_a,
     group_b,
-    bins: int | None,
-    max_distinct: int,
     caller: str,
-):
-    """Shared first stage of :func:`ks_test` / :func:`mannwhitney_u`:
-    per-distinct-value (ca, cb) counts, with the cardinality contract
-    ENFORCED rather than assumed.
+    bins: int | None = None,
+    max_distinct: int | None = None,
+    empty_ok: bool = False,
+) -> DataFrame:
+    """Per-value cells ``(v, ca, cb, cum_a, cum_b, n_a, n_b)`` of the
+    two groups' non-NULL values, with the cardinality and emptiness
+    contracts ENFORCED by one construction pre-scan.
 
-    Both exact tests finish with an unpartitioned ordered window over
-    the per-value rows — a single task sorting |distinct values| rows.
-    That is bounded for categorical/discretized columns but degenerates
-    to a single-task sort of the corpus on a continuous score column at
-    scale (distinct ≈ N).  So:
-
-    - ``bins=None`` (exact mode): a one-pass ``approx_count_distinct``
-      pre-check raises when the column exceeds ``max_distinct``,
-      pointing at the two scale paths, instead of silently funneling
-      the corpus through one task.
-    - ``bins=k``: values are quantized to k equal-width bin MIDPOINTS
-      between the global min/max first (one broadcast 1-row aggregate),
-      capping the window at k rows — the binned-approximation contract
-      of ``hist_ks_ranges``, inline.
-    """
+    The cells aggregate first (map-side combined); the ECDF columns
+    are then an unpartitioned ordered window — ONE task over |distinct
+    values| rows.  So exact mode (``bins=None``) pre-checks
+    ``approx_count_distinct`` against ``max_distinct`` and raises with
+    a pointer to the scale paths; ``bins=k`` instead quantizes values
+    to k equal-width bins between the pooled min/max (one broadcast
+    1-row aggregate) and adds ``bin``/``__lo``/``__hi`` columns, ``v``
+    becoming the bin midpoint.  Unless ``empty_ok``, the same pre-scan
+    raises when either group has no non-NULL value, so the statistics
+    never divide by an empty sample.  The pre-scan is skipped when it
+    has nothing to check (``max_distinct=None`` or bins mode, and
+    ``empty_ok``)."""
     a = F.col(group_col) == F.lit(group_a)
     b = F.col(group_col) == F.lit(group_b)
-    filtered = df.where(a | b)
     v = F.col(value_col).cast("double")
+    rows = df.where((a | b) & v.isNotNull())
+    if bins is not None and bins < 1:
+        raise ValueError(f"{caller}: bins must be >= 1, got {bins}")
+    exact = bins is None and max_distinct is not None
+    checks = [F.approx_count_distinct(v).alias("ndv")] if exact else []
+    if not empty_ok:
+        checks += [
+            F.sum(a.cast("long")).alias("n_a"),
+            F.sum(b.cast("long")).alias("n_b"),
+        ]
+    if checks:
+        pre = rows.agg(*checks).first()
+        if exact and pre["ndv"] > max_distinct:
+            raise ValueError(
+                f"{caller}: {value_col!r} has ~{pre['ndv']} distinct values "
+                f"> max_distinct={max_distinct}; the exact test's ECDF "
+                "window would sort them in ONE task. Quantize first (pass "
+                "bins=<k> where the test takes it), raise max_distinct if "
+                "the cardinality is genuinely bounded, or use the rollup "
+                "drift path (hist_ks_ranges / hist_ks_from_ledger)."
+            )
+        if not empty_ok and not (pre["n_a"] and pre["n_b"]):
+            raise ValueError(
+                f"{caller}: empty group (n_a={pre['n_a'] or 0}, "
+                f"n_b={pre['n_b'] or 0}); both {group_a!r} and "
+                f"{group_b!r} must match at least one non-null "
+                f"{value_col!r} row."
+            )
+    keys = [v.alias("v")]
     if bins is not None:
-        if bins < 1:
-            raise ValueError(f"{caller}: bins must be >= 1, got {bins}")
-        mm = filtered.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
+        mm = rows.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
+        rows = rows.crossJoin(F.broadcast(mm))
         width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
         idx = F.when(F.col("__hi") <= F.col("__lo"), F.lit(0)).otherwise(
             F.least(
@@ -1493,26 +1536,181 @@ def _two_sample_per_value_counts(
                 F.lit(bins - 1),
             )
         )
-        v = F.col("__lo") + (idx.cast("double") + F.lit(0.5)) * F.coalesce(
-            width, F.lit(0.0)
-        )
-        filtered = filtered.crossJoin(F.broadcast(mm))
-    else:
-        ndv = filtered.agg(
-            F.approx_count_distinct(v).alias("__ndv")
-        ).first()["__ndv"]
-        if ndv > max_distinct:
-            raise ValueError(
-                f"{caller}: {value_col!r} has ~{ndv} distinct values > "
-                f"max_distinct={max_distinct}; the exact test's ECDF "
-                "window would sort them in ONE task. Pass bins=<k> for "
-                "the binned approximation, raise max_distinct if the "
-                "cardinality is genuinely bounded, or use the rollup "
-                "drift path (hist_ks_ranges / hist_ks_from_ledger)."
-            )
-    return filtered.groupBy(v.alias("v")).agg(
+        keys = [idx.alias("bin"), "__lo", "__hi"]
+    cells = rows.groupBy(*keys).agg(
         F.sum(a.cast("long")).alias("ca"),
         F.sum(b.cast("long")).alias("cb"),
+    )
+    if bins is not None:
+        cells = cells.withColumn(
+            "v",
+            F.col("__lo")
+            + (F.col("bin") + F.lit(0.5)) * F.coalesce(width, F.lit(0.0)),
+        )
+    run = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    tot = Window.partitionBy()
+    return cells.select(
+        "*",
+        F.sum("ca").over(run).alias("cum_a"),
+        F.sum("cb").over(run).alias("cum_b"),
+        F.sum("ca").over(tot).alias("n_a"),
+        F.sum("cb").over(tot).alias("n_b"),
+    )
+
+
+def _drift_ranges(
+    sketches: DataFrame, range_a: tuple, range_b: tuple, zero_fill: bool = False
+) -> DataFrame:
+    """ONE row ``(n_a, n_b, cells)`` from a :func:`hist_daily_sketches`
+    rollup: each inclusive day range folds to one bin array
+    (:func:`_bin_fold`), and ``cells`` is the array of per-bin
+    ``struct(ca, cb, cum_a, cum_b)`` with prefix-sum running counts —
+    the raw form's cell rows, over the rollup's fixed grid.
+
+    A range matching no rollup rows folds to NULL, so its total and
+    every statistic over it are NULL.  ``zero_fill`` (PSI) instead
+    zero-fills it on the other range's grid; both empty stays NULL."""
+    both = _bin_fold(sketches, *range_a, alias="ha").crossJoin(
+        _bin_fold(sketches, *range_b, alias="hb")
+    )
+    if zero_fill:
+        def zf(h, other):
+            return F.coalesce(
+                F.col(h), F.transform(other, lambda x: F.lit(0).cast("long"))
+            )
+
+        both = both.select(zf("ha", "hb").alias("ha"), zf("hb", "ha").alias("hb"))
+
+    def total(h, upto=None):
+        h = F.col(h) if upto is None else F.slice(h, 1, upto)
+        return F.aggregate(h, F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+    cells = F.transform(
+        "ha",
+        lambda x, i: F.struct(
+            x.alias("ca"),
+            F.element_at("hb", i + 1).alias("cb"),
+            total("ha", i + 1).alias("cum_a"),
+            total("hb", i + 1).alias("cum_b"),
+        ),
+    )
+    return both.select(
+        total("ha").alias("n_a"), total("hb").alias("n_b"), cells.alias("cells")
+    )
+
+
+def _fold_cells(term) -> Column:
+    """Left-to-right sum of ``term`` over a rollup row's ``cells``."""
+    return F.aggregate(
+        F.transform("cells", lambda s: term(s.getField)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _ecdfs(c) -> tuple:
+    """``(F_a, F_b)`` at a cell."""
+    return (
+        c("cum_a") / F.col("n_a").cast("double"),
+        c("cum_b") / F.col("n_b").cast("double"),
+    )
+
+
+def _ks_gap(c) -> Column:
+    """KS: the ECDF gap ``|F_a − F_b|`` at a cell (D is its max)."""
+    fa, fb = _ecdfs(c)
+    return F.abs(fa - fb)
+
+
+def _cvm_term(c) -> Column:
+    """CvM: ``t·(F_a − F_b)²`` with the cell's pooled multiplicity t."""
+    fa, fb = _ecdfs(c)
+    return (c("ca") + c("cb")).cast("double") * ((fa - fb) * (fa - fb))
+
+
+def _ad_term(c) -> Column:
+    """AD: the CvM term over ``H(1−H)`` of the pooled ECDF H.  H = 1
+    at the last occupied cell (the standard N−1 truncation) and H = 0
+    before the first (empty leading bins) contribute 0."""
+    h = (c("cum_a") + c("cum_b")).cast("double") / (
+        F.col("n_a") + F.col("n_b")
+    ).cast("double")
+    return F.when(
+        (h > 0.0) & (h < 1.0), _cvm_term(c) / (h * (F.lit(1.0) - h))
+    ).otherwise(F.lit(0.0))
+
+
+def _psi_shares(c, min_share: float) -> tuple:
+    """PSI bin shares ``(p_a, p_b)`` clamped at ``min_share``: an
+    absent sample (n = 0) yields NULL, which greatest() skips, so the
+    share degrades to the clamp instead of a NaN."""
+    def share(x, n):
+        return F.greatest(
+            F.when(F.col(n) > 0, c(x) / F.col(n)), F.lit(float(min_share))
+        )
+
+    return share("ca", "n_a"), share("cb", "n_b")
+
+
+def _psi_term(c, min_share: float) -> Column:
+    """PSI: ``(p_a − p_b)·ln(p_a/p_b)`` at a cell."""
+    pa, pb = _psi_shares(c, min_share)
+    return (pa - pb) * F.log(pa / pb)
+
+
+def _ks_p(d, n_a, n_b) -> Column:
+    """The asymptotic KS p-value ``Q_KS(λ) = 2 Σ_{j≥1} (-1)^{j-1}
+    e^{-2j²λ²}`` with Stephens' ``λ = (√n_e + 0.12 + 0.11/√n_e)·D``
+    (Numerical Recipes §14.3; 100 terms — far past double underflow),
+    clamped to [0, 1].  The truncated alternating series degenerates
+    (all terms ~1) below λ ≈ 0.05, where the true Q_KS is 1 to ~1e-15,
+    so identical distributions report p = 1.  A NULL D (an empty
+    rollup range) gives a NULL p, never a significant 0."""
+    ne = n_a * n_b / (n_a + n_b)
+    lam = (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne)) * d
+    series = F.lit(2.0) * F.aggregate(
+        F.sequence(F.lit(1), F.lit(100)),
+        F.lit(0.0),
+        lambda acc, j: acc
+        + F.pow(F.lit(-1.0), (j - 1).cast("double"))
+        * F.exp(F.lit(-2.0) * j.cast("double") * j.cast("double") * lam * lam),
+    )
+    return F.when(lam < F.lit(0.05), F.lit(1.0)).when(
+        lam >= F.lit(0.05), F.least(F.greatest(series, F.lit(0.0)), F.lit(1.0))
+    )
+
+
+def _ks_readout(d: DataFrame) -> DataFrame:
+    """``(n_a, n_b, d_stat, p_value)`` rounded to 6 from a frame with
+    ``(n_a, n_b, d_stat)``.  p is staged as its own column BEFORE the
+    rounding select: a ``round(d_stat).alias("d_stat")`` in the same
+    select would lateral-alias-capture p's ``d_stat`` reference onto
+    the ROUNDED value and shift p at the 5th decimal."""
+    withp = d.withColumn("__p", _ks_p(F.col("d_stat"), F.col("n_a"), F.col("n_b")))
+    return withp.select(
+        "n_a",
+        "n_b",
+        F.round("d_stat", 6).alias("d_stat"),
+        F.round("__p", 6).alias("p_value"),
+    )
+
+
+def _verdict(s: DataFrame, stat: str, crit: float) -> DataFrame:
+    """The CvM/AD readout ``(n_a, n_b, <stat>, critical_05, reject)``
+    from a frame with ``(n_a, n_b, __s = Σ term)``: the statistic
+    ``(n·m/N²)·Σ`` against its asymptotic α = 0.05 critical value —
+    the limiting p is an infinite weighted-χ² series no replayable SQL
+    can evaluate.  The statistic is staged as ``__t`` before rounding
+    (the :func:`_ks_readout` aliasing rule); NULL in, NULL reject."""
+    n = F.col("n_a").cast("double")
+    m = F.col("n_b").cast("double")
+    staged = s.withColumn("__t", n * m / ((n + m) * (n + m)) * F.col("__s"))
+    return staged.select(
+        F.col("n_a").cast("long").alias("n_a"),
+        F.col("n_b").cast("long").alias("n_b"),
+        F.round("__t", 6).alias(stat),
+        F.round(F.lit(crit), 6).alias("critical_05"),
+        (F.col("__t") > F.lit(crit)).alias("reject"),
     )
 
 
@@ -1531,69 +1729,24 @@ def ks_test(
     noise" (the composition/embedding drift monitors measure movement;
     this one attaches a p-value).
 
-    ``D = max |ECDF_a - ECDF_b|`` computed exactly, and the classic
-    asymptotic p-value ``Q_KS(λ) = 2 Σ_{j≥1} (-1)^{j-1} e^{-2j²λ²}``
-    with Stephens' small-sample correction ``λ = (√n_e + 0.12 +
-    0.11/√n_e)·D`` (Numerical Recipes §14.3; series truncated at 100
-    terms — far past double underflow).  Returns ONE row ``(n_a, n_b,
-    d_stat, p_value)`` rounded to 6.
+    ``D = max |ECDF_a - ECDF_b|`` computed exactly over the non-NULL
+    values, and the classic asymptotic p-value (:func:`_ks_p`).
+    Returns ONE row ``(n_a, n_b, d_stat, p_value)`` rounded to 6; an
+    empty group raises ``ValueError``.
 
-    Scale shape: one per-value count aggregation FIRST (map-side
-    combined — the stream never sorts), then the ordered ECDF window
-    runs over |distinct values| rows.  That window is ONE task, so the
-    exact mode is safe only for bounded-cardinality columns — and the
-    bound is now ENFORCED: an ``approx_count_distinct`` pre-check
-    raises past ``max_distinct`` (default 100k per-value rows, trivial
-    for one task).  For continuous columns at scale pass ``bins=k`` —
-    values quantize to k equal-width bin midpoints first (the
-    histogram-KS approximation of ``hist_ks_ranges``, inline; D is then
-    exact ON THE BINNED data) — or fold pre-binned daily rollups via
-    ``hist_ks_ranges`` / ``hist_ks_from_ledger`` without re-reading the
-    corpus at all."""
-    per_val = _two_sample_per_value_counts(
-        df, group_col, value_col, group_a, group_b,
-        bins, max_distinct, "ks_test",
+    Scale shape: the :func:`_drift_cells` contract — one per-value
+    count aggregation FIRST, then the ECDF window over |distinct
+    values| rows in ONE task, bounded by the ``max_distinct``
+    pre-check.  For continuous columns at scale pass ``bins=k`` (D is
+    then exact ON THE BINNED data), or fold pre-binned daily rollups
+    via ``hist_ks_ranges`` / ``hist_ks_from_ledger`` without
+    re-reading the corpus at all."""
+    cells = _drift_cells(
+        df, group_col, value_col, group_a, group_b, "ks_test",
+        bins, max_distinct,
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy()
-    ecdf = per_val.select(
-        (F.sum("ca").over(w) / F.sum("ca").over(tot)).alias("fa"),
-        (F.sum("cb").over(w) / F.sum("cb").over(tot)).alias("fb"),
-        F.sum("ca").over(tot).alias("n_a"),
-        F.sum("cb").over(tot).alias("n_b"),
-    )
-    d = ecdf.groupBy("n_a", "n_b").agg(
-        F.max(F.abs(F.col("fa") - F.col("fb"))).alias("d_stat")
-    )
-    ne = F.col("n_a") * F.col("n_b") / (F.col("n_a") + F.col("n_b"))
-    lam = (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne)) * F.col(
-        "d_stat"
-    )
-    js = F.sequence(F.lit(1), F.lit(100))
-    series = F.lit(2.0) * F.aggregate(
-        js,
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.pow(F.lit(-1.0), (j - 1).cast("double"))
-        * F.exp(F.lit(-2.0) * j.cast("double") * j.cast("double") * lam * lam),
-    )
-    # λ→0 guard: the truncated alternating series degenerates (all
-    # terms ~1) below λ≈0.05, where the true Q_KS is 1 to ~1e-15 —
-    # identical distributions must report p = 1, not 0.
-    p = F.when(lam < F.lit(0.05), F.lit(1.0)).otherwise(series)
-    # p is materialized as its own column BEFORE the rounding select:
-    # putting round(d_stat).alias("d_stat") in the same select would
-    # lateral-alias-capture the p expression's d_stat reference onto
-    # the ROUNDED value (Spark implicit lateral column resolution) and
-    # silently shift the p-value at the 5th decimal.
-    withp = d.withColumn(
-        "__p", F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    )
-    return withp.select(
-        "n_a",
-        "n_b",
-        F.round("d_stat", 6).alias("d_stat"),
-        F.round("__p", 6).alias("p_value"),
+    return _ks_readout(
+        cells.groupBy("n_a", "n_b").agg(F.max(_ks_gap(F.col)).alias("d_stat"))
     )
 
 
@@ -1674,68 +1827,19 @@ def hist_ks_ranges(
     grid (exact up to the bin-width discretization the rollup already
     carries), plus the same asymptotic p-value as :func:`ks_test`.
 
-    Returns ONE row ``(n_a, n_b, d_stat, p_value)``.  Scale shape: two
-    filtered sums over the |days|-row rollup + array expressions over
-    ``nbins`` values — the probe never touches the raw log."""
-    (a_lo, a_hi), (b_lo, b_hi) = range_a, range_b
-
-    def merged(lo, hi, alias):
-        return sketches.where(
-            (F.col("day") >= lo) & (F.col("day") <= hi)
-        ).agg(
-            F.aggregate(
-                F.collect_list("bin_counts"),
-                F.lit(None).cast("array<long>"),
-                lambda acc, x: F.when(acc.isNull(), x).otherwise(
-                    F.zip_with(acc, x, lambda p, q: p + q)
-                ),
-            ).alias(alias)
+    Returns ONE row ``(n_a, n_b, d_stat, p_value)``; a range matching
+    no rollup rows gives NULL ``d_stat`` and ``p_value``.  Scale
+    shape: two filtered sums over the |days|-row rollup + array
+    expressions over ``nbins`` values — the probe never touches the
+    raw log."""
+    r = _drift_ranges(sketches, range_a, range_b)
+    return _ks_readout(
+        r.select(
+            "n_a",
+            "n_b",
+            F.array_max(F.transform("cells", lambda s: _ks_gap(s.getField)))
+            .alias("d_stat"),
         )
-    both = merged(a_lo, a_hi, "ha").crossJoin(merged(b_lo, b_hi, "hb"))
-
-    def ecdf(col, n):
-        # running prefix sums over the bin array, normalized
-        idx = F.sequence(F.lit(1), F.size(col))
-        pref = F.transform(
-            idx, lambda i: F.aggregate(
-                F.slice(col, 1, i), F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-        )
-        return F.transform(pref, lambda c: c / n)
-
-    na = F.aggregate("ha", F.lit(0).cast("long"), lambda a, x: a + x)
-    nb = F.aggregate("hb", F.lit(0).cast("long"), lambda a, x: a + x)
-    d = both.select(
-        na.alias("n_a"),
-        nb.alias("n_b"),
-        F.array_max(
-            F.zip_with(
-                ecdf(F.col("ha"), na),
-                ecdf(F.col("hb"), nb),
-                lambda x, y: F.abs(x - y),
-            )
-        ).alias("d_stat"),
-    )
-    ne = F.col("n_a") * F.col("n_b") / (F.col("n_a") + F.col("n_b"))
-    lam = (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne)) * F.col(
-        "d_stat"
-    )
-    series = F.lit(2.0) * F.aggregate(
-        F.sequence(F.lit(1), F.lit(100)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.pow(F.lit(-1.0), (j - 1).cast("double"))
-        * F.exp(F.lit(-2.0) * j.cast("double") * j.cast("double") * lam * lam),
-    )
-    p = F.when(lam < F.lit(0.05), F.lit(1.0)).otherwise(
-        F.least(F.greatest(series, F.lit(0.0)), F.lit(1.0))
-    )
-    withp = d.withColumn("__p", p)
-    return withp.select(
-        "n_a", "n_b",
-        F.round("d_stat", 6).alias("d_stat"),
-        F.round("__p", 6).alias("p_value"),
     )
 
 
@@ -1761,40 +1865,23 @@ def mannwhitney_u(
     polynomial (|ε| < 7.5e-8 — far inside the 6-decimal rounding), so
     the p-value is pure deterministic arithmetic an external replayer
     reproduces exactly.  Returns ONE row ``(n_a, n_b, u_stat, z,
-    p_value)`` (U for group a; two-sided p).
+    p_value)`` (U for group a; two-sided p); NULL values are dropped
+    and an empty group raises ``ValueError``.
 
-    Scale shape: identical to :func:`ks_test` — one per-value count
-    aggregation first, then ordered windows over |distinct values| rows
-    and scalar aggregates.  The window is ONE task, so the same
-    cardinality contract is ENFORCED: exact mode pre-checks
-    ``approx_count_distinct`` against ``max_distinct`` and raises with
-    a pointer to the scale paths; ``bins=k`` quantizes to k equal-width
-    bin midpoints first (binned values tie WITHIN a bin, and the
-    tie-corrected variance absorbs that — the usual rank-test-on-
-    histogram approximation)."""
-    per_val = _two_sample_per_value_counts(
-        df, group_col, value_col, group_a, group_b,
-        bins, max_distinct, "mannwhitney_u",
+    Scale shape: the :func:`ks_test` cells and window contract
+    (:func:`_drift_cells`); ``bins=k`` values tie WITHIN a bin, and
+    the tie-corrected variance absorbs that — the usual
+    rank-test-on-histogram approximation."""
+    cells = _drift_cells(
+        df, group_col, value_col, group_a, group_b, "mannwhitney_u",
+        bins, max_distinct,
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.partitionBy()
     t = F.col("ca") + F.col("cb")
-    staged = per_val.select(
-        "ca",
-        t.alias("t"),
-        # average rank of this tied value group: ranks before it + (t+1)/2
-        (
-            (F.sum(F.col("ca") + F.col("cb")).over(w) - t)
-            + (t + 1) / F.lit(2.0)
-        ).alias("avgrank"),
-        F.sum("ca").over(tot).alias("n_a"),
-        F.sum("cb").over(tot).alias("n_b"),
-    )
-    agg = staged.groupBy("n_a", "n_b").agg(
-        F.sum(F.col("ca") * F.col("avgrank")).alias("r_a"),
-        F.sum(
-            F.col("t").cast("double") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("tie_mass"),
+    # average rank of this tied value group: ranks before it + (t+1)/2
+    avgrank = (F.col("cum_a") + F.col("cum_b") - t) + (t + 1) / F.lit(2.0)
+    agg = cells.groupBy("n_a", "n_b").agg(
+        F.sum(F.col("ca") * avgrank).alias("r_a"),
+        F.sum(t.cast("double") * t * t - t).alias("tie_mass"),
     )
     na, nb = F.col("n_a"), F.col("n_b")
     n = na + nb
@@ -1805,17 +1892,14 @@ def mannwhitney_u(
         * ((n + 1) - F.col("tie_mass") / (n * (n - 1)))
     )
     # continuity-corrected z; degenerate var (all values tied) -> z = 0
-    zraw = (
-        F.abs(u - mu) - F.lit(0.5)
-    )
     z = F.when(var <= 0, F.lit(0.0)).otherwise(
-        F.greatest(zraw, F.lit(0.0)) / F.sqrt(var)
+        F.greatest(F.abs(u - mu) - F.lit(0.5), F.lit(0.0)) / F.sqrt(var)
     )
     p = _two_sided_normal_p(z)
-    staged2 = agg.withColumn("__u", u).withColumn("__z", z).withColumn(
+    staged = agg.withColumn("__u", u).withColumn("__z", z).withColumn(
         "__p", F.least(p, F.lit(1.0))
     )
-    return staged2.select(
+    return staged.select(
         "n_a",
         "n_b",
         F.round("__u", 4).alias("u_stat"),
@@ -2189,80 +2273,44 @@ def psi(
     difference statistically real?"; PSI answers "how big is it on a
     scale ops teams alarm on".
 
-    Bin edges are equal-width between the POOLED min/max (one broadcast
-    1-row aggregate), so both groups share the grid; empty-bin shares
-    clamp at ``min_share`` (the standard fix — PSI is infinite on a
-    truly empty cell, and the clamp is stated in every scorecard
-    manual).  Returns one row per occupied bin ``(bin, lo, hi, p_a,
-    p_b, term)`` plus the total stamped on each row (``psi``), all
-    rounded to 6.
+    Bin edges are equal-width between the POOLED min/max (the
+    :func:`_drift_cells` quantization), so both groups share the grid;
+    bin shares clamp at ``min_share`` (the standard fix — PSI is
+    infinite on a truly empty cell, and the clamp is stated in every
+    scorecard manual), so an entirely-absent group measures
+    "everything moved" instead of raising.  Returns one row per
+    occupied bin ``(bin, lo, hi, p_a, p_b, term)`` plus the total
+    stamped on each row (``psi``), all rounded to 6.
 
     Scale shape: one broadcast min/max + ONE bin-keyed count
     aggregation (map-side combined to ≤bins partials); everything
-    after runs on ≤bins rows."""
+    after runs on ≤bins rows, with no construction job."""
     if bins < 2:
         raise ValueError(f"bins must be >= 2, got {bins}")
     if not (0.0 < min_share < 0.5):
         raise ValueError(f"min_share must be in (0, 0.5), got {min_share}")
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    filtered = df.where((a | b) & v.isNotNull())
-    mm = filtered.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
+    cells = _drift_cells(
+        df, group_col, value_col, group_a, group_b, "psi",
+        bins=bins, empty_ok=True,
+    )
     width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
-    idx = F.when(F.col("__hi") <= F.col("__lo"), F.lit(0)).otherwise(
-        F.least(
-            F.floor((v - F.col("__lo")) / width).cast("int"),
-            F.lit(bins - 1),
-        )
-    )
-    per = (
-        filtered.crossJoin(F.broadcast(mm))
-        .groupBy(
-            idx.alias("bin"),
-            F.col("__lo").alias("__glo"),
-            F.col("__hi").alias("__ghi"),
-        )
-        .agg(
-            F.sum(a.cast("long")).alias("ca"),
-            F.sum(b.cast("long")).alias("cb"),
-        )
-    )
-    tot = Window.partitionBy()
-    gwidth = (F.col("__ghi") - F.col("__glo")) / F.lit(float(bins))
-    # an entirely-absent group would make x/0 a NaN that poisons every
-    # term; the when() yields NULL instead and greatest() skips NULLs,
-    # so the share degrades to the clamp (PSI then measures "everything
-    # moved", which is the honest answer)
-    staged = per.select(
+    pa, pb = _psi_shares(F.col, min_share)
+    staged = cells.select(
         "bin",
-        (F.col("__glo") + F.col("bin") * gwidth).alias("__blo"),
-        (F.col("__glo") + (F.col("bin") + 1) * gwidth).alias("__bhi"),
-        F.greatest(
-            F.when(
-                F.sum("ca").over(tot) > 0, F.col("ca") / F.sum("ca").over(tot)
-            ),
-            F.lit(float(min_share)),
-        ).alias("__pa"),
-        F.greatest(
-            F.when(
-                F.sum("cb").over(tot) > 0, F.col("cb") / F.sum("cb").over(tot)
-            ),
-            F.lit(float(min_share)),
-        ).alias("__pb"),
+        (F.col("__lo") + F.col("bin") * width).alias("__blo"),
+        (F.col("__lo") + (F.col("bin") + 1) * width).alias("__bhi"),
+        pa.alias("__pa"),
+        pb.alias("__pb"),
+        _psi_term(F.col, min_share).alias("__term"),
     )
-    term = (F.col("__pa") - F.col("__pb")) * F.log(
-        F.col("__pa") / F.col("__pb")
-    )
-    staged2 = staged.withColumn("__term", term)
-    return staged2.select(
+    return staged.select(
         "bin",
         F.round("__blo", 6).alias("lo"),
         F.round("__bhi", 6).alias("hi"),
         F.round("__pa", 6).alias("p_a"),
         F.round("__pb", 6).alias("p_b"),
         F.round("__term", 6).alias("term"),
-        F.round(F.sum("__term").over(tot), 6).alias("psi"),
+        F.round(F.sum("__term").over(Window.partitionBy()), 6).alias("psi"),
     )
 
 
@@ -2534,53 +2582,9 @@ def hist_psi_ranges(
     array fold."""
     if not (0.0 < min_share < 0.5):
         raise ValueError(f"min_share must be in (0, 0.5), got {min_share}")
-    (a_lo, a_hi), (b_lo, b_hi) = range_a, range_b
-
-    def merged(lo, hi, alias):
-        return sketches.where(
-            (F.col("day") >= lo) & (F.col("day") <= hi)
-        ).agg(
-            F.aggregate(
-                F.collect_list("bin_counts"),
-                F.lit(None).cast("array<long>"),
-                lambda acc, x: F.when(acc.isNull(), x).otherwise(
-                    F.zip_with(acc, x, lambda p, q: p + q)
-                ),
-            ).alias(alias)
-        )
-
-    both = merged(a_lo, a_hi, "ha").crossJoin(merged(b_lo, b_hi, "hb"))
-    # a range matching ZERO rollup rows folds to NULL — coalesce it to
-    # a zero-filled copy of the other side's grid so the min_share
-    # clamp runs and PSI measures "everything moved"; BOTH ranges
-    # empty stays NULL (no grid to borrow — documented)
-    zf = lambda col, other: F.coalesce(
-        col, F.transform(other, lambda x: F.lit(0).cast("long"))
-    )
-    both = both.select(
-        zf(F.col("ha"), F.col("hb")).alias("ha"),
-        zf(F.col("hb"), F.col("ha")).alias("hb"),
-    )
-    na = F.aggregate("ha", F.lit(0).cast("long"), lambda a, x: a + x)
-    nb = F.aggregate("hb", F.lit(0).cast("long"), lambda a, x: a + x)
-    ms = F.lit(float(min_share))
-    staged = both.select(na.alias("n_a"), nb.alias("n_b"), "ha", "hb")
-    # absent-range share: n = 0 -> when() yields NULL -> greatest
-    # skips NULLs -> clamp wins
-
-    def _share(x, n):
-        return F.greatest(F.when(F.col(n) > 0, x / F.col(n)), ms)
-
-    terms = F.zip_with(
-        F.col("ha"),
-        F.col("hb"),
-        lambda x, y: (_share(x, "n_a") - _share(y, "n_b"))
-        * F.log(_share(x, "n_a") / _share(y, "n_b")),
-    )
-    psi_val = F.aggregate(terms, F.lit(0.0), lambda acc, v: acc + v)
-    return staged.select(
-        "n_a", "n_b", F.round(psi_val, 6).alias("psi")
-    )
+    r = _drift_ranges(sketches, range_a, range_b, zero_fill=True)
+    psi_val = _fold_cells(lambda c: _psi_term(c, min_share))
+    return r.select("n_a", "n_b", F.round(psi_val, 6).alias("psi"))
 
 
 def cusum_changepoints(
@@ -6350,83 +6354,22 @@ def cvm_two_sample(
 
     The verdict compares T against the asymptotic α = 0.05 critical
     value 0.461 (Anderson-Darling 1952 table for the limiting
-    ω²-distribution) — the limiting p itself is an infinite weighted-
-    χ² series no replayable SQL can evaluate, so like
-    :func:`ks_test`'s D-only variant the readout is (statistic,
-    threshold, reject).  Returns ONE row ``(n_a, n_b, t_stat,
-    critical_05, reject)`` rounded to 6.
+    ω²-distribution; :func:`_verdict`).  Returns ONE row ``(n_a, n_b,
+    t_stat, critical_05, reject)`` rounded to 6; an empty group
+    raises ``ValueError``.
 
-    Scale shape: one (group, value) cell aggregation collapses the
-    corpus; the two ECDFs are ordered windows over |distinct values|
-    rows — the :func:`ks_test` single-task contract, ENFORCED by the
-    same ``max_distinct`` pre-check."""
-    v = F.col(value_col).cast("double")
-    df = df.where(
-        v.isNotNull()
-        & F.col(group_col).cast("string").isin(str(group_a), str(group_b))
+    Scale shape: the :func:`ks_test` cells and window contract
+    (:func:`_drift_cells`), ``max_distinct`` ENFORCED."""
+    cells = _drift_cells(
+        df, group_col, value_col, group_a, group_b, "cvm_two_sample",
+        max_distinct=max_distinct,
     )
-    pre = df.agg(
-        F.approx_count_distinct(v).alias("__ndv"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_a)).cast("long")
-        ).alias("__na"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_b)).cast("long")
-        ).alias("__nb"),
-    ).first()
-    ndv = pre["__ndv"]
-    if ndv > max_distinct:
-        raise ValueError(
-            f"cvm_two_sample: {value_col!r} has ~{ndv} distinct values > "
-            f"max_distinct={max_distinct}; quantize upstream (the ECDF "
-            "windows are ONE task over the distinct values)."
-        )
-    # A zero-row group would make the ECDF division NULL and yield a
-    # silent (n, 0, NULL, 0.461, NULL) readout — raise loudly instead,
-    # matching the max_distinct degenerate-input convention.  The check
-    # rides the same pre-scan action, so no extra job.
-    if not pre["__na"] or not pre["__nb"]:
-        raise ValueError(
-            f"cvm_two_sample: empty group (n_a={pre['__na'] or 0}, "
-            f"n_b={pre['__nb'] or 0}); both {group_a!r} and {group_b!r} "
-            f"must match at least one non-null {value_col!r} row."
-        )
-    cells = df.groupBy(v.alias("v")).agg(
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_a)).cast("long")
-        ).alias("ca"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_b)).cast("long")
-        ).alias("cb"),
+    s = cells.agg(
+        F.max("n_a").alias("n_a"),
+        F.max("n_b").alias("n_b"),
+        F.sum(_cvm_term(F.col)).alias("__s"),
     )
-    wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    staged = (
-        cells.withColumn("__cuma", F.sum("ca").over(wcum))
-        .withColumn("__cumb", F.sum("cb").over(wcum))
-        .withColumn("__na", F.sum("ca").over(wall))
-        .withColumn("__nb", F.sum("cb").over(wall))
-    )
-    fa = F.col("__cuma") / F.col("__na").cast("double")
-    fb = F.col("__cumb") / F.col("__nb").cast("double")
-    tv = (F.col("ca") + F.col("cb")).cast("double")
-    agg = staged.agg(
-        F.max("__na").alias("n_a"),
-        F.max("__nb").alias("n_b"),
-        F.sum(tv * (fa - fb) * (fa - fb)).alias("__s"),
-    )
-    n = F.col("n_a").cast("double")
-    m = F.col("n_b").cast("double")
-    t_stat = n * m / ((n + m) * (n + m)) * F.col("__s")
-    crit = F.lit(0.461)
-    staged2 = agg.withColumn("__t", t_stat)
-    return staged2.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round("__t", 6).alias("t_stat"),
-        F.round(crit, 6).alias("critical_05"),
-        (F.col("__t") > crit).alias("reject"),
-    )
+    return _verdict(s, "t_stat", 0.461)
 
 
 def ad_two_sample(
@@ -6454,88 +6397,21 @@ def ad_two_sample(
     the standard N−1 truncation; equal to Pettitt's rank formula
     without ties and to Scholz-Stephens' discrete A²kN with them).
     Verdict against the asymptotic α = 0.05 critical value 2.492
-    (Pettitt 1976: A²mn shares the one-sample A² limit law; same
-    statistic-threshold-reject readout as :func:`cvm_two_sample` —
-    the limiting p is an infinite weighted-χ² series no replayable
-    SQL can evaluate).  Returns ONE row ``(n_a, n_b, a2_stat,
-    critical_05, reject)`` rounded to 6.
+    (Pettitt 1976: A²mn shares the one-sample A² limit law).  Returns
+    ONE row ``(n_a, n_b, a2_stat, critical_05, reject)`` rounded to
+    6; an empty group raises ``ValueError``.
 
-    Scale shape: one (group, value) cell aggregation collapses the
-    corpus; the ECDFs are ordered windows over |distinct values| rows
-    — the :func:`ks_test` single-task contract, ENFORCED by the same
-    ``max_distinct`` pre-check; an empty group raises like
-    :func:`cvm_two_sample`."""
-    v = F.col(value_col).cast("double")
-    df = df.where(
-        v.isNotNull()
-        & F.col(group_col).cast("string").isin(str(group_a), str(group_b))
+    Scale shape: the :func:`cvm_two_sample` shape."""
+    cells = _drift_cells(
+        df, group_col, value_col, group_a, group_b, "ad_two_sample",
+        max_distinct=max_distinct,
     )
-    pre = df.agg(
-        F.approx_count_distinct(v).alias("__ndv"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_a)).cast("long")
-        ).alias("__na"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_b)).cast("long")
-        ).alias("__nb"),
-    ).first()
-    if pre["__ndv"] > max_distinct:
-        raise ValueError(
-            f"ad_two_sample: {value_col!r} has ~{pre['__ndv']} distinct "
-            f"values > max_distinct={max_distinct}; quantize upstream "
-            "(the ECDF windows are ONE task over the distinct values)."
-        )
-    if not pre["__na"] or not pre["__nb"]:
-        raise ValueError(
-            f"ad_two_sample: empty group (n_a={pre['__na'] or 0}, "
-            f"n_b={pre['__nb'] or 0}); both {group_a!r} and {group_b!r} "
-            f"must match at least one non-null {value_col!r} row."
-        )
-    cells = df.groupBy(v.alias("v")).agg(
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_a)).cast("long")
-        ).alias("ca"),
-        F.sum(
-            (F.col(group_col).cast("string") == str(group_b)).cast("long")
-        ).alias("cb"),
+    s = cells.agg(
+        F.max("n_a").alias("n_a"),
+        F.max("n_b").alias("n_b"),
+        F.sum(_ad_term(F.col)).alias("__s"),
     )
-    wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    staged = (
-        cells.withColumn("__cuma", F.sum("ca").over(wcum))
-        .withColumn("__cumb", F.sum("cb").over(wcum))
-        .withColumn("__na", F.sum("ca").over(wall))
-        .withColumn("__nb", F.sum("cb").over(wall))
-    )
-    fa = F.col("__cuma") / F.col("__na").cast("double")
-    fb = F.col("__cumb") / F.col("__nb").cast("double")
-    tv = (F.col("ca") + F.col("cb")).cast("double")
-    ntot = (F.col("__na") + F.col("__nb")).cast("double")
-    h = (F.col("__cuma") + F.col("__cumb")).cast("double") / ntot
-    # H = 1 at the largest distinct value by construction — the N−1
-    # truncation drops exactly that row; H > 0 everywhere else since
-    # every cell has t_v >= 1
-    term = F.when(
-        h < 1.0,
-        tv * (fa - fb) * (fa - fb) / (h * (F.lit(1.0) - h)),
-    ).otherwise(F.lit(0.0))
-    agg = staged.agg(
-        F.max("__na").alias("n_a"),
-        F.max("__nb").alias("n_b"),
-        F.sum(term).alias("__s"),
-    )
-    n = F.col("n_a").cast("double")
-    m = F.col("n_b").cast("double")
-    a2 = n * m / ((n + m) * (n + m)) * F.col("__s")
-    crit = F.lit(2.492)
-    staged2 = agg.withColumn("__a2", a2)
-    return staged2.select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round("__a2", 6).alias("a2_stat"),
-        F.round(crit, 6).alias("critical_05"),
-        (F.col("__a2") > crit).alias("reject"),
-    )
+    return _verdict(s, "a2_stat", 2.492)
 
 
 def _gamma1p(x):
@@ -6742,65 +6618,15 @@ def hist_cvm_ranges(
     asymptotic α = 0.05 critical value 0.461, the
     :func:`cvm_two_sample` contract.
 
-    Returns ONE row ``(n_a, n_b, t_stat, critical_05, reject)``.
+    Returns ONE row ``(n_a, n_b, t_stat, critical_05, reject)``; a
+    range matching no rollup rows gives NULL ``t_stat``/``reject``.
     Scale shape: two filtered sums over the |days|-row rollup + array
     expressions over ``nbins`` values — never touches the raw log."""
-    (a_lo, a_hi), (b_lo, b_hi) = range_a, range_b
-
-    def merged(lo, hi, alias):
-        return sketches.where(
-            (F.col("day") >= lo) & (F.col("day") <= hi)
-        ).agg(
-            F.aggregate(
-                F.collect_list("bin_counts"),
-                F.lit(None).cast("array<long>"),
-                lambda acc, x: F.when(acc.isNull(), x).otherwise(
-                    F.zip_with(acc, x, lambda p, q: p + q)
-                ),
-            ).alias(alias)
-        )
-
-    both = merged(a_lo, a_hi, "ha").crossJoin(merged(b_lo, b_hi, "hb"))
-
-    def ecdf(col, n):
-        idx = F.sequence(F.lit(1), F.size(col))
-        pref = F.transform(
-            idx, lambda i: F.aggregate(
-                F.slice(col, 1, i), F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-        )
-        return F.transform(pref, lambda c: c / n)
-
-    na = F.aggregate("ha", F.lit(0).cast("long"), lambda a, x: a + x)
-    nb = F.aggregate("hb", F.lit(0).cast("long"), lambda a, x: a + x)
-    diff2 = F.zip_with(
-        ecdf(F.col("ha"), na),
-        ecdf(F.col("hb"), nb),
-        lambda x, y: (x - y) * (x - y),
-    )
-    tmass = F.zip_with(
-        F.col("ha"), F.col("hb"), lambda p, q: (p + q).cast("double")
-    )
-    s = F.aggregate(
-        F.zip_with(tmass, diff2, lambda t, d: t * d),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    staged = both.select(
-        na.alias("n_a"), nb.alias("n_b"), s.alias("__s")
-    )
-    n = F.col("n_a").cast("double")
-    m = F.col("n_b").cast("double")
-    t_stat = n * m / ((n + m) * (n + m)) * F.col("__s")
-    crit = F.lit(0.461)
-    staged2 = staged.withColumn("__t", t_stat)
-    return staged2.select(
-        "n_a",
-        "n_b",
-        F.round("__t", 6).alias("t_stat"),
-        F.round(crit, 6).alias("critical_05"),
-        (F.col("__t") > crit).alias("reject"),
+    r = _drift_ranges(sketches, range_a, range_b)
+    return _verdict(
+        r.select("n_a", "n_b", _fold_cells(_cvm_term).alias("__s")),
+        "t_stat",
+        0.461,
     )
 
 
@@ -6824,72 +6650,15 @@ def hist_ad_ranges(
     already carries).  Verdict against the asymptotic α = 0.05
     critical value 2.492, the :func:`ad_two_sample` contract.
 
-    Returns ONE row ``(n_a, n_b, a2_stat, critical_05, reject)``.
+    Returns ONE row ``(n_a, n_b, a2_stat, critical_05, reject)``; a
+    range matching no rollup rows gives NULL ``a2_stat``/``reject``.
     Scale shape: two filtered sums over the |days|-row rollup + array
     expressions over ``nbins`` values — never touches the raw log."""
-    (a_lo, a_hi), (b_lo, b_hi) = range_a, range_b
-
-    def merged(lo, hi, alias):
-        return sketches.where(
-            (F.col("day") >= lo) & (F.col("day") <= hi)
-        ).agg(
-            F.aggregate(
-                F.collect_list("bin_counts"),
-                F.lit(None).cast("array<long>"),
-                lambda acc, x: F.when(acc.isNull(), x).otherwise(
-                    F.zip_with(acc, x, lambda p, q: p + q)
-                ),
-            ).alias(alias)
-        )
-
-    both = merged(a_lo, a_hi, "ha").crossJoin(merged(b_lo, b_hi, "hb"))
-
-    def prefix(col):
-        idx = F.sequence(F.lit(1), F.size(col))
-        return F.transform(
-            idx, lambda i: F.aggregate(
-                F.slice(col, 1, i), F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    na = F.aggregate("ha", F.lit(0).cast("long"), lambda a, x: a + x)
-    nb = F.aggregate("hb", F.lit(0).cast("long"), lambda a, x: a + x)
-    ntot = (na + nb).cast("double")
-    fa = F.transform(prefix(F.col("ha")), lambda c: c / na)
-    fb = F.transform(prefix(F.col("hb")), lambda c: c / nb)
-    hpool = F.transform(
-        F.zip_with(
-            prefix(F.col("ha")), prefix(F.col("hb")), lambda p, q: p + q
-        ),
-        lambda c: c / ntot,
-    )
-    diff2 = F.zip_with(fa, fb, lambda x, y: (x - y) * (x - y))
-    tmass = F.zip_with(
-        F.col("ha"), F.col("hb"), lambda p, q: (p + q).cast("double")
-    )
-    weighted = F.zip_with(
-        F.zip_with(tmass, diff2, lambda t, d: t * d),
-        hpool,
-        lambda td, h: F.when(
-            (h > 0.0) & (h < 1.0), td / (h * (F.lit(1.0) - h))
-        ).otherwise(F.lit(0.0)),
-    )
-    s = F.aggregate(weighted, F.lit(0.0), lambda acc, x: acc + x)
-    staged = both.select(
-        na.alias("n_a"), nb.alias("n_b"), s.alias("__s")
-    )
-    n = F.col("n_a").cast("double")
-    m = F.col("n_b").cast("double")
-    a2 = n * m / ((n + m) * (n + m)) * F.col("__s")
-    crit = F.lit(2.492)
-    staged2 = staged.withColumn("__a2", a2)
-    return staged2.select(
-        "n_a",
-        "n_b",
-        F.round("__a2", 6).alias("a2_stat"),
-        F.round(crit, 6).alias("critical_05"),
-        (F.col("__a2") > crit).alias("reject"),
+    r = _drift_ranges(sketches, range_a, range_b)
+    return _verdict(
+        r.select("n_a", "n_b", _fold_cells(_ad_term).alias("__s")),
+        "a2_stat",
+        2.492,
     )
 
 
@@ -7363,11 +7132,7 @@ def qdigest_quantile_range(
     for q in qs:
         if not 0.0 < q <= 1.0:
             raise ValueError(f"quantiles must be in (0, 1], got {q}")
-    filt = sketches
-    if start_day is not None:
-        filt = filt.where(F.col("day") >= start_day)
-    if end_day is not None:
-        filt = filt.where(F.col("day") <= end_day)
+    filt = _day_range(sketches, start_day, end_day)
     nleaves = 2 ** depth
     wleaf = (hi - lo) / nleaves
     merged = (

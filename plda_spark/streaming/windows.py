@@ -1133,6 +1133,28 @@ def _single_generation(
     return ledger
 
 
+def _ledger_rollup(
+    spark: SparkSession,
+    state_path: str,
+    run_id: str | None,
+    *batch_ranges,
+    col: str = "bin_counts",
+) -> tuple:
+    """One generation of a sketch ledger as a day-keyed rollup, so the
+    ``operators/stats.py`` range readers fold it verbatim: returns
+    ``(rollup, *ranges)`` where ``rollup`` is ``(day, col)`` with the
+    batch id zero-padded to 10 digits as ``day`` (string order ==
+    numeric order) and each inclusive ``(lo, hi)`` batch-id range is
+    padded the same way."""
+    rollup = _single_generation(spark, state_path, run_id).select(
+        F.lpad(F.col("batch_id").cast("string"), 10, "0").alias("day"), col
+    )
+    return (rollup,) + tuple(
+        (str(int(lo)).zfill(10), str(int(hi)).zfill(10))
+        for lo, hi in batch_ranges
+    )
+
+
 def decayed_counts_from_ledger(
     spark: SparkSession,
     state_path: str,
@@ -1285,18 +1307,10 @@ def hist_ks_from_ledger(
     meaningful within one checkpoint generation."""
     from plda_spark.operators.stats import hist_ks_ranges
 
-    ledger = _single_generation(spark, state_path, run_id_filter).select(
-        F.col("batch_id").cast("string").alias("day"), "bin_counts"
-    )
-    # reuse the range fold verbatim — batch ids stand in for days; pad
-    # to fixed width so string ordering == numeric ordering
-    padded = ledger.withColumn("day", F.lpad("day", 10, "0"))
-    fmt = lambda b: str(int(b)).zfill(10)
     return hist_ks_ranges(
-        padded,
-        (fmt(batches_a[0]), fmt(batches_a[1])),
-        (fmt(batches_b[0]), fmt(batches_b[1])),
+        *_ledger_rollup(spark, state_path, run_id_filter, batches_a, batches_b)
     )
+
 
 def hist_psi_from_ledger(
     spark: SparkSession,
@@ -1314,15 +1328,8 @@ def hist_psi_from_ledger(
     contract."""
     from plda_spark.operators.stats import hist_psi_ranges
 
-    ledger = _single_generation(spark, state_path, run_id_filter).select(
-        F.col("batch_id").cast("string").alias("day"), "bin_counts"
-    )
-    padded = ledger.withColumn("day", F.lpad("day", 10, "0"))
-    fmt = lambda b: str(int(b)).zfill(10)
     return hist_psi_ranges(
-        padded,
-        (fmt(batches_a[0]), fmt(batches_a[1])),
-        (fmt(batches_b[0]), fmt(batches_b[1])),
+        *_ledger_rollup(spark, state_path, run_id_filter, batches_a, batches_b),
         min_share=min_share,
     )
 
@@ -1622,15 +1629,8 @@ def hist_cvm_from_ledger(
     single-generation contract."""
     from plda_spark.operators.stats import hist_cvm_ranges
 
-    ledger = _single_generation(spark, state_path, run_id_filter).select(
-        F.col("batch_id").cast("string").alias("day"), "bin_counts"
-    )
-    padded = ledger.withColumn("day", F.lpad("day", 10, "0"))
-    fmt = lambda b: str(int(b)).zfill(10)
     return hist_cvm_ranges(
-        padded,
-        (fmt(batches_a[0]), fmt(batches_a[1])),
-        (fmt(batches_b[0]), fmt(batches_b[1])),
+        *_ledger_rollup(spark, state_path, run_id_filter, batches_a, batches_b)
     )
 
 
@@ -1652,15 +1652,8 @@ def hist_ad_from_ledger(
     single-generation contract."""
     from plda_spark.operators.stats import hist_ad_ranges
 
-    ledger = _single_generation(spark, state_path, run_id_filter).select(
-        F.col("batch_id").cast("string").alias("day"), "bin_counts"
-    )
-    padded = ledger.withColumn("day", F.lpad("day", 10, "0"))
-    fmt = lambda b: str(int(b)).zfill(10)
     return hist_ad_ranges(
-        padded,
-        (fmt(batches_a[0]), fmt(batches_a[1])),
-        (fmt(batches_b[0]), fmt(batches_b[1])),
+        *_ledger_rollup(spark, state_path, run_id_filter, batches_a, batches_b)
     )
 
 
@@ -1757,12 +1750,9 @@ def qdigest_quantiles_from_ledger(
     contract as the other ledgers."""
     from plda_spark.operators.stats import qdigest_quantile_range
 
-    ledger = _single_generation(spark, state_path, run_id_filter).select(
-        F.lpad(F.col("batch_id").cast("string"), 10, "0").alias("day"),
-        "nodes",
+    rollup, (first, last) = _ledger_rollup(
+        spark, state_path, run_id_filter, batches, col="nodes"
     )
-    fmt = lambda b: str(int(b)).zfill(10)
     return qdigest_quantile_range(
-        ledger, qs, lo, hi, depth=depth,
-        start_day=fmt(batches[0]), end_day=fmt(batches[1]),
+        rollup, qs, lo, hi, depth=depth, start_day=first, end_day=last
     )

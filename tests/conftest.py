@@ -40,10 +40,8 @@ SLOW_TESTS = {
     "test_compact_dedup_ledger_preserves_semantics",
     "test_connected_components",
     "test_curriculum_order_semantics",
-    "test_cvm_two_sample_semantics",
     "test_domain_filter_block_allow_partition",
     "test_dp_quantile_and_pareto_semantics",
-    "test_drift_test_cardinality_guard_and_bins",
     "test_dsir_weights_favor_target_distribution",
     "test_embedding_near_dup_blocked_exhaustive_equals_unblocked",
     "test_encode_viterbi_and_unk",
@@ -54,14 +52,10 @@ SLOW_TESTS = {
     "test_extra_query_matches_oracle[stream_ab_srm]",
     "test_gev_block_maxima_semantics",
     "test_hilbert_fold_matches_reference_walk",
-    "test_hist_ad_from_ledger_matches_batch",
-    "test_hist_cvm_from_ledger_matches_batch",
-    "test_hist_psi_ranges_matches_direct_psi",
     "test_incremental_decayed_counts_matches_batch",
     "test_incremental_decayed_moments_matches_batch",
     "test_incremental_exact_dedup_survives_checkpoint_generations",
     "test_incremental_exact_dedup_two_increments",
-    "test_incremental_hist_ledger_ks_matches_batch",
     "test_incremental_minhash_dedup_two_increments",
     "test_interval_join_matches_batch",
     "test_inverted_index_and_phrase_search",
@@ -92,7 +86,6 @@ SLOW_TESTS = {
     "test_pagerank_matches_numpy_power_iteration",
     "test_pagerank_random_graphs_match_numpy",
     "test_privacy_semantics",
-    "test_psi_kruskal_trend_semantics",
     "test_pure_append_chain_maintains_index",
     "test_qdigest_ledger_matches_batch_and_replays_identically",
     "test_review_fixes_round6",

@@ -4080,6 +4080,37 @@ def test_drift_test_cardinality_guard_and_bins(spark):
         stats.ks_test(one, "g", "v", "a", "b", bins=0)
 
 
+@pytest.mark.parametrize(
+    "test_fn", ["ks_test", "mannwhitney_u", "cvm_two_sample", "ad_two_sample"]
+)
+def test_raw_drift_tests_drop_nulls_and_refuse_empty_groups(spark, test_fn):
+    """The four raw two-sample tests share one cell builder: a NULL
+    value is not data (n counts only non-NULL rows and the readout
+    equals the NULL-free input's), and a group with no non-NULL value
+    raises the one "empty group" ValueError, in bins mode too."""
+    from plda_spark.operators import stats
+
+    fn = getattr(stats, test_fn)
+    with_nulls = spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("a", None),
+         ("b", 2.0), ("b", 3.0), ("b", None)],
+        "g string, v double",
+    )
+    got = fn(with_nulls, "g", "v", "a", "b").first()
+    assert got["n_a"] == 2 and got["n_b"] == 2
+    assert got == fn(with_nulls.where("v IS NOT NULL"), "g", "v", "a", "b").first()
+
+    only_null_b = spark.createDataFrame(
+        [("a", 1.0), ("b", None)], "g string, v double"
+    )
+    modes = [{}, {"bins": 4}] if test_fn in ("ks_test", "mannwhitney_u") else [{}]
+    for kw in modes:
+        with pytest.raises(ValueError, match="empty group"):
+            fn(with_nulls, "g", "v", "a", "zzz", **kw)
+        with pytest.raises(ValueError, match="empty group"):
+            fn(only_null_b, "g", "v", "a", "b", **kw)
+
+
 def test_welch_shift_and_bh_semantics(spark):
     """welch_ttest matches the closed-form Welch t and Satterthwaite
     dof (hand-computed via numpy); the one-vs-rest screen agrees with
@@ -8078,6 +8109,32 @@ def test_hist_ad_ranges_semantics(spark):
         sk, ("2024-01-01", "2024-01-01"), ("2024-01-02", "2024-01-02")
     ).first()
     assert same["a2_stat"] == 0.0 and same["reject"] is False
+
+
+@pytest.mark.parametrize(
+    "fn, stat, verdict",
+    [
+        ("hist_ks_ranges", "d_stat", "p_value"),
+        ("hist_cvm_ranges", "t_stat", "reject"),
+        ("hist_ad_ranges", "a2_stat", "reject"),
+    ],
+)
+def test_hist_drift_ranges_empty_range_is_null(spark, fn, stat, verdict):
+    """A day range matching no rollup rows is no evidence of drift:
+    the statistic and its verdict are NULL on either side, never a
+    maximally significant p = 0.  (PSI's documented min_share clamp
+    for this case is pinned by test_hist_psi_ranges_matches_direct_psi.)"""
+    from plda_spark.operators import stats
+
+    rows = [("2024-01-01 00:00:00", 1.0)] * 6 + [("2024-01-02 00:00:00", 11.0)] * 4
+    ev = spark.createDataFrame(rows, "ts string, value double").select(
+        F.to_timestamp("ts").alias("ts"), "value"
+    )
+    sk = stats.hist_daily_sketches(ev, "value", lo=0.0, hi=40.0, nbins=4)
+    full, empty = ("2024-01-01", "2024-01-02"), ("2030-01-01", "2030-01-02")
+    for ra, rb in [(full, empty), (empty, full)]:
+        r = getattr(stats, fn)(sk, ra, rb).first()
+        assert r[stat] is None and r[verdict] is None, r
 
 
 def test_friedman_daily_semantics(spark):
