@@ -375,6 +375,60 @@ FROM k0 LEFT JOIN rs ON rs.doc_id = k0.doc_id
 """
 
 
+def _two_wave_ledger(spark: SparkSession, ev: DataFrame, prefix: str, write) -> str:
+    """Ingest ``ev`` into a fresh ledger as two micro-batches of one
+    checkpoint: the even ``event_id`` wave is batch 0, the odd wave
+    batch 1.  One source scan stages both waves
+    (``windows.stage_parity_waves``); each wave then arrives as a
+    metadata-only file move and ``write(stream, state_path,
+    checkpoint_path)`` drains it with ``availableNow``.  Returns the
+    ledger path.  Only for ledgers whose partials are exact (integer
+    counts, set folds, digests): the staged files' layout differs from
+    a per-wave scan's, which would move float sums."""
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
+    deliver = windows.stage_parity_waves(ev, src)
+    for wave in (0, 1):
+        deliver(wave)
+        write(spark.readStream.schema(ev.schema).parquet(src), state, ckpt)
+    return state
+
+
+def _hist_ledger(spark: SparkSession, sf: str, prefix: str) -> str:
+    """The two-wave histogram ledger of ``events.value`` (64 bins over
+    ``[0, 200)``) that the four streaming drift queries fold."""
+    return _two_wave_ledger(
+        spark,
+        load_table(spark, sf, "events").select("event_id", "value"),
+        prefix,
+        lambda stream, state, ckpt: windows.incremental_hist_ledger(
+            stream, state, ckpt, "value", lo=0.0, hi=200.0, nbins=64
+        ),
+    )
+
+
+def _ab_ledger(spark: SparkSession, sf: str, prefix: str) -> str:
+    """The two-wave per-user conversion ledger (a purchase over 100
+    converts) that the three streaming A/B queries read."""
+    ev = load_table(spark, sf, "events").select(
+        "event_id",
+        "user_id",
+        (
+            (F.col("event_type") == "purchase") & (F.col("value") > 100)
+        ).cast("int").alias("converted"),
+    )
+    return _two_wave_ledger(
+        spark,
+        ev,
+        prefix,
+        lambda stream, state, ckpt: windows.incremental_ab_ledger(
+            stream, state, ckpt, user_col="user_id", success_col="converted"
+        ),
+    )
+
+
 def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every implemented query, keyed by name (contract + extras).
 
@@ -3785,28 +3839,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         equal the oracle's direct binned KS over the same parity split
         — the streaming drift monitor hash-gated, not just
         pytest-gated."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select("event_id", "value")
-        d = tempfile.mkdtemp(prefix="plda_histdrift_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, value double"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
-        deliver(1)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
+        state = _hist_ledger(spark, sf, "plda_histdrift_")
         return windows.hist_ks_from_ledger(spark, state, (0, 0), (1, 1))
 
     q["stream_hist_drift"] = stream_hist_drift
@@ -3818,28 +3851,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         a PSI instead of a KS — the ops-alarm number straight off the
         append-only ledger, hash-gated against the oracle's direct
         binned PSI over the identical parity split."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select("event_id", "value")
-        d = tempfile.mkdtemp(prefix="plda_histpsi_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, value double"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
-        deliver(1)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
+        state = _hist_ledger(spark, sf, "plda_histpsi_")
         return windows.hist_psi_from_ledger(spark, state, (0, 0), (1, 1))
 
     q["stream_hist_psi"] = stream_hist_psi
@@ -3852,28 +3864,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         alert off the identical append-only ledger, hash-gated
         against the oracle's direct binned CvM over the parity
         split."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select("event_id", "value")
-        d = tempfile.mkdtemp(prefix="plda_histcvm_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, value double"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
-        deliver(1)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
+        state = _hist_ledger(spark, sf, "plda_histcvm_")
         return windows.hist_cvm_from_ledger(spark, state, (0, 0), (1, 1))
 
     q["stream_hist_cvm"] = stream_hist_cvm
@@ -3886,28 +3877,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         instead of KS/PSI/CvM — the fourth drift alert off the
         identical append-only ledger, hash-gated against the oracle's
         direct binned AD over the parity split."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select("event_id", "value")
-        d = tempfile.mkdtemp(prefix="plda_histad_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, value double"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
-        deliver(1)
-        windows.incremental_hist_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, nbins=64,
-        )
+        state = _hist_ledger(spark, sf, "plda_histad_")
         return windows.hist_ad_from_ledger(spark, state, (0, 0), (1, 1))
 
     q["stream_hist_ad"] = stream_hist_ad
@@ -5423,34 +5393,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         across batches with max(converted), md5-assigns variants, and
         runs the pooled-SE z-test — hash-gated against the IDENTICAL
         oracle as the batch events_abtest, which is the parity claim."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select(
-            "event_id",
-            "user_id",
-            (
-                (F.col("event_type") == "purchase") & (F.col("value") > 100)
-            ).cast("int").alias("converted"),
-        )
-        d = tempfile.mkdtemp(prefix="plda_abtest_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, user_id long, converted int"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
-        deliver(1)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
+        state = _ab_ledger(spark, sf, "plda_abtest_")
         return windows.abtest_from_ledger(spark, state)
 
     q["stream_abtest"] = stream_abtest
@@ -5973,34 +5916,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the chi-squared goodness-of-fit against the designed 50/50 —
         the health gate a biased ingest would trip.  Hash-gated
         against the batch twin computed straight from events."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select(
-            "event_id",
-            "user_id",
-            (
-                (F.col("event_type") == "purchase") & (F.col("value") > 100)
-            ).cast("int").alias("converted"),
-        )
-        d = tempfile.mkdtemp(prefix="plda_absrm_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, user_id long, converted int"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
-        deliver(1)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
+        state = _ab_ledger(spark, sf, "plda_absrm_")
         return windows.srm_from_ledger(spark, state)
 
     q["stream_ab_srm"] = stream_ab_srm
@@ -6505,34 +6421,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         between micro-batches.  Hash-gated against the IDENTICAL
         oracle as the batch stats_bayes_ab, which is the parity
         claim."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select(
-            "event_id",
-            "user_id",
-            (
-                (F.col("event_type") == "purchase") & (F.col("value") > 100)
-            ).cast("int").alias("converted"),
-        )
-        d = tempfile.mkdtemp(prefix="plda_bayes_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, user_id long, converted int"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
-        deliver(1)
-        windows.incremental_ab_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            user_col="user_id", success_col="converted",
-        )
+        state = _ab_ledger(spark, sf, "plda_bayes_")
         return windows.bayes_from_ledger(spark, state)
 
     q["stream_bayes"] = stream_bayes
@@ -6730,27 +6619,13 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         partition-overwrite contract; the two-batch quantile fold is
         hash-gated against the oracle's direct unrolled replay over
         the identical parity split."""
-        import tempfile
-
-        from plda_spark.streaming import windows
-
-        ev = load_table(spark, sf, "events").select("event_id", "value")
-        d = tempfile.mkdtemp(prefix="plda_qdigest_")
-        src, state, ckpt = f"{d}/in", f"{d}/state", f"{d}/ckpt"
-        schema = "event_id long, value double"
-        # ONE source scan stages both parity waves (exact-integer/
-        # multiset ledger partials — layout-insensitive); each wave
-        # then ARRIVES as a metadata-only file move (round 12)
-        deliver = windows.stage_parity_waves(ev, src)
-        deliver(0)
-        windows.incremental_qdigest_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, depth=10, k=32,
-        )
-        deliver(1)
-        windows.incremental_qdigest_ledger(
-            spark.readStream.schema(schema).parquet(src), state, ckpt,
-            "value", lo=0.0, hi=200.0, depth=10, k=32,
+        state = _two_wave_ledger(
+            spark,
+            load_table(spark, sf, "events").select("event_id", "value"),
+            "plda_qdigest_",
+            lambda stream, state, ckpt: windows.incremental_qdigest_ledger(
+                stream, state, ckpt, "value", lo=0.0, hi=200.0, depth=10, k=32
+            ),
         )
         return windows.qdigest_quantiles_from_ledger(
             spark, state, (0, 1), [0.1, 0.5, 0.9, 0.99],

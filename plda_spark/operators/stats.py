@@ -783,30 +783,52 @@ def hist_daily_sketches(
     aggregation + one per-day array assembly; out-of-range values are
     dropped (the same documented range-filter contract as
     :func:`histogram`)."""
+    cells = _hist_cells(value_col, lo, hi, nbins)
+    return (
+        cells(df, F.to_date(F.col(ts_col)).cast("string"))
+        .groupBy("day")
+        .agg(_hist_bin_counts(nbins))
+    )
+
+
+def _hist_cells(value_col: str, lo: float, hi: float, nbins: int):
+    """The histogram grid: checks ``nbins`` and ``[lo, hi)``, then
+    returns ``cells(df, day) -> (day, bin, n)``, the per-(day, bin)
+    count of ``df``'s in-range values.  :func:`hist_daily_sketches`
+    keys it by date, the streaming histogram ledger by its batch, and
+    both assemble the counts with :func:`_hist_bin_counts`."""
     if nbins <= 0:
         raise ValueError("nbins must be positive")
     if not hi > lo:
         raise ValueError("hi must exceed lo")
     w = (hi - lo) / nbins
     x = F.col(value_col).cast("double")
-    counts = (
-        df.where((x >= lo) & (x < hi))
-        .select(
-            F.to_date(F.col(ts_col)).cast("string").alias("day"),
-            F.least(F.floor((x - lo) / w), F.lit(nbins - 1))
-            .cast("int")
-            .alias("bin"),
+
+    def cells(df: DataFrame, day) -> DataFrame:
+        return (
+            df.where((x >= lo) & (x < hi))
+            .select(
+                day.alias("day"),
+                F.least(F.floor((x - lo) / w), F.lit(nbins - 1))
+                .cast("int")
+                .alias("bin"),
+            )
+            .groupBy("day", "bin")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        .groupBy("day", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+
+    return cells
+
+
+def _hist_bin_counts(nbins: int):
+    """Aggregate a group of :func:`_hist_cells` rows into the dense
+    ``bin_counts: array<long>`` (zero for bins the group never hit; all
+    zeros for a group with no cells)."""
     m = F.map_from_entries(F.collect_list(F.struct("bin", "n")))
-    return counts.groupBy("day").agg(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(nbins - 1)),
-            lambda i: F.coalesce(F.element_at(m, i.cast("int")), F.lit(0)).cast("long"),
-        ).alias("bin_counts")
-    )
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(nbins - 1)),
+        lambda i: F.coalesce(F.element_at(m, i.cast("int")), F.lit(0)).cast("long"),
+    ).alias("bin_counts")
 
 
 def hist_quantile_range(
@@ -7076,6 +7098,22 @@ def qdigest_daily_sketches(
 
     Scale shape: ONE map-side-combined (day, leaf) corpus aggregation;
     compression and probes touch only the rollup."""
+    cells = _qdigest_cells(value_col, lo, hi, depth, k)
+    return (
+        cells(df, F.to_date(F.col(ts_col)).cast("string"))
+        .groupBy("day")
+        .agg(*_qdigest_nodes())
+    )
+
+
+def _qdigest_cells(value_col: str, lo: float, hi: float, depth: int, k: int):
+    """The q-digest grid: checks ``depth``, ``k`` and ``[lo, hi)``,
+    then returns ``cells(df, day) -> (day, id, cnt)``, each day's
+    compressed digest nodes (:func:`_qdigest_compress` over the
+    ``2^depth`` leaf counts of ``df``'s in-range values).
+    :func:`qdigest_daily_sketches` keys it by date, the streaming
+    q-digest ledger by its batch, and both assemble the nodes with
+    :func:`_qdigest_nodes`."""
     if depth < 2 or depth > 20:
         raise ValueError(f"depth must be in [2, 20], got {depth}")
     if k < 2:
@@ -7085,25 +7123,35 @@ def qdigest_daily_sketches(
     nleaves = 2 ** depth
     w = (hi - lo) / nleaves
     x = F.col(value_col).cast("double")
-    leaves = (
-        df.where((x >= lo) & (x < hi))
-        .select(
-            F.to_date(F.col(ts_col)).cast("string").alias("day"),
-            (
-                F.lit(nleaves)
-                + F.least(F.floor((x - lo) / w), F.lit(nleaves - 1))
-            ).cast("long").alias("id"),
+
+    def cells(df: DataFrame, day) -> DataFrame:
+        leaves = (
+            df.where((x >= lo) & (x < hi))
+            .select(
+                day.alias("day"),
+                (
+                    F.lit(nleaves)
+                    + F.least(F.floor((x - lo) / w), F.lit(nleaves - 1))
+                ).cast("long").alias("id"),
+            )
+            .groupBy("day", "id")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .groupBy("day", "id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    comp = _qdigest_compress(leaves, depth, k)
-    return comp.groupBy("day").agg(
+        return _qdigest_compress(leaves, depth, k)
+
+    return cells
+
+
+def _qdigest_nodes() -> list:
+    """Aggregate a group of :func:`_qdigest_cells` rows into ``nodes:
+    array<struct<id long, cnt long>>`` sorted by id and the mass ``n``
+    (empty nodes and ``n = 0`` for a group with no cells)."""
+    return [
         F.sort_array(
             F.collect_list(F.struct(F.col("id"), F.col("cnt")))
         ).alias("nodes"),
-        F.sum("cnt").alias("n"),
-    )
+        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"),
+    ]
 
 
 def qdigest_quantile_range(

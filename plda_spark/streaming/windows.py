@@ -602,6 +602,59 @@ def _overwrite_batch_partition(
     )
 
 
+def _ledger_query(
+    stream: DataFrame, checkpoint_path: str, timeout_s: float, step
+) -> None:
+    """The one streaming driver of every ledger writer: run ``stream``
+    to completion with ``availableNow``, calling ``step(batch, token,
+    batch_id)`` per micro-batch with this checkpoint generation's
+    :func:`_query_token`.  Waits ``timeout_s`` seconds (a float is
+    honoured, not truncated) and stops a query still running after
+    that, so a timed-out writer never leaves a query behind; the
+    interrupted batch replays on the next call, and every ledger write
+    is a per-batch partition overwrite, so the replay is exactly-once."""
+    if not timeout_s > 0:
+        raise ValueError(f"timeout_s must be positive, got {timeout_s}")
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        step(batch, _query_token(spark, checkpoint_path), batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(timeout_s)
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def _append_ledger(
+    stream: DataFrame,
+    state_path: str,
+    checkpoint_path: str,
+    timeout_s: float,
+    partials,
+) -> None:
+    """Pure-partials ledger writer: each micro-batch's ``partials(batch)``
+    lands as a dynamic overwrite of its ``run_id/batch_id`` partition.
+    The partials are a pure function of the batch (no prior state is
+    read), so a crash-replay rewrites identical content and no commit
+    marker is needed."""
+    _ledger_query(
+        stream,
+        checkpoint_path,
+        timeout_s,
+        lambda batch, token, batch_id: _overwrite_batch_partition(
+            partials(batch), state_path, token, batch_id
+        ),
+    )
+
+
 def _one_row_per(df: DataFrame, key_cols: list, order_col: str) -> DataFrame:
     """Collapse to exactly ONE row per ``key_cols``, fully
     deterministically: the surviving row minimizes ``(order_col,
@@ -621,44 +674,91 @@ def _one_row_per(df: DataFrame, key_cols: list, order_col: str) -> DataFrame:
     )
 
 
-def _require_out_run_id_layout(spark: SparkSession, path: str) -> None:
-    """Output-side twin of :func:`_require_run_id_layout`: a fresh
-    ``state_path`` pointed at an ``out_path`` still holding pre-run_id
-    output (``batch_id=``-only partitions) would write ``run_id=``
-    directories into the same root, mixing partition layouts so later
-    reads of ``out_path`` fail partition discovery.  A missing path is
-    fine (first run); an existing one must already carry ``run_id``."""
+def _read_prior(spark: SparkSession, path: str, what: str) -> DataFrame | None:
+    """The parquet ``what`` (ledger or output) already at ``path``, or
+    None when the path does not exist yet (the first batch).  Only a
+    MISSING path means "first batch": any other failure (corrupt files,
+    bad schema, permissions) raises, because silently skipping the
+    anti-join would re-admit every duplicate in history as if it were
+    new.  An existing one must carry the ``run_id`` partition column
+    (:func:`_require_run_id_layout`)."""
     from pyspark.errors import AnalysisException
 
     try:
-        existing = spark.read.parquet(path)
+        prior = spark.read.parquet(path)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return
+            return None
         raise
-    if "run_id" not in existing.columns:
-        raise RuntimeError(
-            f"output at {path} uses the old batch_id-only layout (no "
-            "run_id partition column); rewrite it under a run_id= "
-            "directory or point out_path at a fresh location — "
-            "state_path and out_path must be migrated together"
-        )
+    _require_run_id_layout(prior, path, what)
+    return prior
 
 
-def _require_run_id_layout(ledger: DataFrame, state_path: str) -> None:
-    """Fail loudly on a ledger written by the pre-``run_id`` layout
-    (partitioned by ``batch_id`` only).  Proceeding would crash later
-    with an opaque unresolved-column error — or worse, mix the two
+def _require_run_id_layout(
+    ledger: DataFrame, path: str, what: str = "ledger"
+) -> None:
+    """Fail loudly on a ledger or output written by the pre-``run_id``
+    layout (partitioned by ``batch_id`` only).  Proceeding would crash
+    later with an opaque unresolved-column error — or worse, mix the two
     partition layouts under one root so the NEXT read fails partition
     discovery.  Migration: rewrite the old ledger/output once with a
     constant ``run_id`` directory (e.g. ``run_id=migrated``), or start
-    fresh state/output paths."""
+    fresh state/output paths; state_path and out_path must be migrated
+    together."""
     if "run_id" not in ledger.columns:
         raise RuntimeError(
-            f"ledger at {state_path} uses the old batch_id-only layout "
+            f"{what} at {path} uses the old batch_id-only layout "
             "(no run_id partition column); rewrite it under a run_id= "
             "directory or point state_path/out_path at fresh locations"
         )
+
+
+def _dedup_ledger(
+    stream: DataFrame,
+    out_path: str,
+    state_path: str,
+    checkpoint_path: str,
+    timeout_s: float,
+    marker_schema: str,
+    marker,
+    admit,
+) -> None:
+    """Set-ledger writer shared by both dedup ledgers.  Per batch: skip
+    it when this run's commit marker ``marker(token)`` (one row of
+    ``marker_schema``, never equal to a real ledger key) is already in
+    its ``run_id/batch_id`` partition; otherwise ``admit(batch, ledger)``
+    returns ``(output rows, ledger key rows)`` against the prior ledger
+    (None on the first batch).  Output FIRST, ledger keys plus the
+    marker LAST, both as dynamic per-(run, batch) partition overwrites:
+    a crash between them replays the batch, recomputes the identical
+    survivors (the ledger still lacks this batch) and OVERWRITES the
+    same partitions — never appending duplicates."""
+    checked: list = []
+
+    def step(batch: DataFrame, token: str, batch_id: int) -> None:
+        spark = batch.sparkSession
+        if not checked:
+            _read_prior(spark, out_path, "output")
+            checked.append(out_path)
+        ledger = _read_prior(spark, state_path, "ledger")
+        mark = spark.createDataFrame([marker(token)], marker_schema)
+        if ledger is not None and (
+            ledger.where(
+                (F.col("run_id") == token) & (F.col("batch_id") == batch_id)
+            )
+            .join(mark, mark.columns, "left_semi")
+            .limit(1)
+            .count()
+            > 0
+        ):
+            return  # this run already fully committed this batch
+        out, keys = admit(batch, ledger)
+        _overwrite_batch_partition(out, out_path, token, batch_id)
+        _overwrite_batch_partition(
+            keys.unionByName(mark), state_path, token, batch_id
+        )
+
+    _ledger_query(stream, checkpoint_path, timeout_s, step)
 
 
 def incremental_exact_dedup(
@@ -702,45 +802,18 @@ def incremental_exact_dedup(
     in the parquet ledger, not the state store, so a year of increments
     costs the same per batch as day one.
     """
-    validated: set = set()
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # Marker digest "run:<query-id>" — prefixed so it can never
-        # collide with a real 32-hex md5; the query id is this
-        # CHECKPOINT's persistent identity.
-        token = _query_token(spark, checkpoint_path)
-        marker = f"run:{token}"
-        if out_path not in validated:
-            _require_out_run_id_layout(spark, out_path)
-            validated.add(out_path)
-        digested = batch.withColumn("__digest", F.md5(F.col(text_col)))
+    def admit(batch: DataFrame, ledger: DataFrame | None) -> tuple:
         # One row per digest: min-id representative, ties (the same URL
         # crawled twice in one dump, or rows differing only in auxiliary
         # columns) broken by a full-row hash so a crash-replay rewrites
         # the batch partition with BIT-IDENTICAL content.
-        fresh = _one_row_per(digested, ["__digest"], id_col)
-        # Only a MISSING ledger means "first batch".  Any other failure
-        # (corrupt files, bad schema, permissions) must raise: silently
-        # skipping the anti-join would re-admit every duplicate in
-        # history as if it were new.
-        from pyspark.errors import AnalysisException
-
-        try:
-            ledger = spark.read.parquet(state_path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-                raise
-            ledger = None  # first batch: no ledger yet
+        fresh = _one_row_per(
+            batch.withColumn("__digest", F.md5(F.col(text_col))),
+            ["__digest"],
+            id_col,
+        )
         if ledger is not None:
-            _require_run_id_layout(ledger, state_path)
-            done = ledger.where(
-                (F.col("run_id") == token)
-                & (F.col("batch_id") == batch_id)
-                & (F.col("digest") == marker)
-            )
-            if done.limit(1).count() > 0:
-                return  # this run already fully committed this batch
             fresh = fresh.join(
                 # marker digests can never equal a real md5, so they are
                 # inert in the anti-join; digests from ALL runs reject —
@@ -750,32 +823,17 @@ def incremental_exact_dedup(
                 "left_anti",
             )
         fresh = fresh.localCheckpoint(eager=True)  # stabilize before double write
-        # Output FIRST, ledger (with the commit marker) LAST, both as
-        # dynamic per-(run, batch) partition overwrites: a crash between
-        # them replays the batch, recomputes the identical survivors
-        # (the ledger still lacks this batch), and OVERWRITES the same
-        # run_id/batch_id partition — never appending duplicates.
-        _overwrite_batch_partition(
-            fresh.drop("__digest"), out_path, token, batch_id
-        )
-        _overwrite_batch_partition(
-            fresh.select(F.col("__digest").alias("digest")).unionByName(
-                spark.createDataFrame([(marker,)], "digest string")
-            ),
-            state_path,
-            token,
-            batch_id,
+        return fresh.drop("__digest"), fresh.select(
+            F.col("__digest").alias("digest")
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    # Marker digest "run:<query-id>" — prefixed so it can never collide
+    # with a real 32-hex md5; the query id is this CHECKPOINT's
+    # persistent identity.
+    _dedup_ledger(
+        stream_docs, out_path, state_path, checkpoint_path, timeout_s,
+        "digest string", lambda token: (f"run:{token}",), admit,
     )
-    q.awaitTermination(int(timeout_s))
-    if q.isActive:
-        q.stop()
 
 
 def enrich(events: DataFrame, dim: DataFrame, on: str, broadcast_dim: bool = True) -> DataFrame:
@@ -855,14 +913,8 @@ def incremental_minhash_dedup(
     (AQE broadcasts the increment side), two partition writes.  No
     state store, no unbounded executor state.
     """
-    validated: set = set()
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        if out_path not in validated:
-            _require_out_run_id_layout(spark, out_path)
-            validated.add(out_path)
+    def admit(batch: DataFrame, ledger: DataFrame | None) -> tuple:
         bb = minhash_band_rows(batch, num_hashes, bands, n, text_col, id_col)
         # Within-batch rule: drop any doc sharing a bucket with a
         # smaller-id doc (deterministic, partition-invariant; stricter
@@ -876,24 +928,7 @@ def incremental_minhash_dedup(
             .select("doc_id")
             .distinct()
         )
-        from pyspark.errors import AnalysisException
-
-        try:
-            ledger = spark.read.parquet(state_path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-                raise
-            ledger = None
         if ledger is not None:
-            _require_run_id_layout(ledger, state_path)
-            done = ledger.where(
-                (F.col("run_id") == token)
-                & (F.col("batch_id") == batch_id)
-                & (F.col("band") == -1)
-                & (F.col("bucket") == token)
-            )
-            if done.limit(1).count() > 0:
-                return  # this run already fully committed this batch
             hit = bb.join(
                 # marker rows (band = -1) can never match bb (bands >= 0)
                 ledger.select("band", "bucket").dropDuplicates(),
@@ -921,34 +956,17 @@ def incremental_minhash_dedup(
             [id_col],
             id_col,
         ).localCheckpoint(eager=True)
-        # Output FIRST, ledger (with the commit marker) LAST, both as
-        # dynamic per-(run, batch) partition overwrites — a crash between
-        # them replays to identical content in the same partition.
-        _overwrite_batch_partition(fresh, out_path, token, batch_id)
-        # The marker row (band = -1, bucket = query id) doubles as the
-        # commit record AND covers batches whose admitted docs are all
-        # bucketless (which write zero bucket rows).
-        marker = spark.createDataFrame(
-            [(-1, token)], "band int, bucket string"
-        )
-        _overwrite_batch_partition(
-            bb.join(keep, "doc_id", "left_semi")
-            .select("band", "bucket")
-            .unionByName(marker),
-            state_path,
-            token,
-            batch_id,
+        return fresh, bb.join(keep, "doc_id", "left_semi").select(
+            "band", "bucket"
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    # The marker row (band = -1, bucket = query id) doubles as the
+    # commit record AND covers batches whose admitted docs are all
+    # bucketless (which write zero bucket rows).
+    _dedup_ledger(
+        stream_docs, out_path, state_path, checkpoint_path, timeout_s,
+        "band int, bucket string", lambda token: (-1, token), admit,
     )
-    q.awaitTermination(int(timeout_s))
-    if q.isActive:
-        q.stop()
 
 
 def compact_dedup_ledger(
@@ -1055,42 +1073,10 @@ def incremental_decayed_counts(
     scale-free — the epoch factor cancels in the ratio — so ledgers
     never need to agree on "now" to agree on the mean).
     """
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        rel = _decayed_rel_mass(
-            batch, key_cols, ts_col, half_life_days, epoch, value_col
-        )
-        _overwrite_batch_partition(rel, state_path, token, batch_id)
-
-    q = (
-        stream_events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-
-
-def _decayed_rel_mass(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    half_life_days: float,
-    epoch: str,
-    value_col: str | None = None,
-) -> DataFrame:
-    """Per-key epoch-relative mass partials — the shared aggregation of
-    the streaming writer and any batch backfill."""
     if half_life_days <= 0:
         raise ValueError("half_life_days must be positive")
-
-    def secs(c):
-        return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
-
     rel_days = (
-        secs(F.col(ts_col)) - secs(F.lit(epoch).cast("timestamp"))
+        _epoch_secs(F.col(ts_col)) - _epoch_secs(F.lit(epoch).cast("timestamp"))
     ) / F.lit(86400.0)
     w = F.pow(F.lit(2.0), rel_days / F.lit(half_life_days))
     aggs = [
@@ -1102,7 +1088,17 @@ def _decayed_rel_mass(
         aggs.append(
             F.sum(w * F.col(value_col).cast("double")).alias("rel_mass_x")
         )
-    return events.groupBy(*[F.col(c) for c in key_cols]).agg(*aggs)
+    _append_ledger(
+        stream_events, state_path, checkpoint_path, timeout_s,
+        lambda batch: batch.groupBy(*[F.col(c) for c in key_cols]).agg(*aggs),
+    )
+
+
+def _epoch_secs(c):
+    """Seconds since the unix epoch of a TIMESTAMP or TIMESTAMP_NTZ
+    column (NTZ refuses a direct double cast; the session-tz offset of
+    the LTZ cast cancels in every difference taken here)."""
+    return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
 
 
 def _single_generation(
@@ -1178,10 +1174,6 @@ def decayed_counts_from_ledger(
     would double-count, so with multiple generations present and no
     ``run_id`` this raises instead of silently doubling."""
     ledger = _single_generation(spark, state_path, run_id_filter)
-
-    def secs(c):
-        return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
-
     if ref_ts is None:
         # the ledger is |keys|x|batches| rows — derive the reference
         # instant as a broadcast 1-row aggregate rather than a global
@@ -1194,7 +1186,7 @@ def decayed_counts_from_ledger(
     ref = F.col("__ref")
     scale = F.pow(
         F.lit(2.0),
-        -(secs(ref) - secs(F.lit(epoch).cast("timestamp")))
+        -(_epoch_secs(ref) - _epoch_secs(F.lit(epoch).cast("timestamp")))
         / F.lit(86400.0)
         / F.lit(half_life_days),
     )
@@ -1248,45 +1240,13 @@ def incremental_hist_ledger(
 
     Scale shape: one map-side-combined (bin) aggregation per batch,
     ``nbins`` longs appended; drift probes touch only the ledger."""
-    from plda_spark.operators.stats import hist_daily_sketches  # noqa: F401
+    from plda_spark.operators.stats import _hist_bin_counts, _hist_cells
 
-    if nbins <= 0:
-        raise ValueError("nbins must be positive")
-    if not hi > lo:
-        raise ValueError("hi must exceed lo")
-    w = (hi - lo) / nbins
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        x = F.col(value_col).cast("double")
-        counts = (
-            batch.where((x >= lo) & (x < hi))
-            .groupBy(
-                F.least(F.floor((x - lo) / w), F.lit(nbins - 1))
-                .cast("int")
-                .alias("bin")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        m = F.map_from_entries(F.collect_list(F.struct("bin", "n")))
-        row = counts.agg(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nbins - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(m, i.cast("int")), F.lit(0)
-                ).cast("long"),
-            ).alias("bin_counts")
-        )
-        _overwrite_batch_partition(row, state_path, token, batch_id)
-
-    q = (
-        stream_events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    cells = _hist_cells(value_col, lo, hi, nbins)
+    _append_ledger(
+        stream_events, state_path, checkpoint_path, timeout_s,
+        lambda batch: cells(batch, F.lit("0")).agg(_hist_bin_counts(nbins)),
     )
-    q.awaitTermination(timeout_s)
 
 
 def hist_ks_from_ledger(
@@ -1380,20 +1340,10 @@ def incremental_ab_ledger(
     micro-batch; |users-in-batch| slim rows appended; reads touch only
     the ledger.  Compact with the same cadence as the dedup ledgers
     when batch count grows."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        partials = ab_ledger_partials(batch, user_col, success_col)
-        _overwrite_batch_partition(partials, state_path, token, batch_id)
-
-    q = (
-        stream_events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    _append_ledger(
+        stream_events, state_path, checkpoint_path, timeout_s,
+        lambda batch: ab_ledger_partials(batch, user_col, success_col),
     )
-    q.awaitTermination(timeout_s)
 
 
 def abtest_from_ledger(
@@ -1415,23 +1365,45 @@ def abtest_from_ledger(
 
     One ledger aggregation + one conditional aggregation — the raw
     event stream is never re-read."""
-    from plda_spark.operators.sampling import hash_bucket
     from plda_spark.operators.stats import two_proportion_ztest
 
+    return two_proportion_ztest(
+        _ab_users(spark, state_path, variant_a, variant_b, buckets, run_id_filter),
+        "variant", "converted", variant_a, variant_b,
+    )
+
+
+def _ab_users(
+    spark: SparkSession,
+    state_path: str,
+    variant_a: str,
+    variant_b: str,
+    buckets: int,
+    run_id_filter: str | None,
+) -> DataFrame:
+    """The one read of the :func:`incremental_ab_ledger` behind every
+    A/B readout: per-user ``(variant, converted)`` rows.  Reads the
+    ledger (one ``run_id`` when given), folds each user's
+    ``max(converted)`` across batches (set semantics) and assigns
+    ``hash_bucket(user, buckets) == 0`` to ``variant_a``, the rest to
+    ``variant_b``.  ``buckets < 2`` would put every user in A, so it
+    raises before any read."""
+    from plda_spark.operators.sampling import hash_bucket
+
+    if buckets < 2:
+        raise ValueError(f"buckets must be >= 2, got {buckets}")
     ledger = spark.read.parquet(state_path)
     if run_id_filter is not None:
         ledger = ledger.where(F.col("run_id") == run_id_filter)
-    per_user = ledger.groupBy("user").agg(
-        F.max("converted").alias("converted")
-    )
-    assigned = per_user.select(
-        F.when(hash_bucket(F.col("user"), buckets) == 0, variant_a)
-        .otherwise(variant_b)
-        .alias("variant"),
-        "converted",
-    )
-    return two_proportion_ztest(
-        assigned, "variant", "converted", variant_a, variant_b
+    return (
+        ledger.groupBy("user")
+        .agg(F.max("converted").alias("converted"))
+        .select(
+            F.when(hash_bucket(F.col("user"), buckets) == 0, variant_a)
+            .otherwise(variant_b)
+            .alias("variant"),
+            "converted",
+        )
     )
 
 
@@ -1459,26 +1431,14 @@ def srm_from_ledger(
 
     One ledger aggregation + one variant-keyed count — the raw event
     stream is never re-read."""
-    from plda_spark.operators.sampling import hash_bucket
     from plda_spark.operators.stats import ab_srm_check
 
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
-    ledger = spark.read.parquet(state_path)
-    if run_id_filter is not None:
-        ledger = ledger.where(F.col("run_id") == run_id_filter)
-    per_user = ledger.select("user").distinct()
-    assigned = per_user.select(
-        F.when(hash_bucket(F.col("user"), buckets) == 0, variant_a)
-        .otherwise(variant_b)
-        .alias("variant")
-    )
     # the designed split under hash_bucket(user, buckets) == 0 -> A is
     # P(A) = 1/buckets, NOT 50/50 — expected weights must mirror the
     # assignment or the guardrail fires on perfectly healthy data for
     # any buckets != 2
     return ab_srm_check(
-        assigned,
+        _ab_users(spark, state_path, variant_a, variant_b, buckets, run_id_filter),
         "variant",
         {variant_a: 1.0, variant_b: float(buckets - 1)},
         alpha=alpha,
@@ -1509,27 +1469,11 @@ def bayes_from_ledger(
 
     One ledger aggregation + one conditional aggregation — the raw
     event stream is never re-read."""
-    from plda_spark.operators.sampling import hash_bucket
     from plda_spark.operators.stats import bayes_ab_beta
 
-    # same guard as srm_from_ledger: buckets=1 would silently assign
-    # EVERY user to variant A and report a prior-only posterior for B
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
-    ledger = spark.read.parquet(state_path)
-    if run_id_filter is not None:
-        ledger = ledger.where(F.col("run_id") == run_id_filter)
-    per_user = ledger.groupBy("user").agg(
-        F.max("converted").alias("converted")
-    )
-    assigned = per_user.select(
-        F.when(hash_bucket(F.col("user"), buckets) == 0, variant_a)
-        .otherwise(variant_b)
-        .alias("variant"),
-        "converted",
-    )
     return bayes_ab_beta(
-        assigned, "variant", "converted", variant_a, variant_b,
+        _ab_users(spark, state_path, variant_a, variant_b, buckets, run_id_filter),
+        "variant", "converted", variant_a, variant_b,
         prior_alpha=prior_alpha, prior_beta=prior_beta,
     )
 
@@ -1558,28 +1502,13 @@ def incremental_daily_moments(
     Scale shape: one map-side-combined per-day aggregation per
     micro-batch; |days-in-batch| slim rows appended; reads touch only
     the ledger."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        x = F.col(value_col).cast("double")
-        rows = (
-            batch.where(F.col(ts_col).isNotNull() & x.isNotNull())
-            .groupBy(F.to_date(F.col(ts_col)).alias("d"))
-            .agg(
-                F.sum(x).alias("s1"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        _overwrite_batch_partition(rows, state_path, token, batch_id)
-
-    q = (
-        stream_events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    x = F.col(value_col).cast("double")
+    _append_ledger(
+        stream_events, state_path, checkpoint_path, timeout_s,
+        lambda batch: batch.where(F.col(ts_col).isNotNull() & x.isNotNull())
+        .groupBy(F.to_date(F.col(ts_col)).alias("d"))
+        .agg(F.sum(x).alias("s1"), F.count(F.lit(1)).alias("n")),
     )
-    q.awaitTermination(timeout_s)
 
 
 def page_hinkley_from_ledger(
@@ -1687,49 +1616,13 @@ def incremental_qdigest_ledger(
     Scale shape: one map-side-combined (leaf) aggregation per batch +
     ``depth`` rollup-frame compression rounds; probes touch only the
     ledger."""
-    from plda_spark.operators.stats import _qdigest_compress
+    from plda_spark.operators.stats import _qdigest_cells, _qdigest_nodes
 
-    if depth < 2 or depth > 20:
-        raise ValueError(f"depth must be in [2, 20], got {depth}")
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if not hi > lo:
-        raise ValueError("hi must exceed lo")
-    nleaves = 2 ** depth
-    w = (hi - lo) / nleaves
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        token = _query_token(spark, checkpoint_path)
-        x = F.col(value_col).cast("double")
-        leaves = (
-            batch.where((x >= lo) & (x < hi))
-            .select(
-                F.lit("0").alias("day"),
-                (
-                    F.lit(nleaves)
-                    + F.least(F.floor((x - lo) / w), F.lit(nleaves - 1))
-                ).cast("long").alias("id"),
-            )
-            .groupBy("day", "id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        comp = _qdigest_compress(leaves, depth, k)
-        row = comp.agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("id"), F.col("cnt")))
-            ).alias("nodes"),
-            F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"),
-        )
-        _overwrite_batch_partition(row, state_path, token, batch_id)
-
-    q = (
-        stream_events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    cells = _qdigest_cells(value_col, lo, hi, depth, k)
+    _append_ledger(
+        stream_events, state_path, checkpoint_path, timeout_s,
+        lambda batch: cells(batch, F.lit("0")).agg(*_qdigest_nodes()),
     )
-    q.awaitTermination(timeout_s)
 
 
 def qdigest_quantiles_from_ledger(

@@ -27,6 +27,8 @@ def pytest_configure(config):
 # simply stops matching.  The LDA trainer tests (tests/test_train.py and
 # the CLI round trip) are deliberately NOT listed: they pin the exchange
 # parity, resume and release behaviour and must run in the default gate.
+# Nor are the streaming-ledger writer tests, which pin the exactly-once
+# and one-row-per-batch contracts of the shared ledger driver.
 SLOW_TESTS = {
     "test_as_of_join_matches_pandas_merge_asof",
     "test_association_rules_semantics",
@@ -37,7 +39,6 @@ SLOW_TESTS = {
     "test_byte_bpe_matches_reference",
     "test_chi2_and_winsorize_semantics",
     "test_cms_upper_bound_and_mergeability",
-    "test_compact_dedup_ledger_preserves_semantics",
     "test_connected_components",
     "test_curriculum_order_semantics",
     "test_domain_filter_block_allow_partition",
@@ -49,14 +50,8 @@ SLOW_TESTS = {
     "test_every_query_analyzes",
     "test_extra_query_matches_oracle[dedup_semantic]",
     "test_extra_query_matches_oracle[stats_bootstrap_ci]",
-    "test_extra_query_matches_oracle[stream_ab_srm]",
     "test_gev_block_maxima_semantics",
     "test_hilbert_fold_matches_reference_walk",
-    "test_incremental_decayed_counts_matches_batch",
-    "test_incremental_decayed_moments_matches_batch",
-    "test_incremental_exact_dedup_survives_checkpoint_generations",
-    "test_incremental_exact_dedup_two_increments",
-    "test_incremental_minhash_dedup_two_increments",
     "test_interval_join_matches_batch",
     "test_inverted_index_and_phrase_search",
     "test_ivf_pq_append_equals_build_on_union",
@@ -87,13 +82,11 @@ SLOW_TESTS = {
     "test_pagerank_random_graphs_match_numpy",
     "test_privacy_semantics",
     "test_pure_append_chain_maintains_index",
-    "test_qdigest_ledger_matches_batch_and_replays_identically",
     "test_review_fixes_round6",
     "test_roc_auc_and_kappa_semantics",
     "test_round10_new_ops_are_single_pass_rollups",
     "test_sessionize_stateful",
     "test_spearman_matches_pandas_average_ranks",
-    "test_srm_from_ledger_matches_designed_split",
     "test_streaming_sink_idempotence_check_is_o1",
     "test_stump_srm_and_combine_semantics",
     "test_tokenizer_save_load_roundtrip_all_families",

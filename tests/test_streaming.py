@@ -1065,6 +1065,15 @@ def test_incremental_hist_ledger_ks_matches_batch(spark, tmp_path):
     zero = windows.hist_psi_from_ledger(spark, state, (0, 1), (0, 1)).first()
     assert zero["psi"] == 0.0
 
+    # a batch whose values are all out of range still writes its one row
+    mk([(i + 5000, 500.0) for i in range(10)]).write.mode("append").parquet(in_dir)
+    windows.incremental_hist_ledger(
+        spark.readStream.schema(schema).parquet(in_dir), state, ckpt,
+        "v", lo=0.0, hi=100.0, nbins=50)
+    rows = [(r["batch_id"], r["bin_counts"]) for r in spark.read.parquet(state).collect()]
+    assert sorted(b for b, _ in rows) == [0, 1, 2]
+    assert [c for b, c in rows if b == 2] == [[0] * 50]
+
 
 def test_incremental_ab_ledger_dedups_users_across_batches(spark, tmp_path):
     """The conversion ledger has SET semantics: a user converting only
@@ -1194,15 +1203,59 @@ def test_bayes_from_ledger_matches_batch(spark, tmp_path):
     assert 0.0 <= got["prob_b_beats_a"] <= 1.0
 
 
-def test_bayes_from_ledger_rejects_buckets_lt_2(spark):
+@pytest.mark.parametrize(
+    "reader", ["bayes_from_ledger", "abtest_from_ledger", "srm_from_ledger"]
+)
+def test_bayes_from_ledger_rejects_buckets_lt_2(spark, reader):
     """buckets=1 would silently assign every user to A and report a
-    prior-only posterior for B — the guard raises before any read."""
-    import pytest
-
-    from plda_spark.streaming import windows
-
+    prior-only verdict for B — every A/B ledger reader raises before
+    any read."""
     with pytest.raises(ValueError, match="buckets must be >= 2"):
-        windows.bayes_from_ledger(spark, "/nonexistent", buckets=1)
+        getattr(windows, reader)(spark, "/nonexistent", buckets=1)
+
+
+def test_incremental_decayed_counts_rejects_half_life_before_start(spark, tmp_path):
+    """half_life_days <= 0 is refused before the streaming query starts,
+    so an empty stream cannot accept it silently and no query is left
+    behind."""
+    in_dir = str(tmp_path / "in")
+    schema = "event_id long, ts timestamp, event_type string"
+    spark.createDataFrame([], schema).write.parquet(in_dir)
+    with pytest.raises(ValueError, match="half_life_days"):
+        windows.incremental_decayed_counts(
+            spark.readStream.schema(schema).parquet(in_dir),
+            str(tmp_path / "state"), str(tmp_path / "ckpt"),
+            ["event_type"], half_life_days=0,
+        )
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("writer", ["hist_ledger", "exact_dedup"])
+def test_timed_out_ledger_writer_stops_its_query(spark, tmp_path, writer):
+    """A writer whose timeout runs out before the stream is drained
+    returns with its query stopped, and a sub-second timeout is honoured
+    instead of being truncated to 0 seconds."""
+    in_dir = str(tmp_path / "in")
+    schema = "doc_id long, text string, v double"
+    for i in range(6):
+        spark.createDataFrame(
+            [(i, f"document {i}", float(i))], schema
+        ).write.mode("append").parquet(in_dir)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    if writer == "hist_ledger":
+        windows.incremental_hist_ledger(
+            stream, state, ckpt, "v", lo=0.0, hi=10.0, nbins=5, timeout_s=0.01
+        )
+    else:
+        windows.incremental_exact_dedup(
+            stream, str(tmp_path / "out"), state, ckpt, timeout_s=0.5
+        )
+    assert spark.streams.active == []
 
 
 def test_page_hinkley_from_ledger_matches_batch(spark, tmp_path):
@@ -1461,3 +1514,16 @@ def test_qdigest_ledger_matches_batch_and_replays_identically(spark, tmp_path):
     assert tot2 == 700
     rows1 = {r["batch_id"]: r["n"] for r in r1.collect()}
     assert rows1 == {0: 400, 1: 300}
+
+    # a batch whose values are all out of range still writes its one
+    # row: an empty digest with n = 0
+    mk([(i + 5000, 500.0) for i in range(10)]).write.mode("append").parquet(in_dir)
+    windows.incremental_qdigest_ledger(
+        spark.readStream.schema(schema).parquet(in_dir), state, ckpt,
+        "v", lo=0.0, hi=100.0, depth=8, k=16)
+    rows = [
+        (r["batch_id"], r["nodes"], r["n"])
+        for r in spark.read.parquet(state).collect()
+    ]
+    assert sorted(b for b, _, _ in rows) == [0, 1, 2]
+    assert [(nodes, n) for b, nodes, n in rows if b == 2] == [([], 0)]
