@@ -170,6 +170,21 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_term_counts(tokenize(load_table(spark, sf_dir, "documents")))
 
 
+def _link_graph(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
+    """The synthetic directed link graph of the graph queries: orders
+    projected to ``(o_custkey % mod → o_orderkey % mod)``, self-loops
+    and duplicate edges dropped."""
+    orders = load_table(spark, sf_dir, "orders")
+    return (
+        orders.select(
+            (F.col("o_custkey") % mod).alias("src"),
+            (F.col("o_orderkey") % mod).alias("dst"),
+        )
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
 def _dec(col: str) -> F.Column:
     return F.col(col).cast("decimal(18,6)")
 
@@ -1910,15 +1925,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         DuckDB oracle unrolls the identical iterations as chained CTEs."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = (
-            orders.select(
-                (F.col("o_custkey") % 100).alias("src"),
-                (F.col("o_orderkey") % 100).alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        e = _link_graph(spark, sf, 100)
         r = graph.pagerank(e, n_iter=3, damping=0.85)
         return r.select("node", F.round("rank", 6).alias("rank"))
 
@@ -1933,15 +1940,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         vector."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = (
-            orders.select(
-                (F.col("o_custkey") % 100).alias("src"),
-                (F.col("o_orderkey") % 100).alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        e = _link_graph(spark, sf, 100)
         r = graph.personalized_pagerank(e, seeds=[0, 1, 2], n_iter=3,
                                         damping=0.85)
         return r.select("node", F.round("rank", 6).alias("rank"))
@@ -1981,11 +1980,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the edge set; the top-k is a distributed TakeOrdered."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 400).alias("src"),
-            (F.col("o_orderkey") % 400).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 400)
         return graph.link_prediction(e, max_degree=1000, top_k=100)
 
     q["graph_link_prediction"] = graph_link_prediction
@@ -3190,11 +3185,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the Pregel shape shared with pagerank."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 100).alias("src"),
-            (F.col("o_orderkey") % 100).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.hits(e, n_iter=3)
 
     q["graph_hits"] = graph_hits
@@ -5237,15 +5228,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the monotonically shrinking edge frame."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = (
-            orders.select(
-                (F.col("o_custkey") % 100).alias("src"),
-                (F.col("o_orderkey") % 100).alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.kcore(e, k=20, n_rounds=8)
 
     q["graph_kcore"] = graph_kcore
@@ -5462,15 +5445,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         aggregation + one scalar aggregation."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = (
-            orders.select(
-                (F.col("o_custkey") % 100).alias("src"),
-                (F.col("o_orderkey") % 100).alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.degree_powerlaw(e, dmin=20)
 
     q["graph_powerlaw"] = graph_powerlaw
@@ -5569,11 +5544,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         corr aggregation."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 100).alias("src"),
-            (F.col("o_orderkey") % 100).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.assortativity(e)
 
     q["graph_assortativity"] = graph_assortativity
@@ -5587,11 +5558,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         aggregation."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 100).alias("src"),
-            (F.col("o_orderkey") % 100).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.clustering_coefficients(e)
 
     q["graph_clustering"] = graph_clustering
@@ -5604,11 +5571,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         aggregation."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 60).alias("src"),
-            (F.col("o_orderkey") % 60).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 60)
         return graph.reciprocity(e)
 
     q["graph_reciprocity"] = graph_reciprocity
@@ -5837,11 +5800,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         oracle unrolls the identical shells."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 100).alias("src"),
-            (F.col("o_orderkey") % 100).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.bfs_distances(e, [0, 7], max_hops=2)
 
     q["graph_bfs"] = graph_bfs
@@ -6504,11 +6463,7 @@ def _all_query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         a |nodes|-row rollup."""
         from plda_spark.operators import graph
 
-        orders = load_table(spark, sf, "orders")
-        e = orders.select(
-            (F.col("o_custkey") % 100).alias("src"),
-            (F.col("o_orderkey") % 100).alias("dst"),
-        )
+        e = _link_graph(spark, sf, 100)
         return graph.degree_centralization(e)
 
     q["graph_centralization"] = graph_centralization

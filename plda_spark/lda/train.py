@@ -59,6 +59,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lineage import _Lineage
 from . import kernel
 from .corpus import pack_docs
 from .model import LDAModel
@@ -158,35 +159,6 @@ class TrainResult:
     # model-as-DataFrame inference instead of the driver-side `model`
     # (which is still materialized for API parity).
     model_table: DataFrame | None = None
-
-
-class _Lineage:
-    """Lazy local checkpoints of one generation, released together.
-
-    ``cut`` truncates a plan's lineage without running it: the first action
-    that computes the frame also persists its blocks, so ONE job runs the
-    plan, saves its output and returns whatever that action asked for.
-    ``release`` unpersists the RDD behind each checkpoint.
-    ``DataFrame.unpersist()`` would not: a checkpoint is not in the cache
-    manager, so its RDD stays in ``getPersistentRDDs()`` until a JVM GC
-    happens to run the ContextCleaner."""
-
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-
-    def cut(self, df: DataFrame) -> DataFrame:
-        ckpt = df.localCheckpoint(eager=False)
-        self._frames.append(ckpt)
-        return ckpt
-
-    def keep(self, df: DataFrame) -> None:
-        """Exempt ``df`` from :meth:`release`; the caller now owns it."""
-        self._frames = [f for f in self._frames if f is not df]
-
-    def release(self) -> None:
-        for f in self._frames:
-            f._jdf.queryExecution().logical().rdd().unpersist(False)
-        self._frames = []
 
 
 def _fresh_stats(df: DataFrame) -> DataFrame:

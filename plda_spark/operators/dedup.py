@@ -29,6 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..lineage import _Lineage
 from .text import tokens_col
 
 __all__ = [
@@ -722,11 +723,14 @@ def connected_components(
     )
     edges.count()  # materialize from base's cache, then drop the base
     base.unpersist()
-    labels = (
+    # every label generation is a cut; each materialized generation
+    # releases the ones before it, so the result reads the last alone
+    held = _Lineage()
+    labels = held.cut(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
+        .select("node", F.col("node").alias("label")),
+        eager=True,
     )
     for _ in range(max_iterations):
         # (1) min over neighbours' labels
@@ -735,16 +739,14 @@ def connected_components(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("nbr_min"))
         )
-        prop = (
-            labels.join(nbr, "node", "left")
-            .select(
+        prop = held.cut(
+            labels.join(nbr, "node", "left").select(
                 "node",
                 F.col("label").alias("old"),
                 F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias(
                     "label"
                 ),
             )
-            .localCheckpoint(eager=False)
         )
         # (2) pointer jumping: l(v) <- l(l(v))
         parents = prop.select(
@@ -754,14 +756,9 @@ def connected_components(
             prop.join(parents, prop["label"] == parents["p_node"], "left")
             .select("node", "old", F.coalesce("p_label", "label").alias("label"))
         )
-        new_labels = jumped.localCheckpoint(eager=True)
+        new_labels = held.cut(jumped, eager=True)
+        held.release_superseded()
         changed = new_labels.where(F.col("label") != F.col("old")).count()
-        # NOTE: unpersist is a CacheManager call and a no-op for
-        # localCheckpoint blocks; the old generation's blocks are freed
-        # by the ContextCleaner once this reference drops (the same
-        # reference-driven cleanup the training loop relies on).  Label
-        # rows are slim (node, label), so at most a few transient
-        # generations of a |V|-row table ride the block store.
         labels = new_labels.select("node", "label")
         if changed == 0:
             break

@@ -8,16 +8,24 @@ Citation Ranking" (1999), in the classic simplified form the Spark
 examples use: no dangling-mass redistribution, so total rank can be < 1
 when sinks exist (rank ORDER is unaffected).
 
+The operators share private edge builders (``_canonical_edges``,
+``_symmetric_edges``, ``_degrees``, ``_oriented_pairs``) and one round
+loop (``_rounds``) whose superseded cuts are released through
+:class:`plda_spark.lineage._Lineage`; docs/SCALING.md "Graph operators"
+lists who uses which.
+
 No reference parity (the reference is an LDA trainer, plda); this is an
 engine extension (SURVEY.md §2.3).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..lineage import _Lineage
 
 __all__ = [
     "pagerank",
@@ -59,6 +67,24 @@ def pagerank(
     touches the driver.  The loop runs eagerly (the result is a
     materialized localCheckpoint) with lineage cut every 5 iterations.
     """
+    return _pagerank(
+        edges, n_iter, damping, src_col, dst_col,
+        "pagerank: empty edge set (no nodes)",
+    )
+
+
+def _pagerank(
+    edges: DataFrame,
+    n_iter: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    empty_msg: str,
+    restart: Column | None = None,
+) -> DataFrame:
+    """The power iteration behind both PageRank operators.  ``restart``
+    is the per-node restart probability p(v) (None: uniform 1/|V|); it
+    sets the initial ranks and the teleport term of every step."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     if not (0.0 < damping < 1.0):
@@ -69,31 +95,41 @@ def pagerank(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
+    if restart is not None:
+        nodes = nodes.select("node", restart.alias("__p"))
+    setup = _Lineage()
+    nodes = setup.cut(nodes, eager=True)
     # (src, dst, outdeg) — the per-iteration join operand, persisted for
     # the run and released before returning (connected_components
     # discipline: cached once, no per-iteration re-aggregation).
     ew = e.join(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
     ).persist()
-    nodes = nodes.localCheckpoint(eager=True)
-    n = nodes.count()  # scalar |V| only — never the rows
-    if n == 0:
-        ew.unpersist()
-        raise ValueError("pagerank: empty edge set (no nodes)")
-    base = (1.0 - damping) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     try:
-        for i in range(n_iter):
-            ranks = _pagerank_step(nodes, ew, ranks, base, damping)
-            if (i + 1) % 5 == 0 and i + 1 < n_iter:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.localCheckpoint(eager=True)
+        n = nodes.count()  # scalar |V| only — never the rows
+        if n == 0:
+            raise ValueError(empty_msg)
+        if restart is None:
+            teleport, init = F.lit((1.0 - damping) / n), F.lit(1.0 / n)
+        else:
+            teleport, init = F.lit(1.0 - damping) * F.col("__p"), F.col("__p")
+        return _rounds(
+            nodes.select("node", init.alias("rank")),
+            n_iter,
+            5,
+            lambda ranks: _pagerank_step(nodes, ew, ranks, teleport, damping),
+        )
     finally:
         ew.unpersist()
+        setup.release()
 
 
 def _pagerank_step(
-    nodes: DataFrame, ew: DataFrame, ranks: DataFrame, base: float, damping: float
+    nodes: DataFrame,
+    ew: DataFrame,
+    ranks: DataFrame,
+    teleport: Column | float,
+    damping: float,
 ) -> DataFrame:
     """One power-iteration update (separate so plan-shape tests can pin
     the per-iteration plan: equi-join + partial-aggregated sum, never a
@@ -106,10 +142,102 @@ def _pagerank_step(
     )
     return nodes.join(contribs, nodes["node"] == contribs["dst"], "left").select(
         "node",
-        (F.lit(base) + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))).alias(
+        (teleport + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))).alias(
             "rank"
         ),
     )
+
+
+def _rounds(
+    state: DataFrame,
+    n_rounds: int,
+    every: int,
+    step: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Apply ``step`` ``n_rounds`` times, cutting lineage eagerly every
+    ``every`` rounds and after the last one; each cut releases the cut
+    it supersedes.  Returns the last cut, which the caller's result
+    reads."""
+    held = _Lineage()
+    for i in range(n_rounds):
+        state = step(state)
+        if (i + 1) % every == 0 or i + 1 == n_rounds:
+            state = held.cut(state, eager=True)
+            held.release_superseded()
+    return state
+
+
+def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """``(a, b)`` with ``a < b``: each undirected edge once, self-loops
+    and rows with a NULL end dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _symmetric_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """``(a, b)``: each undirected edge in both directions, self-loops
+    dropped, deduplicated."""
+    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+    return (
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(n, d)``: the degree of every node of a canonical edge list."""
+    return (
+        e.select(F.col("a").alias("n"))
+        .unionAll(e.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _oriented_pairs(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The degree-ordered adjacency core of :func:`triangles` and
+    :func:`clustering_coefficients`: ``(deg, pairs)`` where ``deg`` is
+    the ``(n, d)`` degree table and ``pairs`` holds, per oriented edge
+    u→v, both out-neighbor lists ``(u, v, nu, nv)``.
+
+    The canonical edges, the degree table, the oriented edges and the
+    adjacency are LAZILY localCheckpointed: SQL plans are trees, so each
+    self-reference would otherwise duplicate its whole upstream once per
+    branch (deg feeds both orientation sides, adj both intersection
+    sides).  All four are O(m) rows of ids, and laziness keeps operator
+    construction job-free."""
+    e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    deg = _degrees(e).localCheckpoint(eager=False)
+    da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
+    db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
+    ka = F.struct(F.col("da"), F.col("a"))   # (degree, id): a total order
+    kb = F.struct(F.col("db"), F.col("b"))
+    o = (
+        e.join(da, "a")
+        .join(db, "b")
+        .select(
+            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    adj = o.groupBy("u").agg(F.collect_list("v").alias("nbrs")).localCheckpoint(
+        eager=False
+    )
+    au = adj.select("u", F.col("nbrs").alias("nu"))
+    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
+    # Inner joins are exact: u always has an out-list (the edge itself
+    # is in it); an edge whose v has NO out-list closes zero triangles.
+    return deg, o.join(au, "u").join(av, "v")
 
 
 def triangles(
@@ -141,57 +269,13 @@ def triangles(
     rows at the benchmark's 1.2 M-edge co-purchase graph) and benched
     2× slower for identical counts.
 
-    The normalized edge list and the oriented edge list are LAZILY
-    localCheckpointed: SQL plans are trees, so the self-references
-    otherwise duplicate the entire upstream (edge construction +
-    distinct + both degree joins) once per branch.  Both tables are
-    O(m) rows of ids (far smaller than whatever built the edges), the
-    blocks are GC-cleaned with the returned frame's lineage, and
-    laziness keeps operator construction job-free.
+    The normalized edge list, the degree table, the oriented edge list
+    and the adjacency are LAZILY localCheckpointed (see
+    ``_oriented_pairs``); their blocks go with the returned frame's
+    lineage, and laziness keeps operator construction job-free.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n")).unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)  # feeds both orientation sides
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
-    ka = F.struct(F.col("da"), F.col("a"))   # (degree, id): a total order
-    kb = F.struct(F.col("db"), F.col("b"))
-    o = (
-        e.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # adj feeds BOTH intersection sides; the lazy cut stops the grouped
-    # adjacency build from running once per side
-    adj = o.groupBy("u").agg(F.collect_list("v").alias("nbrs")).localCheckpoint(
-        eager=False
-    )
-    au = adj.select("u", F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
-    # Inner joins are exact: u always has an out-list (the edge itself
-    # is in it); an edge whose v has NO out-list closes zero triangles
-    # and contributes nothing to the sum either way.
-    per_edge = (
-        o.join(au, "u")
-        .join(av, "v")
-        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
-    )
+    _, pairs = _oriented_pairs(edges, src_col, dst_col)
+    per_edge = pairs.select(F.size(F.array_intersect("nu", "nv")).alias("c"))
     return per_edge.agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles")
     )
@@ -225,48 +309,13 @@ def personalized_pagerank(
     seeds = list(seeds)
     if not seeds:
         raise ValueError("seeds must be non-empty")
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    if not (0.0 < damping < 1.0):
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
     p = F.when(
         F.col("node").isin(seeds), F.lit(1.0 / len(seeds))
     ).otherwise(F.lit(0.0))
-    nodes = nodes.select("node", p.alias("__p")).localCheckpoint(eager=True)
-    ew = e.join(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
-    ).persist()
-    try:
-        if nodes.count() == 0:
-            raise ValueError("personalized_pagerank: empty edge set")
-        ranks = nodes.select("node", F.col("__p").alias("rank"))
-        for i in range(n_iter):
-            contribs = (
-                ew.join(ranks, ew["src"] == ranks["node"])
-                .select("dst", (F.col("rank") / F.col("outdeg")).alias("__c"))
-                .groupBy("dst")
-                .agg(F.sum("__c").alias("__s"))
-            )
-            ranks = nodes.join(
-                contribs, nodes["node"] == contribs["dst"], "left"
-            ).select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("__p")
-                    + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            if (i + 1) % 5 == 0 and i + 1 < n_iter:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.localCheckpoint(eager=True)
-    finally:
-        ew.unpersist()
+    return _pagerank(
+        edges, n_iter, damping, src_col, dst_col,
+        "personalized_pagerank: empty edge set", restart=p,
+    )
 
 
 def label_propagation(
@@ -292,40 +341,32 @@ def label_propagation(
     the |V|-row label vector + one (node, label) count + one per-node
     top-1 window (WindowGroupLimit — never a global sort).  The edge
     list is persisted across rounds; hub skew shows up in the count
-    aggregation, which map-side combines."""
-    from pyspark.sql import Window
-
+    aggregation, which map-side combines.  Lineage is cut every 5
+    rounds (pagerank discipline); the result is a materialized
+    localCheckpoint, made before the edge cache is released."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    half = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).where(F.col(src_col) != F.col(dst_col))
-    und = half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = und.distinct().persist()
+    und = _symmetric_edges(edges, src_col, dst_col).persist()
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label").asc()
     )
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr = und.join(
+            labels.withColumnRenamed("node", "b"), "b"
+        ).select(F.col("a").alias("node"), "label")
+        cnt = nbr.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
+        return (
+            cnt.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("node", "label")
+        )
+
     try:
-        for i in range(n_iter):
-            nbr = und.join(
-                labels.withColumnRenamed("node", "b"), "b"
-            ).select(F.col("a").alias("node"), "label")
-            cnt = nbr.groupBy("node", "label").agg(
-                F.count(F.lit(1)).alias("c")
-            )
-            labels = (
-                cnt.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .select("node", "label")
-            )
-            # lineage cut every 5 rounds (pagerank discipline)
-            if (i + 1) % 5 == 0 and i + 1 < n_iter:
-                labels = labels.localCheckpoint(eager=True)
-        # materialize before releasing the edge cache
-        return labels.localCheckpoint(eager=True)
+        return _rounds(labels, n_iter, 5, step)
     finally:
         und.unpersist()
 
@@ -363,15 +404,7 @@ def link_prediction(
         raise ValueError(f"max_degree must be >= 2, got {max_degree}")
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
     nbrs = e.select(F.col("a").alias("n"), F.col("b").alias("m")).unionAll(
         e.select(F.col("b").alias("n"), F.col("a").alias("m"))
     )
@@ -583,28 +616,26 @@ def kcore(
     one |surviving-nodes|-row degree aggregation + two semi-joins
     trimming the edge frame — all equi-joins on the node key, nothing
     driver-side, lineage cut with an eager localCheckpoint every 3
-    rounds (the iterative-trim frames shrink monotonically, so late
-    rounds are cheap)."""
+    rounds and after the last (the iterative-trim frames shrink
+    monotonically, so late rounds are cheap)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    und = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur = und
-    for r in range(n_rounds):
+    setup = _Lineage()
+    und = setup.cut(_symmetric_edges(edges, src_col, dst_col), eager=True)
+
+    def peel(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("a")
-        cur = cur.join(keep, "a").join(
+        return cur.join(keep, "a").join(
             keep.select(F.col("a").alias("b")), "b"
         ).select("a", "b")
-        if (r + 1) % 3 == 0 and r + 1 < n_rounds:
-            cur = cur.localCheckpoint(eager=True)
+
+    try:
+        cur = _rounds(und, n_rounds, 3, peel)
+    finally:
+        setup.release()
     return (
         cur.groupBy("a")
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -639,12 +670,7 @@ def degree_powerlaw(
     past the degree groupBy."""
     if dmin < 1:
         raise ValueError(f"dmin must be >= 1, got {dmin}")
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    und = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _symmetric_edges(edges, src_col, dst_col)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     agg = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -700,15 +726,7 @@ def modularity(
     |V| is small), one per-label aggregation each for intra-edge
     counts and degree mass, then scalar arithmetic over the
     |labels|-row frame crossed with the 1-row total."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
     lab = communities.select(
         F.col(node_col).alias("n"), F.col(label_col).alias("l")
     )
@@ -720,14 +738,8 @@ def modularity(
         .groupBy(F.col("la").alias("l"))
         .agg(F.count(F.lit(1)).alias("ec"))
     )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     degc = (
-        deg.join(lab, "n").groupBy("l").agg(F.sum("d").alias("degc"))
+        _degrees(e).join(lab, "n").groupBy("l").agg(F.sum("d").alias("degc"))
     )
     tot = e.agg(F.count(F.lit(1)).alias("m"))
     per = degc.join(intra, "l", "left").select(
@@ -781,21 +793,8 @@ def assortativity(
     frame; correlation is scale-invariant so the sample-vs-population
     estimator choice cancels in the ratio.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    deg = _degrees(e)
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     ends = e.join(da, "a").join(db, "b")
@@ -848,51 +847,12 @@ def clustering_coefficients(
     does, never the 6× wedge materialization.  Then one union of the
     three corner projections, one per-node count, one node-keyed join
     back to degrees, one scalar aggregation."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)  # feeds da, db AND the final per-node join
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
-    ka = F.struct(F.col("da"), F.col("a"))
-    kb = F.struct(F.col("db"), F.col("b"))
-    o = (
-        e.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # lazy cuts: adj feeds both intersection sides, tri feeds the three
-    # corner projections — without them each consumer re-derives the
-    # grouped adjacency / the full triangle enumeration
-    adj = o.groupBy("u").agg(F.collect_list("v").alias("nbrs")).localCheckpoint(
-        eager=False
-    )
-    au = adj.select("u", F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv"))
-    tri = (
-        o.join(au, "u")
-        .join(av, "v")
-        .select(
-            "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
-        )
-        .localCheckpoint(eager=False)
-    )
+    deg, pairs = _oriented_pairs(edges, src_col, dst_col)
+    # lazy cut: tri feeds the three corner projections — without it each
+    # consumer re-derives the full triangle enumeration
+    tri = pairs.select(
+        "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w")
+    ).localCheckpoint(eager=False)
     corners = (
         tri.select(F.col("u").alias("n"))
         .unionAll(tri.select(F.col("v").alias("n")))
@@ -990,43 +950,47 @@ def bfs_distances(
     round is ONE equi-join of the current frontier with the edge
     list + one anti-join against the reached set — the frontier
     SHRINKS to new nodes only, so round r costs O(edges touching the
-    r-th shell), never O(|V|·r).  The seed set is takedown-sized and
-    rides the plan as literals (the personalized_pagerank contract).
-    The fixed ``max_hops`` is what makes the output engine-replayable:
-    the DuckDB oracle unrolls the identical shells as chained CTEs."""
+    r-th shell), never O(|V|·r).  Each frontier is an eager cut; the
+    reached set is cut every 3 rounds and after the last, and each
+    reached cut releases the frontiers it absorbed (the next frontier
+    is read back from it).  The result is a materialized
+    localCheckpoint.  The seed set is takedown-sized and rides the
+    plan as literals (the personalized_pagerank contract).  The fixed
+    ``max_hops`` is what makes the output engine-replayable: the
+    DuckDB oracle unrolls the identical shells as chained CTEs."""
     seeds = list(seeds)
     if not seeds:
         raise ValueError("seeds must be non-empty")
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    und = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    setup, held = _Lineage(), _Lineage()
+    und = setup.cut(_symmetric_edges(edges, src_col, dst_col), eager=True)
     spark = edges.sparkSession
     id_type = edges.schema[src_col].dataType.simpleString()
     frontier = spark.createDataFrame(
         [(s,) for s in seeds], f"node {id_type}"
     ).distinct()
     reached = frontier.select("node", F.lit(0).alias("dist"))
-    for r in range(1, max_hops + 1):
-        nbrs = (
-            und.join(frontier.withColumnRenamed("node", "a"), "a")
-            .select(F.col("b").alias("node"))
-            .distinct()
-        )
-        frontier = nbrs.join(
-            reached.select("node"), "node", "left_anti"
-        ).localCheckpoint(eager=True)
-        reached = reached.unionAll(
-            frontier.select("node", F.lit(r).alias("dist"))
-        )
-        if (r % 3 == 0) and r < max_hops:
-            reached = reached.localCheckpoint(eager=True)
-    return reached.localCheckpoint(eager=True)
+    try:
+        for r in range(1, max_hops + 1):
+            nbrs = (
+                und.join(frontier.withColumnRenamed("node", "a"), "a")
+                .select(F.col("b").alias("node"))
+                .distinct()
+            )
+            frontier = held.cut(
+                nbrs.join(reached.select("node"), "node", "left_anti"), eager=True
+            )
+            reached = reached.unionAll(
+                frontier.select("node", F.lit(r).alias("dist"))
+            )
+            if r % 3 == 0 or r == max_hops:
+                reached = held.cut(reached, eager=True)
+                held.release_superseded()
+                frontier = reached.where(F.col("dist") == r).select("node")
+    finally:
+        setup.release()
+    return reached if max_hops else held.cut(reached, eager=True)
 
 
 def degree_centralization(
@@ -1053,12 +1017,7 @@ def degree_centralization(
     distinct per branch), one |nodes|-row rollup; the edge count
     falls out of the handshake identity Σd = 2m, so nothing is
     scanned twice."""
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.where(a.isNotNull() & b.isNotNull() & (a != b))
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-    )
+    e = _canonical_edges(edges, src_col, dst_col)
     stubs = e.select(
         F.explode(F.array(F.col("a"), F.col("b"))).alias("node")
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from plda_spark.lineage import _Lineage
+
 __all__ = [
     "hash_bucket",
     "hash_mod_sample",
@@ -514,11 +516,8 @@ def neyman_sample(
     )
 
 
-# Hard ceiling on k*dim literal center coordinates per greedy pass —
-# past this, Catalyst analysis of the single min-over-centers
-# expression dominates the job (measured: dim 512 at k≈40+ is the
-# worst-case planning budget the docstring's k≈100 guidance assumed
-# for small dims).
+# Hard ceiling on k*dim: the center coordinates one greedy run plans as
+# literals (k passes, dim each) and holds on the driver.
 _KCENTER_MAX_LITERALS = 20_000
 
 
@@ -545,16 +544,26 @@ def kcenter_select(
     precision left-fold so an external replayer lands on identical
     bits.
 
-    Scale shape: k-1 passes, each ONE distributed map (per-row min
-    over the ≤k broadcast-literal centers, pure JVM array math) + ONE
-    top-1 TakeOrdered — no shuffle at all.  Driver state is k·dim
-    floats.  k passes over 100 TB is the honest cost of exact greedy
-    k-center; for k beyond ~100, seed this with a cheaper stage (IVF
-    cells, hash sample) and run it on the survivors.  The centers ride
-    the plan as LITERALS (that is what buys bit-exact SQL replay), so
-    the expression tree grows k·dim nodes per pass — the cap below
-    makes the documented cutover self-enforcing instead of a docstring
-    footnote."""
+    Scale shape: k-1 passes, each ONE distributed map + ONE top-1
+    TakeOrdered — no shuffle.  A pass folds the distance to the ONE
+    newest center into a running per-row minimum (``least(running,
+    d_new)``): O(n·dim) work and dim literal coordinates per pass, so
+    Catalyst analysis stays flat across passes.  The centers ride the
+    plan as LITERALS (that is what buys bit-exact SQL replay).  The
+    running ``(id, vec, dist)`` rows are one LAZY localCheckpoint per
+    pass, written by that pass's own TakeOrdered job; once the job has
+    run, the previous pass's checkpoint is released.  So at most two
+    copies of the input sit in executor storage at a time, and none
+    once this returns: the result is built on the driver from the
+    selected rows.  Driver state is k·dim floats.
+
+    ``k·dim`` is capped at 20,000, deliberately: it bounds the literal
+    coordinates planned over the whole run and the driver-held centers,
+    and at a given dim it bounds k, the number of full passes over the
+    input.  k passes
+    over 100 TB is the honest cost of exact greedy k-center; for k
+    beyond ~100, seed this with a cheaper stage (IVF cells, hash sample)
+    and run it on the survivors."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     seed = (
@@ -566,33 +575,22 @@ def kcenter_select(
     if k * dim > _KCENTER_MAX_LITERALS:
         raise ValueError(
             f"kcenter_select: k*dim = {k}*{dim} = {k * dim} literal "
-            f"center coordinates > {_KCENTER_MAX_LITERALS}; the final "
-            "pass would carry that many literals in ONE expression "
-            "tree (Catalyst analysis cost grows superlinearly). Seed "
-            "with a cheaper diversity stage (IVF cells via "
+            f"center coordinates > {_KCENTER_MAX_LITERALS}; the run "
+            "makes k full passes over the input and plans dim literals "
+            "in each, so k*dim bounds its planning and scan budget. "
+            "Seed with a cheaper diversity stage (IVF cells via "
             "similarity.ivf_assign, or sample_hash) and run exact "
             "greedy k-center on the survivors."
         )
     selected: list[tuple] = [(0, seed[0], None)]
     centers: list[list[float]] = [[float(v) for v in seed[1]]]
-    # Incremental min-distance column (round 12): pass s only folds the
-    # distance to the ONE newly selected center and takes
-    # ``least(running_min, d_new)`` — O(n·dim) per pass instead of
-    # O(n·s·dim), and the expression tree carries dim literals per pass
-    # instead of s·dim (Catalyst analysis stays flat across passes).
-    # ``min`` over doubles is exact (no rounding), and each per-center
-    # fold is the SAME IEEE sequence as before, so the running min is
-    # bit-identical to the old ``array_min`` over all centers — same
-    # selections, same dist_sq curve (parity pinned in tests).  The
-    # running column rides a LAZY localCheckpoint whose materialization
-    # piggybacks the pass's own TakeOrdered job (an eager per-pass
-    # write was measured a wash in round 11; the lazy form adds no
-    # job), and each pass releases the previous pass's blocks.
+    # ``min`` over doubles is exact (no rounding) and each per-center
+    # fold is one fixed IEEE sequence, so the running min equals the min
+    # over all centers bit for bit (parity pinned in tests).
     cur = embeddings.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
     )
-    prev_ckpt = None
-    mind_col = None
+    held = _Lineage()
     for step in range(1, k):
         c_lit = F.array(*[F.lit(v) for v in centers[-1]])
         # left-fold sum of squared per-dim deltas to the NEW center
@@ -608,15 +606,10 @@ def kcenter_select(
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-        mind_col = d_new if mind_col is None else F.least(F.col("__dsq"), d_new)
-        cur = cur.select(
-            "__id", "__vec", mind_col.alias("__dsq")
-        ).localCheckpoint(eager=False)
-        mind_col = F.col("__dsq")
+        dsq = d_new if step == 1 else F.least(F.col("__dsq"), d_new)
+        cur = held.cut(cur.select("__id", "__vec", dsq.alias("__dsq")))
         far = cur.orderBy(F.col("__dsq").desc(), F.col("__id").asc()).first()
-        if prev_ckpt is not None:
-            prev_ckpt.unpersist()
-        prev_ckpt = cur
+        held.release_superseded()
         if far["__dsq"] <= 0.0:
             # every remaining point coincides with a center (k exceeds
             # the number of DISTINCT vectors): the space is fully
@@ -626,8 +619,7 @@ def kcenter_select(
             break
         selected.append((step, far["__id"], float(far["__dsq"])))
         centers.append([float(v) for v in far["__vec"]])
-    if prev_ckpt is not None:
-        prev_ckpt.unpersist()
+    held.release()
     spark = embeddings.sparkSession
     # derive the id field's type from the INPUT schema — embeddings are
     # commonly keyed by string doc/url ids, not just longs

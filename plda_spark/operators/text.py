@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from plda_spark.lda.corpus import MIN_TOKEN_LEN, TOKEN_RE
+from plda_spark.lineage import _Lineage
 
 __all__ = [
     "tokens_col",
@@ -1837,17 +1838,20 @@ def textrank_sentences(
     und = ov.where(den > 0).select(
         "doc_id", "i", "j", (F.col("__ov") / den).alias("wt")
     )
-    edges = (
+    held = _Lineage()
+    edges = held.cut(
         und.select("doc_id", F.col("i").alias("src"), F.col("j").alias("dst"), "wt")
         .unionByName(
             und.select(
                 "doc_id", F.col("j").alias("src"), F.col("i").alias("dst"), "wt"
             )
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     outw = edges.groupBy("doc_id", "src").agg(F.sum("wt").alias("__out"))
-    ew = edges.join(outw, ["doc_id", "src"]).localCheckpoint(eager=True)
+    # ew supersedes edges: once it has materialized, nothing reads edges
+    ew = held.cut(edges.join(outw, ["doc_id", "src"]), eager=True)
+    held.release_superseded()
     base = 1.0 - damping
     spine = nodes.select("doc_id", F.col("sent_idx").alias("node"))
     scores = spine.withColumn("score", F.lit(1.0))

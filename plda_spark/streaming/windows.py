@@ -445,6 +445,8 @@ def run_stream_available_now(
     """
     import time
 
+    if timeout_s <= 0:
+        raise ValueError(f"timeout_s must be positive, got {timeout_s}")
     q = (
         df.writeStream.format("parquet")
         .option("path", out_path)
@@ -473,7 +475,7 @@ def run_stream_available_now(
         q.awaitTermination(1)
     if q.isActive:
         q.stop()
-    q.awaitTermination(int(timeout_s))
+    q.awaitTermination(timeout_s)
 
 
 def sessionize(events: DataFrame) -> DataFrame:

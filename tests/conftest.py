@@ -28,18 +28,17 @@ def pytest_configure(config):
 # the CLI round trip) are deliberately NOT listed: they pin the exchange
 # parity, resume and release behaviour and must run in the default gate.
 # Nor are the streaming-ledger writer tests, which pin the exactly-once
-# and one-row-per-batch contracts of the shared ledger driver.
+# and one-row-per-batch contracts of the shared ledger driver, or the
+# graph, connected-components and k-center semantics tests, which pin
+# the shared graph builders, round loop and lineage release.
 SLOW_TESTS = {
     "test_as_of_join_matches_pandas_merge_asof",
     "test_association_rules_semantics",
-    "test_assortativity_clustering_reciprocity_semantics",
-    "test_bfs_and_dataset_card_semantics",
     "test_bootstrap_ci_properties",
     "test_bpe_train_matches_reference",
     "test_byte_bpe_matches_reference",
     "test_chi2_and_winsorize_semantics",
     "test_cms_upper_bound_and_mergeability",
-    "test_connected_components",
     "test_curriculum_order_semantics",
     "test_domain_filter_block_allow_partition",
     "test_dp_quantile_and_pareto_semantics",
@@ -57,14 +56,9 @@ SLOW_TESTS = {
     "test_ivf_pq_append_equals_build_on_union",
     "test_ivf_pq_delete_equals_build_on_remainder",
     "test_ivf_pq_index_persist_prune_and_exactness",
-    "test_kcenter_literal_budget_cap",
-    "test_kcore_semantics",
     "test_kmeans_fit_exact_wcss_partition_invariant",
     "test_kmeans_recovers_separated_clusters",
-    "test_knn_and_modularity_semantics",
     "test_kpss_level_semantics",
-    "test_label_propagation_semantics",
-    "test_link_prediction_semantics",
     "test_ljung_box_and_retention_fit_semantics",
     "test_logreg2_and_kendall_semantics",
     "test_logreg_quality_pipeline",
@@ -78,8 +72,6 @@ SLOW_TESTS = {
     "test_normalize_and_pca_project",
     "test_ols2_and_pca2_semantics",
     "test_operators_handle_empty_input",
-    "test_pagerank_matches_numpy_power_iteration",
-    "test_pagerank_random_graphs_match_numpy",
     "test_privacy_semantics",
     "test_pure_append_chain_maintains_index",
     "test_review_fixes_round6",

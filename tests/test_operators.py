@@ -638,6 +638,56 @@ def test_connected_components(spark):
     assert dist == comp
 
 
+@pytest.mark.parametrize("case, most", [
+    ("pagerank", 1),
+    ("personalized_pagerank", 1),
+    ("label_propagation", 1),
+    ("kcore", 1),
+    ("bfs_distances", 1),
+    ("connected_components", 1),
+    ("kcenter_select", 0),
+])
+def test_iterative_operators_release_superseded_cuts(spark, case, most):
+    """An iterative operator releases every lineage cut its result no
+    longer reads: after ``out.collect()`` at most the returned frame's
+    own checkpoint (``most``) is still persisted.  Checked without
+    forcing a GC, so a release that only drops the Python handle would
+    fail.  Ids, not counts: a GC during the call may clean up RDDs that
+    earlier tests left behind."""
+    from plda_spark.operators import graph, sampling
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6),
+         (6, 7), (7, 8), (9, 10)],
+        "src long, dst long",
+    )
+    calls = {
+        "pagerank": lambda: graph.pagerank(e, n_iter=12),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            e, [0, 3], n_iter=12),
+        "label_propagation": lambda: graph.label_propagation(e, n_iter=7),
+        "kcore": lambda: graph.kcore(e, k=2, n_rounds=8),
+        "bfs_distances": lambda: graph.bfs_distances(e, [0], max_hops=4),
+        "connected_components": lambda: dedup.connected_components(
+            e, "src", "dst", driver_max_edges=0),
+        "kcenter_select": lambda: sampling.kcenter_select(
+            spark.createDataFrame(
+                [(i, [float(i % 5), float(i // 5)]) for i in range(20)],
+                "vec_id long, embedding array<double>",
+            ),
+            k=4,
+        ),
+    }
+    before = persisted()
+    calls[case]().collect()
+    assert len(persisted() - before) <= most, case
+
+
 def test_chunk_documents(spark):
     from plda_spark.operators.sampling import chunk_documents
 

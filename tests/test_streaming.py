@@ -1258,6 +1258,29 @@ def test_timed_out_ledger_writer_stops_its_query(spark, tmp_path, writer):
     assert spark.streams.active == []
 
 
+def test_run_stream_available_now_takes_subsecond_timeout(spark, tmp_path):
+    """A timeout below one second is honoured, not truncated to 0
+    seconds after the query was stopped; a non-positive one is refused
+    before any query starts."""
+    in_dir = str(tmp_path / "in")
+    schema = "doc_id long, text string"
+    for i in range(6):
+        spark.createDataFrame(
+            [(i, f"document {i}")], schema
+        ).write.mode("append").parquet(in_dir)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    windows.run_stream_available_now(stream, out, ckpt, timeout_s=0.5)
+    assert spark.streams.active == []
+    with pytest.raises(ValueError, match="timeout_s"):
+        windows.run_stream_available_now(stream, out, ckpt, timeout_s=0)
+    assert spark.streams.active == []
+
+
 def test_page_hinkley_from_ledger_matches_batch(spark, tmp_path):
     """The streaming PH verdict folded from the daily-moments ledger
     equals the batch page_hinkley over the same events — integer
