@@ -34,33 +34,38 @@ __all__ = [
 _OUT_SCHEMA = "doc_id long, topic_weights array<double>"
 
 
-def _infer_fn(bc_nwk, bc_nk, alpha: float, beta: float,
-              total_iterations: int, burn_in_iterations: int, seed: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rng = kernel.make_rng(seed, pid, 0)
-        nwk = bc_nwk.value
-        nk = bc_nk.value
-        K = nk.shape[0]
-        n_avg = total_iterations - burn_in_iterations
-        for pdf in batches:
-            out = []
-            for occ in pdf["word_occ"]:
-                occ = np.asarray(occ, dtype=np.int32)
-                z = kernel.init_assignments(len(occ), K, rng)
-                offsets = np.array([0, len(occ)], dtype=np.int64)
-                acc = np.zeros(K, dtype=np.float64)
-                for it in range(total_iterations):
-                    kernel.sweep_docs(
-                        occ, z, offsets, nwk, nk, alpha, beta, rng,
-                        update_model=False,
-                    )
-                    if it >= burn_in_iterations:
-                        acc += np.bincount(z, minlength=K)
-                out.append(acc / n_avg)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "topic_weights": out})
+def _check_iterations(total_iterations: int, burn_in_iterations: int) -> None:
+    if not (0 <= burn_in_iterations < total_iterations):
+        raise ValueError("need 0 <= burn_in_iterations < total_iterations")
 
-    return fn
+
+def _csr(occs) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc occurrence arrays → flat int32 ``word_occ`` and doc offsets."""
+    lens = np.fromiter(map(len, occs), dtype=np.int64, count=len(occs))
+    word_occ = np.concatenate([np.empty(0, np.int32), *occs]).astype(np.int32, copy=False)
+    return word_occ, np.concatenate([[0], np.cumsum(lens)])
+
+
+def _infer(frame: DataFrame, to_batch, nk: np.ndarray, alpha: float, beta: float,
+           total_iterations: int, burn_in_iterations: int, seed: int,
+           vocab_size: int | None = None) -> DataFrame:
+    """The one inference core behind every front end: one ``(seed, pid, 0)``
+    RNG per partition and one :func:`kernel.infer_docs` call per Arrow
+    batch, so θ depends only on the pid and the doc order within it.
+    ``to_batch(pdf) -> (word_occ, doc_offsets, nwk)`` is the front end's
+    part: the batch's docs in CSR form and the model rows they index."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rng = kernel.make_rng(seed, TaskContext.get().partitionId(), 0)
+        for pdf in batches:
+            word_occ, offsets, nwk = to_batch(pdf)
+            theta = kernel.infer_docs(
+                word_occ, offsets, nwk, nk, alpha, beta, rng,
+                total_iterations, burn_in_iterations, vocab_size,
+            )
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "topic_weights": list(theta)})
+
+    return frame.mapInPandas(fn, schema=_OUT_SCHEMA)
 
 
 def transform(
@@ -75,10 +80,11 @@ def transform(
 
     ``topic_weights`` are the unnormalized averaged θ_d numerators, the
     same quantity ``infer.cc:94-98`` writes.  OOV words are silently
-    dropped (``infer.cc:77-80``) by the inner vocab join.
+    dropped (``infer.cc:77-80``) by the inner vocab join, so a doc with no
+    in-vocab word is omitted from the output (and from the CLI's file),
+    where ``infer.cc`` writes a line for it.
     """
-    if not (0 <= burn_in_iterations < total_iterations):
-        raise ValueError("need 0 <= burn_in_iterations < total_iterations")
+    _check_iterations(total_iterations, burn_in_iterations)
     spark = corpus.sparkSession
     sc = spark.sparkContext
     if num_partitions:
@@ -96,14 +102,12 @@ def transform(
     packed = pack_docs(corpus_ids, P)
 
     bc_nwk = sc.broadcast(model.nwk.astype(np.float64))
-    bc_nk = sc.broadcast(model.nk.astype(np.float64))
-    return packed.mapInPandas(
-        _infer_fn(
-            bc_nwk, bc_nk, model.alpha, model.beta,
-            total_iterations, burn_in_iterations, seed,
-        ),
-        schema=_OUT_SCHEMA,
-    )
+
+    def to_batch(pdf: pd.DataFrame):
+        return (*_csr(pdf["word_occ"]), bc_nwk.value)
+
+    return _infer(packed, to_batch, model.nk.astype(np.float64), model.alpha,
+                  model.beta, total_iterations, burn_in_iterations, seed)
 
 
 def transform_stream(
@@ -131,8 +135,7 @@ def transform_stream(
     in-vocab words emit all-zero weights (reference behavior: an
     all-OOV doc still writes a line).
     """
-    if not (0 <= burn_in_iterations < total_iterations):
-        raise ValueError("need 0 <= burn_in_iterations < total_iterations")
+    _check_iterations(total_iterations, burn_in_iterations)
     from .corpus import MIN_TOKEN_LEN, TOKEN_RE
 
     sc = docs.sparkSession.sparkContext
@@ -144,71 +147,22 @@ def transform_stream(
 
     bc_vocab = sc.broadcast({w: i for i, w in enumerate(model.words)})
     bc_nwk = sc.broadcast(model.nwk.astype(np.float64))
-    bc_nk = sc.broadcast(model.nk.astype(np.float64))
-    inner = _infer_fn(
-        bc_nwk, bc_nk, model.alpha, model.beta,
-        total_iterations, burn_in_iterations, seed,
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def to_batch(pdf: pd.DataFrame):
         vocab = bc_vocab.value
+        occs = [
+            np.sort(np.fromiter((vocab[w] for w in ws if w in vocab), dtype=np.int32))
+            # NULL text tokenizes to a NULL array (None here) — treat as an
+            # empty doc, matching the batch twin's explode semantics,
+            # instead of crashing the streaming query.
+            if ws is not None
+            else np.empty(0, dtype=np.int32)
+            for ws in pdf["toks"]
+        ]
+        return (*_csr(occs), bc_nwk.value)
 
-        def remap(batch: pd.DataFrame) -> pd.DataFrame:
-            occs = [
-                np.sort(
-                    np.fromiter(
-                        (vocab[w] for w in ws if w in vocab), dtype=np.int32
-                    )
-                )
-                # NULL text tokenizes to a NULL array (None here) — treat
-                # as an empty doc, matching the batch twin's explode
-                # semantics, instead of crashing the streaming query.
-                if ws is not None
-                else np.empty(0, dtype=np.int32)
-                for ws in batch["toks"]
-            ]
-            return pd.DataFrame({"doc_id": batch["doc_id"], "word_occ": occs})
-
-        yield from inner(remap(b) for b in batches)
-
-    return staged.mapInPandas(fn, schema=_OUT_SCHEMA)
-
-
-def _infer_submodel_fn(nk: np.ndarray, alpha: float, beta: float, vocab_size: int,
-                       total_iterations: int, burn_in_iterations: int, seed: int):
-    """Per-doc inference against a doc-local sub-model (model-as-DataFrame
-    path): each input row carries the doc's occurrence list *in local word
-    indices* plus the matching rows of the model (one counts-array per
-    distinct word).  Only the tiny global n_k is shared."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        rng = kernel.make_rng(seed, pid, 0)
-        K = nk.shape[0]
-        n_avg = total_iterations - burn_in_iterations
-        for pdf in batches:
-            out = []
-            for occ_local, rows in zip(pdf["occ_local"], pdf["sub_counts"]):
-                occ = np.asarray(occ_local, dtype=np.int32)
-                sub_nwk = np.asarray([np.asarray(r) for r in rows], dtype=np.float64)
-                z = kernel.init_assignments(len(occ), K, rng)
-                offsets = np.array([0, len(occ)], dtype=np.int64)
-                acc = np.zeros(K, dtype=np.float64)
-                for it in range(total_iterations):
-                    # sub_nwk rows are this doc's words; the conditional
-                    # only ever reads rows for words in the doc, and the
-                    # frozen-model denominator uses the true global n_k —
-                    # identical math to the broadcast path (sampler.cc:99).
-                    kernel.sweep_docs(
-                        occ, z, offsets, sub_nwk, nk, alpha, beta, rng,
-                        update_model=False, vocab_size=vocab_size,
-                    )
-                    if it >= burn_in_iterations:
-                        acc += np.bincount(z, minlength=K)
-                out.append(acc / n_avg)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "topic_weights": out})
-
-    return fn
+    return _infer(staged, to_batch, model.nk.astype(np.float64), model.alpha,
+                  model.beta, total_iterations, burn_in_iterations, seed)
 
 
 def transform_model_df(
@@ -237,10 +191,12 @@ def transform_model_df(
     SMJ at scale — no broadcast of the model anywhere), groupBy doc
     assembling the doc's sub-model, then embarrassingly-parallel per-doc
     Gibbs exactly like the broadcast path but against doc-local rows.
-    Each doc ships only the model rows for its own distinct words.
+    Each doc ships only the model rows for its own distinct words; a
+    batch's sub-models are stacked into one, each doc's local indices
+    shifted by its first row.  Like :func:`transform`, a doc with no
+    in-vocab word is omitted.
     """
-    if not (0 <= burn_in_iterations < total_iterations):
-        raise ValueError("need 0 <= burn_in_iterations < total_iterations")
+    _check_iterations(total_iterations, burn_in_iterations)
     vocab_size = model_df.count()
 
     joined = corpus.join(model_df, "word_id").select(
@@ -265,13 +221,20 @@ def transform_model_df(
         )
         .where(F.size("occ_local") > 0)
     )
-    return packed.mapInPandas(
-        _infer_submodel_fn(
-            nk.astype(np.float64), alpha, beta, vocab_size,
-            total_iterations, burn_in_iterations, seed,
-        ),
-        schema=_OUT_SCHEMA,
-    )
+    # The sweep only reads the rows of a doc's own words, and the frozen
+    # denominator takes the true V and global n_k — the broadcast path's
+    # math on the stacked rows (sampler.cc:99).
+    def to_batch(pdf: pd.DataFrame):
+        subs = pdf["sub_counts"]
+        bases = np.cumsum([0, *map(len, subs)])
+        rows = [r for sub in subs for r in sub]
+        return (
+            *_csr([o + b for o, b in zip(pdf["occ_local"], bases)]),
+            np.array(rows, dtype=np.float64),
+        )
+
+    return _infer(packed, to_batch, nk.astype(np.float64), alpha, beta,
+                  total_iterations, burn_in_iterations, seed, vocab_size)
 
 
 def write_inference_result(result: DataFrame, path: str, single_file: bool = False) -> None:

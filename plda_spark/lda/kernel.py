@@ -28,6 +28,14 @@ are reproducible for a fixed (seed, partitioning, iteration) triple.
 Documents are passed in CSR-ish flat form: ``word_occ`` holds one word id
 per *occurrence* (mirroring the reference's ``wordtopics_`` layout,
 ``common.h:169-180``), ``doc_offsets`` delimits documents.
+
+One sweep serves everything: :func:`sweep_docs` draws one uniform per
+occurrence and hands them to the C-or-numpy dispatch; training sweeps
+with ``update_model=True``.  :func:`infer_docs` is the whole of batch
+inference: per doc, in order, the z-init and all of its uniforms, then
+one frozen-model sweep per iteration over the batch.
+:func:`doc_log_likelihoods` is the per-doc likelihood loop the trainer
+and :func:`corpus_log_likelihood` share.
 """
 
 from __future__ import annotations
@@ -43,9 +51,14 @@ __all__ = [
     "topic_conditional",
     "inverse_cdf_sample",
     "sweep_docs",
+    "infer_docs",
     "doc_log_likelihood",
+    "doc_log_likelihoods",
     "corpus_log_likelihood",
 ]
+
+# Most uniforms :func:`infer_docs` holds at once (16 MB of float64).
+_MAX_UNIFORMS = 1 << 21
 
 
 def make_rng(seed: int, partition_id: int = 0, iteration: int = 0) -> np.random.Generator:
@@ -131,53 +144,92 @@ def sweep_docs(
     with *no* adjustment (inference semantics, sampler.cc:99) while the
     per-doc histogram still tracks reassignments (document.cc:58-67).
     """
+    # Draw all uniforms for the sweep up front (cheaper than per-occurrence).
+    _sweep(word_occ, z, doc_offsets, nwk, nk, alpha, beta,
+           rng.random(word_occ.shape[0]), update_model, vocab_size)
+
+
+def _sweep(word_occ: np.ndarray, z: np.ndarray, doc_offsets: np.ndarray, nwk: np.ndarray,
+           nk: np.ndarray, alpha: float, beta: float, uniforms: np.ndarray,
+           update_model: bool, vocab_size: int | None) -> None:
+    """The sweep of :func:`sweep_docs` on pre-drawn ``uniforms`` (one per
+    occurrence): the compiled C loop when it exists, else the numpy loop."""
     num_topics = nk.shape[0]
     if vocab_size is None:
         vocab_size = nwk.shape[0]
     vbeta = vocab_size * beta
-    n_docs = doc_offsets.shape[0] - 1
-    # Draw all uniforms for the sweep up front (cheaper than per-occurrence).
-    uniforms = rng.random(word_occ.shape[0])
 
     # Hot path: the compiled C sweep (same algorithm, same uniforms, same
     # double-precision evaluation order — bit-identical to the loop below;
     # see _ckernel.py).  Falls through to numpy when no compiler exists.
     csweep = _ckernel.get_sweep_fn()
     if csweep is not None and nwk.dtype == nk.dtype and nwk.dtype in (np.int64, np.float64):
-        csweep(
-            word_occ, z, doc_offsets, nwk, nk, alpha, beta, uniforms,
-            update_model, vocab_size,
-        )
+        csweep(word_occ, z, doc_offsets, nwk, nk, alpha, beta, uniforms, update_model, vocab_size)
         return
-    for d in range(n_docs):
+    for d in range(doc_offsets.shape[0] - 1):
         s = doc_offsets[d]
         e = doc_offsets[d + 1]
         ndk = np.bincount(z[s:e], minlength=num_topics).astype(np.float64)
         for i in range(s, e):
-            w = word_occ[i]
             old = z[i]
-            row = nwk[w]
+            row = nwk[word_occ[i]]
             if update_model:
                 row[old] -= 1
                 nk[old] -= 1
                 ndk[old] -= 1.0
-                p = (row + beta) * (ndk + alpha) / (nk + vbeta)
-                c = np.cumsum(p)
-                new = int(np.searchsorted(c, uniforms[i] * c[-1], side="left"))
-                if new >= num_topics:
-                    new = num_topics - 1
+            p = (row + beta) * (ndk + alpha) / (nk + vbeta)
+            c = np.cumsum(p)
+            new = min(int(np.searchsorted(c, uniforms[i] * c[-1], side="left")), num_topics - 1)
+            if update_model:
                 row[new] += 1
                 nk[new] += 1
-                ndk[new] += 1.0
             else:
-                p = (row + beta) * (ndk + alpha) / (nk + vbeta)
-                c = np.cumsum(p)
-                new = int(np.searchsorted(c, uniforms[i] * c[-1], side="left"))
-                if new >= num_topics:
-                    new = num_topics - 1
                 ndk[old] -= 1.0
-                ndk[new] += 1.0
+            ndk[new] += 1.0
             z[i] = new
+
+
+def infer_docs(word_occ: np.ndarray, doc_offsets: np.ndarray, nwk: np.ndarray, nk: np.ndarray,
+               alpha: float, beta: float, rng: np.random.Generator, total_iterations: int,
+               burn_in_iterations: int, vocab_size: int | None = None) -> np.ndarray:
+    """Averaged topic histograms of unseen docs under a frozen model
+    (``infer.cc:37-101``) → ``(n_docs, K)`` float64.
+
+    Each doc draws its z-init and then its ``(T, n_d)`` uniforms from
+    ``rng``, in doc order — the stream a per-doc loop of ``init_assignments``
+    plus T ``sweep_docs(update_model=False)`` calls consumes.  The model is
+    frozen, so docs are independent and one sweep per iteration over the
+    whole batch gives the same bits.  Row d is the doc's topic histogram
+    summed over the iterations after burn-in, divided by their number.
+    The batch is walked in consecutive doc slices holding at most
+    ``_MAX_UNIFORMS`` uniforms (a doc above that runs alone); the draws
+    stay in doc order, so the result does not depend on the slicing.
+    ``vocab_size`` is the true V when ``nwk`` is a stacked sub-model."""
+    num_topics = nk.shape[0]
+    n_docs = doc_offsets.shape[0] - 1
+    theta = np.zeros((n_docs, num_topics), dtype=np.float64)
+    max_tokens = _MAX_UNIFORMS // total_iterations
+    start = 0
+    while start < n_docs:
+        end = int(np.searchsorted(doc_offsets, doc_offsets[start] + max_tokens, side="right")) - 1
+        end = max(end, start + 1)
+        base = doc_offsets[start]
+        offsets = doc_offsets[start:end + 1] - base
+        occ = word_occ[base:doc_offsets[end]]
+        z = np.empty(occ.shape[0], dtype=np.int32)
+        uniforms = np.empty((total_iterations, occ.shape[0]), dtype=np.float64)
+        for s, e in zip(offsets[:-1], offsets[1:]):
+            z[s:e] = init_assignments(e - s, num_topics, rng)
+            uniforms[:, s:e] = rng.random((total_iterations, e - s))
+        cells = np.repeat(np.arange(end - start) * num_topics, np.diff(offsets))
+        hist = np.zeros((end - start) * num_topics, dtype=np.int64)
+        for it in range(total_iterations):
+            _sweep(occ, z, offsets, nwk, nk, alpha, beta, uniforms[it], False, vocab_size)
+            if it >= burn_in_iterations:
+                hist += np.bincount(cells + z, minlength=hist.shape[0])
+        theta[start:end] = hist.reshape(-1, num_topics) / (total_iterations - burn_in_iterations)
+        start = end
+    return theta
 
 
 def doc_log_likelihood(
@@ -205,6 +257,23 @@ def doc_log_likelihood(
     return float(counts @ np.log(pw))
 
 
+def doc_log_likelihoods(word_occ: np.ndarray, z: np.ndarray, doc_offsets: np.ndarray,
+                        nwk: np.ndarray, nk: np.ndarray, alpha: float, beta: float,
+                        vocab_size: int | None = None) -> np.ndarray:
+    """:func:`doc_log_likelihood` of every doc in a block, in doc order."""
+    num_topics = nk.shape[0]
+    ll = np.zeros(doc_offsets.shape[0] - 1, dtype=np.float64)
+    for d in range(ll.shape[0]):
+        s = doc_offsets[d]
+        e = doc_offsets[d + 1]
+        ndk = np.bincount(z[s:e], minlength=num_topics).astype(np.float64)
+        words, counts = np.unique(word_occ[s:e], return_counts=True)
+        ll[d] = doc_log_likelihood(
+            words, counts.astype(np.float64), ndk, nwk, nk, alpha, beta, vocab_size
+        )
+    return ll
+
+
 def corpus_log_likelihood(
     word_occ: np.ndarray,
     z: np.ndarray,
@@ -215,14 +284,7 @@ def corpus_log_likelihood(
     beta: float,
 ) -> float:
     """Sum of per-doc log-likelihoods over a block of docs (lda.cc:128-136)."""
-    num_topics = nk.shape[0]
     total = 0.0
-    for d in range(doc_offsets.shape[0] - 1):
-        s = doc_offsets[d]
-        e = doc_offsets[d + 1]
-        ndk = np.bincount(z[s:e], minlength=num_topics).astype(np.float64)
-        words, counts = np.unique(word_occ[s:e], return_counts=True)
-        total += doc_log_likelihood(
-            words, counts.astype(np.float64), ndk, nwk, nk, alpha, beta
-        )
-    return total
+    for ll in doc_log_likelihoods(word_occ, z, doc_offsets, nwk, nk, alpha, beta):
+        total += ll
+    return float(total)

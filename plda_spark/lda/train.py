@@ -336,16 +336,11 @@ def _sweep_pass(batches: Iterable[pd.DataFrame], nwk0: np.ndarray, nk0: np.ndarr
             rng = kernel.make_rng(config.seed, pid, iteration + 1)
         offsets, word_occ, z = _unpack_docs(docs)
         occ = index(word_occ)
-        ll = np.zeros(len(docs))
-        if config.compute_likelihood:
-            for d in range(len(docs)):
-                s, e = offsets[d], offsets[d + 1]
-                ndk = np.bincount(z[s:e], minlength=K).astype(np.float64)
-                uw, cnt = np.unique(occ[s:e], return_counts=True)
-                ll[d] = kernel.doc_log_likelihood(
-                    uw, cnt.astype(np.float64), ndk, nwk0, nk0,
-                    config.alpha, config.beta, vocab_size=vocab_size,
-                )
+        ll = (
+            kernel.doc_log_likelihoods(occ, z, offsets, nwk0, nk0, config.alpha,
+                                       config.beta, vocab_size)
+            if config.compute_likelihood else np.zeros(len(docs))
+        )
         kernel.sweep_docs(
             occ, z, offsets, nwk, nk, config.alpha, config.beta, rng,
             update_model=True, vocab_size=vocab_size,

@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -122,3 +123,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextlib.contextmanager
+def _numpy_kernel():
+    from plda_spark.lda import _ckernel
+
+    os.environ["PLDA_SPARK_NO_CKERNEL"] = "1"
+    _ckernel._tried = False
+    try:
+        yield
+    finally:
+        os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
+        _ckernel._tried = False
+
+
+@pytest.fixture(scope="session")
+def numpy_kernel():
+    """``with numpy_kernel():`` runs the LDA kernel on its numpy loop,
+    with the compiled C sweep hidden; the C sweep is looked up again on
+    exit.  Session-scoped so hypothesis tests can take it."""
+    return _numpy_kernel

@@ -4,10 +4,11 @@ The C kernel consumes the same pre-drawn uniforms and evaluates the
 same double-precision expressions in the same order as the numpy loop,
 so for any (seed, data) the two paths must agree exactly — both for
 training (int64 counts, in-place model updates) and inference (float64
-frozen model).
+frozen model).  Batch inference (``infer_docs``) is pinned bit-equal
+to the per-doc loop it replaced, on both paths.
 """
 
-import os
+import contextlib
 
 import numpy as np
 import pytest
@@ -26,19 +27,7 @@ def _mkdata(n, v, k, seed):
     return occ, z, offs, nwk, nwk.sum(axis=0)
 
 
-@pytest.fixture(autouse=True)
-def _reset_ckernel():
-    yield
-    os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
-    _ckernel._tried = False
-
-
-def _run(use_c, train, seed):
-    if use_c:
-        os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
-    else:
-        os.environ["PLDA_SPARK_NO_CKERNEL"] = "1"
-    _ckernel._tried = False
+def _run(train, seed):
     occ, z, offs, nwk, nk = _mkdata(5000, 50, 7, seed)
     if not train:
         nwk = nwk.astype(np.float64)
@@ -55,9 +44,86 @@ def test_c_kernel_builds():
 
 @pytest.mark.parametrize("train", [True, False])
 @pytest.mark.parametrize("seed", [1, 42])
-def test_c_matches_numpy_bitwise(train, seed):
-    z_np, nwk_np, nk_np = _run(False, train, seed)
-    z_c, nwk_c, nk_c = _run(True, train, seed)
+def test_c_matches_numpy_bitwise(numpy_kernel, train, seed):
+    with numpy_kernel():
+        z_np, nwk_np, nk_np = _run(train, seed)
+    z_c, nwk_c, nk_c = _run(train, seed)
     assert np.array_equal(z_np, z_c)
     assert np.array_equal(nwk_np, nwk_c)
     assert np.array_equal(nk_np, nk_c)
+
+
+def _infer_per_doc(occ, offs, nwk, nk, seed, T, burn_in, vocab_size=None):
+    """The per-doc inference loop: z-init, then T frozen-model sweeps of
+    the doc alone, summing its topic histogram after burn-in."""
+    rng = kernel.make_rng(seed, 0, 0)
+    K = nk.shape[0]
+    theta = np.zeros((offs.shape[0] - 1, K))
+    for d in range(offs.shape[0] - 1):
+        o = occ[offs[d]:offs[d + 1]]
+        z = kernel.init_assignments(o.shape[0], K, rng)
+        one = np.array([0, o.shape[0]], dtype=np.int64)
+        acc = np.zeros(K)
+        for it in range(T):
+            kernel.sweep_docs(o, z, one, nwk, nk, 0.1, 0.01, rng,
+                              update_model=False, vocab_size=vocab_size)
+            if it >= burn_in:
+                acc += np.bincount(z, minlength=K)
+        theta[d] = acc / (T - burn_in)
+    return theta
+
+
+def _infer_batch(occ, offs, nwk, nk, seed, T, burn_in, vocab_size=None):
+    return kernel.infer_docs(occ, offs, nwk, nk, 0.1, 0.01, kernel.make_rng(seed, 0, 0),
+                             T, burn_in, vocab_size)
+
+
+def _infer_data(seed):
+    """A frozen float64 model (V=40, K=5) and 9 docs, among them two
+    empty docs and two 1-token docs."""
+    rng = kernel.make_rng(seed, 1, 0)
+    lens = [0, 1, 37, 0, 120, 5, 1, 64, 12]
+    offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
+    occ = rng.integers(0, 40, offs[-1]).astype(np.int32)
+    nwk = rng.random((40, 5)) * 30
+    return occ, offs, nwk, nwk.sum(axis=0)
+
+
+@pytest.fixture(params=["c", "numpy"])
+def kernel_path(request, numpy_kernel):
+    with numpy_kernel() if request.param == "numpy" else contextlib.nullcontext():
+        yield request.param
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_infer_docs_matches_per_doc_loop(kernel_path, seed):
+    occ, offs, nwk, nk = _infer_data(seed)
+    got = _infer_batch(occ, offs, nwk, nk, seed, 9, 4)
+    assert got.shape == (9, 5)
+    assert np.array_equal(got, _infer_per_doc(occ, offs, nwk, nk, seed, 9, 4))
+    assert not got[0].any() and not got[3].any()  # empty docs: all zeros
+    np.testing.assert_allclose(got.sum(axis=1), np.diff(offs))
+
+
+def test_infer_docs_submodel_matches_full_model(kernel_path):
+    """A sub-model of the batch's distinct words, with ``vocab_size`` the
+    true V (larger than its row count), gives the full model's bits."""
+    occ, offs, nwk, nk = _infer_data(5)
+    occ = occ // 2 * 2  # even word ids only
+    rows = np.unique(occ)
+    assert rows.shape[0] < nwk.shape[0]
+    local = np.searchsorted(rows, occ).astype(np.int32)
+    sub = np.ascontiguousarray(nwk[rows])
+    got = _infer_batch(local, offs, sub, nk, 5, 7, 2, vocab_size=nwk.shape[0])
+    assert np.array_equal(got, _infer_per_doc(local, offs, sub, nk, 5, 7, 2, nwk.shape[0]))
+    assert np.array_equal(got, _infer_batch(occ, offs, nwk, nk, 5, 7, 2))
+
+
+def test_infer_docs_slicing_keeps_bits(kernel_path, monkeypatch):
+    """A cap of 60 uniforms at T=6 splits the batch into many slices of
+    at most 10 tokens, and the 120- and 64-token docs run alone."""
+    occ, offs, nwk, nk = _infer_data(11)
+    whole = _infer_batch(occ, offs, nwk, nk, 11, 6, 3)
+    monkeypatch.setattr(kernel, "_MAX_UNIFORMS", 60)
+    assert np.array_equal(_infer_batch(occ, offs, nwk, nk, 11, 6, 3), whole)
+    assert np.array_equal(_infer_per_doc(occ, offs, nwk, nk, 11, 6, 3), whole)

@@ -49,31 +49,24 @@ def test_sweep_conserves_counts_and_nonnegative(data):
 
 @given(corpus_arrays())
 @settings(max_examples=25, deadline=None)
-def test_c_and_numpy_paths_agree(data):
-    import os
-
+def test_c_and_numpy_paths_agree(numpy_kernel, data):
     from plda_spark.lda import _ckernel
 
     if _ckernel.get_sweep_fn() is None:
         pytest.skip("no C compiler")
     V, K, word_occ, offsets, seed = data
 
-    outs = []
-    for disable in (True, False):
-        if disable:
-            os.environ["PLDA_SPARK_NO_CKERNEL"] = "1"
-        else:
-            os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
-        _ckernel._tried = False
+    def run():
         rng = kernel.make_rng(seed)
         z = kernel.init_assignments(word_occ.shape[0], K, rng)
         nwk = kernel.count_nwk(word_occ, z, V, K)
         nk = nwk.sum(axis=0)
         kernel.sweep_docs(word_occ, z, offsets, nwk, nk, 0.1, 0.01, rng, True)
-        outs.append((z.copy(), nwk.copy(), nk.copy()))
-    os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
-    _ckernel._tried = False
-    for a, b in zip(outs[0], outs[1]):
+        return z, nwk, nk
+
+    with numpy_kernel():
+        on_numpy = run()
+    for a, b in zip(on_numpy, run()):
         np.testing.assert_array_equal(a, b)
 
 

@@ -147,6 +147,108 @@ def test_infer_model_df_matches_broadcast(spark, tiny_result):
         assert int(df_rows[d].argmax()) == int(bc_rows[d].argmax())
 
 
+# Inputs of the front-end pins: docs 0-6 (a 1-token doc, a mixed doc,
+# OOV rows in doc 0) scored against a high-smoothing copy of the tiny
+# model (α=1, β=50), so that every draw of the sampler can move θ.
+_PIN_ROWS = [
+    (0, "w001", 5), (0, "w002", 5), (0, "zzz_oov", 99), (1, "w025", 10),
+    (2, "w003", 3), (2, "w014", 4), (2, "w027", 2), (3, "w019", 1),
+    (4, "w005", 2), (4, "w006", 7), (4, "w011", 1), (5, "w000", 4),
+    (5, "w012", 6), (5, "w021", 5), (5, "w029", 3), (6, "w008", 2), (6, "w018", 2),
+]
+# 6·θ per doc (12 iterations, 6 of them after burn-in, seed 3), as the
+# per-doc inference loop gave it.  All docs in one partition (pid 0):
+_THETA6_ONE_PID = {
+    0: [6, 1, 53], 1: [60, 0, 0], 2: [11, 24, 19], 3: [3, 3, 0],
+    4: [3, 1, 56], 5: [70, 33, 5], 6: [4, 13, 7],
+}
+# transform with num_partitions=2:
+_THETA6_TWO_PIDS = {
+    0: [2, 2, 56], 1: [59, 0, 1], 2: [13, 25, 16], 3: [0, 6, 0],
+    4: [3, 2, 55], 5: [62, 40, 6], 6: [2, 7, 15],
+}
+
+
+def _assert_theta6(df, want):
+    got = {r["doc_id"]: np.array(r["topic_weights"]) for r in df.collect()}
+    assert set(got) == set(want)
+    for d, counts in want.items():
+        assert np.array_equal(got[d], np.array(counts, dtype=np.float64) / 6), d
+
+
+def test_infer_front_ends_pinned(spark, tiny_result):
+    """Every inference front end gives exactly the recorded θ: same RNG
+    stream per partition, same doc order, same sweep."""
+    from pyspark.sql import functions as F
+
+    from plda_spark.lda import infer
+    from plda_spark.lda.model import LDAModel
+    from plda_spark.lda.vocab import remap_words
+
+    raw = tiny_result.raw_model
+    model = LDAModel(raw.nwk, raw.words, alpha=1.0, beta=50.0)
+    docs = spark.createDataFrame(_PIN_ROWS, "doc_id long, word string, count int").coalesce(1)
+    for P, want in ((1, _THETA6_ONE_PID), (2, _THETA6_TWO_PIDS)):
+        _assert_theta6(infer.transform(model, docs, 12, 6, seed=3, num_partitions=P), want)
+
+    texts = {}
+    for d, w, c in _PIN_ROWS:
+        texts.setdefault(d, []).extend([w] * c)
+    text_df = spark.createDataFrame(
+        [(d, " ".join(ws)) for d, ws in texts.items()], "doc_id long, text string"
+    ).coalesce(1)
+    _assert_theta6(infer.transform_stream(model, text_df, 12, 6, seed=3), _THETA6_ONE_PID)
+
+    vocab = spark.createDataFrame(
+        [(w, i) for i, w in enumerate(model.words)], "word string, word_id long"
+    )
+    triples = remap_words(docs, vocab).select("doc_id", "word_id", "count")
+    # The broadcast hint fixes the join at planning time.  Unhinted, AQE
+    # re-plans it at run time, and θ changed in one full-suite run.
+    model_df = F.broadcast(model.to_dataframe(spark).select("word_id", "topic_counts"))
+    _assert_theta6(
+        infer.transform_model_df(
+            model_df, model.nk, triples,
+            alpha=model.alpha, beta=model.beta, total_iterations=12,
+            burn_in_iterations=6, seed=3,
+        ),
+        _THETA6_ONE_PID,
+    )
+
+
+def test_infer_all_oov_doc_and_empty_input(spark, tiny_result):
+    """An all-OOV doc is omitted by transform and transform_model_df and
+    scored all zeros by transform_stream; an empty input gives an empty
+    frame through all three."""
+    from plda_spark.lda import infer
+
+    model = tiny_result.raw_model
+    model_df = model.to_dataframe(spark).select("word_id", "topic_counts")
+    docs = spark.createDataFrame(
+        [(0, "w001", 3), (1, "zzz_oov", 4)], "doc_id long, word string, count int"
+    )
+    texts = spark.createDataFrame([(0, "w001 w001 w001"), (1, "zzz oov")],
+                                  "doc_id long, text string")
+    triples = spark.createDataFrame([(0, 1, 3), (1, 999, 4)],
+                                    "doc_id long, word_id long, count int")
+
+    def scored(df):
+        return {r["doc_id"]: list(r["topic_weights"]) for r in df.collect()}
+
+    assert list(scored(infer.transform(model, docs, 4, 2))) == [0]
+    assert list(scored(infer.transform_model_df(model_df, model.nk, triples,
+                                                total_iterations=4,
+                                                burn_in_iterations=2))) == [0]
+    stream = scored(infer.transform_stream(model, texts, 4, 2))
+    assert sum(stream[0]) == pytest.approx(3.0)
+    assert stream[1] == [0.0, 0.0, 0.0]
+
+    assert infer.transform(model, docs.limit(0), 4, 2).collect() == []
+    assert infer.transform_stream(model, texts.limit(0), 4, 2).collect() == []
+    assert infer.transform_model_df(model_df, model.nk, triples.limit(0),
+                                    total_iterations=4, burn_in_iterations=2).collect() == []
+
+
 def test_describe_topics(spark, tiny_result):
     df = tiny_result.raw_model.describe_topics(spark, top_n=5)
     rows = df.collect()
