@@ -17,6 +17,8 @@ from __future__ import annotations
 import math
 from itertools import combinations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,8 +43,10 @@ def umass_coherence(
     ]
     vocab = sorted({w for _, _, w in tw})
     spark = corpus.sparkSession
+    # Driver-built tables go through pandas and Arrow: a LocalTableScan,
+    # no Python worker.
     vocab_df = F.broadcast(
-        spark.createDataFrame([(w,) for w in vocab], f"{word_col} string")
+        spark.createDataFrame(pd.DataFrame({word_col: vocab}, dtype=object), f"{word_col} string")
     )
     # One filtered pass: per doc, the set of top-words it contains.
     doc_words = (
@@ -100,4 +104,7 @@ def umass_coherence(
             score += math.log((cofreq.get(key, 0) + 1) / di)
             n_pairs += 1
         rows.append((t, n_pairs, round(score, 6)))
-    return spark.createDataFrame(rows, "topic int, n_pairs int, coherence double")
+    pdf = pd.DataFrame(rows, columns=["topic", "n_pairs", "coherence"]).astype(
+        {"topic": "int32", "n_pairs": "int32", "coherence": "float64"}
+    )
+    return spark.createDataFrame(pdf, "topic int, n_pairs int, coherence double")

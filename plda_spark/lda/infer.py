@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from . import kernel
 from .corpus import pack_docs
 from .model import LDAModel
-from .vocab import remap_words
+from .vocab import remap_words, vocab_table
 
 __all__ = [
     "transform",
@@ -95,10 +95,9 @@ def transform(
         total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
         P = _auto_partitions(total_tokens, sc.defaultParallelism)
 
-    vocab = spark.createDataFrame(
-        [(w, i) for i, w in enumerate(model.words)], "word string, word_id long"
+    corpus_ids = remap_words(corpus, vocab_table(spark, model.words)).select(
+        "doc_id", "word_id", "count"
     )
-    corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
     packed = pack_docs(corpus_ids, P)
 
     bc_nwk = sc.broadcast(model.nwk.astype(np.float64))

@@ -16,6 +16,7 @@ executors each iteration (the reference replicates it per MPI rank,
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -99,12 +100,20 @@ class LDAModel:
 
     # -- Spark-native forms ----------------------------------------------------
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        """``(word, word_id, topic_counts: array<double>)`` model table."""
-        data = [
-            (w, i, [float(v) for v in self.nwk[i]])
-            for i, w in enumerate(self.words)
-        ]
-        return spark.createDataFrame(data, "word string, word_id long, topic_counts array<double>")
+        """``(word, word_id, topic_counts: array<double>)`` model table.
+
+        Built from a pandas frame, so with Arrow on (``get_spark``) the
+        plan is a ``LocalTableScan`` and no Python worker runs; the
+        float64 cast rounds each count as ``float(v)`` does.
+        """
+        pdf = pd.DataFrame(
+            {
+                "word": list(self.words),
+                "word_id": np.arange(self.num_words, dtype=np.int64),
+                "topic_counts": list(self.nwk.astype(np.float64)),
+            }
+        )
+        return spark.createDataFrame(pdf, "word string, word_id long, topic_counts array<double>")
 
     def save(self, spark: SparkSession, path: str) -> None:
         meta = {"alpha": str(self.alpha), "beta": str(self.beta), "k": str(self.num_topics)}

@@ -63,7 +63,7 @@ from ..lineage import _Lineage
 from . import kernel
 from .corpus import pack_docs
 from .model import LDAModel
-from .vocab import remap_words
+from .vocab import remap_words, vocab_table
 
 __all__ = ["TrainConfig", "TrainResult", "train", "train_documents"]
 
@@ -968,10 +968,9 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             )
             W = _chunk_grid(V, K, parallelism)[1] if name == "chunks" else 0
             ex = _EXCHANGES[name](spark, V, P, W, config)
-            vocab = spark.createDataFrame(
-                [(w, i) for i, w in enumerate(words)], "word string, word_id long"
+            corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
+                "doc_id", "word_id", "count"
             )
-            corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
             # pack_docs hash-partitions by doc_id into P, so partition p
             # holds exactly the docs of pid p.
             packed = pack_docs(corpus_ids, P).withColumn(

@@ -12,10 +12,27 @@ so the corpus itself never shuffles for id assignment.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["build_vocab", "remap_words"]
+__all__ = ["build_vocab", "remap_words", "vocab_table"]
+
+
+def vocab_table(spark: SparkSession, words: Sequence[str]) -> DataFrame:
+    """``DataFrame[word, word_id]`` of a driver-side list, id = position.
+
+    Built from a pandas frame, so with Arrow on (``get_spark``) the plan
+    is a ``LocalTableScan`` and no Python worker runs.
+    """
+    return spark.createDataFrame(
+        pd.DataFrame({"word": list(words), "word_id": np.arange(len(words), dtype=np.int64)}),
+        "word string, word_id long",
+    )
 
 
 def build_vocab(corpus: DataFrame, word_col: str = "word") -> DataFrame:
@@ -27,11 +44,8 @@ def build_vocab(corpus: DataFrame, word_col: str = "word") -> DataFrame:
     ids with NO single-partition window (a global ``row_number`` window
     would funnel the whole vocabulary through one task; the offset form
     takes per-partition counts and offsets them, staying parallel at
-    any vocabulary size — the ``zipWithIndex`` idea, but entirely in
-    JVM expressions: the previous ``.rdd.zipWithIndex()`` form pickled
-    every word through a Python worker and back, round 12 / guide §4).
-    Ids equal the global lexicographic rank whatever the partition
-    boundaries, so the output is bit-identical to the RDD form.
+    any vocabulary size, entirely in JVM expressions).  Ids equal the
+    global lexicographic rank whatever the partition boundaries.
     """
     from pyspark.sql.window import Window
 

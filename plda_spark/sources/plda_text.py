@@ -5,25 +5,64 @@ Format (``README.md:44-58``): one document per line,
 lines starting with ``#``/CR/LF are skipped (parser ``lda.cc:56-79``).
 
 Doc ids are assigned by line order, matching the reference's implicit
-line-number document identity.  ``zipWithIndex`` is the one RDD touch in
-the repo: it is the only distributed primitive that yields stable,
-contiguous line numbers without collapsing to a single partition.
+line-number document identity.  :func:`index_lines` numbers the lines in
+the JVM, so no Python worker reads the corpus.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-__all__ = ["read_plda_corpus", "write_plda_corpus"]
+__all__ = ["index_lines", "read_plda_corpus", "write_plda_corpus"]
 
-_LINE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("line", T.StringType()),
-    ]
-)
+# monotonically_increasing_id() = (split << 33) + row number in the split
+_SPLIT_SHIFT = 33
+
+
+def index_lines(lines: DataFrame, id_col: str) -> DataFrame:
+    """Prepend ``id_col``: each row's 0-based position in the scan order
+    of ``lines`` (splits in order, rows in file order within a split).
+
+    These are the ids ``lines.rdd.zipWithIndex()`` gives, computed the
+    same way but in JVM expressions: a row's id is its split's start plus
+    its row number in the split, both read from
+    ``monotonically_increasing_id()``, and the starts are the running sum
+    of the splits' row counts.  Counting is one aggregation over the
+    scan, run here and only when there is more than one split (when
+    ``zipWithIndex`` runs its counting job).  ``lines`` must be a scan
+    with at most row-wise filters and projections, so that its splits
+    are the input splits.
+
+    The ids hold for the split layout planned here.  A later action that
+    plans the input into other splits (a changed ``spark.sql.files.*``
+    setting, or a cluster whose core count moved) puts some row past its
+    split's counted bound and fails, instead of numbering rows wrongly.
+    """
+    n_splits = lines.rdd.getNumPartitions()
+    counts: list[int] = []
+    if n_splits > 1:
+        per_split = dict(lines.groupBy(F.spark_partition_id()).count().collect())
+        counts = [per_split.get(p, 0) for p in range(n_splits)]
+    starts = list(accumulate(counts[:-1], initial=0))
+    m = F.col("__m")
+    split = F.shiftright(m, _SPLIT_SHIFT).cast("int")
+    row = m.bitwiseAND((1 << _SPLIT_SHIFT) - 1)
+    start = F.get(F.lit(np.array(starts, dtype=np.int64)), split)
+    outside = start.isNull()
+    if counts:
+        outside = outside | (row >= F.get(F.lit(np.array(counts, dtype=np.int64)), split))
+    return lines.select(F.monotonically_increasing_id().alias("__m"), "*").select(
+        F.when(
+            outside,
+            F.raise_error(F.lit("input was re-split after its lines were numbered; read it again")),
+        ).otherwise(start + row).alias(id_col),
+        *lines.columns,
+    )
 
 
 def read_plda_corpus(spark: SparkSession, path: str) -> DataFrame:
@@ -33,11 +72,8 @@ def read_plda_corpus(spark: SparkSession, path: str) -> DataFrame:
         (F.length(F.trim("value")) > 0) & ~F.col("value").startswith("#")
     )
     # Stable line-order ids (lda.cc assigns doc identity by input order).
-    indexed = kept.rdd.map(lambda r: r["value"]).zipWithIndex().map(
-        lambda t: (t[1], t[0])
-    )
-    df = spark.createDataFrame(indexed, _LINE_SCHEMA)
-    tokens = F.split(F.trim("line"), r"\s+")
+    df = index_lines(kept, "doc_id")
+    tokens = F.split(F.trim("value"), r"\s+")
     # (word, count) pairs: even positions are words, odd are counts.
     pairs = F.filter(
         F.transform(tokens, lambda x, i: F.struct(x.alias("tok"), i.alias("i"))),

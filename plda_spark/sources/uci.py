@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plda_text import index_lines, write_plda_corpus
+
 __all__ = ["read_uci_docword", "uci_to_corpus"]
 
 
@@ -24,11 +26,10 @@ def read_uci_docword(spark: SparkSession, docword_path: str, vocab_path: str) ->
         (F.col("b") - 1).alias("word_id"),
         F.col("c").alias("count"),
     )
-    vocab_lines = spark.read.text(vocab_path)
-    vocab = (
-        vocab_lines.rdd.map(lambda r: r["value"].strip())
-        .zipWithIndex()
-        .toDF(["word", "word_id"])
+    # Line number = wordId; words lose the ASCII whitespace str.strip()
+    # removes (a CRLF file's \r, trailing tabs and spaces).
+    vocab = index_lines(spark.read.text(vocab_path), "word_id").select(
+        F.trim("value", F.lit(" \t\n\r\x0b\x0c")).alias("word"), "word_id"
     )
     return (
         triples.join(F.broadcast(vocab), "word_id")
@@ -38,6 +39,4 @@ def read_uci_docword(spark: SparkSession, docword_path: str, vocab_path: str) ->
 
 def uci_to_corpus(spark: SparkSession, docword_path: str, vocab_path: str, out_path: str) -> None:
     """Full O20 conversion: UCI pair → plda-format text file."""
-    from .plda_text import write_plda_corpus
-
     write_plda_corpus(read_uci_docword(spark, docword_path, vocab_path), out_path)

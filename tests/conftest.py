@@ -144,3 +144,18 @@ def numpy_kernel():
     with the compiled C sweep hidden; the C sweep is looked up again on
     exit.  Session-scoped so hypothesis tests can take it."""
     return _numpy_kernel
+
+
+def _rdd_scans(df):
+    """The RDD-backed scans in ``df``'s plans: ``LogicalRDD`` in the
+    optimized plan, ``Scan ExistingRDD`` in the physical plan.  Every
+    such scan is fed by a Python worker when its rows came from Python."""
+    qe = df._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    return [s for s in ("LogicalRDD", "ExistingRDD") if s in plans]
+
+
+@pytest.fixture(scope="session")
+def rdd_scans():
+    """``rdd_scans(df)`` lists the RDD-backed scans in ``df``'s plans."""
+    return _rdd_scans

@@ -1,5 +1,6 @@
 """Source/sink format tests (SURVEY.md §5.2-2, FIXTURES.md F1/F4/F5)."""
 
+import contextlib
 import glob
 import os
 
@@ -95,6 +96,105 @@ def test_uci_reader(spark, tmp_path):
         (2, "alpha", 1),
         (2, "delta", 2),
     }
+
+
+@contextlib.contextmanager
+def _max_split_bytes(spark, n):
+    """Plan file scans into splits of at most ``n`` bytes."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _kept(line):
+    return line.strip() != "" and not line.startswith("#")
+
+
+def _write_docs(path, first, n):
+    """``n`` unique plda lines (doc ``first`` .. ``first + n - 1``) with
+    comment and blank lines between them."""
+    out = []
+    for i in range(first, first + n):
+        if i % 7 == 0:
+            out.append("# comment")
+        if i % 5 == 0:
+            out.append("")
+        out.append(f"doc{i} {i % 4 + 1} shared 2")
+    path.write_text("\n".join(out) + "\n")
+
+
+def _ids_by_doc(df):
+    got = {}
+    for r in df.collect():
+        if r["word"] != "shared":
+            got[r["word"]] = r["doc_id"]
+    return got
+
+
+def test_plda_ids_follow_kept_lines_across_splits(spark, tmp_path):
+    """Doc ids are the kept lines' positions in scan order: on one file
+    planned into several splits, and on a directory of several files
+    (whose splits Spark packs largest first, so the order is read back
+    from the scan itself)."""
+    one = tmp_path / "one.txt"
+    _write_docs(one, 0, 120)
+    folder = tmp_path / "dir"
+    folder.mkdir()
+    for j, n in enumerate((30, 90, 55)):
+        _write_docs(folder / f"part-{j}.txt", 1000 * (j + 1), n)
+    with _max_split_bytes(spark, 400):
+        assert spark.read.text(str(one)).rdd.getNumPartitions() >= 3
+        got = _ids_by_doc(read_plda_corpus(spark, str(one)))
+        assert got == {f"doc{i}": i for i in range(120)}
+
+        assert spark.read.text(str(folder)).rdd.getNumPartitions() >= 3
+        scan = [r["value"] for r in spark.read.text(str(folder)).collect()]
+        want = {ln.split()[0]: i for i, ln in enumerate(x for x in scan if _kept(x))}
+        assert len(want) == 175
+        assert _ids_by_doc(read_plda_corpus(spark, str(folder))) == want
+
+
+def test_plda_ids_refuse_a_changed_split_layout(spark, tmp_path):
+    """Ids are counted for the split layout planned at read time; a later
+    query that re-splits the input fails instead of misnumbering."""
+    p = tmp_path / "c.txt"
+    _write_docs(p, 0, 120)
+    with _max_split_bytes(spark, 400):
+        corpus = read_plda_corpus(spark, str(p))
+    with pytest.raises(Exception, match="re-split"):
+        corpus.where(F.col("count") > 0).collect()
+
+
+def test_readers_plan_no_rdd_scan(spark, plda_file, tmp_path, rdd_scans):
+    (tmp_path / "docword.txt").write_text("1\n2\n2\n1 1 2\n1 2 1\n")
+    (tmp_path / "vocab.txt").write_text("alpha\nbeta\n")
+    assert rdd_scans(read_plda_corpus(spark, plda_file)) == []
+    uci = read_uci_docword(spark, str(tmp_path / "docword.txt"), str(tmp_path / "vocab.txt"))
+    assert rdd_scans(uci) == []
+
+
+def test_uci_vocab_crlf_and_trailing_whitespace(spark, tmp_path):
+    """Vocab words lose the ASCII whitespace ``str.strip()`` removes, and
+    keep line-order ids across several splits."""
+    n = 150
+    ends = ["\r\n", "\t\r\n", "  \r\n", " \t \r\n"]
+    (tmp_path / "vocab.txt").write_text(
+        "".join(f"{' ' if i % 3 == 0 else ''}word{i}{ends[i % 4]}" for i in range(n)),
+        newline="",
+    )
+    (tmp_path / "docword.txt").write_text(
+        f"1\n{n}\n{n}\n" + "".join(f"1 {i + 1} {i + 1}\n" for i in range(n))
+    )
+    with _max_split_bytes(spark, 300):
+        assert spark.read.text(str(tmp_path / "vocab.txt")).rdd.getNumPartitions() >= 3
+        rows = read_uci_docword(
+            spark, str(tmp_path / "docword.txt"), str(tmp_path / "vocab.txt")
+        ).collect()
+    assert {(r["word"], r["count"]) for r in rows} == {(f"word{i}", i + 1) for i in range(n)}
 
 
 def test_jsonl_roundtrip_and_corrupt_capture(spark, tmp_path):

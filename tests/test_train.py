@@ -249,6 +249,37 @@ def test_infer_all_oov_doc_and_empty_input(spark, tiny_result):
                                     total_iterations=4, burn_in_iterations=2).collect() == []
 
 
+def test_driver_tables_skip_python_workers(spark, tiny_result, rdd_scans):
+    """The vocab and model tables are local tables (no Python worker), and
+    so is inference's plan up to the scoring step."""
+    import pandas as pd
+
+    from plda_spark.lda import infer
+    from plda_spark.lda.model import LDAModel
+    from plda_spark.lda.vocab import vocab_table
+
+    model = tiny_result.raw_model
+    vocab = vocab_table(spark, model.words)
+    assert rdd_scans(vocab) == []
+    assert [tuple(r) for r in vocab.orderBy("word_id").collect()] == [
+        (w, i) for i, w in enumerate(model.words)
+    ]
+    # Counts past 2**53 round as float(v) does; float models keep their bits.
+    big = LDAModel(np.array([[2**53 + 1, 3], [2**63 - 1, 0]], dtype=np.int64), ["a", "b"])
+    frac = LDAModel(np.array([[0.1, 1 / 3], [2.5e-310, 7.0]]), ["a", "b"])
+    for m in (big, frac, model):
+        table = m.to_dataframe(spark)
+        assert rdd_scans(table) == []
+        rows = table.orderBy("word_id").collect()
+        assert [(r["word"], r["word_id"]) for r in rows] == list(zip(m.words, range(m.num_words)))
+        assert [r["topic_counts"] for r in rows] == [[float(v) for v in row] for row in m.nwk]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [0, 0, 1], "word": ["w001", "w002", "w025"], "count": [5, 5, 10]}),
+        "doc_id long, word string, count int",
+    )
+    assert rdd_scans(infer.transform(model, docs, num_partitions=2)) == []
+
+
 def test_describe_topics(spark, tiny_result):
     df = tiny_result.raw_model.describe_topics(spark, top_n=5)
     rows = df.collect()
@@ -263,7 +294,7 @@ def test_describe_topics(spark, tiny_result):
         assert owner == t
 
 
-def test_umass_coherence(spark, tiny_result):
+def test_umass_coherence(spark, tiny_result, rdd_scans):
     """Coherence of recovered topics beats coherence of shuffled topics
     (words from the true disjoint vocab blocks co-occur; mixtures don't)."""
     from plda_spark.lda.evaluate import umass_coherence
@@ -282,6 +313,7 @@ def test_umass_coherence(spark, tiny_result):
     scrambled = top.withColumn("topic", (F.col("rank") % 3).cast("int"))
     bad = {r["topic"]: r["coherence"] for r in umass_coherence(scrambled, corpus).collect()}
     assert sum(res.values()) > sum(bad.values())
+    assert rdd_scans(umass_coherence(top, corpus)) == []
 
 
 EXCHANGES = {
