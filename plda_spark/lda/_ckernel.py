@@ -12,8 +12,8 @@ order, and does the same first-k-with-cumsum≥u·total scan as the numpy
 path — so for a given (seed, partitioning, iteration) the two paths
 produce **bit-identical** assignments (asserted in tests).
 
-If no compiler is available (or ``PLDA_SPARK_NO_CKERNEL`` is set) the
-caller silently falls back to the numpy loop.
+If no compiler is available the caller silently falls back to the numpy
+loop.
 """
 
 from __future__ import annotations
@@ -140,8 +140,6 @@ def get_sweep_fn():
     if _tried:
         return _sweep if _lib is not None else None
     _tried = True
-    if os.environ.get("PLDA_SPARK_NO_CKERNEL"):
-        return None
     try:
         _lib = _build()
     except Exception:

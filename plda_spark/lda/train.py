@@ -454,12 +454,25 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
 
 
 # ---------------------------------------------------------------------------
-# Driver side: the three exchanges.  Each has the same four steps — init
-# from the packed docs, the per-iteration sweep, a reduce action returning
+# Driver side: one z-init, then the three exchanges.  Each exchange has the
+# same three steps — the per-iteration sweep, a reduce action returning
 # (n_k, n_wk or None, likelihood), and the final model — and keeps its own
 # Spark job shape: one job per iteration for broadcast, the cogroup plus
 # the n_k collect for the join exchanges.
 # ---------------------------------------------------------------------------
+
+
+def _zinit(packed: DataFrame, config: TrainConfig, encode: Callable) -> DataFrame:
+    """The z-init of every exchange, with its payload rows in ``encode``'s
+    wire format.  ``pack_docs`` hash-partitions by doc_id into P, so
+    partition p holds exactly the docs of pid p and the init needs no
+    shuffle.  This is the one sort: checkpoints keep row order, so from
+    here on every broadcast sweep streams its partition in doc_id order
+    without a shuffle."""
+    zinit = partial(_zinit_pass, num_topics=config.num_topics, seed=config.seed,
+                    encode=encode)
+    return packed.sortWithinPartitions("doc_id").mapInPandas(zinit, schema=_SWEEP_SCHEMA)
+
 
 # The broadcast reduce sums the P payload rows on the driver below this
 # partition count — one collect of P sparse rows beats an extra shuffle.
@@ -524,13 +537,6 @@ class _Broadcast:
         self.encode = partial(_payload_row, num_topics=config.num_topics)
         self._bc = None
 
-    def init(self, packed: DataFrame) -> DataFrame:
-        # The one sort: checkpoints keep row order, so from here on every
-        # sweep streams its partition in doc_id order without a shuffle.
-        zinit = partial(_zinit_pass, num_topics=self.config.num_topics,
-                        seed=self.config.seed, encode=self.encode)
-        return packed.sortWithinPartitions("doc_id").mapInPandas(zinit, schema=_SWEEP_SCHEMA)
-
     def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
         self._bc = self.sc.broadcast(nwk)
         # Payload rows carry the previous pass's counts and must not enter
@@ -579,15 +585,6 @@ class _Join:
         self.V, self.P, self.W, self.config = vocab_size, num_partitions, chunk_width, config
         self.model: DataFrame | None = None
         self._model_ckpt: DataFrame | None = None
-
-    def init(self, packed: DataFrame) -> DataFrame:
-        zinit = partial(_zinit_pass, num_topics=self.config.num_topics,
-                        seed=self.config.seed, encode=self.encode)
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.concat(list(zinit([pdf.sort_values("doc_id")])), ignore_index=True)
-
-        return packed.groupBy("pid").applyInPandas(fn, schema=_SWEEP_SCHEMA)
 
     def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
         fn = _cogroup_sweep_fn(self.assemble, nk, self.encode, self.config, self.V, it)
@@ -976,7 +973,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             packed = pack_docs(corpus_ids, P).withColumn(
                 "pid", F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
             )
-            df_z = lineage.cut(ex.init(packed))
+            df_z = lineage.cut(_zinit(packed, config, ex.encode))
             lls: list[float] = []
             accum = np.zeros((V, K)) if name == "broadcast" else None
             start_it = 0

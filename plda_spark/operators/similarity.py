@@ -1,17 +1,23 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Every search operator is a candidate generator over one shared core
+(the three steps of distributed top-k search):
 
-- **Brute-force cosine top-k** — the exactness baseline.  Dot products
-  via ``F.zip_with`` + ``F.aggregate`` (JVM codegen, no Python); top-k by
-  a per-query window.  Cost O(|Q|·|C|) — fine when the query set is
-  small or as the verification oracle.
-- **LSH-bucketed ANN (random hyperplanes)** — the scale path: sign-bit
-  signatures from seeded hyperplanes (driver-generated numpy, inlined as
-  literals), candidates = bucket collisions in any band, exact cosine
-  re-rank inside buckets only.  Candidate generation is an equi-join on
-  (band, bucket) — never a cross join.
+1. **Generate candidates** — the only step that differs: every pair
+   (brute force, the exactness baseline), sign-bit LSH bucket
+   collisions, IVF cell collisions, or a shortlist from compressed
+   codes (PQ / IVF-PQ ADC scans, SQ8 codes, a Matryoshka prefix).
+   Candidate generation is an equi-join or a broadcast of the query
+   batch — never a corpus-sized cross join.
+2. **Refine exactly** — each side is staged once (id, vector, norm
+   under fixed internal aliases) and a candidate pair costs one
+   dot-product fold: the rounded staged cosine.  Shortlists from
+   compressed codes are re-ranked against the full-precision vectors.
+3. **Per-query top-k** — one window, ``sim`` descending (or ``adist``
+   ascending), ties by ``vec_id``.
 
+The numpy side shares one driver-side training sample (the first ``n``
+vectors by id), one per-batch vector decode and one squared-L2 matrix.
 Cosine values are rounded (1e-6) so the DuckDB oracle
 (``list_cosine_similarity``) hashes identically.
 """
@@ -22,6 +28,8 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from plda_spark.lineage import _Lineage
 
 __all__ = [
     "cosine",
@@ -55,6 +63,8 @@ __all__ = [
     "kmeans_fit_exact",
 ]
 
+_TOPK_SCHEMA = "query_id long, vec_id long, sim double, rank int"
+
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two float-array columns, JVM-side."""
@@ -62,6 +72,13 @@ def cosine(a: Column, b: Column) -> Column:
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
     return dot / (na * nb)
+
+
+# ---------------------------------------------------------------------------
+# The shared core: side staging, the rounded staged cosine, candidate
+# scoring, per-query top-k and the exact re-rank (Spark side); the training
+# sample, vector decode, squared-L2 matrix and ADC scan (numpy side).
+# ---------------------------------------------------------------------------
 
 
 def _norm(v: Column) -> Column:
@@ -83,6 +100,186 @@ def _cosine_staged(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot / (na * nb)
 
 
+def _side(df: DataFrame, id_col: str, id_as: str, tag: str, vec, *extra) -> DataFrame:
+    """One side of a scored pair: the id as ``id_as``, the vector
+    (a column name or expression) as ``__{tag}v`` and its norm as
+    ``__{tag}n``, plus ``extra`` columns.  The norm is a projection of
+    the side itself, so it is folded once per row, not once per pair."""
+    vec = F.col(vec) if isinstance(vec, str) else vec
+    return df.select(F.col(id_col).alias(id_as), vec.alias(f"__{tag}v"), *extra).withColumn(
+        f"__{tag}n", _norm(F.col(f"__{tag}v"))
+    )
+
+
+def _sim(a: str = "q", b: str = "c") -> Column:
+    """The rounded staged cosine ``sim`` of the sides tagged ``a`` and
+    ``b`` — the one ranking score of this module."""
+    return F.round(
+        _cosine_staged(
+            F.col(f"__{a}v"), F.col(f"__{b}v"), F.col(f"__{a}n"), F.col(f"__{b}n")
+        ),
+        6,
+    ).alias("sim")
+
+
+def _score(q: DataFrame, corpus: DataFrame, on=None, tags=("q", "c")) -> DataFrame:
+    """``(query_id, vec_id, sim)`` of the candidate pairs: every pair of
+    the broadcast query batch ``q`` with ``corpus`` when ``on`` is None,
+    else the de-duplicated pairs sharing an ``on`` key.  Self-matches
+    (same id) are excluded."""
+    pairs = corpus.crossJoin(q) if on is None else q.join(corpus, on)
+    pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
+    if on is not None:
+        pairs = pairs.dropDuplicates(["query_id", "vec_id"])
+    return pairs.select("query_id", "vec_id", _sim(*tags))
+
+
+def _topk(scored: DataFrame, k: int, by: str = "sim") -> DataFrame:
+    """Each query's top ``k`` rows: ``(query_id, vec_id, <by>, rank)``,
+    ``sim`` descending or ``adist`` ascending, ties by ``vec_id``."""
+    order = F.desc(by) if by == "sim" else F.asc(by)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", by, "rank")
+    )
+
+
+def _rerank(shortlist: DataFrame, corpus: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of a ``(query_id, vec_id)`` shortlist: each pair
+    joins its staged corpus side (tag ``c``, by id) and query side (tag
+    ``q``), and only shortlisted pairs are scored.  Nothing corpus-sized
+    shuffles when the shortlist is broadcast."""
+    scored = shortlist.join(corpus, "vec_id").join(q, "query_id")
+    return _topk(scored.select("query_id", "vec_id", _sim()), k)
+
+
+def _empty(df: DataFrame, schema: str) -> DataFrame:
+    return df.sparkSession.createDataFrame([], schema)
+
+
+def _doubles(col: str) -> Column:
+    return F.transform(col, lambda x: x.cast("double"))
+
+
+def _stack(vectors) -> np.ndarray:
+    """Array-column values (Arrow batch cells or collected rows) as the
+    rows of a float64 matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _sq_l2(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``(n, k)`` squared L2 distances of the rows of ``X`` to the rows of
+    ``C`` by the matmul expansion ``|x|² − 2x·c + |c|²``."""
+    return (X**2).sum(axis=1)[:, None] - 2 * (X @ C.T) + (C**2).sum(axis=1)[None, :]
+
+
+def _map_vectors(df: DataFrame, id_col: str, vec_col: str, fn, schema: str) -> DataFrame:
+    """One ``mapInPandas`` over ``(vid, emb)`` rows: ``fn(pdf, X)`` maps
+    each non-empty Arrow batch, ``X`` its vectors as float64 rows, to the
+    output columns.  Matrices the function reads ride its closure."""
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame(fn(pdf, _stack(pdf["emb"])))
+
+    src = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("emb"))
+    return src.mapInPandas(run, schema=schema)
+
+
+def _sample(
+    embeddings: DataFrame, n: int, id_col: str, vec_col: str, trainer: str | None = None
+) -> np.ndarray | None:
+    """The deterministic driver-side training sample: the first ``n``
+    vectors by id.  Every quantizer, basis and k-means init trains on it.
+    An empty corpus gives None — a search then returns an empty frame —
+    or, when ``trainer`` names the caller, ``ValueError("<trainer>:
+    empty corpus")``."""
+    rows = (
+        embeddings.select(F.col(vec_col).alias("emb"))
+        .orderBy(F.col(id_col))
+        .limit(n)
+        .collect()
+    )
+    if rows:
+        return _stack(r["emb"] for r in rows)
+    if trainer:
+        raise ValueError(f"{trainer}: empty corpus")
+    return None
+
+
+def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
+    """A query batch on the driver (small by construction):
+    ``(qids, Q)``, or None when the batch is empty."""
+    rows = queries.select(
+        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
+    ).collect()
+    if not rows:
+        return None
+    return np.array([r["qid"] for r in rows], dtype=np.int64), _stack(r["qv"] for r in rows)
+
+
+def _codes(pdf) -> np.ndarray:
+    return np.stack([np.asarray(c, dtype=np.int64) for c in pdf["code"]])
+
+
+def _adc(tables: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Asymmetric distances of code rows ``C`` (n, m) through distance
+    tables ``(..., m, k_codes)``: the sum over subspaces j of
+    ``tables[..., j, C[:, j]]`` — no vector is ever decompressed."""
+    ad = np.zeros(tables.shape[:-2] + (C.shape[0],), dtype=np.float64)
+    for j in range(C.shape[1]):
+        ad += tables[..., j, C[:, j]]
+    return ad
+
+
+def _smallest(ad: np.ndarray, k: int):
+    """Indices and values of the ``k + 1`` smallest distances along the
+    last axis.  One slot more than asked: a query drawn from the corpus
+    occupies one with its own ~0-distance code row, and the self-filter
+    runs AFTER this cut — keeping only k would silently drop the true
+    k-th neighbor."""
+    keep = min(k + 1, ad.shape[-1])
+    part = np.argpartition(ad, keep - 1, axis=-1)[..., :keep]
+    return part, np.take_along_axis(ad, part, axis=-1)
+
+
+def _rng(seed: int) -> np.random.Generator:
+    return np.random.Generator(np.random.PCG64(np.random.SeedSequence(seed)))
+
+
+def _nearest(sample: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Nearest centroid per sample row, by the broadcast difference."""
+    return ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _init_centroids(sample: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """``k`` seeded rows of the sample (with replacement only when the
+    sample has fewer than ``k``)."""
+    return sample[_rng(seed).choice(sample.shape[0], k, replace=sample.shape[0] < k)]
+
+
+def _kmeans(sample: np.ndarray, n_cells: int, seed: int, iters: int = 10) -> np.ndarray:
+    """Plain seeded Lloyd's k-means on a driver-side sample (the standard
+    way an IVF coarse quantizer is trained: sample → centroids)."""
+    cents = _init_centroids(sample, n_cells, seed)
+    for _ in range(iters):
+        assign = _nearest(sample, cents)
+        for c in range(n_cells):
+            members = sample[assign == c]
+            if len(members):
+                cents[c] = members.mean(axis=0)
+    return cents
+
+
+# ---------------------------------------------------------------------------
+# The operators.  Each search operator is a candidate generator over the core.
+# ---------------------------------------------------------------------------
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -96,43 +293,8 @@ def brute_force_topk(
     ``queries`` is broadcast (a query batch is small by construction);
     the corpus is scanned once.  Self-matches (same id) are excluded.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            _norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    scored = (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("__cvec"),
-            _norm(F.col(vec_col)).alias("__cn"),
-        )
-        .crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qvec"), F.col("__cvec"), F.col("__qn"), F.col("__cn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
-
-
-def _planes(dim: int, num_planes: int, seed: int) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(np.random.SeedSequence(seed)))
-    return rng.standard_normal((num_planes, dim))
+    q = F.broadcast(_side(queries, query_id_col, "query_id", "q", vec_col))
+    return _topk(_score(q, _side(embeddings, id_col, "vec_id", "c", vec_col)), k)
 
 
 def hyperplane_signatures(
@@ -145,36 +307,21 @@ def hyperplane_signatures(
 ) -> DataFrame:
     """Sign-bit LSH signature per vector: ``(vec_id, embedding, sig: array<int>)``.
 
-    Hyperplanes are regenerated from the seed inside each worker (a few
-    KB of numpy, cheaper than a broadcast); signatures come from one
-    Arrow-batched matmul ``X @ planes.T`` per batch — the vectorized
-    form of num_planes dot products per row, ~an order of magnitude
-    faster than per-row fold expressions at scale.
+    Hyperplanes are drawn from the seed on the driver and ride the task
+    closure (a few KB of numpy, cheaper than a broadcast); signatures
+    come from one Arrow-batched matmul ``X @ planes.T`` per batch — the
+    vectorized form of num_planes dot products per row, ~an order of
+    magnitude faster than per-row fold expressions at scale.
     """
-    import pandas as pd
-    from collections.abc import Iterator
+    planes = _rng(seed).standard_normal((num_planes, dim))
 
-    schema = f"vec_id long, embedding array<float>, sig array<int>"
+    def sig(pdf, X):
+        bits = (X @ planes.T > 0).astype(np.int32)
+        return {"vec_id": pdf["vid"], "embedding": pdf["emb"], "sig": list(bits)}
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = _planes(dim, num_planes, seed)  # deterministic per seed
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            bits = (X @ planes.T > 0).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vid"],
-                    "embedding": pdf["emb"],
-                    "sig": list(bits),
-                }
-            )
-
-    src = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("emb")
+    return _map_vectors(
+        embeddings, id_col, vec_col, sig, "vec_id long, embedding array<float>, sig array<int>"
     )
-    return src.mapInPandas(fn, schema=schema)
 
 
 def lsh_topk(
@@ -201,70 +348,31 @@ def lsh_topk(
     c_sig = hyperplane_signatures(embeddings, dim, num_planes, seed, id_col, vec_col)
     q_sig = hyperplane_signatures(queries, dim, num_planes, seed, query_id_col, vec_col)
 
-    def band_rows(sig_df: DataFrame, who: str) -> DataFrame:
-        # the vector norm is staged here, BEFORE the band explode and
-        # the bucket join, so the re-rank's cosine folds it once per
-        # vector instead of once per candidate pair (8 bytes/row extra
-        # through the shuffle vs an O(dim) fold per pair)
-        return sig_df.select(
-            F.col("vec_id").alias(who),
-            F.col("embedding").alias(f"__{who}_vec"),
-            _norm(F.col("embedding")).alias(f"__{who}_n"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.concat_ws(
-                                "", *[F.col("sig")[bi * r + j].cast("string") for j in range(r)]
-                            ).alias("bucket"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(who, f"__{who}_vec", f"__{who}_n", "bb.band", "bb.bucket")
+    def band_rows(sig_df: DataFrame, who: str, tag: str) -> DataFrame:
+        # the vector norm is staged here, ahead of the bucket join, so the
+        # re-rank's cosine is the dot product only (8 bytes/row extra
+        # through the shuffle vs an O(dim) fold per candidate pair).  It
+        # shares the explode's projection, which Spark evaluates above the
+        # Generate: once per (vector, band) row.
+        bb = F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(bi).alias("band"),
+                        F.concat_ws(
+                            "", *[F.col("sig")[bi * r + j].cast("string") for j in range(r)]
+                        ).alias("bucket"),
+                    )
+                    for bi in range(bands)
+                ]
+            )
+        ).alias("bb")
+        return _side(sig_df, "vec_id", who, tag, "embedding", bb).select(
+            who, f"__{tag}v", f"__{tag}n", "bb.band", "bb.bucket"
+        )
 
-    cand = (
-        band_rows(q_sig, "query_id")
-        .join(band_rows(c_sig, "vec_id"), ["band", "bucket"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _cosine_staged(
-                F.col("__query_id_vec"),
-                F.col("__vec_id_vec"),
-                F.col("__query_id_n"),
-                F.col("__vec_id_n"),
-            ),
-            6,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
-
-
-def _kmeans(sample: np.ndarray, n_cells: int, seed: int, iters: int = 10) -> np.ndarray:
-    """Plain seeded Lloyd's k-means on a driver-side sample (the standard
-    way an IVF coarse quantizer is trained: sample → centroids)."""
-    rng = np.random.Generator(np.random.PCG64(np.random.SeedSequence(seed)))
-    cents = sample[rng.choice(sample.shape[0], n_cells, replace=sample.shape[0] < n_cells)]
-    for _ in range(iters):
-        d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(n_cells):
-            members = sample[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return cents
+    q, c = band_rows(q_sig, "query_id", "q"), band_rows(c_sig, "vec_id", "c")
+    return _topk(_score(q, c, on=["band", "bucket"]), k)
 
 
 def ivf_assign(
@@ -280,33 +388,21 @@ def ivf_assign(
     floats — a few hundred KB at most).  ``n_probe`` is clamped to the
     cell count (asking for more probes than cells would otherwise
     surface as an opaque executor-side length-mismatch)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
     if n_probe < 1:
         raise ValueError("n_probe must be >= 1")
     n_probe = min(int(n_probe), int(centroids.shape[0]))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = centroids
-        c2 = (c**2).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            d2 = (X**2).sum(axis=1)[:, None] - 2 * (X @ c.T) + c2[None, :]
-            cells = np.argsort(d2, axis=1)[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vid"].to_numpy(), n_probe),
-                    "embedding": [e for e in pdf["emb"] for _ in range(n_probe)],
-                    "cell": cells.reshape(-1).astype(np.int32),
-                }
-            )
+    def cells(pdf, X):
+        near = np.argsort(_sq_l2(X, centroids), axis=1)[:, :n_probe]
+        return {
+            "vec_id": np.repeat(pdf["vid"].to_numpy(), n_probe),
+            "embedding": [e for e in pdf["emb"] for _ in range(n_probe)],
+            "cell": near.reshape(-1).astype(np.int32),
+        }
 
-    src = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("emb"))
-    return src.mapInPandas(fn, schema="vec_id long, embedding array<float>, cell int")
+    return _map_vectors(
+        embeddings, id_col, vec_col, cells, "vec_id long, embedding array<float>, cell int"
+    )
 
 
 def ivf_topk(
@@ -329,47 +425,22 @@ def ivf_topk(
     ``n_probe`` nearest cells, so the scanned fraction is ~n_probe /
     n_cells of the corpus (vs the LSH path's band-collision candidates).
     ``n_probe == n_cells`` degenerates to exact brute force.  Centroids
-    are trained on a deterministic driver-side sample.
+    are trained on a deterministic driver-side sample; an empty corpus
+    gives an empty result.
     """
-    sample = np.stack(
-        [
-            np.asarray(r["emb"], dtype=np.float64)
-            for r in embeddings.select(F.col(vec_col).alias("emb"))
-            .orderBy(F.col(id_col))
-            .limit(max_train_sample)
-            .collect()
-        ]
-    )
+    sample = _sample(embeddings, max_train_sample, id_col, vec_col)
+    if sample is None:
+        return _empty(embeddings, _TOPK_SCHEMA)
     cents = _kmeans(sample, n_cells, seed)
-    corpus_cells = ivf_assign(embeddings, cents, 1, id_col, vec_col).withColumn(
-        "__cn", _norm(F.col("embedding"))
-    )
-    query_cells = ivf_assign(queries, cents, n_probe, query_id_col, vec_col).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qvec"),
-        _norm(F.col("embedding")).alias("__qn"),
-        "cell",
-    )
-    cand = (
-        query_cells.join(corpus_cells, "cell")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _cosine_staged(
-                F.col("__qvec"), F.col("embedding"), F.col("__qn"), F.col("__cn")
-            ),
-            6,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
+    corpus = ivf_assign(embeddings, cents, 1, id_col, vec_col)
+    q = ivf_assign(queries, cents, n_probe, query_id_col, vec_col)
+    return _topk(
+        _score(
+            _side(q, "vec_id", "query_id", "q", "embedding", "cell"),
+            _side(corpus, "vec_id", "vec_id", "c", "embedding", "cell"),
+            on="cell",
+        ),
+        k,
     )
 
 
@@ -384,28 +455,11 @@ def embedding_near_dup_pairs(
     Brute implementation (the sf-scale oracle); at scale route through
     ``lsh_topk`` candidates instead.
     """
-    a = embeddings.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        _norm(F.col(vec_col)).alias("__na"),
-    )
-    b = embeddings.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        _norm(F.col(vec_col)).alias("__nb"),
-    )
+    a = _side(embeddings, id_col, "id_a", "a", vec_col)
+    b = _side(embeddings, id_col, "id_b", "b", vec_col)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _cosine_staged(
-                    F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-                ),
-                6,
-            ).alias("sim"),
-        )
+        .select("id_a", "id_b", _sim("a", "b"))
         .where(F.col("sim") >= threshold)
     )
 
@@ -427,56 +481,39 @@ def embedding_near_dup_pairs_blocked(
     then the exact cosine filter runs on candidates only.  Near-dup
     vectors are near-identical points, so multi-probe assignment makes a
     shared cell overwhelmingly likely; recall rises with ``n_probe``.
+    An empty corpus gives an empty result.
+
+    The result reads a local checkpoint of the cell assignment, so it is
+    not recomputable after the loss of an executor holding its blocks.
     """
-    sample = np.stack(
-        [
-            np.asarray(r["emb"], dtype=np.float64)
-            for r in embeddings.select(F.col(vec_col).alias("emb"))
-            .orderBy(F.col(id_col))
-            .limit(max_train_sample)
-            .collect()
-        ]
-    )
+    sample = _sample(embeddings, max_train_sample, id_col, vec_col)
+    if sample is None:
+        return _empty(embeddings, "id_a long, id_b long, sim double")
     # lazy checkpoint: the self-join consumes `cells` on BOTH sides, and
     # without the cut each side re-runs the whole Arrow assignment stage
-    # (the corpus crosses the Python boundary twice — guide §4); with it
-    # the assignment computes once and both branches read the blocks
-    cells = (
-        ivf_assign(
-            embeddings, _kmeans(sample, n_cells, seed), n_probe, id_col, vec_col
+    # (the corpus crosses the Python boundary twice); with it
+    # the assignment computes once and both branches read the blocks.
+    # The norm is staged INSIDE the checkpointed frame, so it is computed
+    # once per (vector, probe) row and the per-candidate cosine fold is
+    # the dot product only.
+    cells = _side(
+        ivf_assign(embeddings, _kmeans(sample, n_cells, seed), n_probe, id_col, vec_col),
+        "vec_id", "vec_id", "", "embedding", "cell",
+    ).localCheckpoint(eager=False)
+    a, b = (
+        cells.select(
+            F.col("vec_id").alias(f"id_{t}"),
+            F.col("__v").alias(f"__{t}v"),
+            F.col("__n").alias(f"__{t}n"),
+            "cell",
         )
-        # the norm is staged INSIDE the checkpointed frame, so it is
-        # computed once per (vector, probe) row and the per-candidate
-        # cosine fold is the dot product only
-        .withColumn("__n", _norm(F.col("embedding")))
-        .localCheckpoint(eager=False)
-    )
-    a = cells.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("__va"),
-        F.col("__n").alias("__na"),
-        "cell",
-    )
-    b = cells.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "cell",
+        for t in "ab"
     )
     return (
         a.join(b, ["cell"])
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _cosine_staged(
-                    F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-                ),
-                6,
-            ).alias("sim"),
-        )
+        .select("id_a", "id_b", _sim("a", "b"))
         .where(F.col("sim") >= threshold)
     )
 
@@ -494,9 +531,7 @@ def normalize_embeddings(
     per element — O(dim²) per row (the Generate-inlining pathology
     measured elsewhere in this codebase as 70 s vs <2 s)."""
     v = F.col(vec_col)
-    staged = embeddings.withColumn(
-        "__norm", F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    )
+    staged = embeddings.withColumn("__norm", _norm(v))
     unit = F.transform(v, lambda x: (x / F.col("__norm")).cast("float"))
     return staged.withColumn(
         vec_col, F.when(F.col("__norm") > 0, unit).otherwise(v)
@@ -523,22 +558,11 @@ def pca_project(
     itself never concentrates anywhere.  Output: ``(id_col, <vec_col>:
     array<float>[out_dim])`` with the mean removed (centering plus
     rotation preserve relative geometry; cosine consumers should
-    re-normalize after projection).
+    re-normalize after projection).  An empty corpus raises.
     """
     if not 0 < out_dim <= dim:
         raise ValueError("need 0 < out_dim <= dim")
-    import pandas as pd
-    from collections.abc import Iterator
-
-    sample = np.stack(
-        [
-            np.asarray(r["emb"], dtype=np.float64)
-            for r in embeddings.select(F.col(vec_col).alias("emb"))
-            .orderBy(F.col(id_col))
-            .limit(max_train_sample)
-            .collect()
-        ]
-    )
+    sample = _sample(embeddings, max_train_sample, id_col, vec_col, "pca_project")
     mean = sample.mean(axis=0)
     # SVD of the centered sample: rows of Vt are principal directions.
     _, _, vt = np.linalg.svd(sample - mean, full_matrices=False)
@@ -547,23 +571,13 @@ def pca_project(
     sc = embeddings.sparkSession.sparkContext
     bc_mean = sc.broadcast(mean)
     bc_basis = sc.broadcast(basis)
-    staged = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb")
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, b = bc_mean.value, bc_basis.value
-        for pdf in batches:
-            if len(pdf):
-                x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["emb"]])
-                proj = (x - m) @ b
-                out = [row.astype(np.float32) for row in proj]
-            else:
-                out = []
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "emb": out})
+    def project(pdf, X):
+        proj = (X - bc_mean.value) @ bc_basis.value
+        return {"vec_id": pdf["vid"], "emb": [row.astype(np.float32) for row in proj]}
 
-    return staged.mapInPandas(
-        fn, schema="vec_id long, emb array<float>"
+    return _map_vectors(
+        embeddings, id_col, vec_col, project, "vec_id long, emb array<float>"
     ).select(F.col("vec_id").alias(id_col), F.col("emb").alias(vec_col))
 
 
@@ -590,29 +604,19 @@ def kmeans_fit(
     of the corpus, ever; traffic is P·k·dim floats per iteration, the
     same volume an MPI AllReduce would move.
 
-    Initial centroids come from a deterministic driver-side sample.
-    Empty clusters keep their previous centroid.  Partials are summed in
-    (cluster, partition) order so the result is bit-deterministic for a
-    fixed partitioning.  Returns the (k, dim) centroid matrix.
+    Initial centroids come from a deterministic driver-side sample; an
+    empty corpus raises.  Empty clusters keep their previous centroid.
+    Partials are summed in (cluster, partition) order so the result is
+    bit-deterministic for a fixed partitioning.  Returns the (k, dim)
+    centroid matrix.
     """
     import pandas as pd
     from collections.abc import Iterator
 
     from pyspark import TaskContext
 
-    sample = np.stack(
-        [
-            np.asarray(r["emb"], dtype=np.float64)
-            for r in embeddings.select(F.col(vec_col).alias("emb"))
-            .orderBy(F.col(id_col))
-            .limit(init_sample)
-            .collect()
-        ]
-    )
-    rng = np.random.Generator(np.random.PCG64(np.random.SeedSequence(seed)))
-    cents = sample[
-        rng.choice(sample.shape[0], k, replace=sample.shape[0] < k)
-    ].copy()
+    sample = _sample(embeddings, init_sample, id_col, vec_col, "kmeans_fit")
+    cents = _init_centroids(sample, k, seed)
     dim = cents.shape[1]
     src = embeddings.select(F.col(vec_col).alias("emb"))
 
@@ -621,14 +625,13 @@ def kmeans_fit(
 
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pid = TaskContext.get().partitionId()
-            c2 = (c**2).sum(axis=1)
             cnt = np.zeros(k, dtype=np.int64)
             acc = np.zeros((k, dim), dtype=np.float64)
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-                assign = ((X**2).sum(axis=1)[:, None] - 2 * (X @ c.T) + c2[None, :]).argmin(axis=1)
+                X = _stack(pdf["emb"])
+                assign = _sq_l2(X, c).argmin(axis=1)
                 np.add.at(cnt, assign, 1)
                 np.add.at(acc, assign, X)
             nz = np.nonzero(cnt)[0]
@@ -673,29 +676,20 @@ def kmeans_assign(
     """Nearest-centroid assignment: ``(vec_id, cluster, dist)`` with
     ``dist`` the Euclidean distance (rounded 1e-6).  One Arrow matmul
     per batch, centroids in the closure — no shuffle, no join."""
-    import pandas as pd
-    from collections.abc import Iterator
-
     c = np.asarray(centroids, dtype=np.float64)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c2 = (c**2).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            d2 = (X**2).sum(axis=1)[:, None] - 2 * (X @ c.T) + c2[None, :]
-            a = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vid"],
-                    "cluster": a.astype(np.int32),
-                    "dist": np.sqrt(np.maximum(d2[np.arange(len(a)), a], 0.0)).round(6),
-                }
-            )
+    def assign(pdf, X):
+        d2 = _sq_l2(X, c)
+        a = d2.argmin(axis=1)
+        return {
+            "vec_id": pdf["vid"],
+            "cluster": a.astype(np.int32),
+            "dist": np.sqrt(np.maximum(d2[np.arange(len(a)), a], 0.0)).round(6),
+        }
 
-    src = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("emb"))
-    return src.mapInPandas(fn, schema="vec_id long, cluster int, dist double")
+    return _map_vectors(
+        embeddings, id_col, vec_col, assign, "vec_id long, cluster int, dist double"
+    )
 
 
 def cluster_embeddings(
@@ -734,20 +728,12 @@ def pq_train(
     kilobytes; it travels in task closures from then on.  Training runs
     on a bounded deterministic driver-side sample (the standard PQ
     recipe — codebooks need distribution shape, not the full corpus;
-    same bound as the IVF coarse quantizer and `pca_project`).
+    same bound as the IVF coarse quantizer and `pca_project`); an empty
+    corpus raises.
     """
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    dsub = dim // m
-    sample = np.stack(
-        [
-            np.asarray(r["emb"], dtype=np.float64)
-            for r in embeddings.select(F.col(vec_col).alias("emb"))
-            .orderBy(F.col(id_col))
-            .limit(train_sample)
-            .collect()
-        ]
-    )
+    sample = _sample(embeddings, train_sample, id_col, vec_col, "pq_train")
     return _fit_codebooks(sample, m, k, [seed + j for j in range(m)], iters)
 
 
@@ -773,14 +759,7 @@ def _nearest_codes(R: np.ndarray, books: np.ndarray) -> np.ndarray:
     m, _, dsub = books.shape
     code = np.empty((R.shape[0], m), dtype=np.int32)
     for j in range(m):
-        Rj = R[:, j * dsub : (j + 1) * dsub]
-        b = books[j]
-        bd = (
-            (Rj**2).sum(axis=1)[:, None]
-            - 2 * (Rj @ b.T)
-            + (b**2).sum(axis=1)[None, :]
-        )
-        code[:, j] = np.argmin(bd, axis=1)
+        code[:, j] = np.argmin(_sq_l2(R[:, j * dsub : (j + 1) * dsub], books[j]), axis=1)
     return code
 
 
@@ -795,21 +774,11 @@ def pq_encode(
     the compression that lets a 100 TB embedding store fit a scan
     budget.  One Arrow matmul per subspace per batch; codebooks ride
     the closure."""
-    import pandas as pd
-    from collections.abc import Iterator
 
-    m, k, dsub = codebooks.shape
+    def encode(pdf, X):
+        return {"vec_id": pdf["vid"], "code": list(_nearest_codes(X, codebooks))}
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            codes = _nearest_codes(X, codebooks)
-            yield pd.DataFrame({"vec_id": pdf["vid"], "code": list(codes)})
-
-    src = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("emb"))
-    return src.mapInPandas(fn, schema="vec_id long, code array<int>")
+    return _map_vectors(embeddings, id_col, vec_col, encode, "vec_id long, code array<int>")
 
 
 def pq_topk(
@@ -826,7 +795,8 @@ def pq_topk(
     approximate squared L2 distance is ``m`` table lookups summed —
     no vector is ever decompressed.
 
-    ``(query_id, vec_id, adist, rank)``, ascending ``adist``.
+    ``(query_id, vec_id, adist, rank)``, ascending ``adist``; an empty
+    query batch gives an empty result.
 
     Scale shape: queries are collected once (a query batch is small by
     construction — same contract as ``brute_force_topk``); the code
@@ -835,53 +805,37 @@ def pq_topk(
     a final window ranks P·|Q|·k candidate rows — never |corpus|·|Q|.
     """
     import pandas as pd
-    from collections.abc import Iterator
 
+    got = _collect_queries(queries, query_id_col, vec_col)
+    if got is None:
+        return _empty(codes, "query_id long, vec_id long, adist double, rank int")
+    qids, Q = got
     m, kc, dsub = codebooks.shape
-    qrows = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in qrows])
     # distance tables: (|Q|, m, kc)
     tables = np.empty((len(qids), m, kc), dtype=np.float64)
     for j in range(m):
-        Qj = Q[:, j * dsub : (j + 1) * dsub]
-        c = codebooks[j]
-        tables[:, j, :] = (
-            (Qj**2).sum(axis=1)[:, None] - 2 * (Qj @ c.T) + (c**2).sum(axis=1)[None, :]
-        )
+        tables[:, j, :] = _sq_l2(Q[:, j * dsub : (j + 1) * dsub], codebooks[j])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["code"]])
-            n = len(pdf)
-            # adist[q, i] = sum_j tables[q, j, C[i, j]]
-            ad = np.zeros((len(qids), n), dtype=np.float64)
-            for j in range(m):
-                ad += tables[:, j, :][:, C[:, j]]
-            vids = pdf["vec_id"].to_numpy()
-            # keep k+1 per batch: a query drawn from the corpus occupies
-            # one slot with its own ~0-distance code row, and the final
-            # self-filter runs AFTER this truncation — keeping only k
-            # would silently drop the true k-th neighbor (or return k-1
-            # rows when the corpus fits one Arrow batch).
-            keep = min(k + 1, n)
-            part = np.argpartition(ad, keep - 1, axis=1)[:, :keep]
-            out_q = np.repeat(qids, keep)
-            out_v = vids[part.reshape(-1)]
-            out_d = np.take_along_axis(ad, part, axis=1).reshape(-1)
-            yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "adist": out_d})
+            part, dist = _smallest(_adc(tables, _codes(pdf)), k)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, part.shape[1]),
+                    "vec_id": pdf["vec_id"].to_numpy()[part.reshape(-1)],
+                    "adist": dist.reshape(-1),
+                }
+            )
 
-    cands = codes.mapInPandas(fn, schema="query_id long, vec_id long, adist double")
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        cands.where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adist", F.round("adist", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    cands = codes.mapInPandas(scan, schema="query_id long, vec_id long, adist double")
+    return _topk(
+        cands.where(F.col("vec_id") != F.col("query_id")).withColumn(
+            "adist", F.round("adist", 6)
+        ),
+        k,
+        "adist",
     )
 
 
@@ -912,37 +866,11 @@ def pq_topk_refined(
         codes, queries, codebooks, k=k * oversample,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     ).select("query_id", "vec_id")
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qvn"),
-        )
-    )
-    full = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cvn"),
-    )
-    scored = (
-        F.broadcast(shortlist)
-        .join(full, "vec_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qv"), F.col("__cv"), F.col("__qvn"), F.col("__cvn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return _rerank(
+        F.broadcast(shortlist),
+        _side(embeddings, id_col, "vec_id", "c", vec_col),
+        F.broadcast(_side(queries, query_id_col, "query_id", "q", vec_col)),
+        k,
     )
 
 
@@ -977,7 +905,7 @@ def ivf_pq_topk(
     ``k·oversample ≥ |corpus|`` the shortlist is the whole corpus and
     the output EQUALS brute-force cosine top-k (the registry gate's
     exactness config); recall at real approximate configs is measured
-    in tests.
+    in tests.  An empty corpus or query batch gives an empty result.
 
     Scale shape: one scan encodes (cell + code per vector, Arrow
     batches); the search scans ~``n_probe/n_cells`` of the code table —
@@ -986,47 +914,37 @@ def ivf_pq_topk(
     on the broadcast shortlist ids.  Codebooks and centroids travel in
     closures (kilobytes).
     """
-    import pandas as pd
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    empty_schema = "query_id long, vec_id long, sim double, rank int"
     trained = _train_ivfpq_quantizers(
         embeddings, n_cells, m, k_codes, seed, max_train_sample, id_col, vec_col
     )
-    if trained is None:  # empty corpus: no neighbors to return
-        return embeddings.sparkSession.createDataFrame([], empty_schema)
+    if trained is None:
+        return _empty(embeddings, _TOPK_SCHEMA)
     cents, books = trained
     codes = _encode_ivfpq(embeddings, cents, books, id_col, vec_col)
-
     prep = _query_probe_tables(queries, cents, books, n_probe, query_id_col, vec_col)
-    if prep is None:  # empty query batch: empty result, not an np.stack crash
-        return embeddings.sparkSession.createDataFrame([], empty_schema)
+    if prep is None:
+        return _empty(embeddings, _TOPK_SCHEMA)
     return _ivf_pq_search(
-        codes, queries, embeddings, books, prep, k, oversample,
-        id_col, vec_col, query_id_col,
+        codes, queries, embeddings, prep, k, oversample, id_col, vec_col, query_id_col
     )
 
 
 def _train_ivfpq_quantizers(
-    embeddings, n_cells, m, k_codes, seed, max_train_sample, id_col, vec_col
+    embeddings, n_cells, m, k_codes, seed, max_train_sample, id_col, vec_col, trainer=None
 ):
     """Coarse quantizer + residual codebooks from one driver-side sample
     (the standard recipe: quantizers need distribution shape only) —
     shared by ``ivf_pq_topk`` (inline) and ``ivf_pq_build`` (persisted),
     so the two can never drift in sampling rule or seed derivation.
-    Returns ``(centroids, codebooks)`` or None for an empty corpus."""
-    srows = (
-        embeddings.select(F.col(vec_col).alias("emb"))
-        .orderBy(F.col(id_col))
-        .limit(max_train_sample)
-        .collect()
-    )
-    if not srows:
+    Returns ``(centroids, codebooks)``, or None for an empty corpus
+    (which raises instead when ``trainer`` names the caller)."""
+    sample = _sample(embeddings, max_train_sample, id_col, vec_col, trainer)
+    if sample is None:
         return None
-    sample = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in srows])
     cents = _kmeans(sample, n_cells, seed)
-    d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    resid = sample - cents[np.argmin(d2, axis=1)]
+    resid = sample - cents[_nearest(sample, cents)]
     books = _fit_codebooks(resid, m, k_codes, [seed + 7 * j + 1 for j in range(m)])
     return cents, books
 
@@ -1034,29 +952,15 @@ def _train_ivfpq_quantizers(
 def _encode_ivfpq(embeddings, cents, books, id_col, vec_col) -> DataFrame:
     """Nearest cell + residual PQ code per corpus vector (one Arrow
     matmul pass; quantizers ride the closure)."""
-    import pandas as pd
-    from collections.abc import Iterator
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c2 = (cents**2).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            cd = (X**2).sum(axis=1)[:, None] - 2 * (X @ cents.T) + c2[None, :]
-            cell = np.argmin(cd, axis=1)
-            code = _nearest_codes(X - cents[cell], books)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vid"],
-                    "cell": cell.astype(np.int32),
-                    "code": list(code),
-                }
-            )
+    def encode(pdf, X):
+        cell = np.argmin(_sq_l2(X, cents), axis=1)
+        code = _nearest_codes(X - cents[cell], books)
+        return {"vec_id": pdf["vid"], "cell": cell.astype(np.int32), "code": list(code)}
 
-    return embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("emb")
-    ).mapInPandas(encode, schema="vec_id long, cell int, code array<int>")
+    return _map_vectors(
+        embeddings, id_col, vec_col, encode, "vec_id long, cell int, code array<int>"
+    )
 
 
 def _query_probe_tables(queries, cents, books, n_probe, query_id_col, vec_col):
@@ -1064,17 +968,13 @@ def _query_probe_tables(queries, cents, books, n_probe, query_id_col, vec_col):
     same contract as brute_force_topk/pq_topk): nearest probed cells per
     query + per-(query, probed cell) residual ADC tables.  Returns
     ``(qids, probes, tables)`` or None for an empty query batch."""
-    m, k_codes, dsub = books.shape
-    qrows = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    if not qrows:
+    got = _collect_queries(queries, query_id_col, vec_col)
+    if got is None:
         return None
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in qrows])
-    qcd = (Q**2).sum(axis=1)[:, None] - 2 * (Q @ cents.T) + (cents**2).sum(axis=1)[None, :]
+    qids, Q = got
+    m, k_codes, dsub = books.shape
     n_probe_eff = min(int(n_probe), cents.shape[0])
-    probes = np.argsort(qcd, axis=1)[:, :n_probe_eff]  # (|Q|, n_probe)
+    probes = np.argsort(_sq_l2(Q, cents), axis=1)[:, :n_probe_eff]  # (|Q|, n_probe)
     # tables[qi, pi, j, :] = distances of (q - cell_centroid) subvector j
     # to codebook j's entries
     tables = np.empty((len(qids), n_probe_eff, m, k_codes), dtype=np.float64)
@@ -1092,7 +992,6 @@ def _ivf_pq_search(
     codes: DataFrame,
     queries: DataFrame,
     embeddings: DataFrame,
-    books: np.ndarray,
     prep: tuple,
     k: int,
     oversample: int,
@@ -1105,24 +1004,21 @@ def _ivf_pq_search(
     inline) and ``ivf_pq_search`` (codes read from a persisted,
     cell-pruned index)."""
     import pandas as pd
-    from collections.abc import Iterator
 
-    m = books.shape[0]
     qids, probes, tables = prep
-    n_probe_eff = probes.shape[1]
     shortlist_k = k * oversample
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches):
         # probe lookup: cell -> list of (query_index, probe_index)
         probe_of: dict[int, list[tuple[int, int]]] = {}
         for qi in range(len(qids)):
-            for pi in range(n_probe_eff):
+            for pi in range(probes.shape[1]):
                 probe_of.setdefault(int(probes[qi, pi]), []).append((qi, pi))
         for pdf in batches:
             if not len(pdf):
                 continue
             cells = pdf["cell"].to_numpy()
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["code"]])
+            C = _codes(pdf)
             vids = pdf["vec_id"].to_numpy()
             out_q, out_v, out_d = [], [], []
             for cell in np.unique(cells):
@@ -1132,15 +1028,10 @@ def _ivf_pq_search(
                 rows = np.flatnonzero(cells == cell)
                 Cc = C[rows]
                 for qi, pi in hits:
-                    t = tables[qi, pi]  # (m, k_codes)
-                    ad = np.zeros(rows.shape[0], dtype=np.float64)
-                    for j in range(m):
-                        ad += t[j, Cc[:, j]]
-                    keep = min(shortlist_k + 1, rows.shape[0])
-                    part = np.argpartition(ad, keep - 1)[:keep]
-                    out_q.append(np.full(keep, qids[qi]))
+                    part, dist = _smallest(_adc(tables[qi, pi], Cc), shortlist_k)
+                    out_q.append(np.full(part.shape[0], qids[qi]))
                     out_v.append(vids[rows[part]])
-                    out_d.append(ad[part])
+                    out_d.append(dist)
             if out_q:
                 yield pd.DataFrame(
                     {
@@ -1151,44 +1042,14 @@ def _ivf_pq_search(
                 )
 
     cands = codes.mapInPandas(scan, schema="query_id long, vec_id long, adist double")
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    shortlist = (
-        cands.where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("__r", F.row_number().over(ws))
-        .where(F.col("__r") <= shortlist_k)
-        .select("query_id", "vec_id")
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qvn"),
-        )
-    )
-    full = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cvn"),
-    )
-    scored = (
-        F.broadcast(shortlist)
-        .join(full, "vec_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qv"), F.col("__cv"), F.col("__qvn"), F.col("__cvn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    shortlist = _topk(
+        cands.where(F.col("vec_id") != F.col("query_id")), shortlist_k, "adist"
+    ).select("query_id", "vec_id")
+    return _rerank(
+        F.broadcast(shortlist),
+        _side(embeddings, id_col, "vec_id", "c", vec_col),
+        F.broadcast(_side(queries, query_id_col, "query_id", "q", vec_col)),
+        k,
     )
 
 
@@ -1215,15 +1076,14 @@ def ivf_pq_build(
     pruning, which is the inverted-list file-skipping story at 100 TB
     (cost ∝ probed fraction, not corpus size).  ``{path}/quantizer.npz``
     holds the coarse centroids + residual codebooks (kilobytes, driver-
-    side).  Determinism: same (corpus, seed) → identical index."""
+    side).  Determinism: same (corpus, seed) → identical index.  An
+    empty corpus raises."""
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    trained = _train_ivfpq_quantizers(
-        embeddings, n_cells, m, k_codes, seed, max_train_sample, id_col, vec_col
+    cents, books = _train_ivfpq_quantizers(
+        embeddings, n_cells, m, k_codes, seed, max_train_sample, id_col, vec_col,
+        "ivf_pq_build",
     )
-    if trained is None:
-        raise ValueError("cannot build an IVF-PQ index over an empty corpus")
-    cents, books = trained
     (
         _encode_ivfpq(embeddings, cents, books, id_col, vec_col)
         .write.partitionBy("cell")
@@ -1285,19 +1145,18 @@ def ivf_pq_search(
     ``embeddings``.  Same output contract as ``ivf_pq_topk``; with
     ``n_probe >= n_cells`` and ``k·oversample ≥ |corpus|`` it equals
     brute-force cosine top-k."""
-    spark = queries.sparkSession
     qz = np.load(f"{path}/quantizer.npz")
-    cents, books = qz["centroids"], qz["codebooks"]
-    prep = _query_probe_tables(queries, cents, books, n_probe, query_id_col, vec_col)
+    prep = _query_probe_tables(
+        queries, qz["centroids"], qz["codebooks"], n_probe, query_id_col, vec_col
+    )
     if prep is None:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, sim double, rank int"
-        )
+        return _empty(queries, _TOPK_SCHEMA)
     probed = sorted({int(c) for c in prep[1].ravel()})
-    codes = spark.read.parquet(f"{path}/codes").where(F.col("cell").isin(probed))
+    codes = queries.sparkSession.read.parquet(f"{path}/codes").where(
+        F.col("cell").isin(probed)
+    )
     return _ivf_pq_search(
-        codes, queries, embeddings, books, prep, k, oversample,
-        id_col, vec_col, query_id_col,
+        codes, queries, embeddings, prep, k, oversample, id_col, vec_col, query_id_col
     )
 
 
@@ -1314,7 +1173,7 @@ def sq8_encode(
     carry no direction to search.  The raw scale is staged under an
     internal name so no downstream display alias can lateral-capture
     the arithmetic."""
-    v = F.transform(vec_col, lambda x: x.cast("double"))
+    v = _doubles(vec_col)
     scale = F.aggregate(
         v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
     ) / F.lit(127.0)
@@ -1354,63 +1213,13 @@ def sq8_topk(
     :func:`pq_topk_refined`."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("__qvec"),
-        ).withColumn("__qn", _norm(F.col("__qvec")))
-    )
+    q = F.broadcast(_side(queries, query_id_col, "query_id", "q", _doubles(vec_col)))
     pre_k = k if refine_with is None else max(shortlist or 4 * k, k)
-    scored = (
-        codes.select(
-            "vec_id", F.transform("q8", lambda x: x.cast("double")).alias("__c")
-        )
-        .withColumn("__cn", _norm(F.col("__c")))
-        .crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qvec"), F.col("__c"), F.col("__qn"), F.col("__cn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    short = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= pre_k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    short = _topk(_score(q, _side(codes, "vec_id", "vec_id", "c", _doubles("q8"))), pre_k)
     if refine_with is None:
         return short
-    exact = refine_with.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__e"),
-    ).withColumn("__en", _norm(F.col("__e")))
-    rescored = (
-        short.select("query_id", "vec_id")
-        .join(exact, "vec_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qvec"), F.col("__e"), F.col("__qn"), F.col("__en")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    exact = _side(refine_with, id_col, "vec_id", "c", _doubles(vec_col))
+    return _rerank(short.select("query_id", "vec_id"), exact, q, k)
 
 
 def ivf_pq_delete(
@@ -1432,7 +1241,8 @@ def ivf_pq_delete(
        overwrite can't replace a partition with zero rows).
 
     Returns the number of code rows removed.  The quantizer is
-    untouched — deletes never change how surviving vectors encode."""
+    untouched — deletes never change how surviving vectors encode.  The
+    survivors' checkpoint is released before the call returns."""
     spark = ids.sparkSession
     codes_path = f"{path}/codes"
     codes = spark.read.parquet(codes_path)
@@ -1445,32 +1255,35 @@ def ivf_pq_delete(
         return 0
     touched = codes.where(F.col("cell").isin(affected))
     n_before = touched.count()
-    survivors = touched.join(key, "vec_id", "left_anti").localCheckpoint(
-        eager=True  # sever lineage from the files the overwrite replaces
-    )
-    keep_cells = {
-        r["cell"] for r in survivors.select("cell").distinct().collect()
-    }
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    lineage = _Lineage()
     try:
-        if keep_cells:
-            (
-                survivors.where(F.col("cell").isin(list(keep_cells)))
-                .write.partitionBy("cell")
-                .mode("overwrite")
-                .parquet(codes_path)
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-    emptied = [c for c in affected if c not in keep_cells]
-    if emptied:
-        from plda_spark.sources.snapshot import _FS
+        # eager: sever lineage from the files the overwrite replaces
+        survivors = lineage.cut(touched.join(key, "vec_id", "left_anti"), eager=True)
+        keep_cells = {
+            r["cell"] for r in survivors.select("cell").distinct().collect()
+        }
+        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            if keep_cells:
+                (
+                    survivors.where(F.col("cell").isin(list(keep_cells)))
+                    .write.partitionBy("cell")
+                    .mode("overwrite")
+                    .parquet(codes_path)
+                )
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+        emptied = [c for c in affected if c not in keep_cells]
+        if emptied:
+            from plda_spark.sources.snapshot import _FS
 
-        fs = _FS(spark, codes_path)
-        for c in emptied:
-            fs.delete(f"{codes_path}/cell={c}", recursive=True)
-    return n_before - survivors.count()
+            fs = _FS(spark, codes_path)
+            for c in emptied:
+                fs.delete(f"{codes_path}/cell={c}", recursive=True)
+        return n_before - survivors.count()
+    finally:
+        lineage.release()
 
 
 def matryoshka_topk(
@@ -1497,79 +1310,53 @@ def matryoshka_topk(
     SQ8 shrinks bytes-per-coordinate, the matryoshka prefix shrinks
     coordinates-per-vector; both keep the exact re-rank.  ``slice`` is
     a JVM array expression, the shortlist is a per-query window over
-    prefix scores, and only |queries|·shortlist rows reach the full-dim
-    join — the corpus is scanned once at prefix width.
+    prefix scores (rounded like every ranking sim, so its order and its
+    DuckDB twin are engine-stable), and only |queries|·shortlist rows
+    reach the full-dim join — the corpus is scanned once at prefix
+    width.
     """
     if prefix_dim < 1:
         raise ValueError("prefix_dim must be >= 1")
     if k < 1:
         raise ValueError("k must be >= 1")
     pre_k = max(shortlist or 4 * k, k)
-    pfx = lambda c: F.slice(c, 1, prefix_dim)  # noqa: E731
+    pfx = F.slice(F.col(vec_col), 1, prefix_dim)
     q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            pfx(F.col(vec_col)).alias("__qpfx"),
-        ).withColumn("__qpn", _norm(F.col("__qpfx")))
-        .withColumn("__qn", _norm(F.col("__qvec")))
+        _side(queries, query_id_col, "query_id", "q", vec_col, pfx.alias("__qpv"))
+        .withColumn("__qpn", _norm(F.col("__qpv")))
     )
-    short = (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), pfx(F.col(vec_col)).alias("__cpfx")
-        )
-        .withColumn("__cpn", _norm(F.col("__cpfx")))
-        .crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # rounded like every ranking sim in this module so the
-            # shortlist's order (and its DuckDB twin) is engine-stable
-            F.round(
-                _cosine_staged(
-                    F.col("__qpfx"), F.col("__cpfx"), F.col("__qpn"), F.col("__cpn")
-                ),
-                6,
-            ).alias("__psim"),
-        )
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("__psim"), F.asc("vec_id")
-    )
-    short = (
-        short.withColumn("__prank", F.row_number().over(wp))
-        .where(F.col("__prank") <= pre_k)
-        .select("query_id", "vec_id")
-    )
-    full = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cvec"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    )
-    rescored = (
-        short.join(full, "vec_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_staged(
-                    F.col("__qvec"), F.col("__cvec"), F.col("__qn"), F.col("__cn")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    prefix = _side(embeddings, id_col, "vec_id", "cp", pfx)
+    short = _topk(_score(q, prefix, tags=("qp", "cp")), pre_k).select("query_id", "vec_id")
+    return _rerank(short, _side(embeddings, id_col, "vec_id", "c", vec_col), q, k)
 
 
-_MMR_MAX_LITERALS = 20_000
+_MAX_LITERALS = 20_000
+
+
+def _literal_budget(op: str, k: int, dim: int, advice: str) -> None:
+    """Refuse a plan that would embed more than ``_MAX_LITERALS`` vector
+    coordinates (``k`` vectors of ``dim``) as literals: a larger budget
+    compiles a megabyte-scale expression tree."""
+    if k * dim > _MAX_LITERALS:
+        raise ValueError(
+            f"{op}: k*dim = {k}*{dim} = {k * dim} literal vector "
+            f"coordinates > {_MAX_LITERALS}; {advice}"
+        )
+
+
+def _centroid_d2s(vec: Column, centroids) -> Column:
+    """Squared L2 distances of ``vec`` to each literal centroid, as an
+    array column: double left-folds, so an SQL replayer lands on the
+    same bits."""
+    cents_lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
+    return F.transform(
+        cents_lit,
+        lambda c: F.aggregate(
+            F.zip_with(vec, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ),
+    )
 
 
 def mmr_rerank(
@@ -1633,7 +1420,7 @@ def mmr_rerank(
         )
     rows = candidates.select(
         F.col(id_col).alias("__id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
+        _doubles(vec_col).alias("__vec"),
         F.col(score_col).cast("double").alias("__score"),
     ).collect()
 
@@ -1663,13 +1450,11 @@ def mmr_rerank(
     cand = [(r["__id"], list(r["__vec"]), float(r["__score"])) for r in rows]
     seed = _pick(cand, key=lambda c: c[2])
     dim = len(seed[1])
-    if k * dim > _MMR_MAX_LITERALS:
-        raise ValueError(
-            f"mmr_rerank: k*dim = {k}*{dim} = {k * dim} literal vector "
-            f"coordinates > {_MMR_MAX_LITERALS}; MMR is a RERANKER — "
-            "run it on a retrieval stage's top-N candidates, not a "
-            "corpus, or shrink k"
-        )
+    _literal_budget(
+        "mmr_rerank", k, dim,
+        "MMR is a RERANKER — run it on a retrieval stage's top-N "
+        "candidates, not a corpus, or shrink k",
+    )
 
     def _dot(a: list, b: list) -> float:  # left fold, engine order
         s = 0.0
@@ -1754,33 +1539,13 @@ def silhouette_simplified(
     k = len(centroids)
     if k < 2:
         raise ValueError(f"need >= 2 centroids, got {k}")
-    n_lits = int(k) * int(len(centroids[0]))
-    if n_lits > 20_000:
-        raise ValueError(
-            f"silhouette_simplified: k*dim = {n_lits} literal centroid "
-            "coordinates > 20000; the plan embeds every coordinate as "
-            "a literal (the kcenter/MMR contract) and a larger budget "
-            "compiles a megabyte-scale expression tree. Reduce k, "
-            "project to fewer dimensions, or score against a centroid "
-            "TABLE via a bucketed join instead."
-        )
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in c]) for c in centroids]
-    )
-    d2s = F.transform(
-        cents_lit,
-        lambda c: F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                c,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+    _literal_budget(
+        "silhouette_simplified", int(k), int(len(centroids[0])),
+        "reduce k, project to fewer dimensions, or score against a "
+        "centroid TABLE via a bucketed join instead.",
     )
     staged = embeddings.select(
-        F.col(id_col).alias("__id"), d2s.alias("__d2s")
+        F.col(id_col).alias("__id"), _centroid_d2s(F.col(vec_col), centroids).alias("__d2s")
     )
     a2 = F.array_min("__d2s")
     # first index of the min = lowest cluster id on ties (matches the
@@ -1965,33 +1730,14 @@ def kmeans_fit_exact(
             "filter or pad them upstream."
         )
     cents = [[float(x) for x in r["__v"]] for r in init_rows]
-    if k * dim > 20_000:
-        raise ValueError(
-            f"kmeans_fit_exact: k*dim = {k * dim} literal centroid "
-            "coordinates > 20000 (the kcenter/MMR budget); reduce k or "
-            "project to fewer dimensions first."
-        )
+    _literal_budget(
+        "kmeans_fit_exact", k, dim, "reduce k or project to fewer dimensions first."
+    )
 
     def _assign(cent_rows):
-        cents_lit = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in cent_rows]
-        )
-        d2s = F.transform(
-            cents_lit,
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.col("__v"),
-                    c,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
         staged = embeddings.select(
             F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-        ).withColumn("__d2s", d2s)
+        ).withColumn("__d2s", _centroid_d2s(F.col("__v"), cent_rows))
         own = F.array_position(F.col("__d2s"), F.array_min("__d2s"))
         return staged.select(
             "__id",

@@ -31,7 +31,11 @@ def pytest_configure(config):
 # Nor are the streaming-ledger writer tests, which pin the exactly-once
 # and one-row-per-batch contracts of the shared ledger driver, or the
 # graph, connected-components and k-center semantics tests, which pin
-# the shared graph builders, round loop and lineage release.
+# the shared graph builders, round loop and lineage release, or the
+# similarity tests (IVF-PQ build / append / delete / search, blocked
+# near-dup, k-means, PCA, MMR and the semantic-dedup oracle), which pin
+# the shared vector-search core: side staging, scoring, top-k, exact
+# re-rank, training sample and checkpoint release.
 SLOW_TESTS = {
     "test_as_of_join_matches_pandas_merge_asof",
     "test_association_rules_semantics",
@@ -44,21 +48,14 @@ SLOW_TESTS = {
     "test_domain_filter_block_allow_partition",
     "test_dp_quantile_and_pareto_semantics",
     "test_dsir_weights_favor_target_distribution",
-    "test_embedding_near_dup_blocked_exhaustive_equals_unblocked",
     "test_encode_viterbi_and_unk",
     "test_every_oracle_parses_in_duckdb",
     "test_every_query_analyzes",
-    "test_extra_query_matches_oracle[dedup_semantic]",
     "test_extra_query_matches_oracle[stats_bootstrap_ci]",
     "test_gev_block_maxima_semantics",
     "test_hilbert_fold_matches_reference_walk",
     "test_interval_join_matches_batch",
     "test_inverted_index_and_phrase_search",
-    "test_ivf_pq_append_equals_build_on_union",
-    "test_ivf_pq_delete_equals_build_on_remainder",
-    "test_ivf_pq_index_persist_prune_and_exactness",
-    "test_kmeans_fit_exact_wcss_partition_invariant",
-    "test_kmeans_recovers_separated_clusters",
     "test_kpss_level_semantics",
     "test_ljung_box_and_retention_fit_semantics",
     "test_logreg2_and_kendall_semantics",
@@ -67,10 +64,8 @@ SLOW_TESTS = {
     "test_manifest_chain_index_bounds_reads",
     "test_markov_attribution_semantics",
     "test_mcnemar_and_runs_semantics",
-    "test_mmr_rerank_semantics",
     "test_mutual_information_semantics",
     "test_nb_eval_semantics",
-    "test_normalize_and_pca_project",
     "test_ols2_and_pca2_semantics",
     "test_operators_handle_empty_input",
     "test_privacy_semantics",
@@ -129,20 +124,20 @@ def sf_dir():
 def _numpy_kernel():
     from plda_spark.lda import _ckernel
 
-    os.environ["PLDA_SPARK_NO_CKERNEL"] = "1"
-    _ckernel._tried = False
+    saved = _ckernel._lib, _ckernel._tried
+    _ckernel._lib, _ckernel._tried = None, True
     try:
         yield
     finally:
-        os.environ.pop("PLDA_SPARK_NO_CKERNEL", None)
-        _ckernel._tried = False
+        _ckernel._lib, _ckernel._tried = saved
 
 
 @pytest.fixture(scope="session")
 def numpy_kernel():
     """``with numpy_kernel():`` runs the LDA kernel on its numpy loop,
-    with the compiled C sweep hidden; the C sweep is looked up again on
-    exit.  Session-scoped so hypothesis tests can take it."""
+    with the compiled C sweep hidden in this process; the C sweep's
+    lookup state is restored on exit.  Session-scoped so hypothesis
+    tests can take it."""
     return _numpy_kernel
 
 

@@ -42,6 +42,13 @@ def test_c_kernel_builds():
     assert _ckernel.get_sweep_fn() is not None
 
 
+def test_numpy_kernel_hides_the_c_sweep(numpy_kernel):
+    sweep = _ckernel.get_sweep_fn()
+    with numpy_kernel():
+        assert _ckernel.get_sweep_fn() is None
+    assert _ckernel.get_sweep_fn() is sweep
+
+
 @pytest.mark.parametrize("train", [True, False])
 @pytest.mark.parametrize("seed", [1, 42])
 def test_c_matches_numpy_bitwise(numpy_kernel, train, seed):

@@ -3177,6 +3177,52 @@ def test_ivf_pq_delete_equals_build_on_remainder(spark, embeddings, tmp_path):
     assert spark.read.parquet(f"{idx}/codes").count() == remaining.count() + n_gone
 
 
+def test_ivf_pq_delete_releases_its_checkpoint(spark, embeddings, tmp_path):
+    """ivf_pq_delete returns an int, so nothing may read its survivors'
+    checkpoint afterwards: the persisted-RDD ids are back at their
+    baseline when it returns.  Checked without forcing a GC; ids, not
+    counts, since a GC during the call may clean up earlier tests' RDDs."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    idx = str(tmp_path / "idx")
+    similarity.ivf_pq_build(embeddings, dim=8, path=idx, n_cells=4, m=4,
+                            k_codes=8, seed=11)
+    gone = embeddings.where(F.col("vec_id") % 3 == 0).select("vec_id")
+    n_gone = gone.count()
+    before = persisted()
+    assert similarity.ivf_pq_delete(gone, idx) == n_gone
+    assert persisted() - before == set()
+
+
+def test_similarity_empty_corpus(spark, tmp_path):
+    """One rule for an empty corpus: the search and pair operators return
+    an empty frame of their output schema, and the trainers raise
+    ``ValueError("<operator>: empty corpus")``."""
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    qs = spark.createDataFrame([(0, [1.0] * 8)], "query_id long, embedding array<float>")
+    topk = "struct<query_id:bigint,vec_id:bigint,sim:double,rank:int>"
+    for got, schema in [
+        (similarity.ivf_topk(empty, qs, dim=8), topk),
+        (similarity.ivf_pq_topk(empty, qs, dim=8, m=4), topk),
+        (similarity.embedding_near_dup_pairs_blocked(empty, dim=8),
+         "struct<id_a:bigint,id_b:bigint,sim:double>"),
+    ]:
+        assert got.schema.simpleString() == schema
+        assert got.count() == 0
+    for name, train in [
+        ("pca_project", lambda: similarity.pca_project(empty, dim=8, out_dim=2)),
+        ("kmeans_fit", lambda: similarity.kmeans_fit(empty, k=2)),
+        ("pq_train", lambda: similarity.pq_train(empty, dim=8, m=4)),
+        ("ivf_pq_build", lambda: similarity.ivf_pq_build(
+            empty, dim=8, path=str(tmp_path / "idx"), m=4)),
+    ]:
+        with pytest.raises(ValueError, match=f"^{name}: empty corpus$"):
+            train()
+
+
 def test_bootstrap_ci_properties(spark):
     """Bootstrap CI: deterministic across runs, brackets the sample
     mean for well-behaved data, and width shrinks ~1/sqrt(n)."""
