@@ -11,7 +11,7 @@ two steps, which is a private *exchange* with three implementations:
   broadcasts it each iteration (the reference replicates it per rank,
   ``README.md:125``).  The sweep is a shuffle-free ``mapInPandas`` over the
   hash-partitioned assignments, and the reduce collects one sparse count
-  row per partition — pre-summed by a shuffle once P ≥ 256, the tree end of
+  row per pid — pre-summed by a shuffle once P ≥ 256, the tree end of
   the reference's recursive AllReduce (``mpi_lda.cc:58-92``).
 - ``words`` (``model_mode='join'``): the model is a ``(word_id, cnts)``
   DataFrame that never touches the driver.  Each partition receives only
@@ -33,6 +33,14 @@ the sweep (``lda.cc:128-136``).  So the exchanges agree bit for bit on the
 counts and on the likelihoods, and a run resumed from a checkpoint equals
 an uninterrupted one.
 
+P sets the chain; token volume sets the Spark tasks.  The z-init and the
+broadcast sweep run in min(P, :func:`_auto_partitions`) tasks, each of
+which walks a whole run of pids in (pid, doc_id) order, one pid at a time
+with that pid's own RNG, model copy and payload.  A Python task has a
+fixed cost (~0.2 s of worker CPU, ``docs/SCALING.md``) that a small
+corpus's sweep (~10 ms) cannot amortise over P tasks, and the task count
+does not change a single bit of the output.
+
 Within an iteration cross-partition counts are one iteration stale —
 precisely the AD-LDA relaxation the reference itself makes across MPI
 ranks (Newman et al., NIPS 2007; ``README.md:267``).
@@ -48,6 +56,7 @@ deterministic for a fixed (seed, num_partitions).
 
 from __future__ import annotations
 
+import itertools
 import math
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
@@ -89,6 +98,9 @@ class TrainConfig:
     compute_likelihood: bool = False
     average_model: bool = True  # True = lda semantics; False = mpi_lda raw counts
     seed: int = 42
+    # P, the AD-LDA partition count: it sets the Markov chain (a doc's pid
+    # and RNG streams), not the number of Spark tasks, which follows the
+    # token volume (see _auto_partitions).  None sizes P by that rule too.
     num_partitions: int | None = None
     # Fault tolerance for long jobs: every ``checkpoint_every`` iterations
     # the assignments (parquet) + driver state (npz) land in
@@ -128,17 +140,20 @@ class TrainConfig:
             )
 
 
-# Auto-partitioning targets (used when TrainConfig.num_partitions is None).
-# Each Gibbs iteration is one job whose per-task fixed cost (scheduling,
-# Arrow round-trip, Python worker dispatch) is amortized over the tokens in
-# the partition — so partitions are sized by token volume, not row count:
-#   P = min(parallelism, ceil(tokens / _TOKENS_PER_PARTITION))   # small corpora
-#   P = max(P, ceil(tokens / _MAX_TOKENS_PER_PARTITION), 1)      # memory floor
-# A sf0.1-sized corpus (~1M tokens) gets 4 partitions instead of 32 (8x less
-# fixed overhead per iteration); a 100M-token corpus saturates the cluster;
-# the floor bounds per-task occ+z memory (~8 bytes/token) regardless of
-# parallelism.  More partitions than cores is never useful here: AD-LDA
-# staleness and payload volume both grow with P (lda_paper.pdf §4.1).
+# Token-volume sizing.  Each Gibbs iteration is one job whose per-task
+# fixed cost (scheduling, Arrow round-trip, Python worker dispatch — ~0.2 s
+# of worker CPU) is amortized over the tokens in the task — so tasks are
+# sized by token volume, not row count:
+#   n = min(parallelism, ceil(tokens / _TOKENS_PER_PARTITION))   # small corpora
+#   n = max(n, ceil(tokens / _MAX_TOKENS_PER_PARTITION), 1)      # memory floor
+# The rule sizes P when TrainConfig.num_partitions is None, and it always
+# sizes the z-init and broadcast sweep tasks: min(P, n), each task walking
+# a run of whole pids.  A sf0.1-sized corpus (~1M tokens) gets 4 tasks
+# instead of 32 (8x less fixed overhead per iteration); a 100M-token
+# corpus saturates the cluster; the floor bounds per-task occ+z memory
+# (~8 bytes/token) regardless of parallelism.  More partitions than cores
+# is never useful here: AD-LDA staleness and payload volume both grow with
+# P (lda_paper.pdf §4.1).
 _TOKENS_PER_PARTITION = 250_000
 _MAX_TOKENS_PER_PARTITION = 64_000_000
 
@@ -146,6 +161,12 @@ _MAX_TOKENS_PER_PARTITION = 64_000_000
 def _auto_partitions(total_tokens: int, parallelism: int) -> int:
     p = min(parallelism, -(-total_tokens // _TOKENS_PER_PARTITION) or 1)
     return max(p, -(-total_tokens // _MAX_TOKENS_PER_PARTITION), 1)
+
+
+def _num_tasks(num_partitions: int, total_tokens: int, parallelism: int) -> int:
+    """Spark tasks of the z-init and broadcast sweep: never more than the
+    P pids, otherwise as many as the token volume asks for."""
+    return min(num_partitions, _auto_partitions(total_tokens, parallelism))
 
 
 @dataclass
@@ -254,21 +275,43 @@ def _chunk_rows(pid: int, acc: np.ndarray, rows: np.ndarray | None, ll: float,
     )
 
 
+def _pid_runs(batches: Iterable[pd.DataFrame]) -> Iterator[tuple[int, Iterator[pd.DataFrame]]]:
+    """A task's Arrow batches, sorted by (pid, doc_id), as runs of pids:
+    ``(pid, that pid's docs in doc_id order)``.  A batch is split where the
+    pid changes and a run may span batches, so how the task's rows are
+    batched does not matter.  Consume each run before taking the next."""
+
+    def pieces() -> Iterator[tuple[int, pd.DataFrame]]:
+        for docs in batches:
+            if not len(docs):
+                continue
+            pids = docs["pid"].to_numpy()
+            cuts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1), len(docs)]
+            for lo, hi in itertools.pairwise(cuts):
+                yield int(pids[lo]), docs.iloc[lo:hi]
+
+    for pid, run in itertools.groupby(pieces(), key=lambda piece: piece[0]):
+        yield pid, (docs for _, docs in run)
+
+
 def _zinit_pass(batches: Iterable[pd.DataFrame], num_topics: int, seed: int,
                 encode: Callable) -> Iterator[pd.DataFrame]:
-    """Random z-init of ONE pid's packed docs ``(pid, doc_id, word_occ:
-    array<int>)``, taken in doc_id order: one iid topic per occurrence
-    (lda.cc:66-69) from the (seed, pid, 0) stream.  Yields the docs in the
-    sweep layout, then the pid's initial counts through ``encode``."""
-    pid = None
+    """Random z-init of one task's packed docs ``(pid, doc_id, word_occ:
+    array<int>)``, sorted by (pid, doc_id).  Each pid draws one iid topic
+    per occurrence (lda.cc:66-69) from its own (seed, pid, 0) stream, in
+    doc_id order.  Yields each pid's docs in the sweep layout, then that
+    pid's initial counts through ``encode``."""
+    for pid, run in _pid_runs(batches):
+        yield from _zinit_pid(pid, run, num_topics, seed, encode)
+
+
+def _zinit_pid(pid: int, batches: Iterable[pd.DataFrame], num_topics: int, seed: int,
+               encode: Callable) -> Iterator[pd.DataFrame]:
+    """:func:`_zinit_pass` of ONE pid's docs."""
+    rng = kernel.make_rng(seed, pid, 0)
     occ_parts: list[np.ndarray] = []
     z_parts: list[np.ndarray] = []
     for docs in batches:
-        if not len(docs):
-            continue
-        if pid is None:
-            pid = int(docs["pid"].iloc[0])
-            rng = kernel.make_rng(seed, pid, 0)
         occs = [np.asarray(o, dtype=np.int32) for o in docs["word_occ"]]
         zs = [kernel.init_assignments(len(o), num_topics, rng) for o in occs]
         occ_parts += occs
@@ -282,14 +325,13 @@ def _zinit_pass(batches: Iterable[pd.DataFrame], num_topics: int, seed: int,
                 "ll": np.zeros(len(docs)),
             }
         )
-    if pid is not None:
-        occ = np.concatenate(occ_parts).astype(np.int64)
-        rows = np.unique(occ)
-        acc = np.bincount(
-            np.searchsorted(rows, occ) * num_topics + np.concatenate(z_parts),
-            minlength=rows.shape[0] * num_topics,
-        )
-        yield encode(pid, acc, rows, 0.0)
+    occ = np.concatenate(occ_parts).astype(np.int64)
+    rows = np.unique(occ)
+    acc = np.bincount(
+        np.searchsorted(rows, occ) * num_topics + np.concatenate(z_parts),
+        minlength=rows.shape[0] * num_topics,
+    )
+    yield encode(pid, acc, rows, 0.0)
 
 
 def _unpack_docs(docs: pd.DataFrame):
@@ -308,10 +350,10 @@ def _unpack_docs(docs: pd.DataFrame):
     return offsets, word_occ, z
 
 
-def _sweep_pass(batches: Iterable[pd.DataFrame], nwk0: np.ndarray, nk0: np.ndarray,
-                rows: np.ndarray | None, index: Callable[[np.ndarray], np.ndarray],
-                encode: Callable, config: TrainConfig, vocab_size: int,
-                iteration: int) -> Iterator[pd.DataFrame]:
+def _sweep_pid(pid: int, batches: Iterable[pd.DataFrame], nwk0: np.ndarray,
+               nk0: np.ndarray, rows: np.ndarray | None,
+               index: Callable[[np.ndarray], np.ndarray], encode: Callable,
+               config: TrainConfig, vocab_size: int, iteration: int) -> Iterator[pd.DataFrame]:
     """One pid's Gibbs sweep — the core every exchange runs.
 
     ``batches`` are the pid's docs in doc_id order; ``(nwk0, nk0)`` is the
@@ -326,14 +368,9 @@ def _sweep_pass(batches: Iterable[pd.DataFrame], nwk0: np.ndarray, nk0: np.ndarr
     K = nk0.shape[0]
     nwk, nk = nwk0.copy(), nk0.copy()
     acc = np.zeros(nwk.size, dtype=np.int64)
-    pid = None
+    rng = kernel.make_rng(config.seed, pid, iteration + 1)
     lls: list[np.ndarray] = []
     for docs in batches:
-        if not len(docs):
-            continue
-        if pid is None:
-            pid = int(docs["pid"].iloc[0])
-            rng = kernel.make_rng(config.seed, pid, iteration + 1)
         offsets, word_occ, z = _unpack_docs(docs)
         occ = index(word_occ)
         ll = (
@@ -356,8 +393,7 @@ def _sweep_pass(batches: Iterable[pd.DataFrame], nwk0: np.ndarray, nk0: np.ndarr
                 "ll": ll,
             }
         )
-    if pid is not None:
-        yield encode(pid, acc, rows, float(np.concatenate(lls).sum()))
+    yield encode(pid, acc, rows, float(np.concatenate(lls).sum()))
 
 
 def _same_ids(word_occ: np.ndarray) -> np.ndarray:
@@ -367,13 +403,15 @@ def _same_ids(word_occ: np.ndarray) -> np.ndarray:
 
 def _broadcast_sweep_fn(bc_nwk, encode: Callable, config: TrainConfig, vocab_size: int,
                         iteration: int):
-    """mapInPandas sweep of one hash partition (= one pid, docs already in
-    doc_id order) against the broadcast model."""
+    """mapInPandas sweep of one task's runs of pids (rows in (pid, doc_id)
+    order) against the broadcast model, one pid at a time."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         nwk0 = bc_nwk.value
-        return _sweep_pass(batches, nwk0, nwk0.sum(axis=0), None, _same_ids, encode,
-                           config, vocab_size, iteration)
+        nk0 = nwk0.sum(axis=0)
+        for pid, run in _pid_runs(batches):
+            yield from _sweep_pid(pid, run, nwk0, nk0, None, _same_ids, encode, config,
+                                  vocab_size, iteration)
 
     return fn
 
@@ -446,8 +484,8 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
         if not len(docs):  # chunks reach every pid, with docs or not
             return docs
         nwk0, rows, index = assemble(model)
-        out = _sweep_pass([docs.sort_values("doc_id")], nwk0, nk, rows, index, encode,
-                          config, vocab_size, iteration)
+        out = _sweep_pid(int(key[0]), [docs.sort_values("doc_id")], nwk0, nk, rows, index,
+                         encode, config, vocab_size, iteration)
         return pd.concat(list(out), ignore_index=True)
 
     return fn
@@ -462,16 +500,24 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
 # ---------------------------------------------------------------------------
 
 
-def _zinit(packed: DataFrame, config: TrainConfig, encode: Callable) -> DataFrame:
+def _lay_out(df: DataFrame, tasks: int) -> DataFrame:
+    """Docs hash-partitioned by doc_id into P, laid out in ``tasks`` Spark
+    tasks.  Every partition holds whole pids: partition p holds pid p, or
+    a run of them where AQE coalesced the exchange.  ``coalesce`` is
+    narrow and keeps partitions whole, so each task holds whole pids too,
+    and the sort puts each pid's docs together, in doc_id order.  This is
+    the one sort: checkpoints keep row order, so from here on every
+    broadcast sweep streams its task in (pid, doc_id) order without a
+    shuffle."""
+    return df.coalesce(tasks).sortWithinPartitions("pid", "doc_id")
+
+
+def _zinit(packed: DataFrame, tasks: int, config: TrainConfig, encode: Callable) -> DataFrame:
     """The z-init of every exchange, with its payload rows in ``encode``'s
-    wire format.  ``pack_docs`` hash-partitions by doc_id into P, so
-    partition p holds exactly the docs of pid p and the init needs no
-    shuffle.  This is the one sort: checkpoints keep row order, so from
-    here on every broadcast sweep streams its partition in doc_id order
-    without a shuffle."""
+    wire format, in ``tasks`` Spark tasks and no shuffle."""
     zinit = partial(_zinit_pass, num_topics=config.num_topics, seed=config.seed,
                     encode=encode)
-    return packed.sortWithinPartitions("doc_id").mapInPandas(zinit, schema=_SWEEP_SCHEMA)
+    return _lay_out(packed, tasks).mapInPandas(zinit, schema=_SWEEP_SCHEMA)
 
 
 # The broadcast reduce sums the P payload rows on the driver below this
@@ -547,7 +593,7 @@ class _Broadcast:
         )
 
     def reduce(self, df_z: DataFrame, lineage: _Lineage):
-        """Rebuild n_wk from the per-partition payloads — the reduce end of
+        """Rebuild n_wk from the per-pid payloads — the reduce end of
         the reference's AllReduce (mpi_lda.cc:58-110)."""
         K = self.config.num_topics
         if self.P >= _SHUFFLE_AGG_MIN_PARTITIONS:
@@ -875,12 +921,14 @@ def _resolve_join_exchange(config: TrainConfig, vocab_size: int,
     return "chunks" if (dense_ok and token_rich and volume_ok) else "words"
 
 
-def _save_checkpoint(path: str, df_z: DataFrame, it: int, lls, words, accum, ex) -> None:
+def _save_checkpoint(path: str, df_z: DataFrame, it: int, lls, words, accum, ex,
+                     total_tokens: int) -> None:
     """The assignments (parquet, payload rows included) plus one npz of
     driver state.  The exchange, its partition count and chunk width are
     saved because a resumed run must continue in the geometry it started
-    with: rows carry pids baked from the original P.  n_wk is not saved —
-    the payload rows rebuild it."""
+    with: rows carry pids baked from the original P.  The token total
+    sizes the resumed run's tasks for the cluster it resumes on.  n_wk is
+    not saved — the payload rows rebuild it."""
     df_z.write.mode("overwrite").parquet(f"{path}/assignments")
     np.savez(
         f"{path}/state.npz",
@@ -891,20 +939,20 @@ def _save_checkpoint(path: str, df_z: DataFrame, it: int, lls, words, accum, ex)
         exchange=ex.name,
         num_partitions=ex.P,
         chunk_width=ex.W,
+        num_tokens=total_tokens,
     )
 
 
 def _load_checkpoint(spark, path: str):
     """Inverse of :func:`_save_checkpoint`: (state npz, assignments), the
-    assignments hash-partitioned and sorted the way a fresh run lays them
-    out."""
+    assignments hash-partitioned into the checkpoint's P and laid out the
+    way a fresh run lays them out, in as many tasks as the checkpoint's
+    token total asks for on this cluster."""
     with np.load(f"{path}/state.npz", allow_pickle=True) as npz:
         state = dict(npz)
-    df_z = (
-        spark.read.parquet(f"{path}/assignments")
-        .repartition(int(state["num_partitions"]), "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    P = int(state["num_partitions"])
+    tasks = _num_tasks(P, int(state["num_tokens"]), spark.sparkContext.defaultParallelism)
+    df_z = _lay_out(spark.read.parquet(f"{path}/assignments").repartition(P, "doc_id"), tasks)
     return state, df_z
 
 
@@ -968,12 +1016,15 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
                 "doc_id", "word_id", "count"
             )
-            # pack_docs hash-partitions by doc_id into P, so partition p
-            # holds exactly the docs of pid p.
+            # pack_docs hash-partitions by doc_id into P, so a partition
+            # holds whole pids.  When P equals spark.sql.shuffle.partitions
+            # Spark reuses the doc_id aggregate's exchange for it, which
+            # AQE may coalesce into runs of pids; _lay_out handles both.
             packed = pack_docs(corpus_ids, P).withColumn(
                 "pid", F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
             )
-            df_z = lineage.cut(_zinit(packed, config, ex.encode))
+            tasks = _num_tasks(P, total_tokens, parallelism)
+            df_z = lineage.cut(_zinit(packed, tasks, config, ex.encode))
             lls: list[float] = []
             accum = np.zeros((V, K)) if name == "broadcast" else None
             start_it = 0
@@ -987,6 +1038,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             )
             df_z = lineage.cut(df_z)
             lls = [float(x) for x in state["lls"]]
+            total_tokens = int(state["num_tokens"])
             accum = state["accum"] if name == "broadcast" else None
             start_it = int(state["next_iteration"])
             if config.average_model and accum is None:
@@ -1012,7 +1064,8 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             if accum is not None and it >= config.burn_in_iterations:
                 accum += nwk
             if config.checkpoint_dir and (it + 1) % config.checkpoint_every == 0:
-                _save_checkpoint(config.checkpoint_dir, df_z, it, lls, words, accum, ex)
+                _save_checkpoint(config.checkpoint_dir, df_z, it, lls, words, accum, ex,
+                                 total_tokens)
         nwk, model_table = ex.final(nwk, lineage)
     finally:
         for held in (setup, prev, lineage):

@@ -351,9 +351,9 @@ def lsh_topk(
     def band_rows(sig_df: DataFrame, who: str, tag: str) -> DataFrame:
         # the vector norm is staged here, ahead of the bucket join, so the
         # re-rank's cosine is the dot product only (8 bytes/row extra
-        # through the shuffle vs an O(dim) fold per candidate pair).  It
-        # shares the explode's projection, which Spark evaluates above the
-        # Generate: once per (vector, band) row.
+        # through the shuffle vs an O(dim) fold per candidate pair).  The
+        # side's projection sits below the band explode, so the norm is
+        # folded once per vector, not once per (vector, band) row.
         bb = F.explode(
             F.array(
                 *[
@@ -367,9 +367,9 @@ def lsh_topk(
                 ]
             )
         ).alias("bb")
-        return _side(sig_df, "vec_id", who, tag, "embedding", bb).select(
-            who, f"__{tag}v", f"__{tag}n", "bb.band", "bb.bucket"
-        )
+        return _side(sig_df, "vec_id", who, tag, "embedding", "sig").select(
+            who, f"__{tag}v", f"__{tag}n", bb
+        ).select(who, f"__{tag}v", f"__{tag}n", "bb.band", "bb.bucket")
 
     q, c = band_rows(q_sig, "query_id", "q"), band_rows(c_sig, "vec_id", "c")
     return _topk(_score(q, c, on=["band", "bucket"]), k)

@@ -1,5 +1,7 @@
 """Operator tests: text analysis, dedup, similarity, multimodal plumbing."""
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -319,6 +321,28 @@ def test_lsh_topk_recalls_near_dup(spark, embeddings):
     q = embeddings.where(F.col("vec_id") == 0).withColumnRenamed("vec_id", "query_id")
     res = similarity.lsh_topk(embeddings, q, dim=8, k=3, num_planes=16, bands=8).collect()
     assert any(r["vec_id"] == 1 and r["rank"] == 1 for r in res)
+
+
+def test_lsh_topk_folds_each_norm_once(spark, embeddings):
+    """Each side's norm is staged below its band explode, so the O(dim)
+    fold runs once per vector, not once per (vector, band) row: in the
+    physical plan every ``SQRT(aggregate(…))`` sits in a Generate's
+    subtree and none above it."""
+    q = embeddings.where(F.col("vec_id") == 0).withColumnRenamed("vec_id", "query_id")
+    df = similarity.lsh_topk(embeddings, q, dim=8, k=3, num_planes=16, bands=8)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    norms = {i for i, line in enumerate(lines) if "SQRT(aggregate(" in line}
+    gens = [i for i, line in enumerate(lines) if "Generate explode" in line]
+    assert len(gens) == 2 and len(norms) == 2
+    for g in gens:
+        below = itertools.takewhile(
+            lambda i: depth(lines[i]) > depth(lines[g]), range(g + 1, len(lines))
+        )
+        assert len(norms & set(below)) == 1
 
 
 def test_embedding_near_dup_pairs(spark, embeddings):

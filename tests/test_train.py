@@ -621,3 +621,153 @@ def test_join_resume_uses_checkpointed_partition_count(spark, tmp_path):
         resume_from=ckpt,
     ).raw_model
     assert np.array_equal(straight.nwk, resumed.nwk)
+
+
+def _stage_tasks(spark, group: str) -> list[list[int]]:
+    """The task count of every stage that ran, per job of job group
+    ``group``, in job order."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = []
+    for jid in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in sorted(tracker.getJobInfo(jid).stageIds)]
+        jobs.append([s.numTasks for s in stages if s is not None and s.numCompletedTasks])
+    return jobs
+
+
+def test_broadcast_task_count_follows_token_volume(spark):
+    """P = 4 on a small corpus: the z-init and every broadcast iteration
+    run min(P, token-sized) Spark tasks — here 1 — and an iteration is
+    still one job.  The iteration jobs are the last ones of a train and
+    the z-init job (the first reduce) comes right before them."""
+    from plda_spark.lda import train as train_mod
+
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    P = 4
+    want = train_mod._num_tasks(P, 30 * 20, spark.sparkContext.defaultParallelism)
+    assert want == 1 < P
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for n in (1, 3):
+            group = f"task-count-{n}"
+            sc.setJobGroup(group, group)
+            train(corpus, TrainConfig(num_topics=3, total_iterations=n, burn_in_iterations=0,
+                                      seed=3, num_partitions=P))
+            jobs[n] = _stage_tasks(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs[3]) - len(jobs[1]) == 2
+    for n, got in jobs.items():
+        assert got[-(n + 1):] == [[want]] * (n + 1), got
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    """Arrow batches of 3 rows, so batches straddle pid boundaries and a
+    pid's docs span several batches; the setting is restored after."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    yield
+    spark.conf.set(conf, old)
+
+
+def _record_layouts(monkeypatch) -> list[int]:
+    """The task count of every z-init or resume layout ``train`` builds."""
+    from plda_spark.lda import train as train_mod
+
+    seen: list[int] = []
+    lay_out = train_mod._lay_out
+
+    def recording(df, tasks):
+        seen.append(tasks)
+        return lay_out(df, tasks)
+
+    monkeypatch.setattr(train_mod, "_lay_out", recording)
+    return seen
+
+
+# _TOKENS_PER_PARTITION values that make a 600-token corpus run 1, 2 and 4
+# tasks at P = 4 on local[4].
+_TASKS_AT = {1: 10**9, 2: 300, 4: 150}
+
+
+@pytest.mark.parametrize("exchange", sorted(EXCHANGES))
+def test_task_count_does_not_move_a_bit(spark, tmp_path, monkeypatch, tiny_arrow_batches,
+                                        exchange):
+    """P sets the chain, not the task count: at P = 4, training in 1, 2
+    or 4 tasks gives bit-equal n_wk, n_k, likelihoods and final z."""
+    from plda_spark.lda import train as train_mod
+
+    assert spark.sparkContext.defaultParallelism >= 4
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    seen = _record_layouts(monkeypatch)
+    out = {}
+    for tasks, per_task in _TASKS_AT.items():
+        monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", per_task)
+        ckpt = str(tmp_path / f"t{tasks}")
+        res = train(corpus, TrainConfig(
+            num_topics=3, total_iterations=2, burn_in_iterations=0, compute_likelihood=True,
+            average_model=exchange == "broadcast", seed=17, num_partitions=4,
+            checkpoint_dir=ckpt, checkpoint_every=2, **EXCHANGES[exchange],
+        ))
+        z = spark.read.parquet(f"{ckpt}/assignments").toPandas()
+        out[tasks] = res, z.sort_values(["pid", "doc_id"], ignore_index=True)
+    assert seen == list(_TASKS_AT)
+    ref, ref_z = out[1]
+    for tasks in (2, 4):
+        res, z = out[tasks]
+        assert np.array_equal(ref.raw_model.nwk, res.raw_model.nwk), tasks
+        assert np.array_equal(ref.raw_model.nk, res.raw_model.nk), tasks
+        assert np.array_equal(ref.model.nwk, res.model.nwk), tasks
+        assert ref.log_likelihood == res.log_likelihood, tasks
+        assert ref_z.equals(z), tasks
+
+
+def test_resume_in_another_task_count(spark, tmp_path, monkeypatch, tiny_arrow_batches):
+    """A checkpoint written by a 1-task run resumes in 4 tasks, bit-equal
+    to an uninterrupted 2-task run."""
+    from plda_spark.lda import train as train_mod
+
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    ckpt = str(tmp_path / "ckpt")
+    base = dict(num_topics=3, burn_in_iterations=1, compute_likelihood=True, seed=31,
+                num_partitions=4)
+    seen = _record_layouts(monkeypatch)
+    monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", _TASKS_AT[2])
+    straight = train(corpus, TrainConfig(**base, total_iterations=4))
+    monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", _TASKS_AT[1])
+    train(corpus, TrainConfig(**base, total_iterations=2, checkpoint_dir=ckpt,
+                              checkpoint_every=2))
+    monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", _TASKS_AT[4])
+    resumed = train(corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt)
+    assert seen == [2, 1, 4]
+    assert np.array_equal(straight.raw_model.nwk, resumed.raw_model.nwk)
+    assert np.array_equal(straight.model.nwk, resumed.model.nwk)
+    assert resumed.log_likelihood == straight.log_likelihood
+
+
+def test_chain_ignores_shuffle_partitions(spark):
+    """With P equal to ``spark.sql.shuffle.partitions`` Spark drops the
+    P-way repartition of the packed docs (the doc_id aggregate below it
+    already hash-partitions them) and AQE may coalesce that aggregate's
+    partitions, so a task can hold several pids in a doc_id-sorted mix.
+    The z-init and sweep split every task by pid, so the chain is the
+    same as when the repartition stays."""
+    conf = "spark.sql.shuffle.partitions"
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    cfg = TrainConfig(num_topics=3, total_iterations=2, burn_in_iterations=0,
+                      compute_likelihood=True, seed=5, num_partitions=4)
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "4")
+        same = train(corpus, cfg)
+        spark.conf.set(conf, "16")
+        other = train(corpus, cfg)
+    finally:
+        spark.conf.set(conf, old)
+    assert np.array_equal(same.raw_model.nwk, other.raw_model.nwk)
+    assert same.log_likelihood == other.log_likelihood

@@ -8,8 +8,11 @@ difference of the two calls over the difference of their iteration counts
 is the marginal cost of one Gibbs iteration (``iter_s``) and the intercept
 is what a call pays whatever its length (``fixed_s``: setup, z-init, the
 final model collect) — the split perfbench's ``iter_s`` / ``fixed_s``
-report.  One untimed one-iteration call warms the JVM and compiles the C
-sweep kernel first.
+report.  ``tasks_per_iter`` is the same difference of the two calls'
+Spark task counts, read from the status tracker: in broadcast mode an
+iteration is one stage, so it is the sweep stage's task count, which
+follows the token volume while P (``cores``) sets the chain.  One untimed
+one-iteration call warms the JVM and compiles the C sweep kernel first.
 
 Usage (from the repository root, so the Python workers import the
 package from the working directory):
@@ -71,10 +74,28 @@ def _triples_fn(avg_len: int, vocab: int):
     return gen
 
 
-def _timed_train(spark, path: str, cfg: TrainConfig) -> tuple[float, int]:
-    t0 = time.perf_counter()
-    raw = train(spark.read.parquet(path), cfg).raw_model
-    return time.perf_counter() - t0, int(raw.nwk.sum())
+def _tasks(sc, group: str) -> int:
+    """Spark tasks run by the jobs of job group ``group``."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {sid for jid in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(jid).stageIds}
+    return sum(info.numCompletedTasks for info in map(tracker.getStageInfo, stages) if info)
+
+
+def _timed_train(spark, path: str, cfg: TrainConfig) -> tuple[float, int, int]:
+    """(wall s, Σn_wk, Spark tasks) of one ``train`` call."""
+    sc = spark.sparkContext
+    group = f"train-{cfg.total_iterations}-{time.perf_counter_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.perf_counter()
+        raw = train(spark.read.parquet(path), cfg).raw_model
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return wall, int(raw.nwk.sum()), _tasks(sc, group)
 
 
 def main() -> None:
@@ -110,8 +131,8 @@ def main() -> None:
                                average_model=False, seed=42, num_partitions=P, **MODES[mode])
 
         _timed_train(spark, path, config(n_lo))  # warm-up, untimed
-        t_lo, tok_lo = _timed_train(spark, path, config(n_lo))
-        t_hi, tok_hi = _timed_train(spark, path, config(n_hi))
+        t_lo, tok_lo, tasks_lo = _timed_train(spark, path, config(n_lo))
+        t_hi, tok_hi, tasks_hi = _timed_train(spark, path, config(n_hi))
         if tok_lo != n_tokens or tok_hi != n_tokens:
             raise SystemExit(f"model counts {tok_lo}, {tok_hi} != {n_tokens} tokens")
         iter_s = (t_hi - t_lo) / (n_hi - n_lo)
@@ -120,6 +141,7 @@ def main() -> None:
             "cores": P, "driver_mem": driver_mem, "iterations": [n_lo, n_hi],
             "wall_s": [round(t_lo, 2), round(t_hi, 2)],
             "iter_s": round(iter_s, 3), "fixed_s": round(t_lo - n_lo * iter_s, 3),
+            "tasks_per_iter": round((tasks_hi - tasks_lo) / (n_hi - n_lo), 2),
             "tokens_per_sec_per_iter": int(n_tokens / iter_s) if iter_s > 0 else None,
         }))
     finally:
