@@ -84,6 +84,8 @@ def check_training_validity(a: argparse.Namespace) -> None:
         raise SystemExit(
             "Invalid burn_in_iterations: need 0 <= burn_in < total_iterations"
         )
+    if a.num_partitions is not None and a.num_partitions < 1:
+        raise SystemExit("Invalid num_partitions: must be >= 1")
 
 
 def check_inferring_validity(a: argparse.Namespace) -> None:

@@ -47,18 +47,18 @@ def _csr(occs) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _infer(frame: DataFrame, to_batch, nk: np.ndarray, alpha: float, beta: float,
-           total_iterations: int, burn_in_iterations: int, seed: int,
-           vocab_size: int | None = None) -> DataFrame:
+           total_iterations: int, burn_in_iterations: int, seed: int) -> DataFrame:
     """The one inference core behind every front end: one ``(seed, pid, 0)``
     RNG per partition and one :func:`kernel.infer_docs` call per Arrow
     batch, so θ depends only on the pid and the doc order within it.
-    ``to_batch(pdf) -> (word_occ, doc_offsets, nwk)`` is the front end's
-    part: the batch's docs in CSR form and the model rows they index."""
+    ``to_batch(pdf) -> (word_occ, doc_offsets, nwk, vocab_size)`` is the
+    front end's part: the batch's docs in CSR form, the model rows they
+    index, and V when those rows are not the whole model (else None)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rng = kernel.make_rng(seed, TaskContext.get().partitionId(), 0)
         for pdf in batches:
-            word_occ, offsets, nwk = to_batch(pdf)
+            word_occ, offsets, nwk, vocab_size = to_batch(pdf)
             theta = kernel.infer_docs(
                 word_occ, offsets, nwk, nk, alpha, beta, rng,
                 total_iterations, burn_in_iterations, vocab_size,
@@ -103,7 +103,7 @@ def transform(
     bc_nwk = sc.broadcast(model.nwk.astype(np.float64))
 
     def to_batch(pdf: pd.DataFrame):
-        return (*_csr(pdf["word_occ"]), bc_nwk.value)
+        return (*_csr(pdf["word_occ"]), bc_nwk.value, None)
 
     return _infer(packed, to_batch, model.nk.astype(np.float64), model.alpha,
                   model.beta, total_iterations, burn_in_iterations, seed)
@@ -158,7 +158,7 @@ def transform_stream(
             else np.empty(0, dtype=np.int32)
             for ws in pdf["toks"]
         ]
-        return (*_csr(occs), bc_nwk.value)
+        return (*_csr(occs), bc_nwk.value, None)
 
     return _infer(staged, to_batch, model.nk.astype(np.float64), model.alpha,
                   model.beta, total_iterations, burn_in_iterations, seed)
@@ -196,8 +196,6 @@ def transform_model_df(
     in-vocab word is omitted.
     """
     _check_iterations(total_iterations, burn_in_iterations)
-    vocab_size = model_df.count()
-
     joined = corpus.join(model_df, "word_id").select(
         "doc_id", "word_id", "count", "topic_counts"
     )
@@ -217,6 +215,9 @@ def transform_model_df(
                 )
             ).alias("occ_local"),
             F.transform("pairs", lambda p: p["topic_counts"]).alias("sub_counts"),
+            # V for the frozen denominator, as a scalar subquery: the
+            # action counts the model rows, building the frame runs no job.
+            model_df.select(F.count(F.lit(1))).scalar().alias("vocab_size"),
         )
         .where(F.size("occ_local") > 0)
     )
@@ -230,10 +231,11 @@ def transform_model_df(
         return (
             *_csr([o + b for o, b in zip(pdf["occ_local"], bases)]),
             np.array(rows, dtype=np.float64),
+            int(pdf["vocab_size"].iloc[0]),
         )
 
     return _infer(packed, to_batch, nk.astype(np.float64), alpha, beta,
-                  total_iterations, burn_in_iterations, seed, vocab_size)
+                  total_iterations, burn_in_iterations, seed)
 
 
 def write_inference_result(result: DataFrame, path: str, single_file: bool = False) -> None:

@@ -39,7 +39,11 @@ which walks a whole run of pids in (pid, doc_id) order, one pid at a time
 with that pid's own RNG, model copy and payload.  A Python task has a
 fixed cost (~0.2 s of worker CPU, ``docs/SCALING.md``) that a small
 corpus's sweep (~10 ms) cannot amortise over P tasks, and the task count
-does not change a single bit of the output.
+does not change a single bit of the output.  A broadcast corpus within
+one task's token budget runs on the driver instead (``_Driver``, plda's
+single-process ``lda``): after the setup jobs the loop calls the same
+z-init, sweep and payload code in the caller's process, with no Python
+task and no Spark job per iteration.
 
 Within an iteration cross-partition counts are one iteration stale —
 precisely the AD-LDA relaxation the reference itself makes across MPI
@@ -61,6 +65,7 @@ import math
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from functools import partial
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -129,6 +134,10 @@ class TrainConfig:
             raise ValueError("total_iterations must be > 0")
         if not (0 <= self.burn_in_iterations < self.total_iterations):
             raise ValueError("need 0 <= burn_in_iterations < total_iterations")
+        if self.num_partitions is not None and self.num_partitions < 1:
+            raise ValueError("num_partitions must be >= 1 (or None to size it by tokens)")
+        if self.checkpoint_every < 1:
+            raise ValueError("checkpoint_every must be >= 1")
         if self.model_mode not in ("broadcast", "join"):
             raise ValueError("model_mode must be broadcast|join")
         if self.join_exchange not in ("auto", "words", "chunks"):
@@ -148,9 +157,12 @@ class TrainConfig:
 #   n = max(n, ceil(tokens / _MAX_TOKENS_PER_PARTITION), 1)      # memory floor
 # The rule sizes P when TrainConfig.num_partitions is None, and it always
 # sizes the z-init and broadcast sweep tasks: min(P, n), each task walking
-# a run of whole pids.  A sf0.1-sized corpus (~1M tokens) gets 4 tasks
-# instead of 32 (8x less fixed overhead per iteration); a 100M-token
-# corpus saturates the cluster; the floor bounds per-task occ+z memory
+# a run of whole pids.  P sets the chain, token volume the tasks, and a
+# broadcast corpus of at most _TOKENS_PER_PARTITION tokens — one task's
+# worth — needs no task at all: it trains on the driver (_exchange).  A
+# sf0.1-sized corpus (~1M tokens) gets 4 tasks instead of 32 (8x less
+# fixed overhead per iteration); a 100M-token corpus saturates the
+# cluster; the floor bounds per-task occ+z memory
 # (~8 bytes/token) regardless of parallelism.  More partitions than cores
 # is never useful here: AD-LDA staleness and payload volume both grow with
 # P (lda_paper.pdf §4.1).
@@ -492,11 +504,12 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
 
 
 # ---------------------------------------------------------------------------
-# Driver side: one z-init, then the three exchanges.  Each exchange has the
-# same three steps — the per-iteration sweep, a reduce action returning
-# (n_k, n_wk or None, likelihood), and the final model — and keeps its own
-# Spark job shape: one job per iteration for broadcast, the cogroup plus
-# the n_k collect for the join exchanges.
+# Driver side: the exchanges.  Each has the same steps — the first
+# generation (z-init or a checkpoint), the per-iteration sweep, a reduce
+# returning (n_k, n_wk or None, likelihood), and the final model — and
+# keeps its own job shape: one job per iteration for broadcast, the
+# cogroup plus the n_k collect for the join exchanges, none for the
+# driver path.
 # ---------------------------------------------------------------------------
 
 
@@ -510,14 +523,6 @@ def _lay_out(df: DataFrame, tasks: int) -> DataFrame:
     broadcast sweep streams its task in (pid, doc_id) order without a
     shuffle."""
     return df.coalesce(tasks).sortWithinPartitions("pid", "doc_id")
-
-
-def _zinit(packed: DataFrame, tasks: int, config: TrainConfig, encode: Callable) -> DataFrame:
-    """The z-init of every exchange, with its payload rows in ``encode``'s
-    wire format, in ``tasks`` Spark tasks and no shuffle."""
-    zinit = partial(_zinit_pass, num_topics=config.num_topics, seed=config.seed,
-                    encode=encode)
-    return _lay_out(packed, tasks).mapInPandas(zinit, schema=_SWEEP_SCHEMA)
 
 
 # The broadcast reduce sums the P payload rows on the driver below this
@@ -569,47 +574,80 @@ def _reduce_shuffle(df_z: DataFrame, size: int) -> tuple[np.ndarray, float]:
     return flat, math.fsum(summed["ll"])
 
 
-class _Broadcast:
+def _payload_sum(payloads: pd.DataFrame, size: int) -> tuple[np.ndarray, float]:
+    """Sum sparse payload rows ``(z, ll)`` on the driver: the flat V·K
+    counts, and the summed likelihood (``fsum``, so row order does not
+    matter)."""
+    flat = np.zeros(size, dtype=np.int64)
+    for buf in payloads["z"]:
+        a = np.frombuffer(buf, dtype=np.int64)
+        flat[a[0::2]] += a[1::2]
+    return flat, math.fsum(payloads["ll"])
+
+
+class _Exchange:
+    """What the Spark exchanges share: a generation is a lazily
+    checkpointed DataFrame, started from the z-init or a checkpoint."""
+
+    def __init__(self, spark, vocab_size: int, num_partitions: int, chunk_width: int,
+                 config: TrainConfig) -> None:
+        self.spark = spark
+        self.V, self.P, self.W, self.config = vocab_size, num_partitions, chunk_width, config
+
+    def zinit(self, packed: DataFrame, tasks: int, lineage: _Lineage) -> DataFrame:
+        """The z-init, with its payload rows in ``encode``'s wire format, in
+        ``tasks`` Spark tasks and no shuffle."""
+        zinit = partial(_zinit_pass, num_topics=self.config.num_topics, seed=self.config.seed,
+                        encode=self.encode)
+        return lineage.cut(_lay_out(packed, tasks).mapInPandas(zinit, schema=_SWEEP_SCHEMA))
+
+    def resume(self, df_z: DataFrame, lineage: _Lineage) -> DataFrame:
+        return lineage.cut(df_z)
+
+    def frame(self, df_z: DataFrame) -> DataFrame:
+        """The generation as a DataFrame, for the checkpoint writer."""
+        return df_z
+
+    def close(self) -> None:
+        pass
+
+
+class _Broadcast(_Exchange):
     """model_mode='broadcast': the driver-held n_wk, re-broadcast each
     iteration; the sweep, its checkpoint and the payload collect are ONE
     job."""
 
     name = "broadcast"
 
-    def __init__(self, spark, vocab_size: int, num_partitions: int, chunk_width: int,
-                 config: TrainConfig) -> None:
-        self.sc = spark.sparkContext
-        self.V, self.P, self.W, self.config = vocab_size, num_partitions, 0, config
-        self.encode = partial(_payload_row, num_topics=config.num_topics)
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
+        self.encode = partial(_payload_row, num_topics=self.config.num_topics)
         self._bc = None
 
-    def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
-        self._bc = self.sc.broadcast(nwk)
+    def sweep(self, df_z: DataFrame, it: int, nk, nwk, lineage: _Lineage) -> DataFrame:
+        self._bc = self.spark.sparkContext.broadcast(nwk)
         # Payload rows carry the previous pass's counts and must not enter
         # the sweep; the filter is narrow (no shuffle).
-        return df_z.where(F.col("doc_id") >= 0).mapInPandas(
+        return lineage.cut(df_z.where(F.col("doc_id") >= 0).mapInPandas(
             _broadcast_sweep_fn(self._bc, self.encode, self.config, self.V, it),
             schema=_SWEEP_SCHEMA,
-        )
+        ))
 
     def reduce(self, df_z: DataFrame, lineage: _Lineage):
         """Rebuild n_wk from the per-pid payloads — the reduce end of
         the reference's AllReduce (mpi_lda.cc:58-110)."""
-        K = self.config.num_topics
-        if self.P >= _SHUFFLE_AGG_MIN_PARTITIONS:
-            flat, ll = _reduce_shuffle(df_z, self.V * K)
-        else:
-            pdf = df_z.where(F.col("doc_id") < 0).select("z", "ll").toPandas()
-            flat = np.zeros(self.V * K, dtype=np.int64)
-            for buf in pdf["z"]:
-                a = np.frombuffer(buf, dtype=np.int64)
-                flat[a[0::2]] += a[1::2]
-            ll = math.fsum(pdf["ll"])
+        flat, ll = self._sum(df_z)
         # The sweep that read the broadcast has run; its checkpoint holds
         # the output, so nothing can recompute through the closure.
         self.close()
-        nwk = flat.reshape(self.V, K)
+        nwk = flat.reshape(self.V, self.config.num_topics)
         return nwk.sum(axis=0), nwk, ll
+
+    def _sum(self, df_z: DataFrame) -> tuple[np.ndarray, float]:
+        size = self.V * self.config.num_topics
+        if self.P >= _SHUFFLE_AGG_MIN_PARTITIONS:
+            return _reduce_shuffle(df_z, size)
+        return _payload_sum(df_z.where(F.col("doc_id") < 0).select("z", "ll").toPandas(), size)
 
     def final(self, nwk, lineage: _Lineage):
         return nwk, None
@@ -620,21 +658,58 @@ class _Broadcast:
             self._bc = None
 
 
-class _Join:
+class _Driver(_Broadcast):
+    """The broadcast exchange for a corpus within one task's token budget,
+    run in the caller's process — plda's single-process ``lda``
+    (lda.cc:99-148) beside its ``mpi_lda``.  A generation is a pandas
+    frame of the same rows a Spark generation holds, collected once
+    through Arrow, and every step calls the executor code above: no
+    Python task and no Spark job per iteration, the same chain, payloads
+    and checkpoints."""
+
+    def zinit(self, packed: DataFrame, tasks: int, lineage: _Lineage) -> pd.DataFrame:
+        docs = _lay_out(packed, 1).toPandas()
+        return _generation(
+            _zinit_pass([docs], self.config.num_topics, self.config.seed, self.encode)
+        )
+
+    def resume(self, df_z: DataFrame, lineage: _Lineage) -> pd.DataFrame:
+        return df_z.toPandas()
+
+    def sweep(self, gen: pd.DataFrame, it: int, nk, nwk, lineage: _Lineage) -> pd.DataFrame:
+        fn = _broadcast_sweep_fn(SimpleNamespace(value=nwk), self.encode, self.config,
+                                 self.V, it)
+        return _generation(fn([gen[gen["doc_id"] >= 0]]))
+
+    def _sum(self, gen: pd.DataFrame) -> tuple[np.ndarray, float]:
+        return _payload_sum(gen[gen["doc_id"] < 0], self.V * self.config.num_topics)
+
+    def frame(self, gen: pd.DataFrame) -> DataFrame:
+        return self.spark.createDataFrame(gen, _SWEEP_SCHEMA)
+
+
+def _generation(frames: Iterable[pd.DataFrame]) -> pd.DataFrame:
+    """A driver-path generation: the rows a Spark task would emit, in order."""
+    frames = list(frames)
+    if not frames:  # a corpus of empty docs
+        return pd.DataFrame({"pid": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64),
+                             "word_occ": [], "z": [], "ll": np.empty(0)})
+    return pd.concat(frames, ignore_index=True)
+
+
+class _Join(_Exchange):
     """model_mode='join': the model table is rebuilt executor-side from the
     payload rows and only the K-vector n_k (model.cc:147-151) reaches the
     driver.  Subclasses define the wire format."""
 
-    def __init__(self, spark, vocab_size: int, num_partitions: int, chunk_width: int,
-                 config: TrainConfig) -> None:
-        self.spark = spark
-        self.V, self.P, self.W, self.config = vocab_size, num_partitions, chunk_width, config
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
         self.model: DataFrame | None = None
         self._model_ckpt: DataFrame | None = None
 
-    def sweep(self, df_z: DataFrame, it: int, nk, nwk) -> DataFrame:
+    def sweep(self, df_z: DataFrame, it: int, nk, nwk, lineage: _Lineage) -> DataFrame:
         fn = _cogroup_sweep_fn(self.assemble, nk, self.encode, self.config, self.V, it)
-        return (
+        return lineage.cut(
             df_z.where(F.col("doc_id") >= 0)
             .groupby("pid")
             .cogroup(self._slices().groupby("pid"))
@@ -677,9 +752,6 @@ class _Join:
             "word_id",
             F.transform("cnts", lambda c: c.cast("double")).alias("topic_counts"),
         )
-
-    def close(self) -> None:
-        pass
 
 
 class _Words(_Join):
@@ -903,6 +975,16 @@ class _Chunks(_Join):
 _EXCHANGES = {"broadcast": _Broadcast, "words": _Words, "chunks": _Chunks}
 
 
+def _exchange(name: str, total_tokens: int) -> type[_Exchange]:
+    """The exchange that runs ``name``: the driver path when a broadcast
+    corpus fits the token budget of one task, where a Spark job per
+    iteration would only add its fixed cost.  Join mode stays on Spark,
+    being for models too large for one machine."""
+    if name == "broadcast" and total_tokens <= _TOKENS_PER_PARTITION:
+        return _Driver
+    return _EXCHANGES[name]
+
+
 def _resolve_join_exchange(config: TrainConfig, vocab_size: int,
                            total_tokens: int, num_partitions: int) -> str:
     """'auto' picks chunks when (a) the dense V·K block fits the per-task
@@ -1012,7 +1094,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
                 else _resolve_join_exchange(config, V, total_tokens, P)
             )
             W = _chunk_grid(V, K, parallelism)[1] if name == "chunks" else 0
-            ex = _EXCHANGES[name](spark, V, P, W, config)
+            ex = _exchange(name, total_tokens)(spark, V, P, W, config)
             corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
                 "doc_id", "word_id", "count"
             )
@@ -1023,8 +1105,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             packed = pack_docs(corpus_ids, P).withColumn(
                 "pid", F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
             )
-            tasks = _num_tasks(P, total_tokens, parallelism)
-            df_z = lineage.cut(_zinit(packed, tasks, config, ex.encode))
+            df_z = ex.zinit(packed, _num_tasks(P, total_tokens, parallelism), lineage)
             lls: list[float] = []
             accum = np.zeros((V, K)) if name == "broadcast" else None
             start_it = 0
@@ -1033,12 +1114,12 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             words = [str(w) for w in state["words"]]
             V = len(words)
             name = str(state["exchange"])
-            ex = _EXCHANGES[name](
+            total_tokens = int(state["num_tokens"])
+            ex = _exchange(name, total_tokens)(
                 spark, V, int(state["num_partitions"]), int(state["chunk_width"]), config
             )
-            df_z = lineage.cut(df_z)
+            df_z = ex.resume(df_z, lineage)
             lls = [float(x) for x in state["lls"]]
-            total_tokens = int(state["num_tokens"])
             accum = state["accum"] if name == "broadcast" else None
             start_it = int(state["next_iteration"])
             if config.average_model and accum is None:
@@ -1048,12 +1129,12 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
                 )
 
         nk, nwk, _ = ex.reduce(df_z, lineage)
-        # The reduce materialized the first generation — nothing reads the
-        # corpus triples again.
+        # The reduce materialized the first generation (the driver path's
+        # z-init collected it) — nothing reads the corpus triples again.
         setup.release()
         for it in range(start_it, config.total_iterations):
             prev, lineage = lineage, _Lineage()
-            df_z = lineage.cut(ex.sweep(df_z, it, nk, nwk))
+            df_z = ex.sweep(df_z, it, nk, nwk, lineage)
             nk, nwk, ll = ex.reduce(df_z, lineage)
             # The reduce was the iteration's one action and the new
             # checkpoint now holds its output: the previous generation has
@@ -1064,8 +1145,8 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             if accum is not None and it >= config.burn_in_iterations:
                 accum += nwk
             if config.checkpoint_dir and (it + 1) % config.checkpoint_every == 0:
-                _save_checkpoint(config.checkpoint_dir, df_z, it, lls, words, accum, ex,
-                                 total_tokens)
+                _save_checkpoint(config.checkpoint_dir, ex.frame(df_z), it, lls, words, accum,
+                                 ex, total_tokens)
         nwk, model_table = ex.final(nwk, lineage)
     finally:
         for held in (setup, prev, lineage):

@@ -42,6 +42,8 @@ def corpus_file(tmp_path_factory):
         ["infer", "--model_file", "m", "--inference_data_file", "x",
          "--inference_result_file", "y", "--total_iterations", "-1",
          "--burn_in_iterations", "0"],
+        ["train", "--num_topics", "3", "--training_data_file", "x", "--model_file", "y",
+         "--total_iterations", "10", "--burn_in_iterations", "5", "--num_partitions", "0"],
     ],
 )
 def test_validators_reject(args):

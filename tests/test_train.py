@@ -216,6 +216,29 @@ def test_infer_front_ends_pinned(spark, tiny_result):
     )
 
 
+def test_model_df_frame_runs_no_job(spark, tiny_result):
+    """Building the model-as-DataFrame scoring frame runs no Spark job:
+    V is counted inside the caller's action."""
+    from plda_spark.lda import infer
+
+    model = tiny_result.raw_model
+    model_df = model.to_dataframe(spark).select("word_id", "topic_counts")
+    triples = spark.createDataFrame([(0, 1, 3), (1, 25, 4)],
+                                    "doc_id long, word_id long, count int")
+    sc = spark.sparkContext
+    group = "model-df-build"
+    try:
+        sc.setJobGroup(group, group)
+        df = infer.transform_model_df(model_df, model.nk, triples,
+                                      total_iterations=4, burn_in_iterations=2)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(r["doc_id"] for r in df.collect()) == [0, 1]
+
+
 def test_infer_all_oov_doc_and_empty_input(spark, tiny_result):
     """An all-OOV doc is omitted by transform and transform_model_df and
     scored all zeros by transform_stream; an empty input gives an empty
@@ -322,6 +345,16 @@ EXCHANGES = {
     "chunks": dict(model_mode="join", join_exchange="chunks"),
 }
 
+# _TOKENS_PER_PARTITION values that train a broadcast corpus of 600 to
+# 2,400 tokens on the driver, or on Spark in more than one task.
+_PATHS = {"driver": 10**9, "spark": 300}
+
+
+def _on_path(monkeypatch, path: str) -> None:
+    from plda_spark.lda import train as train_mod
+
+    monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", _PATHS[path])
+
 
 @pytest.mark.parametrize("exchange", sorted(EXCHANGES))
 def test_checkpoint_resume_bit_identical(spark, tmp_path, exchange):
@@ -351,6 +384,7 @@ def test_shuffle_aggregate_mode_identical(spark, monkeypatch):
     sum."""
     from plda_spark.lda import train as train_mod
 
+    _on_path(monkeypatch, "spark")
     triples = synthetic_corpus(spark, n_docs=30)
     cfg = TrainConfig(num_topics=4, total_iterations=3, burn_in_iterations=1,
                       seed=9, num_partitions=3, compute_likelihood=True)
@@ -476,10 +510,12 @@ def test_exchange_parity_broadcast_words_chunks(spark):
     assert mt_a == mt_b
 
 
-def test_likelihood_independent_of_arrow_batch_size(spark):
+@pytest.mark.parametrize("path", sorted(_PATHS))
+def test_likelihood_independent_of_arrow_batch_size(spark, monkeypatch, path):
     """The broadcast sweep streams a partition in Arrow batches; scoring
     each doc against the iteration's input model (lda.cc:128-136) makes
     both the counts and the likelihood independent of the batch size."""
+    _on_path(monkeypatch, path)
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     corpus = synthetic_corpus(spark)
     cfg = TrainConfig(num_topics=3, total_iterations=3, burn_in_iterations=1,
@@ -636,17 +672,19 @@ def _stage_tasks(spark, group: str) -> list[list[int]]:
     return jobs
 
 
-def test_broadcast_task_count_follows_token_volume(spark):
-    """P = 4 on a small corpus: the z-init and every broadcast iteration
-    run min(P, token-sized) Spark tasks — here 1 — and an iteration is
-    still one job.  The iteration jobs are the last ones of a train and
-    the z-init job (the first reduce) comes right before them."""
+def test_broadcast_task_count_follows_token_volume(spark, monkeypatch):
+    """P = 4 on a corpus past the driver path's budget: the z-init and
+    every broadcast iteration run min(P, token-sized) Spark tasks — here
+    2 — and an iteration is still one job.  The iteration jobs are the
+    last ones of a train and the z-init job (the first reduce) comes
+    right before them."""
     from plda_spark.lda import train as train_mod
 
+    _on_path(monkeypatch, "spark")
     corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
     P = 4
     want = train_mod._num_tasks(P, 30 * 20, spark.sparkContext.defaultParallelism)
-    assert want == 1 < P
+    assert 1 < want < P
     sc = spark.sparkContext
     jobs = {}
     try:
@@ -750,13 +788,126 @@ def test_resume_in_another_task_count(spark, tmp_path, monkeypatch, tiny_arrow_b
     assert resumed.log_likelihood == straight.log_likelihood
 
 
-def test_chain_ignores_shuffle_partitions(spark):
+def test_resume_on_the_driver(spark, tmp_path, monkeypatch, tiny_arrow_batches):
+    """A checkpoint written on Spark resumes on the driver path, bit-equal
+    to an uninterrupted driver-path run."""
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    ckpt = str(tmp_path / "ckpt")
+    base = dict(num_topics=3, burn_in_iterations=1, compute_likelihood=True, seed=31,
+                num_partitions=4)
+    seen = _record_layouts(monkeypatch)
+    straight = train(corpus, TrainConfig(**base, total_iterations=4))
+    _on_path(monkeypatch, "spark")
+    train(corpus, TrainConfig(**base, total_iterations=2, checkpoint_dir=ckpt,
+                              checkpoint_every=2))
+    _on_path(monkeypatch, "driver")
+    resumed = train(corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt)
+    assert seen == [1, 2, 1]
+    assert np.array_equal(straight.raw_model.nwk, resumed.raw_model.nwk)
+    assert np.array_equal(straight.model.nwk, resumed.model.nwk)
+    assert resumed.log_likelihood == straight.log_likelihood
+
+
+def _stage_scopes(spark, group: str) -> list[str]:
+    """The operator scopes (``MapInPandas``, ``Exchange``, …) of every
+    stage that ran (not skipped) in job group ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    scopes = []
+
+    def walk(cluster) -> None:
+        scopes.append(cluster.name())
+        children = cluster.childClusters().iterator()
+        while children.hasNext():
+            walk(children.next())
+
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks:
+                walk(store.operationGraphForStage(sid).rootCluster())
+    return scopes
+
+
+def test_driver_path_runs_no_job_per_iteration(spark, monkeypatch):
+    """A broadcast corpus within one task's token budget trains on the
+    driver: the same Spark jobs at 1 and at 3 iterations, and no stage
+    runs a Python task.  The same train on Spark runs MapInPandas."""
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    cfg = dict(num_topics=3, burn_in_iterations=0, seed=3, num_partitions=4)
+    sc = spark.sparkContext
+    jobs, scopes = {}, {}
+    try:
+        for path, n in (("driver", 1), ("driver", 3), ("spark", 1)):
+            _on_path(monkeypatch, path)
+            group = f"driver-path-{path}-{n}"
+            sc.setJobGroup(group, group)
+            train(corpus, TrainConfig(**cfg, total_iterations=n))
+            jobs[path, n] = _stage_tasks(spark, group)
+            scopes[path, n] = _stage_scopes(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs["driver", 1]) == len(jobs["driver", 3])
+    for n in (1, 3):
+        assert "MapInPandas" not in scopes["driver", n], scopes["driver", n]
+    assert "MapInPandas" in scopes["spark", 1]
+
+
+def test_driver_path_boundary(spark, monkeypatch):
+    """Exactly ``_TOKENS_PER_PARTITION`` tokens train on the driver, one
+    more on Spark, and both give the same chain."""
+    from plda_spark.lda import train as train_mod
+
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    made = []
+    exchange = train_mod._exchange
+
+    def recording(*args):
+        made.append(exchange(*args))
+        return made[-1]
+
+    monkeypatch.setattr(train_mod, "_exchange", recording)
+    cfg = TrainConfig(num_topics=3, total_iterations=2, burn_in_iterations=0,
+                      compute_likelihood=True, seed=13, num_partitions=4)
+    res = []
+    for budget in (30 * 20, 30 * 20 - 1):
+        monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", budget)
+        res.append(train(corpus, cfg))
+    assert made == [train_mod._Driver, train_mod._Broadcast]
+    assert np.array_equal(res[0].raw_model.nwk, res[1].raw_model.nwk)
+    assert res[0].log_likelihood == res[1].log_likelihood
+
+
+def test_driver_path_zero_token_corpus(spark):
+    """Triples whose counts are all 0 pack into no docs: the driver path
+    trains an all-zero model, as the Spark path does."""
+    corpus = spark.createDataFrame([(0, "a", 0), (1, "b", 0)],
+                                   "doc_id long, word string, count int")
+    res = train(corpus, TrainConfig(num_topics=2, total_iterations=2, burn_in_iterations=0,
+                                    compute_likelihood=True))
+    assert res.raw_model.nwk.tolist() == [[0, 0], [0, 0]]
+    assert res.log_likelihood == [0.0, 0.0]
+
+
+@pytest.mark.parametrize("bad", [dict(num_partitions=0), dict(num_partitions=-2),
+                                 dict(checkpoint_every=0), dict(checkpoint_every=-1)])
+def test_config_rejects_bad_partitions_and_checkpoint_every(bad):
+    with pytest.raises(ValueError):
+        TrainConfig(num_topics=3, **bad).validate()
+    TrainConfig(num_topics=3, num_partitions=None).validate()
+
+
+@pytest.mark.parametrize("path", sorted(_PATHS))
+def test_chain_ignores_shuffle_partitions(spark, monkeypatch, path):
     """With P equal to ``spark.sql.shuffle.partitions`` Spark drops the
     P-way repartition of the packed docs (the doc_id aggregate below it
     already hash-partitions them) and AQE may coalesce that aggregate's
     partitions, so a task can hold several pids in a doc_id-sorted mix.
     The z-init and sweep split every task by pid, so the chain is the
     same as when the repartition stays."""
+    _on_path(monkeypatch, path)
     conf = "spark.sql.shuffle.partitions"
     corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
     cfg = TrainConfig(num_topics=3, total_iterations=2, burn_in_iterations=0,
