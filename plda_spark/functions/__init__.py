@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from plda_spark.operators.dedup import _md5_long as md5_long
+from plda_spark._exprs import md5_long
 from plda_spark.operators.sampling import hash_bucket
 from plda_spark.operators.similarity import cosine
 from plda_spark.operators.text import tokens_col

@@ -50,7 +50,11 @@ def _infer(frame: DataFrame, to_batch, nk: np.ndarray, alpha: float, beta: float
            total_iterations: int, burn_in_iterations: int, seed: int) -> DataFrame:
     """The one inference core behind every front end: one ``(seed, pid, 0)``
     RNG per partition and one :func:`kernel.infer_docs` call per Arrow
-    batch, so θ depends only on the pid and the doc order within it.
+    batch, so θ depends only on the Spark partition id the doc is scored
+    in and the doc order within that partition.  The partition id equals
+    :func:`~plda_spark.lda.corpus.pack_docs`' pid only while its
+    repartition survives planning; Spark may drop it for an equivalent
+    upstream exchange that AQE then coalesces by size.
     ``to_batch(pdf) -> (word_occ, doc_offsets, nwk, vocab_size)`` is the
     front end's part: the batch's docs in CSR form, the model rows they
     index, and V when those rows are not the whole model (else None)."""

@@ -28,6 +28,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from plda_spark._exprs import md5_long
+
 __all__ = ["logreg_fit", "logreg_score", "logreg_score_col", "calibration_report", "lift_report", "nb_eval", "roc_auc_report", "decision_stump", "pr_auc_report", "classification_report"]
 
 
@@ -277,19 +279,9 @@ def nb_eval(
         lambda x: F.length(x) >= 2,
     )
     is_train = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col(id_col).cast("string"),
-                        F.lit(str(int(seed))),
-                    )
-                ),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long")
+        md5_long(
+            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(int(seed))))
+        )
         % 2
         == 0
     )

@@ -26,9 +26,10 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._exprs import md5_long
 from ..lineage import _Lineage
 from .text import tokens_col
 
@@ -54,12 +55,6 @@ __all__ = [
     "cross_dedup",
     "dedup_sentences",
 ]
-
-
-def _md5_long(col: Column) -> Column:
-    """First 60 bits of md5 as a non-negative bigint (oracle-reproducible:
-    DuckDB ``CAST('0x' || substr(md5(x),1,15) AS BIGINT)``)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -378,7 +373,7 @@ def minhash_signatures(
     a single groupBy with map-side combine, all JVM-side.
     """
     params = minhash_params(num_hashes)
-    h = _md5_long(F.col("shingle")) % F.lit(MINHASH_P)
+    h = md5_long(F.col("shingle")) % F.lit(MINHASH_P)
     mins = [
         F.min((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
         for i, (a, b) in enumerate(params)
@@ -504,7 +499,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bit
             F.col(id_col).alias("doc_id"),
             F.explode(tokens_col(text_col)).alias("tok"),
         )
-        .select("doc_id", _md5_long(F.col("tok")).alias("h"))
+        .select("doc_id", md5_long(F.col("tok")).alias("h"))
         .repartition("doc_id")
     )
 

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from plda_spark._exprs import md5_long
+
 __all__ = [
     "MEDIA_SCHEMA",
     "attach_fake_media",
@@ -72,7 +74,7 @@ def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     payload = utf-8 text bytes, metadata from the md5 digest (the same
     md5-bigint construction the SQL oracles use) — to exercise the
     plumbing without codec libraries."""
-    h = F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("long")
+    h = md5_long(F.col("text"))
     return docs.select(
         F.col(id_col).alias("media_id"),
         F.encode("text", "utf-8").alias("payload"),
@@ -90,10 +92,7 @@ def _fake_h_col(payload_col):
     """JVM twin of :func:`_digest_mod_p`: md5(payload) → bigint mod P —
     the same ``conv(substr(md5(x), 1, 15), 16, 10) % P`` construction
     the SQL oracles and :func:`attach_fake_media` use."""
-    return (
-        F.conv(F.substring(F.md5(payload_col), 1, 15), 16, 10).cast("long")
-        % F.lit(_P)
-    )
+    return md5_long(payload_col) % F.lit(_P)
 
 
 def _fake_features_col(hs_col, out_dim: int):

@@ -36,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from plda_spark._exprs import md5_long
+
 __all__ = [
     "k_anonymity_audit",
     "k_suppress",
@@ -150,10 +152,7 @@ def dp_noisy_counts(
         F.lit(str(int(seed))),
     )
     # the one expression a secure release swaps for a real RNG:
-    u = (
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("double")
-        / F.lit(_TWO_60)
-    )
+    u = md5_long(key).cast("double") / F.lit(_TWO_60)
     staged = per.withColumn("__u", u)
     centered = F.col("__u") - F.lit(0.5)
     scale = F.lit(float(sensitivity) / float(epsilon))
@@ -271,20 +270,12 @@ def rand_response_estimate(
     )
     key = F.col("__id_s")
     # the two expressions a secure release swaps for a real RNG:
-    u_keep = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", key, F.lit(str(int(seed))), F.lit("keep"))), 1, 15),
-            16, 10,
-        ).cast("double")
-        / F.lit(_TWO_60)
-    )
-    u_pick = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", key, F.lit(str(int(seed))), F.lit("pick"))), 1, 15),
-            16, 10,
-        ).cast("double")
-        / F.lit(_TWO_60)
-    )
+    u_keep = md5_long(
+        F.concat_ws(":", key, F.lit(str(int(seed))), F.lit("keep"))
+    ).cast("double") / F.lit(_TWO_60)
+    u_pick = md5_long(
+        F.concat_ws(":", key, F.lit(str(int(seed))), F.lit("pick"))
+    ).cast("double") / F.lit(_TWO_60)
     rows = (
         df.select(
             F.col(id_col).cast("string").alias("__id_s"),
@@ -402,12 +393,7 @@ def dp_quantile(
         "__cw", F.sum(w).over(wcum)
     )
     total = F.max(F.col("__cw")).over(wall)
-    draw = (
-        F.conv(
-            F.substring(F.md5(F.lit(f"dpq:{int(seed)}")), 1, 15), 16, 10
-        ).cast("double")
-        / F.lit(_TWO_60)
-    )
+    draw = md5_long(F.lit(f"dpq:{int(seed)}")).cast("double") / F.lit(_TWO_60)
     staged4 = staged3.withColumn("__thr", draw * total)
     # released value: the FIRST candidate whose cumulative weight
     # reaches the threshold; exact value: the first with cum count

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from plda_spark._exprs import md5_long
 from plda_spark.lineage import _Lineage
 
 __all__ = [
@@ -46,8 +47,7 @@ __all__ = [
 
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
     """Stable bucket in [0, buckets) from the md5 of the key's string form."""
-    h = F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10).cast("long")
-    return h % buckets
+    return md5_long(key.cast("string")) % buckets
 
 
 def hash_mod_sample(
@@ -225,15 +225,9 @@ def reservoir_per_group(
         raise ValueError("k must be >= 1")
     from pyspark.sql import Window
 
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(str(seed)), F.lit(":"), F.col(key_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(
+        F.concat(F.lit(str(seed)), F.lit(":"), F.col(key_col).cast("string"))
+    )
     w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(key_col).asc())
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
@@ -275,18 +269,8 @@ def weighted_sample_per_group(
         raise ValueError("k must be >= 1")
     from pyspark.sql import Window
 
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(str(seed)), F.lit(":"), F.col(key_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
+    h = md5_long(
+        F.concat(F.lit(str(seed)), F.lit(":"), F.col(key_col).cast("string"))
     ).cast("double")
     u = (h + F.lit(1.0)) / F.lit(float(1 << 60))
     w = F.col(weight_col).cast("double")
@@ -386,8 +370,7 @@ def contrastive_negatives(
         raise ValueError("buckets must be >= 1")
 
     def _h(*parts: Column) -> Column:
-        joined = F.concat_ws(":", F.lit(str(seed)), *parts)
-        return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
+        return md5_long(F.concat_ws(":", F.lit(str(seed)), *parts))
 
     sid = F.col(id_col).cast("string")
     ranked = df.select(

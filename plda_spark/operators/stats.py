@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from plda_spark._exprs import bit_words, epoch_secs, md5_bucket, md5_long
+
 __all__ = [
     "group_quantiles",
     "approx_group_quantiles",
@@ -646,29 +648,6 @@ def hll_estimate_range(
     )
 
 
-def _cms_bucket(key, row, width: int):
-    """Row-``row`` CMS bucket of ``key`` (``row`` may be an int or a
-    Column): md5-derived, so the DuckDB twin is ``CAST('0x' ||
-    substr(md5(row || ':' || key), 1, 15) AS BIGINT) % width`` —
-    bit-identical across engines.  THE canonical formula: both the
-    sketch builder and the probe side call this, so they can never
-    drift (a desynchronized hash would silently min over mismatched
-    buckets)."""
-    row_col = F.lit(row) if isinstance(row, int) else row
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(row_col.cast("string"), F.lit(":"), key.cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return h % width
-
-
 def cms_daily_sketches(
     df: DataFrame,
     key_col: str = "user_id",
@@ -701,7 +680,7 @@ def cms_daily_sketches(
         *[
             F.struct(
                 F.lit(d).alias("d"),
-                _cms_bucket(F.col(key_col), d, width).alias("bucket"),
+                md5_bucket(F.col(key_col), d, width).alias("bucket"),
             )
             for d in range(depth)
         ]
@@ -749,10 +728,10 @@ def cms_estimate(
             F.explode(F.sequence(F.lit(0), F.col("__depth") - 1)).alias("d"),
         )
     )
-    # One md5 per (key, d) — the SAME _cms_bucket formula the builder
+    # One md5 per (key, d) — the SAME md5_bucket formula the builder
     # uses, so builder and probe can never desynchronize.
     probes = probes.withColumn(
-        "bucket", _cms_bucket(F.col("key"), F.col("d"), width)
+        "bucket", md5_bucket(F.col("key"), F.col("d"), width)
     )
     return (
         probes.join(F.broadcast(merged), ["d", "bucket"], "left")
@@ -787,7 +766,7 @@ def hist_daily_sketches(
     return (
         cells(df, F.to_date(F.col(ts_col)).cast("string"))
         .groupBy("day")
-        .agg(_hist_bin_counts(nbins))
+        .agg(_dense_array("bin", "n", nbins).alias("bin_counts"))
     )
 
 
@@ -796,7 +775,7 @@ def _hist_cells(value_col: str, lo: float, hi: float, nbins: int):
     returns ``cells(df, day) -> (day, bin, n)``, the per-(day, bin)
     count of ``df``'s in-range values.  :func:`hist_daily_sketches`
     keys it by date, the streaming histogram ledger by its batch, and
-    both assemble the counts with :func:`_hist_bin_counts`."""
+    both assemble the counts with :func:`_dense_array`."""
     if nbins <= 0:
         raise ValueError("nbins must be positive")
     if not hi > lo:
@@ -820,15 +799,16 @@ def _hist_cells(value_col: str, lo: float, hi: float, nbins: int):
     return cells
 
 
-def _hist_bin_counts(nbins: int):
-    """Aggregate a group of :func:`_hist_cells` rows into the dense
-    ``bin_counts: array<long>`` (zero for bins the group never hit; all
-    zeros for a group with no cells)."""
-    m = F.map_from_entries(F.collect_list(F.struct("bin", "n")))
+def _dense_array(index_col: str, value_col: str, size: int):
+    """Aggregate a group's sparse ``(index_col, value_col)`` rows into
+    the dense ``array<long>`` of ``size`` slots (zero for slots the
+    group never hit): histogram bin counts, bloom bit words."""
+    # collect_list skips NULLs: a NULL key's NULL bloom word sets no bit
+    m = F.map_from_arrays(F.collect_list(index_col), F.collect_list(value_col))
     return F.transform(
-        F.sequence(F.lit(0), F.lit(nbins - 1)),
+        F.sequence(F.lit(0), F.lit(size - 1)),
         lambda i: F.coalesce(F.element_at(m, i.cast("int")), F.lit(0)).cast("long"),
-    ).alias("bin_counts")
+    )
 
 
 def hist_quantile_range(
@@ -940,9 +920,7 @@ def kmv_daily_sketches(
     if k < 2:
         raise ValueError("k must be >= 2")
     n_salts = 64
-    h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_long(F.col(key_col).cast("string"))
     day = F.to_date(F.col(ts_col)).cast("string")
     distinct = df.select(day.alias("day"), h.alias("h")).distinct()
     per_salt = (
@@ -956,10 +934,11 @@ def kmv_daily_sketches(
     )
 
 
-def _kmv_merge(src: DataFrame, k: int) -> DataFrame:
-    """One-row frame with the k smallest distinct hashes across all
-    sketch rows (exactly the sketch of the unioned days)."""
-    return src.agg(
+def _kmv_merge(src: DataFrame, k: int, *keys: str) -> DataFrame:
+    """The k smallest distinct hashes across the sketch rows of each
+    ``keys`` group, one row when no keys (exactly the sketch of the
+    unioned days)."""
+    return src.groupBy(*keys).agg(
         F.slice(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("kmin")))),
             1,
@@ -1082,15 +1061,7 @@ def bootstrap_ci(
     # each replica pays exactly one md5 per row.
     draws = [
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f":{b}"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(F.concat(F.col(key_col).cast("string"), F.lit(f":{b}")))
             % F.lit(1 << 60)
         ).cast("double")
         / F.lit(float(1 << 60))
@@ -1201,7 +1172,7 @@ def bloom_daily_sketches(
     range rollups compose losslessly like the other daily sketches.
 
     Bit positions come from the engine's md5 convention
-    (:func:`_cms_bucket` with the hash index as the row), so sketch
+    (:func:`md5_bucket` with the hash index as the row), so sketch
     content AND probe verdicts — including false positives — are
     deterministic and exactly SQL-reproducible.
 
@@ -1220,36 +1191,13 @@ def bloom_daily_sketches(
     pos = pairs.select(
         "day",
         F.explode(
-            F.array(*[_cms_bucket(F.col("__key"), i, m_bits) for i in range(k)])
+            F.array(*[md5_bucket(F.col("__key"), i, m_bits) for i in range(k)])
         ).alias("pos"),
     )
-    words = (
-        pos.select(
-            "day",
-            F.floor(F.col("pos") / 64).cast("int").alias("w"),
-            # SQL form: the python shiftleft() helper only takes a
-            # literal int shift amount, the SQL function takes columns
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))"
-            ).alias("bit"),
-        )
-        .groupBy("day", "w")
-        .agg(F.bit_or("bit").alias("word"))
-    )
     return (
-        words.groupBy("day")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("w"), F.collect_list("word")
-            ).alias("__m")
-        )
-        .select(
-            "day",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_words - 1)),
-                lambda i: F.coalesce(F.col("__m")[i], F.lit(0).cast("long")),
-            ).alias("bits"),
-        )
+        bit_words(pos, "day")
+        .groupBy("day")
+        .agg(_dense_array("w", "word", n_words).alias("bits"))
     )
 
 
@@ -1291,7 +1239,7 @@ def bloom_member_range(
     key = F.col(probe_col)
     pr = probes
     for i in range(k):
-        pr = pr.withColumn(f"__pos{i}", _cms_bucket(key, i, m_bits))
+        pr = pr.withColumn(f"__pos{i}", md5_bucket(key, i, m_bits))
     # bit0 of the shifted word IS the probed bit; arithmetic shift's
     # sign-fill is masked off by the & 1.  SQL form because the python
     # shiftright() helper only takes a literal int shift amount.
@@ -1334,6 +1282,23 @@ def decayed_counts(
     exponentials), nothing driver-side.  The same formula is an
     ANSI-SQL one-liner, so the oracle checks values.
     """
+    src, w = _decay_weight(df, ts_col, half_life_days, ref_ts)
+    return (
+        src.groupBy(*[F.col(c) for c in key_cols])
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(w), 4).alias("decayed_count"),
+        )
+    )
+
+
+def _decay_weight(
+    df: DataFrame, ts_col: str, half_life_days: float, ref_ts
+) -> tuple[DataFrame, Column]:
+    """``(src, w)`` for :func:`decayed_counts` and :func:`decayed_moments`:
+    ``src`` is ``df`` with the reference instant ``__ref`` crossJoined
+    on as a broadcast 1-row max when ``ref_ts`` is None, and ``w`` is
+    each row's weight ``2^(-age_days / half_life_days)``."""
     if half_life_days <= 0:
         raise ValueError("half_life_days must be positive")
     if ref_ts is not None:
@@ -1343,22 +1308,8 @@ def decayed_counts(
         mx = df.agg(F.max(F.col(ts_col)).alias("__ref"))
         src = df.crossJoin(F.broadcast(mx))
         ref = F.col("__ref")
-    # NTZ timestamps refuse a direct double cast; unix_micros over an
-    # LTZ cast works for both flavors, and the session-tz offset cancels
-    # in the difference.
-    def _secs(c):
-        return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
-
-    age_days = (_secs(ref) - _secs(F.col(ts_col))) / F.lit(86400.0)
-    return (
-        src.groupBy(*[F.col(c) for c in key_cols])
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.pow(F.lit(2.0), -age_days / F.lit(half_life_days))), 4
-            ).alias("decayed_count"),
-        )
-    )
+    age_days = (epoch_secs(ref) - epoch_secs(F.col(ts_col))) / F.lit(86400.0)
+    return src, F.pow(F.lit(2.0), -age_days / F.lit(half_life_days))
 
 
 def seasonal_decompose(
@@ -1448,21 +1399,7 @@ def decayed_moments(
     Scale shape: identical to :func:`decayed_counts` — ONE map-side-
     combined aggregation, broadcast 1-row max for the default
     reference; an ANSI-SQL one-liner for the oracle."""
-    if half_life_days <= 0:
-        raise ValueError("half_life_days must be positive")
-    if ref_ts is not None:
-        ref = F.lit(ref_ts).cast("timestamp")
-        src = df
-    else:
-        mx = df.agg(F.max(F.col(ts_col)).alias("__ref"))
-        src = df.crossJoin(F.broadcast(mx))
-        ref = F.col("__ref")
-
-    def _secs(c):
-        return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
-
-    age_days = (_secs(ref) - _secs(F.col(ts_col))) / F.lit(86400.0)
-    w = F.pow(F.lit(2.0), -age_days / F.lit(half_life_days))
+    src, w = _decay_weight(df, ts_col, half_life_days, ref_ts)
     return (
         src.groupBy(*[F.col(c) for c in key_cols])
         .agg(
@@ -1952,6 +1889,31 @@ def _two_sided_normal_p(z):
     return F.lit(2.0) * (pdf * poly)
 
 
+def _normal_upper_p(z):
+    """One-sided ``P(Z > z) = 1 − Φ(z)`` through the shared polynomial
+    (:func:`_two_sided_normal_p`): half the two-sided tail for
+    ``z ≥ 0``, one minus it below.  Callers clamp to [0, 1]."""
+    half = _two_sided_normal_p(F.abs(z)) / F.lit(2.0)
+    return F.when(z >= 0, half).otherwise(F.lit(1.0) - half)
+
+
+def _chi2_upper_p(stat, dof):
+    """``P(χ²_dof > stat)`` clamped to [0, 1], by the Wilson-Hilferty
+    cube-root normal approximation
+    ``z = ((stat/ν)^⅓ − (1 − 2/9ν)) / √(2/9ν)`` (``z = 0``, so p ≈ ½,
+    when ``ν`` or ``stat`` is not positive) and :func:`_normal_upper_p`
+    — the engine-replayable tail of every χ² test here."""
+    z = F.when(
+        (dof > 0) & (stat > 0),
+        (
+            F.pow(stat / dof, F.lit(1.0 / 3.0))
+            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dof))
+        )
+        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof)),
+    ).otherwise(F.lit(0.0))
+    return F.least(F.greatest(_normal_upper_p(z), F.lit(0.0)), F.lit(1.0))
+
+
 def welch_ttest(
     df: DataFrame,
     group_col: str,
@@ -2409,30 +2371,13 @@ def kruskal_wallis(
     staged = agg.withColumn("__h", F.greatest(h, F.lit(0.0))).withColumn(
         "__dof", (F.col("k") - 1).cast("double")
     )
-    # Wilson-Hilferty: P(chi2_v > h) ~= 1 - Phi(z),
-    # z = ((h/v)^(1/3) - (1 - 2/(9v))) / sqrt(2/(9v))
-    nu = F.col("__dof")
-    z = F.when(
-        (nu > 0) & (F.col("__h") > 0),
-        (
-            F.pow(F.col("__h") / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged2 = staged.withColumn("__z", z)
-    # one-sided upper tail: p = (2*(1-Phi(|z|)))/2 for z>=0, and
-    # 1 - p_two/2 for z<0 (h below its expectation -> p near 1)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
-    return staged2.select(
+    p = _chi2_upper_p(F.col("__h"), F.col("__dof"))
+    return staged.select(
         F.col("k").cast("long").alias("k"),
         F.col("n").cast("long").alias("n"),
         F.round("__h", 6).alias("h_stat"),
         F.col("__dof").cast("long").alias("dof"),
-        F.round(F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)), 6).alias(
-            "p_value"
-        ),
+        F.round(p, 6).alias("p_value"),
     )
 
 
@@ -3014,13 +2959,7 @@ def kmv_rolling_active(
         (F.to_date("day") <= F.to_date("__d"))
         & (F.to_date("day") > F.date_sub(F.to_date("__d"), window_days)),
     )
-    merged = pairs.groupBy("__d").agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("kmin")))),
-            1, k,
-        ).alias("kmin")
-    )
-    return merged.select(
+    return _kmv_merge(pairs, k, "__d").select(
         F.col("__d").alias("day"),
         F.round(_kmv_estimate(F.col("kmin"), k), 4).alias("n_active"),
     )
@@ -3039,7 +2978,7 @@ def _f_upper_p(fv, d1, d2):
     d2≈1e4), tightening as d1 grows — stated because the exact
     incomplete beta is not expressible as engine-replayable SQL
     arithmetic (the same contract as the Wilson-Hilferty chi-squared
-    tail in :func:`kruskal_wallis`).
+    tail, :func:`_chi2_upper_p`).
     Callers guard ``fv >= 0`` and clamp the result to [0, 1]."""
     c1 = F.lit(2.0) / (F.lit(9.0) * d1)
     c2 = F.lit(2.0) / (F.lit(9.0) * d2)
@@ -3047,8 +2986,7 @@ def _f_upper_p(fv, d1, d2):
     z = ((F.lit(1.0) - c2) * f3 - (F.lit(1.0) - c1)) / F.sqrt(
         c1 + f3 * f3 * c2
     )
-    half = _two_sided_normal_p(F.abs(z)) / F.lit(2.0)
-    return F.when(z >= 0, half).otherwise(F.lit(1.0) - half)
+    return _normal_upper_p(z)
 
 
 def anova_f(
@@ -4212,8 +4150,7 @@ def ab_srm_check(
     SRM alpha is stricter than metric alphas (0.001) since a true SRM
     is a showstopper.  Returns ONE row ``(n, k, chi2, dof, p_value,
     srm_suspected)`` rounded to 6, p via the Wilson-Hilferty cube-root
-    approximation both engines replay (the :func:`kruskal_wallis`
-    convention).
+    approximation both engines replay (:func:`_chi2_upper_p`).
 
     Scale shape: ONE variant-keyed count aggregation (map-side
     combined) — |variants| rows survive; the expected frame is a
@@ -4268,20 +4205,8 @@ def ab_srm_check(
             / (F.col("w") * F.col("n"))
         ).alias("__chi2"),
     )
-    nu = (F.col("k") - 1).cast("double")
-    z = F.when(
-        (nu > 0) & (F.col("__chi2") > 0),
-        (
-            F.pow(F.col("__chi2") / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged = agg.withColumn("__z", z)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
-    p = F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    staged = staged.withColumn("__p", p)
+    p = _chi2_upper_p(F.col("__chi2"), (F.col("k") - 1).cast("double"))
+    staged = agg.withColumn("__p", p)
     return staged.select(
         F.col("n").cast("long").alias("n"),
         F.col("k").cast("long").alias("k"),
@@ -4442,16 +4367,13 @@ def tost_equivalence(
         F.when(se > 0, (F.lit(margin) - diff) / se).alias("__zu"),
     )
 
-    def _p_upper(z):
-        # one-sided P(Z > z) through the shared polynomial
-        half = _two_sided_normal_p(F.abs(z)) / F.lit(2.0)
-        return F.when(z >= 0, half).otherwise(F.lit(1.0) - half)
-
     staged = staged.withColumn(
         "__p",
         F.least(
             F.greatest(
-                F.greatest(_p_upper(F.col("__zl")), _p_upper(F.col("__zu"))),
+                F.greatest(
+                    _normal_upper_p(F.col("__zl")), _normal_upper_p(F.col("__zu"))
+                ),
                 F.lit(0.0),
             ),
             F.lit(1.0),
@@ -4596,8 +4518,8 @@ def ljung_box(
     (6-decimal outputs — the oracle replays the identical consumption)
     with ``n`` = the number of observed days.  Returns ONE row
     ``(n_days, lags, q_stat, dof, p_value)`` rounded to 6, p via the
-    Wilson-Hilferty cube-root tail (the :func:`kruskal_wallis`
-    convention).  Requires ``n_days > lags``.
+    Wilson-Hilferty cube-root tail (:func:`_chi2_upper_p`).  Requires
+    ``n_days > lags``.
 
     Scale shape: rides :func:`acf_daily` (corpus → |days| rollup →
     |days|×lags pairing), then one |lags|-row aggregation crossed
@@ -4623,26 +4545,13 @@ def ljung_box(
             * F.sum(F.col("acf") * F.col("acf") / (n - F.col("lag")))
         ).alias("__q"),
     )
-    nu = F.lit(float(lags))
-    z = F.when(
-        F.col("__q") > 0,
-        (
-            F.pow(F.col("__q") / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged = agg.withColumn("__z", z)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
-    return staged.select(
+    p = _chi2_upper_p(F.col("__q"), F.lit(float(lags)))
+    return agg.select(
         F.col("n").cast("long").alias("n_days"),
         F.lit(lags).cast("long").alias("lags"),
         F.round("__q", 6).alias("q_stat"),
         F.lit(lags).cast("long").alias("dof"),
-        F.round(
-            F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)), 6
-        ).alias("p_value"),
+        F.round(p, 6).alias("p_value"),
     )
 
 
@@ -5702,7 +5611,7 @@ def g_test(
 
     Returns ONE row ``(n, n_a, n_b, dof, g_stat, p_value)`` rounded to
     6; p via the shared Wilson-Hilferty cube-root chi-squared
-    approximation (the :func:`kruskal_wallis` convention).
+    approximation (:func:`_chi2_upper_p`).
 
     Scale shape: one (a, b) count aggregation collapses the data to
     the |R·C|-row contingency table; margins and totals come from
@@ -5752,27 +5661,14 @@ def g_test(
     staged = agg.select(
         "n", "n_a", "n_b", dof.alias("__dof"), gv.alias("__gv")
     )
-    nu = F.col("__dof")
-    z = F.when(
-        (nu > 0) & (F.col("__gv") > 0),
-        (
-            F.pow(F.col("__gv") / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged2 = staged.withColumn("__z", z)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
-    return staged2.select(
+    p = _chi2_upper_p(F.col("__gv"), F.col("__dof"))
+    return staged.select(
         "n",
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
         F.col("__dof").cast("long").alias("dof"),
         F.round("__gv", 6).alias("g_stat"),
-        F.round(F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)), 6).alias(
-            "p_value"
-        ),
+        F.round(p, 6).alias("p_value"),
     )
 
 
@@ -6245,8 +6141,8 @@ def mood_median_test(
     share a common median?", the counting (not ranking) member of the
     k-group location family: find the GRAND weighted median, classify
     every observation as above vs at-or-below it, and Pearson-χ² the
-    resulting k×2 table with k−1 dof (Wilson-Hilferty tail through
-    the shared Φ polynomial, the :func:`kruskal_wallis` convention).
+    resulting k×2 table with k−1 dof (the Wilson-Hilferty tail,
+    :func:`_chi2_upper_p`).
     Less powerful than Kruskal-Wallis under normal-ish shifts but
     far more robust to heavy tails and outliers — the right screen
     for latency/size metrics.
@@ -6328,30 +6224,15 @@ def mood_median_test(
         )
         .withColumn("__dof", (F.col("k") - 1).cast("double"))
     )
-    # Wilson-Hilferty upper tail (the kruskal_wallis arithmetic)
-    nu = F.col("__dof")
-    h = F.col("__chi2")
-    z = F.when(
-        (nu > 0) & (h > 0),
-        (
-            F.pow(h / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged = agg.withColumn("__z", z)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
-    return staged.select(
+    p = _chi2_upper_p(F.col("__chi2"), F.col("__dof"))
+    return agg.select(
         F.col("k").cast("long").alias("k"),
         F.col("n").cast("long").alias("n"),
         F.round("m", 6).alias("grand_median"),
         F.col("tot_above").cast("long").alias("n_above"),
         F.round("__chi2", 6).alias("chi2"),
         F.col("__dof").cast("long").alias("dof"),
-        F.round(F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)), 6).alias(
-            "p_value"
-        ),
+        F.round(p, 6).alias("p_value"),
     )
 
 
@@ -6697,7 +6578,7 @@ def friedman_daily(
     group) mean is ranked WITHIN its day (average ranks for ties),
     and the tie-corrected statistic ``Q = [12/(nk(k+1)) Σ_j R_j² −
     3n(k+1)] / [1 − Σ(t³−t)/(nk(k²−1))]`` is χ²(k−1) under the null
-    (Wilson-Hilferty tail through the shared Φ polynomial).  The
+    (the Wilson-Hilferty tail, :func:`_chi2_upper_p`).  The
     within-block design removes day-level drift that would swamp
     :func:`kruskal_wallis` — the right screen when every group moves
     with the daily level and the question is their RELATIVE order.
@@ -6781,31 +6662,18 @@ def friedman_daily(
     staged = agg.withColumn("__q", q).withColumn(
         "__dof", (F.col("k") - 1).cast("double")
     )
-    nu = F.col("__dof")
-    z = F.when(
-        (nu > 0) & (F.col("__q") > 0),
-        (
-            F.pow(F.col("__q") / nu, F.lit(1.0 / 3.0))
-            - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * nu))
-        )
-        / F.sqrt(F.lit(2.0) / (F.lit(9.0) * nu)),
-    ).otherwise(F.lit(0.0))
-    staged2 = staged.withColumn("__z", z)
-    half = _two_sided_normal_p(F.abs(F.col("__z"))) / F.lit(2.0)
-    p = F.when(F.col("__z") >= 0, half).otherwise(F.lit(1.0) - half)
+    p = _chi2_upper_p(F.col("__q"), F.col("__dof"))
     w_conc = F.when(
         (n > 0) & (F.col("k") > 1),
         F.col("__q") / (n * (F.col("k").cast("double") - 1)),
     )
-    return staged2.select(
+    return staged.select(
         F.col("k").cast("long").alias("k"),
         F.col("n").cast("long").alias("n_blocks"),
         F.round("__q", 6).alias("q_stat"),
         F.col("__dof").cast("long").alias("dof"),
         F.round(w_conc, 6).alias("kendall_w"),
-        F.round(F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)), 6).alias(
-            "p_value"
-        ),
+        F.round(p, 6).alias("p_value"),
     )
 
 

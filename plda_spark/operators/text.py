@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from plda_spark._exprs import md5_long
 from plda_spark.lda.corpus import MIN_TOKEN_LEN, TOKEN_RE
 from plda_spark.lineage import _Lineage
 
@@ -666,7 +667,7 @@ def _winnow_staged(
     toks = tokens_col(text_col)
     tokh_expr = F.transform(
         toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long") % P,
+        lambda t: md5_long(t) % P,
     )
     # Each stage materializes its array behind an alias in its own
     # projection: inlining would re-evaluate the WHOLE upstream array

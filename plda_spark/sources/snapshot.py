@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .._exprs import bit_words, md5_bucket
 from .zorder import zvalue_col
 
 __all__ = [
@@ -342,25 +343,10 @@ _BLOOM_BITS = 2048
 _BLOOM_K = 3
 
 
-def _bloom_pos(col, i: int, m_bits: int):
-    """Hash position i of a value — the engine-wide md5 convention
-    (operators/stats.py _cms_bucket: ``('0x' || substr(md5(i ':' v),
-    1, 15))::BIGINT % m``), duplicated here so sources/ stays
-    standalone; tests pin the two against each other."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(str(i)), F.lit(":"), col.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return h % m_bits
-
-
 def _bloom_pos_py(value, i: int, m_bits: int) -> int:
-    """Driver-side twin of :func:`_bloom_pos` for probe-time pruning."""
+    """Hash position i of a value on the driver, for probe-time pruning:
+    the twin of the writer's ``md5_bucket(col, i, m_bits)``; tests pin
+    the two against each other."""
     import hashlib
 
     h = int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:15], 16)
@@ -508,16 +494,16 @@ def _commit_files(
             }
         )
     for c in [b for b in (bloom_cols or []) if b in back.columns]:
-        # same shape as operators/stats.py bloom_daily_sketches with the
-        # FILE as the grouping key: k hash positions per row, word-level
-        # bit_or, <= 32 longs per file back to the driver
-        words = (
+        # the bloom_daily_sketches word builder with the FILE as the
+        # grouping key: k hash positions per row, word-level bit_or,
+        # <= 32 longs per file back to the driver
+        pos = (
             back.select(
                 F.input_file_name().alias("__file"),
                 F.explode(
                     F.array(
                         *[
-                            _bloom_pos(F.col(c), i, _BLOOM_BITS)
+                            md5_bucket(F.col(c), i, _BLOOM_BITS)
                             for i in range(_BLOOM_K)
                         ]
                     )
@@ -527,17 +513,8 @@ def _commit_files(
             # no bits; without the filter the driver loop below indexes
             # arr[None] and the whole commit aborts)
             .where(F.col("pos").isNotNull())
-            .select(
-                "__file",
-                F.floor(F.col("pos") / 64).cast("int").alias("w"),
-                F.expr(
-                    "shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))"
-                ).alias("bit"),
-            )
-            .groupBy("__file", "w")
-            .agg(F.bit_or("bit").alias("word"))
-            .collect()
         )
+        words = bit_words(pos, "__file").collect()
         by_file: dict[str, list[int]] = {}
         for r in words:
             arr = by_file.setdefault(r["__file"], [0] * (_BLOOM_BITS // 64))

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import TimestampNTZType
 
+from plda_spark._exprs import epoch_secs
+
 __all__ = [
     "tumbling_counts",
     "sliding_value_sums",
@@ -1078,7 +1080,7 @@ def incremental_decayed_counts(
     if half_life_days <= 0:
         raise ValueError("half_life_days must be positive")
     rel_days = (
-        _epoch_secs(F.col(ts_col)) - _epoch_secs(F.lit(epoch).cast("timestamp"))
+        epoch_secs(F.col(ts_col)) - epoch_secs(F.lit(epoch).cast("timestamp"))
     ) / F.lit(86400.0)
     w = F.pow(F.lit(2.0), rel_days / F.lit(half_life_days))
     aggs = [
@@ -1094,13 +1096,6 @@ def incremental_decayed_counts(
         stream_events, state_path, checkpoint_path, timeout_s,
         lambda batch: batch.groupBy(*[F.col(c) for c in key_cols]).agg(*aggs),
     )
-
-
-def _epoch_secs(c):
-    """Seconds since the unix epoch of a TIMESTAMP or TIMESTAMP_NTZ
-    column (NTZ refuses a direct double cast; the session-tz offset of
-    the LTZ cast cancels in every difference taken here)."""
-    return F.unix_micros(c.cast("timestamp_ltz")) / F.lit(1_000_000.0)
 
 
 def _single_generation(
@@ -1188,7 +1183,7 @@ def decayed_counts_from_ledger(
     ref = F.col("__ref")
     scale = F.pow(
         F.lit(2.0),
-        -(_epoch_secs(ref) - _epoch_secs(F.lit(epoch).cast("timestamp")))
+        -(epoch_secs(ref) - epoch_secs(F.lit(epoch).cast("timestamp")))
         / F.lit(86400.0)
         / F.lit(half_life_days),
     )
@@ -1242,12 +1237,14 @@ def incremental_hist_ledger(
 
     Scale shape: one map-side-combined (bin) aggregation per batch,
     ``nbins`` longs appended; drift probes touch only the ledger."""
-    from plda_spark.operators.stats import _hist_bin_counts, _hist_cells
+    from plda_spark.operators.stats import _dense_array, _hist_cells
 
     cells = _hist_cells(value_col, lo, hi, nbins)
     _append_ledger(
         stream_events, state_path, checkpoint_path, timeout_s,
-        lambda batch: cells(batch, F.lit("0")).agg(_hist_bin_counts(nbins)),
+        lambda batch: cells(batch, F.lit("0")).agg(
+            _dense_array("bin", "n", nbins).alias("bin_counts")
+        ),
     )
 
 

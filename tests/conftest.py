@@ -43,10 +43,8 @@ SLOW_TESTS = {
     "test_bpe_train_matches_reference",
     "test_byte_bpe_matches_reference",
     "test_chi2_and_winsorize_semantics",
-    "test_cms_upper_bound_and_mergeability",
     "test_curriculum_order_semantics",
     "test_domain_filter_block_allow_partition",
-    "test_dp_quantile_and_pareto_semantics",
     "test_dsir_weights_favor_target_distribution",
     "test_encode_viterbi_and_unk",
     "test_every_oracle_parses_in_duckdb",
@@ -57,18 +55,15 @@ SLOW_TESTS = {
     "test_interval_join_matches_batch",
     "test_inverted_index_and_phrase_search",
     "test_kpss_level_semantics",
-    "test_ljung_box_and_retention_fit_semantics",
     "test_logreg2_and_kendall_semantics",
     "test_logreg_quality_pipeline",
     "test_logreg_separates_and_matches_numpy",
     "test_manifest_chain_index_bounds_reads",
     "test_markov_attribution_semantics",
-    "test_mcnemar_and_runs_semantics",
     "test_mutual_information_semantics",
     "test_nb_eval_semantics",
     "test_ols2_and_pca2_semantics",
     "test_operators_handle_empty_input",
-    "test_privacy_semantics",
     "test_pure_append_chain_maintains_index",
     "test_review_fixes_round6",
     "test_roc_auc_and_kappa_semantics",
@@ -76,9 +71,7 @@ SLOW_TESTS = {
     "test_sessionize_stateful",
     "test_spearman_matches_pandas_average_ranks",
     "test_streaming_sink_idempotence_check_is_o1",
-    "test_stump_srm_and_combine_semantics",
     "test_tokenizer_save_load_roundtrip_all_families",
-    "test_tost_xi_and_capture_semantics",
     "test_train_matches_sequential_reference",
     "test_trainer_parity_with_sequential_reference",
     "test_warc_roundtrip_html_payloads",

@@ -3627,6 +3627,17 @@ def test_bloom_sketch_membership_and_false_positives(spark):
     # positive proving the filter semantics (not true membership)
     assert out[1000] is True
 
+    # a NULL key sets no bit, and a day whose only key is NULL still
+    # gets its all-zero row
+    nulls = spark.createDataFrame(
+        [(None, "2024-01-01 09:00:00"), (None, "2024-01-04 08:00:00")],
+        "user_id long, ts string",
+    ).select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+    with_nulls = {r["day"]: r["bits"] for r in stats.bloom_daily_sketches(
+        ev.unionByName(nulls), m_bits=m_bits, k=k
+    ).collect()}
+    assert with_nulls == {**days, "2024-01-04": [0] * (m_bits // 64)}
+
     with pytest.raises(ValueError):
         stats.bloom_daily_sketches(ev, m_bits=100)
     with pytest.raises(ValueError):

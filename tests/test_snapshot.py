@@ -919,13 +919,15 @@ def test_bloom_file_skipping_point_lookup(spark, tmp_path):
     assert all("bloom" in e for e in man2["files"])
     assert snap.snapshot_scan_point(spark, path, "key", probe).count() == 1
 
-    # spark-side builder and python-side prober share the hash exactly
-    from plda_spark.operators.stats import _cms_bucket
-    row = spark.range(1).select(
-        *[_cms_bucket(F.lit(probe), i, 2048).alias(f"p{i}") for i in range(3)]
-    ).first()
-    for i in range(3):
-        assert row[f"p{i}"] == snap._bloom_pos_py(probe, i, 2048)
+    # spark-side builder and python-side prober share the hash exactly,
+    # for hex, non-ASCII and integer keys
+    from plda_spark._exprs import md5_bucket
+    for v in (probe, "naïve-ключ-键", 123456789):
+        row = spark.range(1).select(
+            *[md5_bucket(F.lit(v), i, 2048).alias(f"p{i}") for i in range(3)]
+        ).first()
+        for i in range(3):
+            assert row[f"p{i}"] == snap._bloom_pos_py(v, i, 2048)
 
 
 def test_rollback_restores_state_as_new_version(spark, sf_dir, tmp_path):
