@@ -7,8 +7,11 @@ the reference's per-line ``word count`` pairs (``README.md:44-58``).
 For the Gibbs sweep the corpus is packed into one row per document with
 an occurrence-level word-id array (count-expanded, sorted by word id),
 mirroring the reference's CSR layout ``wordtopics_`` /
-``wordtopics_start_index_`` (``common.h:169-180``).  All packing happens
-JVM-side with higher-order array functions — no Python in this path.
+``wordtopics_start_index_`` (``common.h:169-180``).  :func:`pack_docs`
+packs JVM-side with higher-order array functions, no Python in this
+path, for the Spark training path and ``infer.transform``.  A corpus the
+trainer runs on the driver is packed there instead, from one collect of
+its triples (``train._pack_triples``), into the same arrays.
 """
 
 from __future__ import annotations
@@ -49,7 +52,9 @@ def pack_docs(corpus_ids: DataFrame, num_partitions: int) -> DataFrame:
     expansion the reference's ``WordOccurrenceIterator`` walks
     (``document.cc:21-82``).  Hash-repartitioned by ``doc_id`` so the
     iteration jobs reuse a stable partitioning (reference round-robins
-    docs across ranks, ``mpi_lda.cc:127``).
+    docs across ranks, ``mpi_lda.cc:127``).  Callers: the Spark training
+    path and ``infer.transform``; the trainer's driver path builds the
+    same arrays with numpy (``train._pack_triples``).
     """
     pairs = F.array_sort(F.collect_list(F.struct("word_id", "count")))
     packed = (

@@ -41,9 +41,10 @@ fixed cost (~0.2 s of worker CPU, ``docs/SCALING.md``) that a small
 corpus's sweep (~10 ms) cannot amortise over P tasks, and the task count
 does not change a single bit of the output.  A broadcast corpus within
 one task's token budget runs on the driver instead (``_Driver``, plda's
-single-process ``lda``): after the setup jobs the loop calls the same
-z-init, sweep and payload code in the caller's process, with no Python
-task and no Spark job per iteration.
+single-process ``lda``): one Arrow collect of the corpus triples feeds a
+numpy build of the vocabulary and packed docs, and the loop calls the
+same z-init, sweep and payload code in the caller's process, with no
+Python task and no Spark job per iteration.
 
 Within an iteration cross-partition counts are one iteration stale —
 precisely the AD-LDA relaxation the reference itself makes across MPI
@@ -63,6 +64,7 @@ from __future__ import annotations
 import itertools
 import math
 from collections.abc import Callable, Iterable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
 from types import SimpleNamespace
@@ -513,6 +515,25 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
 # ---------------------------------------------------------------------------
 
 
+@contextmanager
+def _phase(spark, phase: str) -> Iterator[None]:
+    """Label the Spark jobs run inside as ``lda.train:<phase>`` (the job
+    description the UI and the status store show), then restore the
+    caller's description.  The job group stays the caller's."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"lda.train:{phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _pid(num_partitions: int):
+    """A doc's AD-LDA partition: pmod(hash(doc_id), P), Spark's Murmur3."""
+    return F.pmod(F.hash("doc_id"), F.lit(num_partitions)).cast("int")
+
+
 def _lay_out(df: DataFrame, tasks: int) -> DataFrame:
     """Docs hash-partitioned by doc_id into P, laid out in ``tasks`` Spark
     tasks.  Every partition holds whole pids: partition p holds pid p, or
@@ -521,7 +542,8 @@ def _lay_out(df: DataFrame, tasks: int) -> DataFrame:
     and the sort puts each pid's docs together, in doc_id order.  This is
     the one sort: checkpoints keep row order, so from here on every
     broadcast sweep streams its task in (pid, doc_id) order without a
-    shuffle."""
+    shuffle.  The driver path lays out its collected triples the same
+    way, in one task."""
     return df.coalesce(tasks).sortWithinPartitions("pid", "doc_id")
 
 
@@ -594,6 +616,28 @@ class _Exchange:
         self.spark = spark
         self.V, self.P, self.W, self.config = vocab_size, num_partitions, chunk_width, config
 
+    @staticmethod
+    def setup(corpus: DataFrame, num_partitions: int) -> tuple[list, DataFrame]:
+        """The sorted vocabulary, collected, and the packed docs with their
+        pid, lazy: ``(pid, doc_id, word_occ)`` hash-partitioned by doc_id
+        into P."""
+        spark = corpus.sparkSession
+        # word_id is BY CONTRACT the lexicographic rank, and the sorted
+        # word list is needed on the driver anyway (model + checkpoint),
+        # so one distinct+sort collect builds the vocabulary.
+        with _phase(spark, "vocab"):
+            words = [r["word"] for r in corpus.select("word").distinct().orderBy("word").collect()]
+        corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
+            "doc_id", "word_id", "count"
+        )
+        # pack_docs hash-partitions by doc_id into P, so a partition holds
+        # whole pids.  When P equals spark.sql.shuffle.partitions Spark
+        # reuses the doc_id aggregate's exchange for it, which AQE may
+        # coalesce into runs of pids; _lay_out handles both.
+        return words, pack_docs(corpus_ids, num_partitions).withColumn(
+            "pid", _pid(num_partitions)
+        )
+
     def zinit(self, packed: DataFrame, tasks: int, lineage: _Lineage) -> DataFrame:
         """The z-init, with its payload rows in ``encode``'s wire format, in
         ``tasks`` Spark tasks and no shuffle."""
@@ -661,14 +705,24 @@ class _Broadcast(_Exchange):
 class _Driver(_Broadcast):
     """The broadcast exchange for a corpus within one task's token budget,
     run in the caller's process — plda's single-process ``lda``
-    (lda.cc:99-148) beside its ``mpi_lda``.  A generation is a pandas
-    frame of the same rows a Spark generation holds, collected once
-    through Arrow, and every step calls the executor code above: no
-    Python task and no Spark job per iteration, the same chain, payloads
-    and checkpoints."""
+    (lda.cc:99-148) beside its ``mpi_lda``.  Its setup is one Arrow
+    collect of the corpus triples, from which numpy builds the same
+    vocabulary and packed docs the Spark setup builds.  A generation is a
+    pandas frame of the same rows a Spark generation holds, and every step
+    calls the executor code above: no Python task and no Spark job per
+    iteration, the same chain, payloads and checkpoints."""
 
-    def zinit(self, packed: DataFrame, tasks: int, lineage: _Lineage) -> pd.DataFrame:
-        docs = _lay_out(packed, 1).toPandas()
+    @staticmethod
+    def setup(corpus: DataFrame, num_partitions: int) -> tuple[list, pd.DataFrame]:
+        """The Spark setup's vocabulary and packed docs from ONE collect:
+        the triples with their pid, computed in the same projection, laid
+        out in one task.  plda's ``lda`` likewise reads the corpus and
+        builds its vocabulary in one pass (lda.cc:71-77)."""
+        triples = corpus.select("doc_id", "word", "count", _pid(num_partitions).alias("pid"))
+        with _phase(corpus.sparkSession, "collect"):
+            return _pack_triples(_lay_out(triples, 1).toPandas())
+
+    def zinit(self, docs: pd.DataFrame, tasks: int, lineage: _Lineage) -> pd.DataFrame:
         return _generation(
             _zinit_pass([docs], self.config.num_topics, self.config.seed, self.encode)
         )
@@ -686,6 +740,35 @@ class _Driver(_Broadcast):
 
     def frame(self, gen: pd.DataFrame) -> DataFrame:
         return self.spark.createDataFrame(gen, _SWEEP_SCHEMA)
+
+
+def _pack_triples(triples: pd.DataFrame) -> tuple[list, pd.DataFrame]:
+    """Collected ``(doc_id, word, count, pid)`` triples → the sorted
+    vocabulary and the packed docs ``(pid, doc_id, word_occ)`` in
+    (pid, doc_id) order, as the Spark setup builds them.  The vocabulary
+    is ``distinct().orderBy("word")``: Python's code-point order is
+    Spark's binary UTF-8 order, and a NULL word sorts first and, like the
+    remap join, matches no triple.  ``word_occ`` is :func:`pack_docs`'
+    array: the doc's word ids sorted, each repeated by its count (none
+    for a count ≤ 0); a NULL count packs the whole doc to NULL, and empty
+    docs are dropped."""
+    codes, uniques = pd.factorize(triples["word"].to_numpy(), sort=True)
+    null_word = int((codes < 0).any())
+    t = triples.assign(word_id=(codes + null_word).astype(np.int32))[codes >= 0]
+    t = t[~t["doc_id"].isin(t["doc_id"][t["count"].isna()])]
+    t = t.sort_values(["pid", "doc_id", "word_id"], kind="stable")
+    pid, doc_id = t["pid"].to_numpy(), t["doc_id"].to_numpy()
+    reps = np.maximum(t["count"].to_numpy(), 0).astype(np.int64)
+    first = np.ones(len(t), dtype=bool)
+    first[1:] = (pid[1:] != pid[:-1]) | (doc_id[1:] != doc_id[:-1])
+    starts = np.flatnonzero(first)
+    lens = np.add.reduceat(reps, starts) if len(t) else reps
+    occs = np.split(np.repeat(t["word_id"].to_numpy(), reps), np.cumsum(lens)[:-1])
+    return [None] * null_word + uniques.tolist(), pd.DataFrame({
+        "pid": pid[starts][lens > 0],
+        "doc_id": doc_id[starts][lens > 0],
+        "word_occ": [o for o in occs if len(o)],
+    })
 
 
 def _generation(frames: Iterable[pd.DataFrame]) -> pd.DataFrame:
@@ -1054,22 +1137,24 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
     ex = None
     try:
         if resume_from is None:
-            # LAZY checkpoint on the corpus triples: three setup passes
-            # consume this frame — the guard/token aggregate below, the
-            # vocabulary's distinct, and the remap+pack feeding z-init.
-            # When the triples arrive as doc_term_counts(tokenize(docs))
-            # (the train_documents path), each pass would re-run the full
+            # LAZY checkpoint on the corpus triples: every setup pass reads
+            # this frame — the guard/token aggregate below, then either the
+            # driver path's one collect of the triples or the Spark path's
+            # vocabulary distinct and the remap+pack feeding z-init.  When
+            # the triples arrive as doc_term_counts(tokenize(docs)) (the
+            # train_documents path), each pass would re-run the full
             # tokenize explode + count aggregation; the checkpoint
             # materializes it ONCE (the guard agg is the first action).
             corpus = setup.cut(corpus)
             # doc_id < 0 is the internal payload-row sentinel: a negative
             # user doc_id would be excluded from every sweep AND decoded as
             # count-payload garbage into the model.  One cheap columnar agg
-            # up front rejects it loudly, and the token total (auto
-            # partition sizing, join exchange resolution) rides it.
-            guard = corpus.agg(
-                F.min("doc_id").alias("__min_id"), F.sum("count").alias("__tokens")
-            ).collect()[0]
+            # up front rejects it loudly, and the token total (the path,
+            # auto partition sizing, join exchange resolution) rides it.
+            with _phase(spark, "guard"):
+                guard = corpus.agg(
+                    F.min("doc_id").alias("__min_id"), F.sum("count").alias("__tokens")
+                ).collect()[0]
             min_id = guard["__min_id"]
             total_tokens = int(guard["__tokens"] or 0)
             if min_id is not None and min_id < 0:
@@ -1079,33 +1164,21 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
                 )
             parallelism = spark.sparkContext.defaultParallelism
             P = config.num_partitions or _auto_partitions(total_tokens, parallelism)
-            # word_id is BY CONTRACT the lexicographic rank, and the sorted
-            # word list is needed on the driver anyway (model + checkpoint),
-            # so one distinct+sort collect builds the vocabulary.
-            words = [
-                r["word"]
-                for r in corpus.select("word").distinct().orderBy("word").collect()
-            ]
+            # Broadcast mode picks its exchange from the token total, so
+            # the driver path builds its setup from one collect; join mode
+            # needs V to pick one and takes the Spark setup.
+            cls = (_exchange("broadcast", total_tokens) if config.model_mode == "broadcast"
+                   else _Join)
+            words, docs = cls.setup(corpus, P)
             V = len(words)
             if V == 0:
                 raise ValueError("empty vocabulary")
-            name = (
-                "broadcast" if config.model_mode == "broadcast"
-                else _resolve_join_exchange(config, V, total_tokens, P)
-            )
+            if cls is _Join:
+                cls = _exchange(_resolve_join_exchange(config, V, total_tokens, P), total_tokens)
+            name = cls.name
             W = _chunk_grid(V, K, parallelism)[1] if name == "chunks" else 0
-            ex = _exchange(name, total_tokens)(spark, V, P, W, config)
-            corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
-                "doc_id", "word_id", "count"
-            )
-            # pack_docs hash-partitions by doc_id into P, so a partition
-            # holds whole pids.  When P equals spark.sql.shuffle.partitions
-            # Spark reuses the doc_id aggregate's exchange for it, which
-            # AQE may coalesce into runs of pids; _lay_out handles both.
-            packed = pack_docs(corpus_ids, P).withColumn(
-                "pid", F.pmod(F.hash("doc_id"), F.lit(P)).cast("int")
-            )
-            df_z = ex.zinit(packed, _num_tasks(P, total_tokens, parallelism), lineage)
+            ex = cls(spark, V, P, W, config)
+            df_z = ex.zinit(docs, _num_tasks(P, total_tokens, parallelism), lineage)
             lls: list[float] = []
             accum = np.zeros((V, K)) if name == "broadcast" else None
             start_it = 0
@@ -1118,7 +1191,8 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             ex = _exchange(name, total_tokens)(
                 spark, V, int(state["num_partitions"]), int(state["chunk_width"]), config
             )
-            df_z = ex.resume(df_z, lineage)
+            with _phase(spark, "resume"):
+                df_z = ex.resume(df_z, lineage)
             lls = [float(x) for x in state["lls"]]
             accum = state["accum"] if name == "broadcast" else None
             start_it = int(state["next_iteration"])
@@ -1128,9 +1202,10 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
                     "no running average; set average_model=False"
                 )
 
-        nk, nwk, _ = ex.reduce(df_z, lineage)
+        with _phase(spark, "zinit" if resume_from is None else "resume"):
+            nk, nwk, _ = ex.reduce(df_z, lineage)
         # The reduce materialized the first generation (the driver path's
-        # z-init collected it) — nothing reads the corpus triples again.
+        # setup collected the triples) — nothing reads them again.
         setup.release()
         for it in range(start_it, config.total_iterations):
             prev, lineage = lineage, _Lineage()

@@ -27,7 +27,9 @@ def vocab_table(spark: SparkSession, words: Sequence[str]) -> DataFrame:
     """``DataFrame[word, word_id]`` of a driver-side list, id = position.
 
     Built from a pandas frame, so with Arrow on (``get_spark``) the plan
-    is a ``LocalTableScan`` and no Python worker runs.
+    is a ``LocalTableScan`` and no Python worker runs.  Callers: the
+    Spark training path and ``infer.transform``, each feeding
+    :func:`remap_words`.
     """
     return spark.createDataFrame(
         pd.DataFrame({"word": list(words), "word_id": np.arange(len(words), dtype=np.int64)}),
@@ -82,6 +84,9 @@ def remap_words(corpus: DataFrame, vocab: DataFrame, word_col: str = "word", how
     Spark-side equivalent of ``LDADocument::ResetWordIndex``
     (``document.cc:125-129``).  ``how='inner'`` drops out-of-vocabulary
     words — the inference-time OOV filter of ``infer.cc:77-80``.
+    Callers: the Spark training path and ``infer.transform``; the
+    trainer's driver path assigns the same ids with numpy
+    (``train._pack_triples``).
     """
     return corpus.join(F.broadcast(vocab), corpus[word_col] == vocab["word"], how).drop(
         vocab["word"]

@@ -35,7 +35,9 @@ def pytest_configure(config):
 # similarity tests (IVF-PQ build / append / delete / search, blocked
 # near-dup, k-means, PCA, MMR and the semantic-dedup oracle), which pin
 # the shared vector-search core: side staging, scoring, top-k, exact
-# re-rank, training sample and checkpoint release.
+# re-rank, training sample and checkpoint release.  Nor are the unigram
+# and WordPiece tokenizer trainers' sequential-reference parity tests
+# (~17 s and ~14 s), which pin those trainers' output.
 SLOW_TESTS = {
     "test_as_of_join_matches_pandas_merge_asof",
     "test_association_rules_semantics",
@@ -72,8 +74,6 @@ SLOW_TESTS = {
     "test_spearman_matches_pandas_average_ranks",
     "test_streaming_sink_idempotence_check_is_o1",
     "test_tokenizer_save_load_roundtrip_all_families",
-    "test_train_matches_sequential_reference",
-    "test_trainer_parity_with_sequential_reference",
     "test_warc_roundtrip_html_payloads",
     "test_warc_stream_ingest_extract_and_dedup",
     "test_wet_stream_ingest_exactly_once_dedup",

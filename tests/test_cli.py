@@ -81,3 +81,14 @@ def test_train_view_infer_roundtrip(spark, corpus_file, tmp_path, capsys):
     rlines = open(result_file).read().splitlines()
     assert len(rlines) == 4  # one per (non-comment, non-blank) doc
     assert all(len(ln.split(" ")) == 2 for ln in rlines)
+
+
+def test_train_on_comment_only_file_fails(spark, tmp_path):
+    """A training file of blank and ``#`` lines holds no triples: train
+    fails with the trainer's empty-vocabulary error."""
+    p = tmp_path / "empty.txt"
+    p.write_text("# only a comment\n\n   \n# another\n")
+    with pytest.raises(ValueError, match="^empty vocabulary$"):
+        cli.main(["train", "--num_topics", "2", "--training_data_file", str(p),
+                  "--model_file", str(tmp_path / "model.txt"), "--total_iterations", "2",
+                  "--burn_in_iterations", "1"])

@@ -891,6 +891,98 @@ def test_driver_path_zero_token_corpus(spark):
     assert res.log_likelihood == [0.0, 0.0]
 
 
+def _job_labels(spark, group: str) -> list[str | None]:
+    """The description of every job of job group ``group``, in job order."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    labels = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        desc = store.job(jid).description()
+        labels.append(desc.get() if desc.isDefined() else None)
+    return labels
+
+
+def test_driver_path_setup_runs_four_jobs_at_most(spark):
+    """A warm driver-path train at P = 4 runs at most 4 Spark jobs — the
+    guard aggregate and one collect of the triples — each labelled
+    ``lda.train:<phase>``, and hands the caller back its job group and
+    description."""
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    cfg = TrainConfig(num_topics=3, total_iterations=3, burn_in_iterations=0, seed=3,
+                      num_partitions=4)
+    train(corpus, cfg)
+    sc = spark.sparkContext
+    group = "driver-path-setup"
+    try:
+        sc.setJobGroup(group, "caller")
+        train(corpus, cfg)
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        labels = _job_labels(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(labels) <= 4, labels
+    assert all(label and label.startswith("lda.train:") for label in labels), labels
+
+
+# Triples the driver path's numpy setup must pack as the Spark setup does:
+# non-ASCII words in code-point order (one outside the BMP, and one that
+# UTF-16 order would put after it), a duplicate (doc_id, word) triple,
+# zero and negative counts, a word that only occurs with count 0, a doc
+# left empty, a NULL word and a doc with a NULL count (dropped whole, as
+# pack_docs drops it).
+_EDGE_TRIPLES = [
+    (0, "é", 2), (0, "z", 1), (0, "\U0001f600", 3), (1, "\uff5e", 2), (1, "Z", 1), (1, "Z", 2),
+    (2, "a", 0), (2, "b", -1), (3, "only0", 0), (3, "z", 4), (4, "a", 2), (5, "é", 1),
+    (5, "a", -3), (7, "b", 5), (8, None, 2), (8, "b", 1), (9, "a", 2), (9, "b", None),
+    (11, "z", 3), (11, "a", 1), (11, "z", 1),
+]
+
+
+def test_driver_setup_matches_spark_setup(spark, monkeypatch):
+    """The driver path's one-collect setup gives the Spark setup's words,
+    counts and likelihoods on edge-case triples."""
+    corpus = spark.createDataFrame(_EDGE_TRIPLES, "doc_id long, word string, count int")
+    cfg = TrainConfig(num_topics=2, total_iterations=3, burn_in_iterations=1,
+                      compute_likelihood=True, seed=3, num_partitions=3)
+    res = {}
+    for path in ("driver", "spark"):
+        _on_path(monkeypatch, path)
+        res[path] = train(corpus, cfg)
+    drv, ref = res["driver"], res["spark"]
+    assert ref.raw_model.words == [None, "Z", "a", "b", "only0", "z", "é", "\uff5e", "\U0001f600"]
+    assert drv.raw_model.words == ref.raw_model.words
+    assert np.array_equal(drv.raw_model.nwk, ref.raw_model.nwk)
+    assert np.array_equal(drv.model.nwk, ref.model.nwk)
+    assert drv.log_likelihood == ref.log_likelihood
+    # docs 0, 1, 3, 4, 5, 7, 8 and 11 keep 6 + 5 + 4 + 2 + 1 + 5 + 1 + 5 tokens
+    assert ref.raw_model.nwk.sum() == 29
+
+
+@pytest.mark.parametrize("mode", [dict(model_mode="broadcast"),
+                                  dict(model_mode="join", average_model=False)])
+def test_train_on_zero_triples_raises(spark, monkeypatch, mode):
+    """No triples: the driver path (and the join setup) refuse the empty
+    vocabulary."""
+    from plda_spark.lda import train as train_mod
+
+    made = []
+    exchange = train_mod._exchange
+
+    def recording(*args):
+        made.append(exchange(*args))
+        return made[-1]
+
+    monkeypatch.setattr(train_mod, "_exchange", recording)
+    corpus = spark.createDataFrame([], "doc_id long, word string, count int")
+    with pytest.raises(ValueError, match="^empty vocabulary$"):
+        train(corpus, TrainConfig(num_topics=2, total_iterations=2, burn_in_iterations=0,
+                                  **mode))
+    assert made == ([train_mod._Driver] if mode["model_mode"] == "broadcast" else [])
+
+
 @pytest.mark.parametrize("bad", [dict(num_partitions=0), dict(num_partitions=-2),
                                  dict(checkpoint_every=0), dict(checkpoint_every=-1)])
 def test_config_rejects_bad_partitions_and_checkpoint_every(bad):

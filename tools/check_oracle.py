@@ -3,21 +3,30 @@
 Runs every query — the 50 driver-recorded contract entries AND the
 extras registry — on Spark and, where an oracle exists, the oracle on
 DuckDB over the same parquet tables; then compares row count + column
-names + order-insensitive canonicalized values.  Usage::
+names + order-insensitive canonicalized values.  Each line ends with a
+digest of the Spark result's canonical form, so two checkouts' outputs
+can be compared query by query.  Usage::
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+It checks the checkout it lives in, whatever the working directory.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# The Python workers inherit the JVM's environment, not this sys.path.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 import __spark_entry__ as entrymod
-from plda_spark.oracle import compare_frames, duckdb_connection
+from plda_spark.oracle import canon, compare_frames, duckdb_connection
 from plda_spark.session import get_spark
 
 
@@ -43,8 +52,9 @@ def main() -> None:
             failures.append(name)
             continue
         el = time.time() - t0
+        digest = hashlib.sha256(canon(sdf).to_csv(index=False).encode()).hexdigest()[:16]
         if name not in oracles:
-            print(f"ok    {name}: rows-only, {len(sdf)} rows ({el:.1f}s)")
+            print(f"ok    {name}: rows-only, {len(sdf)} rows ({el:.1f}s) {digest}")
             if len(sdf) == 0:
                 print(f"      WARNING: {name} returned 0 rows")
             continue
@@ -60,7 +70,7 @@ def main() -> None:
             print(f"FAIL  {name}: {diff}")
             failures.append(name)
             continue
-        print(f"OK    {name}: {len(sdf)} rows match ({el:.1f}s)")
+        print(f"OK    {name}: {len(sdf)} rows match ({el:.1f}s) {digest}")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
