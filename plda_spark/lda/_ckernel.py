@@ -9,8 +9,11 @@ and loads it via ctypes.
 Determinism contract: the C kernel consumes the same pre-drawn uniform
 array, evaluates the same double-precision expressions in the same
 order, and does the same first-k-with-cumsum≥u·total scan as the numpy
-path — so for a given (seed, partitioning, iteration) the two paths
-produce **bit-identical** assignments (asserted in tests).
+path — so for the same uniforms the two paths produce **bit-identical**
+assignments (asserted in tests).  ``kernel._sweep`` is its one caller:
+it hands over int32 word ids, int64 offsets and float64 uniforms, all
+C-contiguous, and sends a ``z``, ``nwk`` or ``nk`` of another type or
+layout to the numpy loop.
 
 If no compiler is available the caller silently falls back to the numpy
 loop.
@@ -165,14 +168,8 @@ def _sweep(
         vocab_size = nwk.shape[0]
     p = np.empty(K, dtype=np.float64)
     ndk = np.empty(K, dtype=np.float64)
-    if nwk.dtype == np.int64 and nk.dtype == np.int64:
-        fn = _lib.sweep_docs_i64
-    elif nwk.dtype == np.float64 and nk.dtype == np.float64:
-        fn = _lib.sweep_docs_f64
-    else:
-        raise TypeError(f"unsupported model dtypes {nwk.dtype}/{nk.dtype}")
-    for a in (word_occ, z, doc_offsets, nwk, nk, uniforms):
-        assert a.flags["C_CONTIGUOUS"]
+    # kernel._sweep sends only an int64 or a float64 model here.
+    fn = _lib.sweep_docs_i64 if nwk.dtype == np.int64 else _lib.sweep_docs_f64
     fn(
         word_occ.ctypes.data, z.ctypes.data, doc_offsets.ctypes.data,
         doc_offsets.shape[0] - 1,

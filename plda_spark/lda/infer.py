@@ -15,12 +15,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import kernel
-from .corpus import pack_docs
+from .corpus import doc_occurrences
 from .model import LDAModel
 from .vocab import remap_words, vocab_table
 
@@ -48,24 +47,21 @@ def _csr(occs) -> tuple[np.ndarray, np.ndarray]:
 
 def _infer(frame: DataFrame, to_batch, nk: np.ndarray, alpha: float, beta: float,
            total_iterations: int, burn_in_iterations: int, seed: int) -> DataFrame:
-    """The one inference core behind every front end: one ``(seed, pid, 0)``
-    RNG per partition and one :func:`kernel.infer_docs` call per Arrow
-    batch, so θ depends only on the Spark partition id the doc is scored
-    in and the doc order within that partition.  The partition id equals
-    :func:`~plda_spark.lda.corpus.pack_docs`' pid only while its
-    repartition survives planning; Spark may drop it for an equivalent
-    upstream exchange that AQE then coalesces by size.
+    """The one inference core behind every front end: one
+    :func:`kernel.infer_docs` call per Arrow batch, each doc on its own
+    ``(seed, doc_id)`` RNG stream, so θ = f(model, doc, seed, iterations)
+    wherever Spark scores the doc and whatever it is batched with (a
+    NULL doc_id draws doc_id 0's stream).
     ``to_batch(pdf) -> (word_occ, doc_offsets, nwk, vocab_size)`` is the
     front end's part: the batch's docs in CSR form, the model rows they
     index, and V when those rows are not the whole model (else None)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = kernel.make_rng(seed, TaskContext.get().partitionId(), 0)
         for pdf in batches:
             word_occ, offsets, nwk, vocab_size = to_batch(pdf)
             theta = kernel.infer_docs(
-                word_occ, offsets, nwk, nk, alpha, beta, rng,
-                total_iterations, burn_in_iterations, vocab_size,
+                word_occ, offsets, pdf["doc_id"].fillna(0).to_numpy(np.int64), nwk, nk,
+                alpha, beta, seed, total_iterations, burn_in_iterations, vocab_size,
             )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "topic_weights": list(theta)})
 
@@ -78,7 +74,6 @@ def transform(
     total_iterations: int = 15,
     burn_in_iterations: int = 10,
     seed: int = 42,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``(doc_id, word, count)`` → ``(doc_id, topic_weights: array<double>)``.
 
@@ -86,31 +81,22 @@ def transform(
     same quantity ``infer.cc:94-98`` writes.  OOV words are silently
     dropped (``infer.cc:77-80``) by the inner vocab join, so a doc with no
     in-vocab word is omitted from the output (and from the CLI's file),
-    where ``infer.cc`` writes a line for it.
+    where ``infer.cc`` writes a line for it.  The docs are scored as the
+    doc_id aggregate leaves them, in as many tasks as AQE sizes it to:
+    placement does not change θ, and building the frame runs no job.
     """
     _check_iterations(total_iterations, burn_in_iterations)
     spark = corpus.sparkSession
-    sc = spark.sparkContext
-    if num_partitions:
-        P = num_partitions
-    else:
-        from .train import _auto_partitions
-
-        total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
-        P = _auto_partitions(total_tokens, sc.defaultParallelism)
-
     corpus_ids = remap_words(corpus, vocab_table(spark, model.words)).select(
         "doc_id", "word_id", "count"
     )
-    packed = pack_docs(corpus_ids, P)
-
-    bc_nwk = sc.broadcast(model.nwk.astype(np.float64))
+    bc_nwk = spark.sparkContext.broadcast(model.nwk.astype(np.float64))
 
     def to_batch(pdf: pd.DataFrame):
         return (*_csr(pdf["word_occ"]), bc_nwk.value, None)
 
-    return _infer(packed, to_batch, model.nk.astype(np.float64), model.alpha,
-                  model.beta, total_iterations, burn_in_iterations, seed)
+    return _infer(doc_occurrences(corpus_ids), to_batch, model.nk.astype(np.float64),
+                  model.alpha, model.beta, total_iterations, burn_in_iterations, seed)
 
 
 def transform_stream(
@@ -134,7 +120,7 @@ def transform_stream(
     one-pass scorer that skips the corpus-triples shuffle entirely).
 
     OOV words are dropped in the UDF (``infer.cc:77-80``); occurrences
-    are sorted by word id to match ``pack_docs``'s layout.  Docs with no
+    are sorted by word id to match ``doc_occurrences``' layout.  Docs with no
     in-vocab words emit all-zero weights (reference behavior: an
     all-OOV doc still writes a line).
     """
@@ -196,8 +182,9 @@ def transform_model_df(
     Gibbs exactly like the broadcast path but against doc-local rows.
     Each doc ships only the model rows for its own distinct words; a
     batch's sub-models are stacked into one, each doc's local indices
-    shifted by its first row.  Like :func:`transform`, a doc with no
-    in-vocab word is omitted.
+    shifted by its first row, so θ is :func:`transform`'s, bit for bit,
+    whatever join AQE picks at run time.  Like :func:`transform`, a doc
+    with no in-vocab word is omitted.
     """
     _check_iterations(total_iterations, burn_in_iterations)
     joined = corpus.join(model_df, "word_id").select(
@@ -249,8 +236,11 @@ def write_inference_result(result: DataFrame, path: str, single_file: bool = Fal
     ``single_file=True`` streams lines through the driver into one plain
     file (the reference's single-process writer shape — used by the
     CLI); the default writes a Spark text directory (the scale path).
+    Either way the output is one partition, so the lines are sorted in
+    it: an ``orderBy`` range exchange would first sample its input, a job
+    that runs the scoring a second time.
     """
-    lines = result.orderBy("doc_id").select(
+    lines = result.repartition(1).sortWithinPartitions("doc_id").select(
         F.array_join(
             F.transform(
                 "topic_weights",
@@ -269,4 +259,4 @@ def write_inference_result(result: DataFrame, path: str, single_file: bool = Fal
             for row in lines.toLocalIterator():
                 f.write(row["value"] + "\n")
     else:
-        lines.coalesce(1).write.mode("overwrite").text(path)
+        lines.write.mode("overwrite").text(path)

@@ -22,8 +22,10 @@ Semantics follow the reference implementation (plda):
   ll_d = Σ_w count_w · log Σ_k φ̂_wk θ̂_dk.
 
 Unlike the reference (which seeds ``srand(time(NULL))`` — ``lda.cc:114``),
-every entry point takes an explicit ``numpy.random.Generator`` so results
-are reproducible for a fixed (seed, partitioning, iteration) triple.
+every stream comes from :func:`make_rng`: training keys one per
+(seed, pid, iteration), so a sweep is reproducible for a fixed seed and
+partitioning; inference keys one per (seed, doc_id), so a doc's θ depends
+only on the model, the doc, the seed and the iteration counts.
 
 Documents are passed in CSR-ish flat form: ``word_occ`` holds one word id
 per *occurrence* (mirroring the reference's ``wordtopics_`` layout,
@@ -32,8 +34,8 @@ per *occurrence* (mirroring the reference's ``wordtopics_`` layout,
 One sweep serves everything: :func:`sweep_docs` draws one uniform per
 occurrence and hands them to the C-or-numpy dispatch; training sweeps
 with ``update_model=True``.  :func:`infer_docs` is the whole of batch
-inference: per doc, in order, the z-init and all of its uniforms, then
-one frozen-model sweep per iteration over the batch.
+inference: per doc, from its own stream, the z-init and all of its
+uniforms, then one frozen-model sweep per iteration over the batch.
 :func:`doc_log_likelihoods` is the per-doc likelihood loop the trainer
 and :func:`corpus_log_likelihood` share.
 """
@@ -158,12 +160,20 @@ def _sweep(word_occ: np.ndarray, z: np.ndarray, doc_offsets: np.ndarray, nwk: np
     if vocab_size is None:
         vocab_size = nwk.shape[0]
     vbeta = vocab_size * beta
+    # The C sweep's ABI; no copy when an input already matches it.
+    word_occ = np.ascontiguousarray(word_occ, dtype=np.int32)
+    doc_offsets = np.ascontiguousarray(doc_offsets, dtype=np.int64)
+    uniforms = np.ascontiguousarray(uniforms, dtype=np.float64)
 
     # Hot path: the compiled C sweep (same algorithm, same uniforms, same
     # double-precision evaluation order — bit-identical to the loop below;
-    # see _ckernel.py).  Falls through to numpy when no compiler exists.
+    # see _ckernel.py).  It writes z, nwk and nk in place, so those must
+    # already be its types and C-contiguous; otherwise, or when no
+    # compiler exists, the numpy loop runs.
     csweep = _ckernel.get_sweep_fn()
-    if csweep is not None and nwk.dtype == nk.dtype and nwk.dtype in (np.int64, np.float64):
+    if (csweep is not None and z.dtype == np.int32 and nwk.dtype == nk.dtype
+            and nwk.dtype in (np.int64, np.float64)
+            and all(a.flags.c_contiguous for a in (z, nwk, nk))):
         csweep(word_occ, z, doc_offsets, nwk, nk, alpha, beta, uniforms, update_model, vocab_size)
         return
     for d in range(doc_offsets.shape[0] - 1):
@@ -189,21 +199,23 @@ def _sweep(word_occ: np.ndarray, z: np.ndarray, doc_offsets: np.ndarray, nwk: np
             z[i] = new
 
 
-def infer_docs(word_occ: np.ndarray, doc_offsets: np.ndarray, nwk: np.ndarray, nk: np.ndarray,
-               alpha: float, beta: float, rng: np.random.Generator, total_iterations: int,
-               burn_in_iterations: int, vocab_size: int | None = None) -> np.ndarray:
+def infer_docs(word_occ: np.ndarray, doc_offsets: np.ndarray, doc_ids: np.ndarray,
+               nwk: np.ndarray, nk: np.ndarray, alpha: float, beta: float, seed: int,
+               total_iterations: int, burn_in_iterations: int,
+               vocab_size: int | None = None) -> np.ndarray:
     """Averaged topic histograms of unseen docs under a frozen model
     (``infer.cc:37-101``) → ``(n_docs, K)`` float64.
 
-    Each doc draws its z-init and then its ``(T, n_d)`` uniforms from
-    ``rng``, in doc order — the stream a per-doc loop of ``init_assignments``
-    plus T ``sweep_docs(update_model=False)`` calls consumes.  The model is
+    Each doc draws its z-init and then its ``(T, n_d)`` uniforms from its
+    own stream, keyed by ``(seed, doc_ids[d])`` — the stream a per-doc
+    loop of ``init_assignments`` plus T ``sweep_docs(update_model=False)``
+    calls consumes.  The model is
     frozen, so docs are independent and one sweep per iteration over the
-    whole batch gives the same bits.  Row d is the doc's topic histogram
-    summed over the iterations after burn-in, divided by their number.
-    The batch is walked in consecutive doc slices holding at most
-    ``_MAX_UNIFORMS`` uniforms (a doc above that runs alone); the draws
-    stay in doc order, so the result does not depend on the slicing.
+    whole batch gives the same bits: a doc's θ does not depend on the
+    other docs of its batch or on their order.  Row d is the doc's topic
+    histogram summed over the iterations after burn-in, divided by their
+    number.  The batch is walked in consecutive doc slices holding at
+    most ``_MAX_UNIFORMS`` uniforms (a doc above that runs alone).
     ``vocab_size`` is the true V when ``nwk`` is a stacked sub-model."""
     num_topics = nk.shape[0]
     n_docs = doc_offsets.shape[0] - 1
@@ -218,7 +230,10 @@ def infer_docs(word_occ: np.ndarray, doc_offsets: np.ndarray, nwk: np.ndarray, n
         occ = word_occ[base:doc_offsets[end]]
         z = np.empty(occ.shape[0], dtype=np.int32)
         uniforms = np.empty((total_iterations, occ.shape[0]), dtype=np.float64)
-        for s, e in zip(offsets[:-1], offsets[1:]):
+        for doc_id, s, e in zip(doc_ids[start:end], offsets[:-1], offsets[1:]):
+            # Spawn key (doc_id, 0), a negative id by its uint64 bits:
+            # training's keys are (pid, iteration + 1), never 0.
+            rng = make_rng(seed, int(doc_id) & 0xFFFF_FFFF_FFFF_FFFF, -1)
             z[s:e] = init_assignments(e - s, num_topics, rng)
             uniforms[:, s:e] = rng.random((total_iterations, e - s))
         cells = np.repeat(np.arange(end - start) * num_topics, np.diff(offsets))

@@ -542,8 +542,8 @@ def _lay_out(df: DataFrame, tasks: int) -> DataFrame:
     and the sort puts each pid's docs together, in doc_id order.  This is
     the one sort: checkpoints keep row order, so from here on every
     broadcast sweep streams its task in (pid, doc_id) order without a
-    shuffle.  The driver path lays out its collected triples the same
-    way, in one task."""
+    shuffle.  The driver path collects its triples unsorted and sorts
+    them once, in :func:`_pack_triples`."""
     return df.coalesce(tasks).sortWithinPartitions("pid", "doc_id")
 
 
@@ -715,12 +715,12 @@ class _Driver(_Broadcast):
     @staticmethod
     def setup(corpus: DataFrame, num_partitions: int) -> tuple[list, pd.DataFrame]:
         """The Spark setup's vocabulary and packed docs from ONE collect:
-        the triples with their pid, computed in the same projection, laid
-        out in one task.  plda's ``lda`` likewise reads the corpus and
-        builds its vocabulary in one pass (lda.cc:71-77)."""
+        the triples with their pid, computed in the same projection, in
+        whatever order they arrive.  plda's ``lda`` likewise reads the
+        corpus and builds its vocabulary in one pass (lda.cc:71-77)."""
         triples = corpus.select("doc_id", "word", "count", _pid(num_partitions).alias("pid"))
         with _phase(corpus.sparkSession, "collect"):
-            return _pack_triples(_lay_out(triples, 1).toPandas())
+            return _pack_triples(triples.toPandas())
 
     def zinit(self, docs: pd.DataFrame, tasks: int, lineage: _Lineage) -> pd.DataFrame:
         return _generation(
@@ -743,9 +743,9 @@ class _Driver(_Broadcast):
 
 
 def _pack_triples(triples: pd.DataFrame) -> tuple[list, pd.DataFrame]:
-    """Collected ``(doc_id, word, count, pid)`` triples → the sorted
-    vocabulary and the packed docs ``(pid, doc_id, word_occ)`` in
-    (pid, doc_id) order, as the Spark setup builds them.  The vocabulary
+    """Collected ``(doc_id, word, count, pid)`` triples, in any order →
+    the sorted vocabulary and the packed docs ``(pid, doc_id, word_occ)``
+    in (pid, doc_id) order, as the Spark setup builds them.  The vocabulary
     is ``distinct().orderBy("word")``: Python's code-point order is
     Spark's binary UTF-8 order, and a NULL word sorts first and, like the
     remap join, matches no triple.  ``word_occ`` is :func:`pack_docs`'
@@ -1184,7 +1184,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             start_it = 0
         else:
             state, df_z = _load_checkpoint(spark, resume_from)
-            words = [str(w) for w in state["words"]]
+            words = state["words"].tolist()
             V = len(words)
             name = str(state["exchange"])
             total_tokens = int(state["num_tokens"])

@@ -74,3 +74,10 @@ SPELLINGS = {
 def test_formula_is_spelled_once(name):
     pattern, allowed = SPELLINGS[name]
     assert _spellings(re.compile(pattern)) == Counter(allowed)
+
+
+def test_no_lda_stream_keyed_by_spark_placement():
+    """LDA's RNG streams are keyed by (seed, pid, iteration) or
+    (seed, doc_id), never by where Spark runs a task: nothing under
+    ``plda_spark/lda/`` reads the task's partition."""
+    assert _spellings(re.compile(r"TaskContext|partitionId\("), PKG / "lda") == Counter()

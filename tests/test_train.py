@@ -1,5 +1,7 @@
 """End-to-end LDA training tests (SURVEY.md §5.2-3/4)."""
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -156,87 +158,127 @@ _PIN_ROWS = [
     (4, "w005", 2), (4, "w006", 7), (4, "w011", 1), (5, "w000", 4),
     (5, "w012", 6), (5, "w021", 5), (5, "w029", 3), (6, "w008", 2), (6, "w018", 2),
 ]
-# 6·θ per doc (12 iterations, 6 of them after burn-in, seed 3), as the
-# per-doc inference loop gave it.  All docs in one partition (pid 0):
-_THETA6_ONE_PID = {
-    0: [6, 1, 53], 1: [60, 0, 0], 2: [11, 24, 19], 3: [3, 3, 0],
-    4: [3, 1, 56], 5: [70, 33, 5], 6: [4, 13, 7],
-}
-# transform with num_partitions=2:
-_THETA6_TWO_PIDS = {
-    0: [2, 2, 56], 1: [59, 0, 1], 2: [13, 25, 16], 3: [0, 6, 0],
-    4: [3, 2, 55], 5: [62, 40, 6], 6: [2, 7, 15],
+# 6·θ per doc (12 iterations, 6 of them after burn-in, seed 3): the
+# per-doc inference loop on each doc's own (seed, doc_id) stream.
+_THETA6 = {
+    0: [1, 1, 58], 1: [54, 3, 3], 2: [16, 32, 6], 3: [1, 4, 1],
+    4: [15, 8, 37], 5: [58, 34, 16], 6: [4, 6, 14],
 }
 
 
-def _assert_theta6(df, want):
+def _assert_theta6(df, want=_THETA6):
     got = {r["doc_id"]: np.array(r["topic_weights"]) for r in df.collect()}
     assert set(got) == set(want)
     for d, counts in want.items():
         assert np.array_equal(got[d], np.array(counts, dtype=np.float64) / 6), d
 
 
-def test_infer_front_ends_pinned(spark, tiny_result):
-    """Every inference front end gives exactly the recorded θ: same RNG
-    stream per partition, same doc order, same sweep."""
+@contextlib.contextmanager
+def _sql_conf(spark, key, value):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_infer_front_ends_pinned(spark, tiny_result, tmp_path):
+    """Every inference front end gives exactly the per-doc loop's θ,
+    however Spark partitions and batches the docs: each doc samples on
+    its own (seed, doc_id) stream."""
     from pyspark.sql import functions as F
 
     from plda_spark.lda import infer
     from plda_spark.lda.model import LDAModel
     from plda_spark.lda.vocab import remap_words
 
+    from .test_ckernel import infer_per_doc
+
     raw = tiny_result.raw_model
     model = LDAModel(raw.nwk, raw.words, alpha=1.0, beta=50.0)
-    docs = spark.createDataFrame(_PIN_ROWS, "doc_id long, word string, count int").coalesce(1)
-    for P, want in ((1, _THETA6_ONE_PID), (2, _THETA6_TWO_PIDS)):
-        _assert_theta6(infer.transform(model, docs, 12, 6, seed=3, num_partitions=P), want)
+    index = {w: i for i, w in enumerate(model.words)}
+    occs = {}
+    for d, w, c in sorted(_PIN_ROWS, key=lambda r: (r[0], index.get(r[1], -1))):
+        occs.setdefault(d, []).extend([index[w]] * c if w in index else [])
+    ids = np.array(sorted(occs), dtype=np.int64)
+    offs = np.concatenate([[0], np.cumsum([len(occs[d]) for d in ids])]).astype(np.int64)
+    loop = infer_per_doc(np.concatenate([occs[d] for d in ids]).astype(np.int32), offs, ids,
+                         model.nwk.astype(np.float64), model.nk.astype(np.float64), 3, 12, 6,
+                         alpha=model.alpha, beta=model.beta)
+    assert {int(d): list(6 * t) for d, t in zip(ids, loop)} == _THETA6
 
+    docs = spark.createDataFrame(_PIN_ROWS, "doc_id long, word string, count int")
     texts = {}
     for d, w, c in _PIN_ROWS:
         texts.setdefault(d, []).extend([w] * c)
     text_df = spark.createDataFrame(
         [(d, " ".join(ws)) for d, ws in texts.items()], "doc_id long, text string"
-    ).coalesce(1)
-    _assert_theta6(infer.transform_stream(model, text_df, 12, 6, seed=3), _THETA6_ONE_PID)
-
+    )
     vocab = spark.createDataFrame(
         [(w, i) for i, w in enumerate(model.words)], "word string, word_id long"
     )
     triples = remap_words(docs, vocab).select("doc_id", "word_id", "count")
-    # The broadcast hint fixes the join at planning time.  Unhinted, AQE
-    # re-plans it at run time, and θ changed in one full-suite run.
-    model_df = F.broadcast(model.to_dataframe(spark).select("word_id", "topic_counts"))
-    _assert_theta6(
-        infer.transform_model_df(
-            model_df, model.nk, triples,
-            alpha=model.alpha, beta=model.beta, total_iterations=12,
-            burn_in_iterations=6, seed=3,
-        ),
-        _THETA6_ONE_PID,
-    )
+    model_df = model.to_dataframe(spark).select("word_id", "topic_counts")
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    for partitions, batch in ((shuffle, "10000"), ("3", "2")):
+        with _sql_conf(spark, "spark.sql.shuffle.partitions", partitions), \
+                _sql_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", batch):
+            for placed in (docs.coalesce(1), docs.repartition(3)):
+                _assert_theta6(infer.transform(model, placed, 12, 6, seed=3))
+            _assert_theta6(infer.transform_stream(model, text_df.repartition(3), 12, 6, seed=3))
+            for table in (model_df, F.broadcast(model_df)):
+                _assert_theta6(infer.transform_model_df(
+                    table, model.nk, triples, alpha=model.alpha, beta=model.beta,
+                    total_iterations=12, burn_in_iterations=6, seed=3,
+                ))
+
+    # Streamed: one file per micro-batch.
+    src = str(tmp_path / "texts")
+    text_df.repartition(3).write.parquet(src)
+    stream = spark.readStream.schema(text_df.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    query = (infer.transform_stream(model, stream, 12, 6, seed=3).writeStream
+             .format("memory").queryName("pinned_theta").trigger(availableNow=True).start())
+    try:
+        assert query.awaitTermination(300)
+        assert sum(p["numInputRows"] > 0 for p in query.recentProgress) >= 2
+        _assert_theta6(spark.table("pinned_theta"))
+    finally:
+        query.stop()
+        spark.catalog.dropTempView("pinned_theta")
 
 
 def test_model_df_frame_runs_no_job(spark, tiny_result):
-    """Building the model-as-DataFrame scoring frame runs no Spark job:
-    V is counted inside the caller's action."""
+    """Building any inference frame runs no Spark job: transform_model_df
+    counts V inside the caller's action, and transform and
+    transform_stream need no count at all."""
     from plda_spark.lda import infer
 
     model = tiny_result.raw_model
     model_df = model.to_dataframe(spark).select("word_id", "topic_counts")
     triples = spark.createDataFrame([(0, 1, 3), (1, 25, 4)],
                                     "doc_id long, word_id long, count int")
+    docs = spark.createDataFrame([(0, "w001", 3), (1, "w025", 4)],
+                                 "doc_id long, word string, count int")
+    texts = spark.createDataFrame([(0, "w001 w001"), (1, "w025")], "doc_id long, text string")
+    builds = {
+        "model_df": lambda: infer.transform_model_df(model_df, model.nk, triples,
+                                                     total_iterations=4, burn_in_iterations=2),
+        "transform": lambda: infer.transform(model, docs, 4, 2),
+        "stream": lambda: infer.transform_stream(model, texts, 4, 2),
+    }
     sc = spark.sparkContext
-    group = "model-df-build"
-    try:
-        sc.setJobGroup(group, group)
-        df = infer.transform_model_df(model_df, model.nk, triples,
-                                      total_iterations=4, burn_in_iterations=2)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sorted(r["doc_id"] for r in df.collect()) == [0, 1]
+    for name, build in builds.items():
+        group = f"infer-build-{name}"
+        try:
+            sc.setJobGroup(group, group)
+            df = build()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sorted(r["doc_id"] for r in df.collect()) == [0, 1], name
 
 
 def test_infer_all_oov_doc_and_empty_input(spark, tiny_result):
@@ -300,7 +342,7 @@ def test_driver_tables_skip_python_workers(spark, tiny_result, rdd_scans):
         pd.DataFrame({"doc_id": [0, 0, 1], "word": ["w001", "w002", "w025"], "count": [5, 5, 10]}),
         "doc_id long, word string, count int",
     )
-    assert rdd_scans(infer.transform(model, docs, num_partitions=2)) == []
+    assert rdd_scans(infer.transform(model, docs)) == []
 
 
 def test_describe_topics(spark, tiny_result):
@@ -706,11 +748,8 @@ def test_broadcast_task_count_follows_token_volume(spark, monkeypatch):
 def tiny_arrow_batches(spark):
     """Arrow batches of 3 rows, so batches straddle pid boundaries and a
     pid's docs span several batches; the setting is restored after."""
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "3")
-    yield
-    spark.conf.set(conf, old)
+    with _sql_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "3"):
+        yield
 
 
 def _record_layouts(monkeypatch) -> list[int]:
@@ -754,7 +793,8 @@ def test_task_count_does_not_move_a_bit(spark, tmp_path, monkeypatch, tiny_arrow
         ))
         z = spark.read.parquet(f"{ckpt}/assignments").toPandas()
         out[tasks] = res, z.sort_values(["pid", "doc_id"], ignore_index=True)
-    assert seen == list(_TASKS_AT)
+    # A broadcast corpus in one task trains on the driver: no layout.
+    assert seen == [t for t in _TASKS_AT if t > 1 or exchange != "broadcast"]
     ref, ref_z = out[1]
     for tasks in (2, 4):
         res, z = out[tasks]
@@ -782,7 +822,7 @@ def test_resume_in_another_task_count(spark, tmp_path, monkeypatch, tiny_arrow_b
                               checkpoint_every=2))
     monkeypatch.setattr(train_mod, "_TOKENS_PER_PARTITION", _TASKS_AT[4])
     resumed = train(corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt)
-    assert seen == [2, 1, 4]
+    assert seen == [2, 4]  # the 1-task run was on the driver
     assert np.array_equal(straight.raw_model.nwk, resumed.raw_model.nwk)
     assert np.array_equal(straight.model.nwk, resumed.model.nwk)
     assert resumed.log_likelihood == straight.log_likelihood
@@ -802,10 +842,24 @@ def test_resume_on_the_driver(spark, tmp_path, monkeypatch, tiny_arrow_batches):
                               checkpoint_every=2))
     _on_path(monkeypatch, "driver")
     resumed = train(corpus, TrainConfig(**base, total_iterations=4), resume_from=ckpt)
-    assert seen == [1, 2, 1]
+    assert seen == [2, 1]
     assert np.array_equal(straight.raw_model.nwk, resumed.raw_model.nwk)
     assert np.array_equal(straight.model.nwk, resumed.model.nwk)
     assert resumed.log_likelihood == straight.log_likelihood
+
+
+def test_resume_keeps_a_null_word(spark, tmp_path):
+    """A NULL word stays NULL in a resumed run's vocabulary."""
+    corpus = spark.createDataFrame([(0, None, 1), (0, "a", 2), (1, "b", 3)],
+                                   "doc_id long, word string, count int")
+    ckpt = str(tmp_path / "ckpt")
+    base = dict(num_topics=2, burn_in_iterations=0, seed=3, num_partitions=2)
+    fresh = train(corpus, TrainConfig(**base, total_iterations=2))
+    train(corpus, TrainConfig(**base, total_iterations=1, checkpoint_dir=ckpt,
+                              checkpoint_every=1))
+    resumed = train(corpus, TrainConfig(**base, total_iterations=2), resume_from=ckpt)
+    assert fresh.model.words == resumed.model.words == [None, "a", "b"]
+    assert np.array_equal(fresh.model.nwk, resumed.model.nwk)
 
 
 def _stage_scopes(spark, group: str) -> list[str]:
