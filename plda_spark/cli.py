@@ -8,7 +8,10 @@ Mirrors the reference's three binaries and their flag validators
   switches to ``mpi_lda`` output semantics (final-iteration raw counts,
   no averaging — ``mpi_lda.cc:234-241``).
 - ``infer``      ≙ ``infer``    — score unseen docs against a frozen
-  model, write averaged θ numerators (``infer.cc:37-101``).
+  model, write averaged θ numerators (``infer.cc:37-101``).  A held-out
+  corpus of at most ``train._TOKENS_PER_PARTITION`` triples is scored
+  and written on the driver, like the reference's single process: one
+  Spark job (the collect of its triples) and no Python task.
 - ``view``       ≙ ``view_model.py`` — print topic top words
   (weight > 1, descending) and per-topic totals.
 
@@ -133,14 +136,14 @@ def _cmd_infer(a: argparse.Namespace) -> None:
     spark = get_spark("plda-infer")
     model = LDAModel.load_text(a.model_file, a.alpha, a.beta)
     corpus = read_plda_corpus(spark, a.inference_data_file)
-    theta = lda_infer.transform(
+    lda_infer._infer_to_file(
         model,
         corpus,
+        a.inference_result_file,
         total_iterations=a.total_iterations,
         burn_in_iterations=a.burn_in_iterations,
         seed=a.seed,
     )
-    lda_infer.write_inference_result(theta, a.inference_result_file, single_file=True)
 
 
 def _cmd_view(a: argparse.Namespace) -> None:

@@ -10,12 +10,16 @@ mirroring the reference's CSR layout ``wordtopics_`` /
 ``wordtopics_start_index_`` (``common.h:169-180``).
 :func:`doc_occurrences` packs JVM-side with higher-order array
 functions, no Python in this path, for ``infer.transform`` and, through
-:func:`pack_docs`, the Spark training path.  A corpus the
-trainer runs on the driver is packed there instead, from one collect of
-its triples (``train._pack_triples``), into the same arrays.
+:func:`pack_docs`, the Spark training path.  A corpus that the trainer
+or the CLI's ``infer`` runs on the driver is packed there instead, from
+one collect of its triples, into the same arrays by one numpy core,
+:func:`_pack_rows`.
 """
 
 from __future__ import annotations
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,8 +57,8 @@ def doc_occurrences(corpus_ids: DataFrame) -> DataFrame:
     expansion the reference's ``WordOccurrenceIterator`` walks
     (``document.cc:21-82``).  Empty docs are dropped.  ``infer.transform``
     scores this frame as is, partitioned however the aggregate's exchange
-    and AQE leave it; the trainer's driver path builds the same arrays
-    with numpy (``train._pack_triples``).
+    and AQE leave it; the driver paths build the same arrays with numpy
+    (:func:`_pack_rows`).
     """
     pairs = F.array_sort(F.collect_list(F.struct("word_id", "count")))
     return (
@@ -77,3 +81,28 @@ def pack_docs(corpus_ids: DataFrame, num_partitions: int) -> DataFrame:
     ``num_partitions``-way partitioning (the reference round-robins docs
     across ranks, ``mpi_lda.cc:127``)."""
     return doc_occurrences(corpus_ids).repartition(num_partitions, "doc_id")
+
+
+def _pack_rows(rows: pd.DataFrame,
+               order: list[str]) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    """:func:`doc_occurrences` in numpy, for collected ``(doc_id, word_id,
+    count, …)`` rows in any order: the docs' ``order`` columns, sorted by
+    them, plus their ``word_occ`` arrays in CSR form (flat occurrences and
+    int64 offsets).  ``order`` ends with ``doc_id`` and may start with
+    columns that are functions of it (the trainer's pid).  Same rules as
+    the JVM aggregate: a doc's word ids sorted, each repeated by its
+    count (none for a count ≤ 0), a doc with a NULL count dropped whole,
+    empty docs dropped.  The trainer's and the CLI ``infer``'s driver
+    paths both pack through here."""
+    rows = rows[~rows["doc_id"].isin(rows["doc_id"][rows["count"].isna()])]
+    rows = rows.sort_values([*order, "word_id"], kind="stable")
+    doc_id = rows["doc_id"].to_numpy()
+    reps = np.maximum(rows["count"].to_numpy(), 0).astype(np.int64)
+    first = np.ones(len(rows), dtype=bool)
+    first[1:] = doc_id[1:] != doc_id[:-1]
+    starts = np.flatnonzero(first)
+    lens = np.add.reduceat(reps, starts) if len(rows) else reps
+    kept = lens > 0
+    docs = rows[order].iloc[starts[kept]].reset_index(drop=True)
+    offsets = np.concatenate([[0], np.cumsum(lens[kept])]).astype(np.int64)
+    return docs, np.repeat(rows["word_id"].to_numpy(), reps), offsets

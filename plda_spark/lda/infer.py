@@ -2,24 +2,37 @@
 
 Per unseen document (``infer.cc:37-101``): drop OOV words, random z-init,
 ``total_iterations`` frozen-model sweeps, average the per-doc topic
-histogram over post-burn-in iterations.  Documents are independent, so
-this is a single embarrassingly-parallel ``mapInPandas`` job with the
-model broadcast once — no per-iteration sync at all (the reference
-streams docs one at a time through a single process).
+histogram over post-burn-in iterations.  Documents are independent, and
+each samples on its own ``(seed, doc_id)`` RNG stream, so θ depends only
+on the model, the doc, the seed and the iteration counts.
+
+Two shapes.  :func:`_infer_to_file`, the CLI's ``infer``, scores a
+held-out corpus of at most ``train._TOKENS_PER_PARTITION`` triples in
+the caller's process, like the reference's single-process binary: one
+Arrow collect of the triples, the remap and packing in numpy, one
+:func:`kernel.infer_docs` call and the file written on the driver — one
+Spark job, no Python task.  The DataFrame front ends (:func:`transform`,
+:func:`transform_stream`, :func:`transform_model_df`) score on Spark,
+over one core: one ``mapInPandas`` with the model broadcast (or joined)
+once and one :func:`kernel.infer_docs` call per Arrow batch, with no
+per-iteration sync at all.  A larger CLI corpus takes :func:`transform`.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import kernel
-from .corpus import doc_occurrences
+from ..session import job_phase
+from . import kernel, train
+from .corpus import _pack_rows, doc_occurrences
 from .model import LDAModel
 from .vocab import remap_words, vocab_table
 
@@ -84,6 +97,9 @@ def transform(
     where ``infer.cc`` writes a line for it.  The docs are scored as the
     doc_id aggregate leaves them, in as many tasks as AQE sizes it to:
     placement does not change θ, and building the frame runs no job.
+    Callers: :func:`_infer_to_file` for a corpus past its row cap, the
+    registry's ``lda_infer_theta`` query and the benchmark's
+    ``infer.transform`` probe.
     """
     _check_iterations(total_iterations, burn_in_iterations)
     spark = corpus.sparkSession
@@ -229,30 +245,46 @@ def transform_model_df(
                   total_iterations, burn_in_iterations, seed)
 
 
+def _weight_col(v: Column) -> Column:
+    """One topic weight as ``infer.cc:94-98`` text: an integral value as an
+    integer, any other with 6 decimals.  ``format_string``, NOT
+    ``format_number``: the latter inserts thousands separators
+    ("1,234.5") that break the space-separated parity format for any
+    weight >= 1000."""
+    return F.when(v == F.floor(v), v.cast("long").cast("string")).otherwise(
+        F.format_string("%.6f", v)
+    )
+
+
+_MICRO = Decimal("0.000001")
+
+
+def _weight_str(v: float) -> str:
+    """:func:`_weight_col` in Python, for the driver's writer.  The JVM's
+    ``%.6f`` rounds the shortest decimal form of the double half-up
+    (1/128 → ``0.007813``), where Python's ``"%.6f"`` rounds the exact
+    binary value half-to-even (``0.007812``); ``repr`` is that shortest
+    form."""
+    if v == math.floor(v):
+        return str(int(v))
+    return f"{Decimal(repr(v)).quantize(_MICRO, ROUND_HALF_UP):f}"
+
+
 def write_inference_result(result: DataFrame, path: str, single_file: bool = False) -> None:
     """Text-format parity with ``infer.cc:94-98``: one line per doc, K
     space-separated averaged topic counts, in doc order.
 
     ``single_file=True`` streams lines through the driver into one plain
-    file (the reference's single-process writer shape — used by the
-    CLI); the default writes a Spark text directory (the scale path).
-    Either way the output is one partition, so the lines are sorted in
-    it: an ``orderBy`` range exchange would first sample its input, a job
-    that runs the scoring a second time.
+    file (the reference's single-process writer shape); the default
+    writes a Spark text directory (the scale path).  Either way the
+    output is one partition, so the lines are sorted in it: an
+    ``orderBy`` range exchange would first sample its input, a job that
+    runs the scoring a second time.  Callers: :func:`_infer_to_file` for
+    a corpus past its row cap, and the benchmark's
+    ``infer.write`` probe, both with ``single_file=True``.
     """
     lines = result.repartition(1).sortWithinPartitions("doc_id").select(
-        F.array_join(
-            F.transform(
-                "topic_weights",
-                # format_string, NOT format_number: the latter inserts
-                # thousands separators ("1,234.5") that break the
-                # space-separated parity format for any weight >= 1000.
-                lambda v: F.when(
-                    v == F.floor(v), v.cast("long").cast("string")
-                ).otherwise(F.format_string("%.6f", v)),
-            ),
-            " ",
-        ).alias("value")
+        F.array_join(F.transform("topic_weights", _weight_col), " ").alias("value")
     )
     if single_file:
         with open(path, "w", encoding="utf-8") as f:
@@ -260,3 +292,59 @@ def write_inference_result(result: DataFrame, path: str, single_file: bool = Fal
                 f.write(row["value"] + "\n")
     else:
         lines.write.mode("overwrite").text(path)
+
+
+def _infer_to_file(
+    model: LDAModel,
+    corpus: DataFrame,
+    path: str,
+    total_iterations: int,
+    burn_in_iterations: int,
+    seed: int,
+) -> None:
+    """The CLI's ``infer``, the reference's binary: score ``read_plda_corpus``
+    triples (non-NULL doc ids) into :func:`write_inference_result`'s
+    single file.
+
+    One Arrow collect of the triples, capped at
+    ``train._TOKENS_PER_PARTITION`` + 1 rows and read in one task, decides.
+    Within the cap it feeds the remap against ``model.words`` (OOV rows
+    dropped, as the inner vocab join drops them), the numpy packing the
+    trainer's driver path uses, one :func:`kernel.infer_docs` call and a
+    writer in this process: one Spark job and no Python task.  The cap
+    is on rows, not tokens: at that size the Spark path's doc aggregate
+    is a few MB, which AQE coalesces into one scoring task, so the driver
+    does that task's work without its fixed cost, whatever the counts.
+    A corpus past the cap discards the collect and runs :func:`transform`
+    and :func:`write_inference_result`.  The file holds the same bytes
+    either way.  The jobs are labelled ``lda.infer:<phase>`` (collect,
+    score, write); on the Spark path the scoring runs inside the write's
+    jobs.
+    """
+    _check_iterations(total_iterations, burn_in_iterations)
+    spark = corpus.sparkSession
+    cap = train._TOKENS_PER_PARTITION
+    with job_phase(spark, "lda.infer", "collect"):
+        # One task reads the splits in turn and stops at the cap: a limit
+        # over several partitions would run every split and shuffle each
+        # one's first cap + 1 rows.
+        triples = corpus.select("doc_id", "word", "count").coalesce(1).limit(cap + 1).toPandas()
+    if len(triples) > cap:
+        with job_phase(spark, "lda.infer", "score"):
+            theta = transform(model, corpus, total_iterations, burn_in_iterations, seed)
+        with job_phase(spark, "lda.infer", "write"):
+            write_inference_result(theta, path, single_file=True)
+        return
+    with job_phase(spark, "lda.infer", "score"):
+        vocab = pd.DataFrame({"word": model.words,
+                              "word_id": np.arange(model.num_words, dtype=np.int32)})
+        rows = triples.dropna(subset=["word"]).merge(vocab, on="word")
+        docs, word_occ, offsets = _pack_rows(rows, ["doc_id"])
+        theta = kernel.infer_docs(
+            word_occ, offsets, docs["doc_id"].to_numpy(np.int64),
+            model.nwk.astype(np.float64), model.nk.astype(np.float64), model.alpha,
+            model.beta, seed, total_iterations, burn_in_iterations,
+        )
+    with job_phase(spark, "lda.infer", "write"):
+        with open(path, "w", encoding="utf-8") as f:
+            f.writelines(" ".join(map(_weight_str, row)) + "\n" for row in theta.tolist())

@@ -64,7 +64,6 @@ from __future__ import annotations
 import itertools
 import math
 from collections.abc import Callable, Iterable, Iterator
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
 from types import SimpleNamespace
@@ -76,8 +75,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lineage import _Lineage
+from ..session import job_phase
 from . import kernel
-from .corpus import pack_docs
+from .corpus import _pack_rows, pack_docs
 from .model import LDAModel
 from .vocab import remap_words, vocab_table
 
@@ -515,20 +515,6 @@ def _cogroup_sweep_fn(assemble, nk: np.ndarray, encode: Callable, config: TrainC
 # ---------------------------------------------------------------------------
 
 
-@contextmanager
-def _phase(spark, phase: str) -> Iterator[None]:
-    """Label the Spark jobs run inside as ``lda.train:<phase>`` (the job
-    description the UI and the status store show), then restore the
-    caller's description.  The job group stays the caller's."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setLocalProperty("spark.job.description", f"lda.train:{phase}")
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
-
-
 def _pid(num_partitions: int):
     """A doc's AD-LDA partition: pmod(hash(doc_id), P), Spark's Murmur3."""
     return F.pmod(F.hash("doc_id"), F.lit(num_partitions)).cast("int")
@@ -625,7 +611,7 @@ class _Exchange:
         # word_id is BY CONTRACT the lexicographic rank, and the sorted
         # word list is needed on the driver anyway (model + checkpoint),
         # so one distinct+sort collect builds the vocabulary.
-        with _phase(spark, "vocab"):
+        with job_phase(spark, "lda.train", "vocab"):
             words = [r["word"] for r in corpus.select("word").distinct().orderBy("word").collect()]
         corpus_ids = remap_words(corpus, vocab_table(spark, words)).select(
             "doc_id", "word_id", "count"
@@ -719,7 +705,7 @@ class _Driver(_Broadcast):
         whatever order they arrive.  plda's ``lda`` likewise reads the
         corpus and builds its vocabulary in one pass (lda.cc:71-77)."""
         triples = corpus.select("doc_id", "word", "count", _pid(num_partitions).alias("pid"))
-        with _phase(corpus.sparkSession, "collect"):
+        with job_phase(corpus.sparkSession, "lda.train", "collect"):
             return _pack_triples(triples.toPandas())
 
     def zinit(self, docs: pd.DataFrame, tasks: int, lineage: _Lineage) -> pd.DataFrame:
@@ -749,26 +735,15 @@ def _pack_triples(triples: pd.DataFrame) -> tuple[list, pd.DataFrame]:
     is ``distinct().orderBy("word")``: Python's code-point order is
     Spark's binary UTF-8 order, and a NULL word sorts first and, like the
     remap join, matches no triple.  ``word_occ`` is :func:`pack_docs`'
-    array: the doc's word ids sorted, each repeated by its count (none
-    for a count ≤ 0); a NULL count packs the whole doc to NULL, and empty
-    docs are dropped."""
+    array, packed by the numpy core it shares with the CLI ``infer``'s
+    driver path (``corpus._pack_rows``)."""
     codes, uniques = pd.factorize(triples["word"].to_numpy(), sort=True)
     null_word = int((codes < 0).any())
     t = triples.assign(word_id=(codes + null_word).astype(np.int32))[codes >= 0]
-    t = t[~t["doc_id"].isin(t["doc_id"][t["count"].isna()])]
-    t = t.sort_values(["pid", "doc_id", "word_id"], kind="stable")
-    pid, doc_id = t["pid"].to_numpy(), t["doc_id"].to_numpy()
-    reps = np.maximum(t["count"].to_numpy(), 0).astype(np.int64)
-    first = np.ones(len(t), dtype=bool)
-    first[1:] = (pid[1:] != pid[:-1]) | (doc_id[1:] != doc_id[:-1])
-    starts = np.flatnonzero(first)
-    lens = np.add.reduceat(reps, starts) if len(t) else reps
-    occs = np.split(np.repeat(t["word_id"].to_numpy(), reps), np.cumsum(lens)[:-1])
-    return [None] * null_word + uniques.tolist(), pd.DataFrame({
-        "pid": pid[starts][lens > 0],
-        "doc_id": doc_id[starts][lens > 0],
-        "word_occ": [o for o in occs if len(o)],
-    })
+    docs, word_occ, offsets = _pack_rows(t, ["pid", "doc_id"])
+    return [None] * null_word + uniques.tolist(), docs.assign(
+        word_occ=[word_occ[s:e] for s, e in zip(offsets[:-1], offsets[1:])]
+    )
 
 
 def _generation(frames: Iterable[pd.DataFrame]) -> pd.DataFrame:
@@ -1151,7 +1126,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             # count-payload garbage into the model.  One cheap columnar agg
             # up front rejects it loudly, and the token total (the path,
             # auto partition sizing, join exchange resolution) rides it.
-            with _phase(spark, "guard"):
+            with job_phase(spark, "lda.train", "guard"):
                 guard = corpus.agg(
                     F.min("doc_id").alias("__min_id"), F.sum("count").alias("__tokens")
                 ).collect()[0]
@@ -1191,7 +1166,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             ex = _exchange(name, total_tokens)(
                 spark, V, int(state["num_partitions"]), int(state["chunk_width"]), config
             )
-            with _phase(spark, "resume"):
+            with job_phase(spark, "lda.train", "resume"):
                 df_z = ex.resume(df_z, lineage)
             lls = [float(x) for x in state["lls"]]
             accum = state["accum"] if name == "broadcast" else None
@@ -1202,7 +1177,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
                     "no running average; set average_model=False"
                 )
 
-        with _phase(spark, "zinit" if resume_from is None else "resume"):
+        with job_phase(spark, "lda.train", "zinit" if resume_from is None else "resume"):
             nk, nwk, _ = ex.reduce(df_z, lineage)
         # The reduce materialized the first generation (the driver path's
         # setup collected the triples) — nothing reads them again.

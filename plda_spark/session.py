@@ -9,10 +9,12 @@ generous enough that dimension tables and the LDA vocab always broadcast.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "default_parallelism"]
+__all__ = ["get_spark", "default_parallelism", "job_phase"]
 
 
 def default_parallelism() -> int:
@@ -38,3 +40,17 @@ def get_spark(app_name: str = "plda-spark", shuffle_partitions: int | None = Non
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_phase(spark: SparkSession, operator: str, phase: str) -> Iterator[None]:
+    """Label the Spark jobs run inside as ``<operator>:<phase>`` (the job
+    description the UI and the status store show), then restore the
+    caller's description.  The job group stays the caller's."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"{operator}:{phase}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
