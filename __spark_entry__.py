@@ -8436,7 +8436,7 @@ WITH agg AS (
          sum(CASE WHEN event_type = 'click' THEN value*value ELSE 0 END) AS s2a,
          sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0 END) AS s1b,
          sum(CASE WHEN event_type = 'purchase' THEN value*value ELSE 0 END) AS s2b
-  FROM events WHERE event_type IN ('click', 'purchase')
+  FROM events WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
 ), m AS (
   SELECT n_a, n_b, s1a/n_a AS ma, s1b/n_b AS mb,
          greatest((s2a - s1a*(s1a/n_a))/(n_a-1), 0.0) AS va,

@@ -554,31 +554,32 @@ def _reduce_shuffle(df_z: DataFrame, size: int) -> tuple[np.ndarray, float]:
     (flat_idx, count) pairs executor-side, groupBy(flat_idx).sum (map-side
     combined), and collect at most nnz(V×K) summed rows — driver traffic
     independent of partition count, the tree end of the reference's
-    chunked AllReduce (mpi_lda.cc:58-92)."""
+    chunked AllReduce (mpi_lda.cc:58-92).  Each payload's LL partial
+    rides one extra row keyed by the payload's own negative doc_id, so
+    the same job returns counts AND likelihood, and the driver ``fsum``s
+    the P partials exactly as :func:`_payload_sum` does."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for buf, ll_part in zip(pdf["z"], pdf["ll"]):
+            for key, buf, ll_part in zip(pdf["doc_id"], pdf["z"], pdf["ll"]):
                 a = np.frombuffer(buf, dtype=np.int64)
-                n = a.shape[0] // 2
-                # the LL partial rides the FIRST pair row of its payload
-                # (zero elsewhere), so one aggregation job returns counts
-                # AND likelihood.
-                ll = np.zeros(n)
-                if n:
-                    ll[0] = ll_part
-                yield pd.DataFrame({"idx": a[0::2], "cnt": a[1::2], "ll": ll})
+                yield pd.DataFrame({
+                    "idx": np.append(a[0::2], key),
+                    "cnt": np.append(a[1::2], 0),
+                    "ll": np.append(np.zeros(a.shape[0] // 2), ll_part),
+                })
 
     summed = (
         df_z.where(F.col("doc_id") < 0)
-        .select("z", "ll")
+        .select("doc_id", "z", "ll")
         .mapInPandas(decode, schema="idx long, cnt long, ll double")
         .groupBy("idx")
         .agg(F.sum("cnt").alias("cnt"), F.sum("ll").alias("ll"))
         .toPandas()
     )
+    counts = summed[summed["idx"] >= 0]
     flat = np.zeros(size, dtype=np.int64)
-    flat[summed["idx"].to_numpy()] = summed["cnt"].to_numpy()
+    flat[counts["idx"].to_numpy()] = counts["cnt"].to_numpy()
     return flat, math.fsum(summed["ll"])
 
 

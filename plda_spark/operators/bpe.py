@@ -60,6 +60,15 @@ __all__ = ["bpe_train", "bpe_encode", "END_OF_WORD"]
 
 END_OF_WORD = "</w>"
 
+# The merge sweep's fixed tuning, shared by word and byte BPE; no value
+# changes the merge list (tests monkeypatch them to force each path).
+# A word table of at most _DRIVER_MAX_WORDS rows runs the sequential
+# loop on the driver; past it, each distributed sweep collects up to
+# _BATCH_MERGES merges, and the lineage is cut every _CHECKPOINT_EVERY.
+_DRIVER_MAX_WORDS = 500_000
+_BATCH_MERGES = 8
+_CHECKPOINT_EVERY = 8
+
 def _chars_col(word: Column) -> Column:
     """``word`` → its characters plus the end-of-word marker.
 
@@ -91,30 +100,20 @@ def bpe_train(
     num_merges: int,
     text_col: str = "text",
     min_count: int = 2,
-    checkpoint_every: int = 8,
-    batch_merges: int = 8,
-    driver_max_words: int = 500_000,
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` BPE merges from ``docs[text_col]``.
 
     Returns the merge list in learned order — bit-identical to the
-    sequential published algorithm regardless of ``batch_merges``; stops
-    early when no pair reaches ``min_count`` occurrences.  Tokenization
-    is the engine's standard lowercase word split
-    (:mod:`plda_spark.lda.corpus` convention: runs of ``[a-z0-9]``).
-
-    ``batch_merges`` is the per-sweep driver round-trip batch: each
-    sweep collects the top ``m`` pairs and accepts the longest
-    symbol-disjoint prefix (see module doc for why this preserves exact
-    sequential parity — the pytest gate checks it).  ``1`` recovers the
-    classic one-job-per-merge loop.
+    sequential published algorithm however many merges a sweep accepts
+    (see module doc); stops early when no pair reaches ``min_count``
+    occurrences.  Tokenization is the engine's standard lowercase word
+    split (:mod:`plda_spark.lda.corpus` convention: runs of
+    ``[a-z0-9]``).
     """
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    if batch_merges < 1:
-        raise ValueError("batch_merges must be >= 1")
     toks = F.explode(
         F.filter(
             F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
@@ -130,11 +129,7 @@ def bpe_train(
     # Every multi-char symbol that can exist: END_OF_WORD plus the
     # concatenation of each accepted merge (single chars can never
     # collide with a >= 2-char concat).  Used by sweep-stop rule (c).
-    return _train_merges(
-        words, num_merges, min_count, checkpoint_every, batch_merges,
-        driver_max_words=driver_max_words,
-        known={END_OF_WORD},
-    )
+    return _train_merges(words, num_merges, min_count, known={END_OF_WORD})
 
 
 def _train_merges_driver(
@@ -186,10 +181,7 @@ def _train_merges(
     words: DataFrame,
     num_merges: int,
     min_count: int,
-    checkpoint_every: int,
-    batch_merges: int,
     known: set[str],
-    driver_max_words: int = 500_000,
 ) -> list[tuple[str, str]]:
     """The batched merge-sweep loop shared by :func:`bpe_train` and
     the byte-level variant (:mod:`.byte_bpe`): ``words`` is the
@@ -199,14 +191,14 @@ def _train_merges(
     alphabet is all single chars).  See the module doc for the exact
     sequential-parity argument.
 
-    A word table within ``driver_max_words`` rows (row-count-enforced
+    A word table within ``_DRIVER_MAX_WORDS`` rows (row-count-enforced
     on the materialized checkpoint BEFORE any collect) runs the
     sequential loop driver-side instead — each distributed sweep is
     several scheduling-bound jobs over a vocab-sized frame, pure
     overhead at that size; larger tables take the batched sweeps
     unchanged."""
     words = words.localCheckpoint(eager=True)
-    if words.count() <= driver_max_words:
+    if words.count() <= _DRIVER_MAX_WORDS:
         return _train_merges_driver(
             [(list(r["syms"]), int(r["n"])) for r in words.collect()],
             num_merges,
@@ -216,7 +208,7 @@ def _train_merges(
     since_ckpt = 0
     known = set(known)
     while len(merges) < num_merges:
-        want = min(batch_merges, num_merges - len(merges))
+        want = min(_BATCH_MERGES, num_merges - len(merges))
         # Collect a lookahead window past `want` so each candidate's
         # full tie group is visible for the safety check below.
         lookahead = want * 2 + 8
@@ -275,7 +267,7 @@ def _train_merges(
             _apply_all(F.col("syms"), batch).alias("syms"), "n"
         )
         since_ckpt += len(batch)
-        if since_ckpt >= checkpoint_every:
+        if since_ckpt >= _CHECKPOINT_EVERY:
             words = words.localCheckpoint(eager=False)
             since_ckpt = 0
     return merges

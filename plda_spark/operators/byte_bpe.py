@@ -112,22 +112,17 @@ def byte_bpe_train(
     num_merges: int,
     text_col: str = "text",
     min_count: int = 2,
-    checkpoint_every: int = 8,
-    batch_merges: int = 8,
-    driver_max_words: int = 500_000,
 ) -> list[tuple[str, str]]:
     """Learn up to ``num_merges`` byte-level BPE merges from
     ``docs[text_col]``; returns the merge list in learned order (pairs
     of remapped-unicode symbol strings) — bit-identical to the
-    sequential published algorithm regardless of ``batch_merges``
+    sequential published algorithm however many merges a sweep accepts
     (the :func:`plda_spark.operators.bpe.bpe_train` parity contract;
     stops early when no pair reaches ``min_count``)."""
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    if batch_merges < 1:
-        raise ValueError("batch_merges must be >= 1")
     pretoks = F.explode(
         F.regexp_extract_all(F.col(text_col), F.lit(PRETOKEN_RE), 0)
     ).alias("pt")
@@ -140,11 +135,7 @@ def byte_bpe_train(
     )
     # known starts EMPTY: the byte alphabet is all single chars, so
     # the multi-char symbol universe is exactly the merge concats
-    return _train_merges(
-        words, num_merges, min_count, checkpoint_every, batch_merges,
-        driver_max_words=driver_max_words,
-        known=set(),
-    )
+    return _train_merges(words, num_merges, min_count, known=set())
 
 
 def byte_bpe_encode(

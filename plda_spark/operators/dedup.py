@@ -620,12 +620,17 @@ def hamming_band_pairs(
     )
 
 
+# An expanded edge list of at most this many rows is solved on the
+# driver; it never changes the labels (tests set it to 0 to force the
+# distributed rounds).
+_DRIVER_MAX_EDGES = 4_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 50,
-    driver_max_edges: int = 4_000_000,
 ) -> DataFrame:
     """Near-dup pairs → clusters: ``(doc_id, component)`` where
     ``component`` is the smallest doc_id reachable through the pair
@@ -639,8 +644,8 @@ def connected_components(
     O(log diameter) rounds, not O(diameter).  State per round is one
     (node, label) row per vertex — never the transitive closure.
 
-    Round-11 plan shape: a pair graph whose expanded edge list fits
-    ``driver_max_edges`` (row-count-enforced BEFORE any collect) is
+    Plan shape: a pair graph whose expanded edge list fits
+    ``_DRIVER_MAX_EDGES`` rows (row-count-enforced BEFORE any collect) is
     solved driver-side with a min-root union-find — identical integer
     labelling, none of the per-round scheduling overhead.  Larger
     graphs take the distributed rounds: the edge operand is
@@ -663,7 +668,7 @@ def connected_components(
         .persist()
     )
     n_edge_rows = base.count()
-    if n_edge_rows <= driver_max_edges:
+    if n_edge_rows <= _DRIVER_MAX_EDGES:
         # Near-dup pair graphs are candidate-sized — usually orders of
         # magnitude smaller than the corpus that produced them — while
         # every distributed round below pays 4 exchanges + 2 jobs of

@@ -432,6 +432,66 @@ def forecast_backtest(
     )
 
 
+def _basket_pairs(
+    events: DataFrame,
+    user_col: str,
+    item_col: str,
+    min_support: int,
+    max_basket_items: int | None,
+    min_pair_support: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The per-user basket pipeline :func:`association_rules` and
+    :func:`item_item_cf` share: ``(baskets, item_supp, pairs)``.
+
+    ``baskets`` is the distinct ``(user, item)`` set, without the
+    baskets of more than ``max_basket_items`` items (``None``: no cap);
+    ``item_supp`` is ``(item, n_item)`` for the items in at least
+    ``min_support`` baskets; ``pairs`` is ``(item_a, item_b, n_both)``
+    with ``item_a < item_b``, counted by ONE self-equi-join on the user
+    key over the frequent items only (the a-priori property: an
+    infrequent item can't be in a frequent pair), for the pairs in at
+    least ``min_pair_support`` baskets.
+
+    The three frames are lazy lineage cuts: ``baskets`` feeds the size
+    filter, the support aggregation and both self-join sides;
+    ``item_supp`` the frequent filter and the callers' support lookups;
+    ``pairs`` both halves of a directed union.  The lookups ride
+    broadcast joins, which defeats exchange reuse, so without the cuts
+    each consumer re-derived the whole upstream (86 Exchange nodes in
+    the rules plan for one dedup + one support agg + one self-join)."""
+    if min_support < 1:
+        raise ValueError(f"min_support must be >= 1, got {min_support}")
+    if max_basket_items is not None and max_basket_items < 2:
+        raise ValueError("max_basket_items must be >= 2")
+    baskets = events.select(
+        F.col(user_col).alias("user"), F.col(item_col).alias("item")
+    ).distinct().localCheckpoint(eager=False)
+    if max_basket_items is not None:
+        sizes = baskets.groupBy("user").agg(F.count(F.lit(1)).alias("__bsz"))
+        baskets = baskets.join(
+            sizes.filter(F.col("__bsz") <= max_basket_items).select("user"),
+            "user",
+        ).localCheckpoint(eager=False)
+    item_supp = (
+        baskets.groupBy("item")
+        .agg(F.count(F.lit(1)).alias("n_item"))
+        .filter(F.col("n_item") >= min_support)
+        .localCheckpoint(eager=False)
+    )
+    frequent = baskets.join(F.broadcast(item_supp.select("item")), "item")
+    a = frequent.select("user", F.col("item").alias("item_a"))
+    b = frequent.select("user", F.col("item").alias("item_b"))
+    pairs = (
+        a.join(b, "user")
+        .filter(F.col("item_a") < F.col("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(F.count(F.lit(1)).alias("n_both"))
+        .filter(F.col("n_both") >= min_pair_support)
+        .localCheckpoint(eager=False)
+    )
+    return baskets, item_supp, pairs
+
+
 def association_rules(
     events: DataFrame,
     user_col: str = "user_id",
@@ -462,44 +522,9 @@ def association_rules(
     per basket) so the quadratic blowup is opt-IN: pass ``None``
     explicitly to mine uncapped.  Rule stats join only the
     |items|-sized support table (broadcast)."""
-    if min_support < 1:
-        raise ValueError(f"min_support must be >= 1, got {min_support}")
-    if max_basket_items is not None and max_basket_items < 2:
-        raise ValueError("max_basket_items must be >= 2")
-    # Lazy lineage cuts on the reused frames (the basket_cooccurrence /
-    # item_cf idiom, round 12): `baskets` feeds the size filter, the
-    # support aggregation, both self-join sides AND the n_users count;
-    # `item_supp` feeds the frequent filter and both support lookups;
-    # `pairs` is consumed twice by the directed union.  The lookups
-    # ride broadcast joins, which defeats exchange reuse, so without
-    # the cuts each consumer re-derived the whole upstream — the plan
-    # carried 86 Exchange nodes for what is one dedup + one support agg
-    # + one self-join.
-    baskets = events.select(
-        F.col(user_col).alias("user"), F.col(item_col).alias("item")
-    ).distinct().localCheckpoint(eager=False)
-    if max_basket_items is not None:
-        sizes = baskets.groupBy("user").agg(F.count(F.lit(1)).alias("__bsz"))
-        baskets = baskets.join(
-            sizes.filter(F.col("__bsz") <= max_basket_items).select("user"),
-            "user",
-        ).localCheckpoint(eager=False)
-    item_supp = (
-        baskets.groupBy("item")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-        .filter(F.col("n_item") >= min_support)
-        .localCheckpoint(eager=False)
-    )
-    frequent = baskets.join(F.broadcast(item_supp.select("item")), "item")
-    a = frequent.select("user", F.col("item").alias("item_a"))
-    b = frequent.select("user", F.col("item").alias("item_b"))
-    pairs = (
-        a.join(b, "user")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-        .filter(F.col("n_both") >= min_support)
-        .localCheckpoint(eager=False)
+    baskets, item_supp, pairs = _basket_pairs(
+        events, user_col, item_col, min_support, max_basket_items,
+        min_pair_support=min_support,
     )
     directed = pairs.select(
         F.col("item_a").alias("antecedent"),
@@ -1273,42 +1298,9 @@ def item_item_cf(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if min_support < 1:
-        raise ValueError(f"min_support must be >= 1, got {min_support}")
-    if max_basket_items is not None and max_basket_items < 2:
-        raise ValueError("max_basket_items must be >= 2")
-    # Lazy lineage cuts on the three reused frames: `baskets` feeds the
-    # size filter, the support aggregation AND both self-join sides;
-    # `item_supp` feeds the frequent filter and both support lookups;
-    # `pairs` is consumed twice by the directed union.  The lookups ride
-    # broadcast joins, which defeats exchange reuse (the jaccard_pairs
-    # lesson), so without the cuts each consumer re-derived the whole
-    # upstream — the plan carried 78 Exchange nodes for what is one
-    # dedup + one support agg + one self-join (now 14).
-    baskets = events.select(
-        F.col(user_col).alias("user"), F.col(item_col).alias("item")
-    ).distinct().localCheckpoint(eager=False)
-    if max_basket_items is not None:
-        sizes = baskets.groupBy("user").agg(F.count(F.lit(1)).alias("__bsz"))
-        baskets = baskets.join(
-            sizes.filter(F.col("__bsz") <= max_basket_items).select("user"),
-            "user",
-        ).localCheckpoint(eager=False)
-    item_supp = (
-        baskets.groupBy("item")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-        .filter(F.col("n_item") >= min_support)
-        .localCheckpoint(eager=False)
-    )
-    frequent = baskets.join(F.broadcast(item_supp.select("item")), "item")
-    a = frequent.select("user", F.col("item").alias("item_a"))
-    b = frequent.select("user", F.col("item").alias("item_b"))
-    pairs = (
-        a.join(b, "user")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-        .localCheckpoint(eager=False)
+    _, item_supp, pairs = _basket_pairs(
+        events, user_col, item_col, min_support, max_basket_items,
+        min_pair_support=1,
     )
     directed = pairs.select(
         F.col("item_a").alias("item"), F.col("item_b").alias("neighbor"),

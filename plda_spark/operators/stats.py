@@ -1914,6 +1914,44 @@ def _chi2_upper_p(stat, dof):
     return F.least(F.greatest(_normal_upper_p(z), F.lit(0.0)), F.lit(1.0))
 
 
+def _two_group_moments(
+    df: DataFrame, group_col: str, value_col: str, group_a, group_b
+) -> DataFrame:
+    """The moments of a two-group mean comparison, from ONE filtered
+    aggregation over the non-NULL values of both groups (map-side
+    combined).  Returns one row: ``na``/``nb`` (long counts), ``sa``/
+    ``sb`` (Σv), ``qa``/``qb`` (Σv²), the means ``ma``/``mb`` and the
+    sample variances ``va``/``vb`` by the sum-of-squares identity — 0
+    below two values, and clamped at 0 because a negative one is pure
+    float cancellation noise."""
+    a = F.col(group_col) == F.lit(group_a)
+    b = F.col(group_col) == F.lit(group_b)
+    v = F.col(value_col).cast("double")
+    agg = df.where((a | b) & v.isNotNull()).agg(
+        F.sum(a.cast("long")).alias("na"),
+        F.sum(b.cast("long")).alias("nb"),
+        F.sum(F.when(a, v)).alias("sa"),
+        F.sum(F.when(b, v)).alias("sb"),
+        F.sum(F.when(a, v * v)).alias("qa"),
+        F.sum(F.when(b, v * v)).alias("qb"),
+    )
+    na = F.col("na").cast("double")
+    nb = F.col("nb").cast("double")
+    means = agg.select(
+        "*", (F.col("sa") / na).alias("ma"), (F.col("sb") / nb).alias("mb")
+    )
+
+    def var(n, s, q, m):
+        return F.greatest(
+            F.when(n > 1, (F.col(q) - F.col(s) * F.col(m)) / (n - 1)),
+            F.lit(0.0),
+        )
+
+    return means.select(
+        "*", var(na, "sa", "qa", "ma").alias("va"), var(nb, "sb", "qb", "mb").alias("vb")
+    )
+
+
 def welch_ttest(
     df: DataFrame,
     group_col: str,
@@ -1935,59 +1973,35 @@ def welch_ttest(
     under the 6-decimal rounding (document-level caveat: below df≈30
     the p is anti-conservative; use a local stats package for tiny
     samples).  Returns ONE row ``(n_a, n_b, mean_a, mean_b, t_stat,
-    dof, p_value)``.
+    dof, p_value)`` over the non-NULL values.
 
     Scale shape: ONE conditional aggregation over the stream (count /
     sum / sum-of-squares per group, map-side combined) — no window, no
     join, nothing survives the first groupBy."""
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    agg = df.where(a | b).agg(
-        F.sum(a.cast("long")).alias("n_a"),
-        F.sum(b.cast("long")).alias("n_b"),
-        F.sum(F.when(a, v).otherwise(F.lit(0.0))).alias("__s1a"),
-        F.sum(F.when(a, v * v).otherwise(F.lit(0.0))).alias("__s2a"),
-        F.sum(F.when(b, v).otherwise(F.lit(0.0))).alias("__s1b"),
-        F.sum(F.when(b, v * v).otherwise(F.lit(0.0))).alias("__s2b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    ma = F.col("__s1a") / na
-    mb = F.col("__s1b") / nb
-    # sample variance via the sum-of-squares identity; n < 2 would
-    # divide by zero (ANSI) so the guard yields NULL -> t degenerates
-    va = F.when(na > 1, (F.col("__s2a") - F.col("__s1a") * ma) / (na - 1))
-    vb = F.when(nb > 1, (F.col("__s2b") - F.col("__s1b") * mb) / (nb - 1))
-    staged = agg.select(
-        "n_a", "n_b",
-        ma.alias("__ma"), mb.alias("__mb"),
-        # negative variance = pure float cancellation noise; clamp
-        F.greatest(va, F.lit(0.0)).alias("__va"),
-        F.greatest(vb, F.lit(0.0)).alias("__vb"),
-    )
-    sa = F.col("__va") / F.col("n_a")
-    sb = F.col("__vb") / F.col("n_b")
+    m = _two_group_moments(df, group_col, value_col, group_a, group_b)
+    sa = F.col("va") / F.col("na")
+    sb = F.col("vb") / F.col("nb")
     se2 = sa + sb
-    t = F.when(se2 > 0, (F.col("__ma") - F.col("__mb")) / F.sqrt(se2))
+    t = F.when(se2 > 0, (F.col("ma") - F.col("mb")) / F.sqrt(se2))
     dof = F.when(
         se2 > 0,
         se2 * se2
         / (
-            sa * sa / F.greatest(F.col("n_a") - 1, F.lit(1))
-            + sb * sb / F.greatest(F.col("n_b") - 1, F.lit(1))
+            sa * sa / F.greatest(F.col("na") - 1, F.lit(1))
+            + sb * sb / F.greatest(F.col("nb") - 1, F.lit(1))
         ),
     )
-    staged2 = staged.withColumn("__t", t).withColumn("__dof", dof)
+    staged = m.select("na", "nb", "ma", "mb", t.alias("__t"), dof.alias("__dof"))
     p = F.when(
         F.col("__t").isNull(), F.lit(1.0)
     ).otherwise(
         F.least(_two_sided_normal_p(F.abs(F.col("__t"))), F.lit(1.0))
     )
-    return staged2.select(
-        "n_a",
-        "n_b",
-        F.round("__ma", 6).alias("mean_a"),
-        F.round("__mb", 6).alias("mean_b"),
+    return staged.select(
+        F.col("na").alias("n_a"),
+        F.col("nb").alias("n_b"),
+        F.round("ma", 6).alias("mean_a"),
+        F.round("mb", 6).alias("mean_b"),
         F.round(F.coalesce(F.col("__t"), F.lit(0.0)), 6).alias("t_stat"),
         F.round(F.coalesce(F.col("__dof"), F.lit(0.0)), 4).alias("dof"),
         F.round(p, 6).alias("p_value"),
@@ -4332,29 +4346,11 @@ def tost_equivalence(
         raise ValueError(f"margin must be > 0, got {margin}")
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    agg = df.where((a | b) & v.isNotNull()).agg(
-        F.sum(a.cast("long")).alias("na"),
-        F.sum(b.cast("long")).alias("nb"),
-        F.sum(F.when(a, v)).alias("sa"),
-        F.sum(F.when(b, v)).alias("sb"),
-        F.sum(F.when(a, v * v)).alias("qa"),
-        F.sum(F.when(b, v * v)).alias("qb"),
-    )
+    agg = _two_group_moments(df, group_col, value_col, group_a, group_b)
     na = F.col("na").cast("double")
     nb = F.col("nb").cast("double")
-    ma = F.col("sa") / na
-    mb = F.col("sb") / nb
-    va = F.greatest(
-        F.when(na > 1, (F.col("qa") - F.col("sa") * ma) / (na - 1)),
-        F.lit(0.0),
-    )
-    vb = F.greatest(
-        F.when(nb > 1, (F.col("qb") - F.col("sb") * mb) / (nb - 1)),
-        F.lit(0.0),
-    )
+    ma, mb = F.col("ma"), F.col("mb")
+    va, vb = F.col("va"), F.col("vb")
     se = F.sqrt(va / na + vb / nb)
     diff = ma - mb
     staged = agg.select(
@@ -4920,21 +4916,10 @@ def effect_size(
 
     Scale shape: ONE filtered moment aggregation (the
     :func:`welch_ttest` plan); scalar arithmetic after."""
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    agg = df.where((a | b) & v.isNotNull()).agg(
-        F.sum(a.cast("long")).alias("na"),
-        F.sum(b.cast("long")).alias("nb"),
-        F.sum(F.when(a, v)).alias("sa"),
-        F.sum(F.when(b, v)).alias("sb"),
-        F.sum(F.when(a, v * v)).alias("qa"),
-        F.sum(F.when(b, v * v)).alias("qb"),
-    )
+    agg = _two_group_moments(df, group_col, value_col, group_a, group_b)
     na = F.col("na").cast("double")
     nb = F.col("nb").cast("double")
-    ma = F.col("sa") / na
-    mb = F.col("sb") / nb
+    ma, mb = F.col("ma"), F.col("mb")
     ssa = F.greatest(F.col("qa") - F.col("sa") * ma, F.lit(0.0))
     ssb = F.greatest(F.col("qb") - F.col("sb") * mb, F.lit(0.0))
     dof = na + nb - 2
@@ -5003,29 +4988,11 @@ def mean_power_mde(
             f"power must be one of {sorted(_Z_POWER)}, got {power}"
         )
     z = _Z_ALPHA[alpha] + _Z_POWER[power]
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    agg = df.where((a | b) & v.isNotNull()).agg(
-        F.sum(a.cast("long")).alias("na"),
-        F.sum(b.cast("long")).alias("nb"),
-        F.sum(F.when(a, v)).alias("sa"),
-        F.sum(F.when(b, v)).alias("sb"),
-        F.sum(F.when(a, v * v)).alias("qa"),
-        F.sum(F.when(b, v * v)).alias("qb"),
-    )
+    agg = _two_group_moments(df, group_col, value_col, group_a, group_b)
     na = F.col("na").cast("double")
     nb = F.col("nb").cast("double")
-    ma = F.col("sa") / na
-    mb = F.col("sb") / nb
-    va = F.greatest(
-        F.when(na > 1, (F.col("qa") - F.col("sa") * ma) / (na - 1)),
-        F.lit(0.0),
-    )
-    vb = F.greatest(
-        F.when(nb > 1, (F.col("qb") - F.col("sb") * mb) / (nb - 1)),
-        F.lit(0.0),
-    )
+    ma, mb = F.col("ma"), F.col("mb")
+    va, vb = F.col("va"), F.col("vb")
     se = F.sqrt(va / na + vb / nb)
     mde = F.lit(z) * se
     staged = agg.select(
@@ -5210,29 +5177,11 @@ def msprt_always_valid(
     point."""
     if tau <= 0:
         raise ValueError(f"tau must be > 0, got {tau}")
-    a = F.col(group_col) == F.lit(group_a)
-    b = F.col(group_col) == F.lit(group_b)
-    v = F.col(value_col).cast("double")
-    agg = df.where((a | b) & v.isNotNull()).agg(
-        F.sum(a.cast("long")).alias("na"),
-        F.sum(b.cast("long")).alias("nb"),
-        F.sum(F.when(a, v)).alias("sa"),
-        F.sum(F.when(b, v)).alias("sb"),
-        F.sum(F.when(a, v * v)).alias("qa"),
-        F.sum(F.when(b, v * v)).alias("qb"),
-    )
+    agg = _two_group_moments(df, group_col, value_col, group_a, group_b)
     na = F.col("na").cast("double")
     nb = F.col("nb").cast("double")
-    ma = F.col("sa") / na
-    mb = F.col("sb") / nb
-    va = F.greatest(
-        F.when(na > 1, (F.col("qa") - F.col("sa") * ma) / (na - 1)),
-        F.lit(0.0),
-    )
-    vb = F.greatest(
-        F.when(nb > 1, (F.col("qb") - F.col("sb") * mb) / (nb - 1)),
-        F.lit(0.0),
-    )
+    ma, mb = F.col("ma"), F.col("mb")
+    va, vb = F.col("va"), F.col("vb")
     V = va / na + vb / nb
     d = ma - mb
     t2 = tau * tau

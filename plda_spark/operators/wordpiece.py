@@ -54,6 +54,11 @@ UNK = "[UNK]"
 
 _EMPTY = "CAST(array() AS ARRAY<STRING>)"
 
+# A word table of at most this many rows runs the merge loop on the
+# driver; it never changes the result (tests set it to 0 to force the
+# distributed sweeps).
+_DRIVER_MAX_WORDS = 500_000
+
 
 def _words_col(text_col: str) -> Column:
     """Engine-standard tokenization: lowercase runs of [a-z0-9]."""
@@ -181,7 +186,6 @@ def wordpiece_train(
     num_merges: int,
     text_col: str = "text",
     min_count: int = 2,
-    driver_max_words: int = 500_000,
 ) -> dict:
     """Learn a WordPiece vocabulary from ``docs[text_col]``.
 
@@ -218,7 +222,7 @@ def wordpiece_train(
     # BEFORE any collect — the knn/mmr/cc self-enforcing pattern), the
     # loop runs driver-side instead; past the bound, the distributed
     # sweeps below are the path, unchanged.
-    if words.count() <= driver_max_words:
+    if words.count() <= _DRIVER_MAX_WORDS:
         rows = [
             (list(r["syms"]), int(r["n"])) for r in words.collect()
         ]

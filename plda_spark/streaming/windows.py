@@ -1104,17 +1104,13 @@ def _single_generation(
     """Load an ADDITIVE ledger restricted to one checkpoint generation.
     Multiple generations + no explicit ``run_id`` is an error: each
     generation re-covered the input, so folding them together double-
-    counts (loud failure beats a silently doubled metric)."""
+    counts (loud failure beats a silently doubled metric).  The guard
+    scans the ``run_id`` column only; the returned frame re-reads the
+    ledger when the caller acts on it, so it sees the ledger as it is
+    then, and persists nothing."""
     ledger = spark.read.parquet(state_path)
     if run_id is not None:
         return ledger.where(F.col("run_id") == run_id)
-    # LAZY lineage cut (round 12): the generation guard below is an
-    # eager collect, so without it the caller's readout re-scanned the
-    # ledger a second time; the guard materializes the checkpoint and
-    # the returned frame reads those blocks.  Ledgers are slim
-    # (per-batch sketch/partial rows), so the persisted footprint is
-    # batches-sized, never corpus-sized.
-    ledger = ledger.localCheckpoint(eager=False)
     runs = [r["run_id"] for r in ledger.select("run_id").distinct().collect()]
     if len(runs) > 1:
         raise ValueError(

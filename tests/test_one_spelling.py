@@ -63,6 +63,14 @@ SPELLINGS = {
             ("plda_spark/operators/stats.py", "bayes_ab_beta"): 1,
         },
     ),
+    "two-group moment aggregation": (
+        r"F\.sum\(F\.when\([ab],v\*v\)",
+        {("plda_spark/operators/stats.py", "_two_group_moments"): 2},
+    ),
+    "basket pair self-join": (
+        re.escape('.filter(F.col("item_a")<F.col("item_b"))'),
+        {("plda_spark/operators/events.py", "_basket_pairs"): 1},
+    ),
     "seconds since the epoch": (
         re.escape('cast("timestamp_ltz"))/F.lit(1_000_000.0)'),
         {("plda_spark/_exprs.py", "epoch_secs"): 1},

@@ -654,11 +654,12 @@ def test_connected_components(spark):
     assert all(comp[n] == 10 for n in (10, 11, 12))
     assert comp[20] == comp[21] == 20
     # the driver union-find (default for bounded pair graphs) and the
-    # distributed rounds (forced with driver_max_edges=0) must agree
-    # row-for-row — the round-11 cutover's parity pin
-    dist = {r["doc_id"]: r["component"]
-            for r in dedup.connected_components(
-                df, driver_max_edges=0).collect()}
+    # distributed rounds (forced with _DRIVER_MAX_EDGES = 0) must agree
+    # row-for-row — the driver cutover's parity pin
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+        dist = {r["doc_id"]: r["component"]
+                for r in dedup.connected_components(df).collect()}
     assert dist == comp
 
 
@@ -671,7 +672,7 @@ def test_connected_components(spark):
     ("connected_components", 1),
     ("kcenter_select", 0),
 ])
-def test_iterative_operators_release_superseded_cuts(spark, case, most):
+def test_iterative_operators_release_superseded_cuts(spark, monkeypatch, case, most):
     """An iterative operator releases every lineage cut its result no
     longer reads: after ``out.collect()`` at most the returned frame's
     own checkpoint (``most``) is still persisted.  Checked without
@@ -698,7 +699,7 @@ def test_iterative_operators_release_superseded_cuts(spark, case, most):
         "kcore": lambda: graph.kcore(e, k=2, n_rounds=8),
         "bfs_distances": lambda: graph.bfs_distances(e, [0], max_hops=4),
         "connected_components": lambda: dedup.connected_components(
-            e, "src", "dst", driver_max_edges=0),
+            e, "src", "dst"),
         "kcenter_select": lambda: sampling.kcenter_select(
             spark.createDataFrame(
                 [(i, [float(i % 5), float(i // 5)]) for i in range(20)],
@@ -707,6 +708,8 @@ def test_iterative_operators_release_superseded_cuts(spark, case, most):
             k=4,
         ),
     }
+    # connected_components' iterative path is its distributed rounds
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
     before = persisted()
     calls[case]().collect()
     assert len(persisted() - before) <= most, case
@@ -1792,7 +1795,7 @@ def _ref_encode(text, merges):
     return toks
 
 
-def test_bpe_train_matches_reference(spark):
+def test_bpe_train_matches_reference(spark, monkeypatch):
     from collections import Counter
     import re as _re
 
@@ -1809,8 +1812,14 @@ def test_bpe_train_matches_reference(spark):
     wc = Counter(
         w for t in texts for w in _re.split(r"[^a-z0-9]+", t.lower()) if w
     )
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 3)
+    # the driver cutover (default for bounded word tables) must produce
+    # the sequential merge list
+    assert bpe.bpe_train(df, 12) == _ref_bpe(wc, 12)
+    # every later call runs the distributed sweeps
+    monkeypatch.setattr(bpe, "_DRIVER_MAX_WORDS", 0)
     for n_merges in (1, 5, 12):
-        got = bpe.bpe_train(df, n_merges, checkpoint_every=3, driver_max_words=0)
+        got = bpe.bpe_train(df, n_merges)
         want = _ref_bpe(wc, n_merges)
         assert got == want, (n_merges, got, want)
 
@@ -1819,12 +1828,10 @@ def test_bpe_train_matches_reference(spark):
     # consecutive top pairs share symbols (the sweep must stop at the
     # first conflict, not skip past it)
     for m in (1, 2, 4, 16):
-        got = bpe.bpe_train(df, 12, checkpoint_every=3, batch_merges=m,
-                            driver_max_words=0)
+        monkeypatch.setattr(bpe, "_BATCH_MERGES", m)
+        got = bpe.bpe_train(df, 12)
         assert got == _ref_bpe(wc, 12), (m, got)
-    # the round-11 driver cutover (default for bounded word tables)
-    # must produce the same sequential merge list
-    assert bpe.bpe_train(df, 12, checkpoint_every=3) == _ref_bpe(wc, 12)
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 8)
     adv = spark.createDataFrame(
         [(0, "aaaa aaab aaba abaa baaa aabb abab")],
         "doc_id bigint, text string",
@@ -1832,8 +1839,8 @@ def test_bpe_train_matches_reference(spark):
     adv_wc = {"aaaa": 1, "aaab": 1, "aaba": 1, "abaa": 1, "baaa": 1,
               "aabb": 1, "abab": 1}
     for m in (1, 3, 8):
-        got = bpe.bpe_train(adv, 10, min_count=1, batch_merges=m,
-                            driver_max_words=0)
+        monkeypatch.setattr(bpe, "_BATCH_MERGES", m)
+        got = bpe.bpe_train(adv, 10, min_count=1)
         assert got == _ref_bpe(adv_wc, 10, min_count=1), (m, got)
 
     # seeded-random tie-heavy corpus (3-letter alphabet => constant
@@ -1852,8 +1859,8 @@ def test_bpe_train_matches_reference(spark):
     )
     want = _ref_bpe(rnd_wc, 20, min_count=1)
     for m in (1, 4, 16):
-        got = bpe.bpe_train(rnd_df, 20, min_count=1, batch_merges=m,
-                            driver_max_words=0)
+        monkeypatch.setattr(bpe, "_BATCH_MERGES", m)
+        got = bpe.bpe_train(rnd_df, 20, min_count=1)
         assert got == want, (m, got, want)
 
     # symbol-collision regime: a 2-letter alphabet with long words makes
@@ -1871,10 +1878,11 @@ def test_bpe_train_matches_reference(spark):
     )
     want2 = _ref_bpe(col_wc, 30, min_count=1)
     for m in (4, 16):
-        got = bpe.bpe_train(col_df, 30, min_count=1, batch_merges=m,
-                            driver_max_words=0)
+        monkeypatch.setattr(bpe, "_BATCH_MERGES", m)
+        got = bpe.bpe_train(col_df, 30, min_count=1)
         assert got == want2, (m, got, want2)
 
+    monkeypatch.undo()
     merges = bpe.bpe_train(df, 8)
     enc = {r["doc_id"]: (r["tokens"], r["n_tokens"])
            for r in bpe.bpe_encode(df, merges).collect()}
@@ -1892,7 +1900,7 @@ def test_byte_bpe_matches_reference(spark):
     import re as _re
     from collections import Counter
 
-    from plda_spark.operators import byte_bpe as bb
+    from plda_spark.operators import bpe, byte_bpe as bb
 
     B2U = bb.bytes_to_unicode()
     # the remap is the published bijection: 94+12+82 printable
@@ -1953,14 +1961,16 @@ def test_byte_bpe_matches_reference(spark):
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    for m in (1, 4, 16):
-        for nm in (3, 10, 20):
-            got = bb.byte_bpe_train(df, nm, min_count=1, batch_merges=m,
-                                    driver_max_words=0)
-            assert got == ref_train(texts, nm), (m, nm, got)
-
-    # driver-cutover path (default) must match the reference as well
+    # driver-cutover path (default) must match the reference
     assert bb.byte_bpe_train(df, 10, min_count=1) == ref_train(texts, 10)
+    # and so must the distributed sweeps, at every batch size
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bpe, "_DRIVER_MAX_WORDS", 0)
+        for m in (1, 4, 16):
+            mp.setattr(bpe, "_BATCH_MERGES", m)
+            for nm in (3, 10, 20):
+                got = bb.byte_bpe_train(df, nm, min_count=1)
+                assert got == ref_train(texts, nm), (m, nm, got)
     merges = bb.byte_bpe_train(df, 12, min_count=1)
     enc = {
         r["doc_id"]: (r["tokens"], r["n_tokens"])
@@ -4296,6 +4306,21 @@ def test_welch_shift_and_bh_semantics(spark):
     with _pytest.raises(ValueError):
         stats.bh_fdr(tests, "test", "p", alpha=0.0)
 
+
+
+def test_welch_ttest_skips_null_values(spark):
+    """A NULL value is not an observation: group a = {1, 3, NULL} has
+    n 2 and mean 2, as in every two-group moment test; the t-test on
+    it equals the one on the same data without the NULL row."""
+    from plda_spark.operators import stats
+
+    rows = [("a", 1.0), ("a", 3.0), ("b", 2.0), ("b", 5.0), ("b", 6.0)]
+    schema = "g string, v double"
+    with_null = spark.createDataFrame(rows + [("a", None)], schema)
+    r = stats.welch_ttest(with_null, "g", "v", "a", "b").first()
+    assert (r["n_a"], r["n_b"], r["mean_a"]) == (2, 3, 2.0)
+    without = spark.createDataFrame(rows, schema)
+    assert r == stats.welch_ttest(without, "g", "v", "a", "b").first()
 
 def test_benford_and_weighted_quantiles_semantics(spark):
     """Powers of two famously follow Benford: the audit recovers the

@@ -1550,3 +1550,17 @@ def test_qdigest_ledger_matches_batch_and_replays_identically(spark, tmp_path):
     ]
     assert sorted(b for b, _, _ in rows) == [0, 1, 2]
     assert [(nodes, n) for b, nodes, n in rows if b == 2] == [([], 0)]
+
+
+def test_hist_drift_readout_persists_nothing(spark):
+    """Building and collecting the ``stream_hist_drift`` readout leaves
+    the persisted-RDD set at its baseline: the ledger's generation
+    guard scans ``run_id`` and cuts no lineage.  Ids, not counts: a GC
+    during the call may clean up RDDs that earlier tests left behind."""
+    import __spark_entry__ as entrymod
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    query = entrymod.all_queries()["stream_hist_drift"]
+    query(spark, "/root/testdata/sf0.001").collect()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()

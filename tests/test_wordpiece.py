@@ -83,12 +83,12 @@ def test_trainer_parity_with_sequential_reference(spark):
     got = wp.wordpiece_train(docs, num_merges=20, min_count=2)
     assert got["merges"] == want["merges"]
     assert got["vocab"] == want["vocab"]
-    # the round-11 driver cutover (default for bounded word tables) and
-    # the distributed sweeps (forced with driver_max_words=0) must both
+    # the driver cutover (default for bounded word tables) and the
+    # distributed sweeps (forced with _DRIVER_MAX_WORDS = 0) must both
     # match the sequential reference, merge order included
-    dist = wp.wordpiece_train(
-        docs, num_merges=20, min_count=2, driver_max_words=0
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(wp, "_DRIVER_MAX_WORDS", 0)
+        dist = wp.wordpiece_train(docs, num_merges=20, min_count=2)
     assert dist["merges"] == want["merges"]
     assert dist["vocab"] == want["vocab"]
 

@@ -6,9 +6,11 @@ from __future__ import annotations
 import importlib
 import inspect
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MODULES = [
     ("plda_spark", "Top-level: session factory, train/infer API"),
@@ -75,7 +77,7 @@ def main() -> None:
             if kind in ("class", "fn", "module"):
                 doc = (inspect.getdoc(o) or "").strip().split("\n")[0]
             out.write(f"- **`{s}`** ({kind}) — {doc}\n" if doc else f"- **`{s}`** ({kind})\n")
-    with open("docs/API.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "API.md"), "w") as f:
         f.write(out.getvalue())
     print(f"wrote docs/API.md ({len(out.getvalue())} bytes)")
 
