@@ -23,6 +23,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 __all__ = ["TOKEN_RE", "tokenize", "doc_term_counts", "doc_occurrences", "pack_docs"]
 
@@ -47,6 +48,27 @@ def tokenize(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
 def doc_term_counts(tokens: DataFrame) -> DataFrame:
     """``(doc_id, word)`` → canonical ``(doc_id, word, count)`` triples."""
     return tokens.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("int").alias("count"))
+
+
+def _int_counts(corpus: DataFrame) -> DataFrame:
+    """``corpus`` with its ``count`` column as INT, the type
+    :func:`doc_occurrences`' ``array_repeat`` takes: the one count rule
+    of ``train`` (driver and Spark paths), the CLI's ``infer`` and the
+    ``transform`` front ends.  TINYINT, SMALLINT and INT counts pass; a
+    BIGINT is cast, and a value outside INT's range fails the first
+    action that reads it, on every path, with one message (whatever
+    ``spark.sql.ansi.enabled`` says).  Any other type is refused here."""
+    t = corpus.schema["count"].dataType
+    if isinstance(t, IntegerType):
+        return corpus
+    c = F.col("count")
+    if isinstance(t, (ByteType, ShortType)):
+        return corpus.withColumn("count", c.cast("int"))
+    if isinstance(t, LongType):
+        fits = c.isNull() | c.between(-(2**31), 2**31 - 1)
+        msg = F.concat(F.lit("count out of INT range: "), c.cast("string"))
+        return corpus.withColumn("count", F.when(fits, c.cast("int")).otherwise(F.raise_error(msg)))
+    raise ValueError(f"count must be an integral column, got {t.simpleString()}")
 
 
 def doc_occurrences(corpus_ids: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..session import job_phase
 from . import kernel, train
-from .corpus import _pack_rows, doc_occurrences
+from .corpus import _int_counts, _pack_rows, doc_occurrences
 from .model import LDAModel
 from .vocab import remap_words, vocab_table
 
@@ -103,7 +103,7 @@ def transform(
     """
     _check_iterations(total_iterations, burn_in_iterations)
     spark = corpus.sparkSession
-    corpus_ids = remap_words(corpus, vocab_table(spark, model.words)).select(
+    corpus_ids = remap_words(_int_counts(corpus), vocab_table(spark, model.words)).select(
         "doc_id", "word_id", "count"
     )
     bc_nwk = spark.sparkContext.broadcast(model.nwk.astype(np.float64))
@@ -203,7 +203,7 @@ def transform_model_df(
     with no in-vocab word is omitted.
     """
     _check_iterations(total_iterations, burn_in_iterations)
-    joined = corpus.join(model_df, "word_id").select(
+    joined = _int_counts(corpus).join(model_df, "word_id").select(
         "doc_id", "word_id", "count", "topic_counts"
     )
     # Per doc: distinct words sorted by word_id; local index = position.
@@ -323,6 +323,7 @@ def _infer_to_file(
     """
     _check_iterations(total_iterations, burn_in_iterations)
     spark = corpus.sparkSession
+    corpus = _int_counts(corpus)
     cap = train._TOKENS_PER_PARTITION
     with job_phase(spark, "lda.infer", "collect"):
         # One task reads the splits in turn and stops at the cap: a limit

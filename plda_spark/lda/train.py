@@ -77,7 +77,7 @@ from pyspark.sql import functions as F
 from ..lineage import _Lineage
 from ..session import job_phase
 from . import kernel
-from .corpus import _pack_rows, pack_docs
+from .corpus import _int_counts, _pack_rows, pack_docs
 from .model import LDAModel
 from .vocab import remap_words, vocab_table
 
@@ -1121,7 +1121,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
             # train_documents path), each pass would re-run the full
             # tokenize explode + count aggregation; the checkpoint
             # materializes it ONCE (the guard agg is the first action).
-            corpus = setup.cut(corpus)
+            corpus = setup.cut(_int_counts(corpus))
             # doc_id < 0 is the internal payload-row sentinel: a negative
             # user doc_id would be excluded from every sweep AND decoded as
             # count-payload garbage into the model.  One cheap columnar agg

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .._exprs import md5_long
 from ..lineage import _Lineage
+from .graph import _collect_edges
 from .text import tokens_col
 
 __all__ = [
@@ -620,12 +621,6 @@ def hamming_band_pairs(
     )
 
 
-# An expanded edge list of at most this many rows is solved on the
-# driver; it never changes the labels (tests set it to 0 to force the
-# distributed rounds).
-_DRIVER_MAX_EDGES = 4_000_000
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -645,8 +640,9 @@ def connected_components(
     (node, label) row per vertex — never the transitive closure.
 
     Plan shape: a pair graph whose expanded edge list fits
-    ``_DRIVER_MAX_EDGES`` rows (row-count-enforced BEFORE any collect) is
-    solved driver-side with a min-root union-find — identical integer
+    ``graph._DRIVER_MAX_EDGES`` rows (``graph._collect_edges``' one
+    capped Arrow collect, the job ``dedup.connected_components:collect``)
+    is solved driver-side with a min-root union-find — identical integer
     labelling, none of the per-round scheduling overhead.  Larger
     graphs take the distributed rounds: the edge operand is
     hash-partitioned on ``src`` ONCE (and persisted pre-sorted), so
@@ -665,10 +661,10 @@ def connected_components(
         pairs.select(a.alias("src"), b.alias("dst"))
         .unionAll(pairs.select(b.alias("src"), a.alias("dst")))
         .distinct()
-        .persist()
     )
-    n_edge_rows = base.count()
-    if n_edge_rows <= _DRIVER_MAX_EDGES:
+    cuts = _Lineage()
+    base, t = _collect_edges(base, "dedup.connected_components", cuts)
+    if t is not None:
         # Near-dup pair graphs are candidate-sized — usually orders of
         # magnitude smaller than the corpus that produced them — while
         # every distributed round below pays 4 exchanges + 2 jobs of
@@ -679,19 +675,16 @@ def connected_components(
         # yields precisely the min-reachable-id labelling the rounds
         # converge to — no floating point anywhere, so the two paths
         # are value-identical by construction (parity-pinned in
-        # tests).  The bound is row-count-enforced BEFORE collecting
-        # (the knn_classify/mmr pattern); past it, the distributed
-        # rounds below are the path — this cutover never changes how
-        # a 100 TB pair graph runs.
+        # tests).  Past the cap the distributed rounds below are the
+        # path — this cutover never changes how a 100 TB pair graph
+        # runs.
+        cuts.release()
         spark = pairs.sparkSession
         id_type = pairs.schema[
             pairs.schema.names.index(a_col)
         ].dataType.simpleString()
         parent: dict = {}
-        rows = base.select("src", "dst").collect()
-        base.unpersist()
-        for r in rows:
-            u, v = r[0], r[1]
+        for u, v in zip(t.column("src").to_pylist(), t.column("dst").to_pylist()):
             if u not in parent:
                 parent[u] = u
             if v not in parent:
@@ -721,8 +714,8 @@ def connected_components(
         .sortWithinPartitions("src")
         .persist()
     )
-    edges.count()  # materialize from base's cache, then drop the base
-    base.unpersist()
+    edges.count()  # materialize from base's cut, then drop the base
+    cuts.release()
     # every label generation is a cut; each materialized generation
     # releases the ones before it, so the result reads the last alone
     held = _Lineage()

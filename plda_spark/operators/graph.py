@@ -11,8 +11,11 @@ when sinks exist (rank ORDER is unaffected).
 The operators share private edge builders (``_canonical_edges``,
 ``_symmetric_edges``, ``_degrees``, ``_oriented_pairs``) and one round
 loop (``_rounds``) whose superseded cuts are released through
-:class:`plda_spark.lineage._Lineage`; docs/SCALING.md "Graph operators"
-lists who uses which.
+:class:`plda_spark.lineage._Lineage`.  The PageRank pair and
+``dedup.connected_components`` share one driver cutover: an edge list of
+at most ``_DRIVER_MAX_EDGES`` rows is collected once
+(``_collect_edges``) and solved in the driver process.
+docs/SCALING.md "Graph operators" lists who uses which.
 
 No reference parity (the reference is an LDA trainer, plda); this is an
 engine extension (SURVEY.md §2.3).
@@ -22,10 +25,15 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..lineage import _Lineage
+from ..session import job_phase
 
 __all__ = [
     "pagerank",
@@ -44,6 +52,37 @@ __all__ = [
     "degree_centralization",
 ]
 
+# An edge list of at most this many rows is solved on the driver by
+# every operator with a driver path (pagerank, personalized_pagerank,
+# dedup.connected_components); the path never changes the result
+# (tests set it to 0 to force the distributed loops).
+_DRIVER_MAX_EDGES = 4_000_000
+
+
+def _collect_edges(
+    edges: DataFrame,
+    operator: str,
+    held: _Lineage,
+    cols: Sequence[Column | str] = ("src", "dst"),
+) -> tuple[DataFrame, pa.Table | None]:
+    """The driver cutover's one bounded collect.  Cuts ``edges`` lazily in
+    ``held`` (the caller releases it) and collects ``cols`` of at most
+    ``_DRIVER_MAX_EDGES`` + 1 of the cut's rows through Arrow, in jobs
+    labelled ``<operator>:collect``.  Returns the cut and the rows when
+    they fit the cap, else the cut and None: past the cap the caller's
+    distributed path reads the edges this scan saved instead of
+    scanning them again."""
+    with job_phase(edges.sparkSession, operator, "collect"):
+        # A lazy cut runs only the plan's shuffle-map stages now; the
+        # collect's one task then computes and saves the cut's
+        # partitions in turn and stops at the cap, where a limit over
+        # several partitions would shuffle each one's first cap + 1
+        # rows.  (A persist would cost AQE a third job, to build the
+        # cache.)
+        edges = held.cut(edges)
+        t = edges.select(*cols).coalesce(1).limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    return edges, (t if t.num_rows <= _DRIVER_MAX_EDGES else None)
+
 
 def pagerank(
     edges: DataFrame,
@@ -57,15 +96,21 @@ def pagerank(
     ``r_{t+1}(v) = (1-d)/N + d * Σ_{u→v} r_t(u)/outdeg(u)``, starting
     from the uniform vector.  Returns ``(node, rank)``.
 
-    Scale shape (Pregel-style, holds at any |E|): per iteration exactly
-    ONE shuffle join of edges with the |V|-row rank vector on ``src``
-    plus one ``groupBy(dst)`` partial-aggregated sum — the edge set
-    (with outdegrees) is the only big operand: it is persisted for the
-    run and released before returning, exactly the
-    ``connected_components`` discipline, so no iteration re-executes
-    the edge scan or the outdeg aggregation.  Only the scalar |V|
-    touches the driver.  The loop runs eagerly (the result is a
-    materialized localCheckpoint) with lineage cut every 5 iterations.
+    An edge list of at most ``_DRIVER_MAX_EDGES`` rows is collected once
+    (``_collect_edges``) and iterated in numpy on the driver: the result
+    is a local relation, recomputable, with no localCheckpoint behind it.
+    Past the cap the loop is distributed (Pregel-style, holds at any
+    |E|): per iteration exactly ONE shuffle join of edges with the
+    |V|-row rank vector on ``src`` plus one ``groupBy(dst)``
+    partial-aggregated sum — the edge set (with outdegrees) is the only
+    big operand: it is persisted for the run and released before
+    returning, so no iteration re-executes the edge scan or the outdeg
+    aggregation.  Only the scalar |V| touches the driver.  That loop
+    runs eagerly (the result is a materialized localCheckpoint) with
+    lineage cut every 5 iterations.  Both paths count duplicate edges
+    and self-loops in ``outdeg``, drop an edge with a NULL source, lose
+    the mass sent to a NULL destination, and give a NULL node (one
+    node, counted in N) only the teleport term.
     """
     return _pagerank(
         edges, n_iter, damping, src_col, dst_col,
@@ -80,23 +125,96 @@ def _pagerank(
     src_col: str,
     dst_col: str,
     empty_msg: str,
-    restart: Column | None = None,
+    restart: Callable[[Column], Column] | None = None,
 ) -> DataFrame:
     """The power iteration behind both PageRank operators.  ``restart``
-    is the per-node restart probability p(v) (None: uniform 1/|V|); it
-    sets the initial ranks and the teleport term of every step."""
+    maps a node column to its restart probability p(v) (None: uniform
+    1/|V|); it sets the initial ranks and the teleport term of every
+    step."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
+    node = _nodes(e).schema["node"]
+    cols = [F.col("src").cast(node.dataType), F.col("dst").cast(node.dataType)]
+    if restart is not None:
+        cols += [restart(F.col("src")).alias("p_src"), restart(F.col("dst")).alias("p_dst")]
+    held = _Lineage()
+    try:
+        e, t = _collect_edges(e, "graph.pagerank", held, cols)
+        if t is not None:
+            return _pagerank_local(e.sparkSession, t, node, n_iter, damping,
+                                   empty_msg, restart is not None)
+        return _pagerank_rounds(e, n_iter, damping, empty_msg, restart)
+    finally:
+        held.release()
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """``(node)``: every distinct endpoint of the ``(src, dst)`` edges."""
+    return (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
+
+
+def _pagerank_local(
+    spark: SparkSession,
+    t: pa.Table,
+    node: StructField,
+    n_iter: int,
+    damping: float,
+    empty_msg: str,
+    personalized: bool,
+) -> DataFrame:
+    """The power iteration in numpy over collected ``(src, dst[, p_src,
+    p_dst])`` rows into a ``(node, rank)`` frame whose ``node`` field is
+    ``node``; the same arithmetic as :func:`_pagerank_step`, so ranks
+    agree with the distributed loop up to the summation order."""
+    m = t.num_rows
+    if m == 0:
+        raise ValueError(empty_msg)
+    enc = pa.concat_arrays(
+        [t.column("src").combine_chunks(), t.column("dst").combine_chunks()]
+    ).dictionary_encode()
+    # node ids: the distinct non-NULL values, then NULL (one node) if any
+    nodes, null = enc.dictionary, len(enc.dictionary)
+    if enc.indices.null_count:
+        nodes = pa.concat_arrays([nodes, pa.nulls(1, nodes.type)])
+    n = len(nodes)
+    idx = pc.fill_null(enc.indices, null).to_numpy().astype(np.int64)
+    s_all, d_all = idx[:m], idx[m:]
+    has_src = s_all != null
+    outdeg = np.bincount(s_all[has_src], minlength=n).astype(np.float64)
+    keep = has_src & (d_all != null)
+    s, d = s_all[keep], d_all[keep]
+    if personalized:
+        p = np.zeros(n)
+        p[s_all] = t.column("p_src").to_numpy()
+        p[d_all] = t.column("p_dst").to_numpy()
+        teleport, rank = (1.0 - damping) * p, p
+    else:
+        teleport, rank = (1.0 - damping) / n, np.full(n, 1.0 / n)
+    for _ in range(n_iter):
+        rank = teleport + damping * np.bincount(d, weights=rank[s] / outdeg[s], minlength=n)
+    schema = StructType([node, StructField("rank", DoubleType(), False)])
+    return spark.createDataFrame(pa.table({"node": nodes, "rank": rank}), schema)
+
+
+def _pagerank_rounds(
+    e: DataFrame,
+    n_iter: int,
+    damping: float,
+    empty_msg: str,
+    restart: Callable[[Column], Column] | None,
+) -> DataFrame:
+    """The distributed power iteration over the ``(src, dst)`` edges
+    ``e``, a cut."""
+    nodes = _nodes(e)
     if restart is not None:
-        nodes = nodes.select("node", restart.alias("__p"))
+        nodes = nodes.select("node", restart(F.col("node")).alias("__p"))
     setup = _Lineage()
     nodes = setup.cut(nodes, eager=True)
     # (src, dst, outdeg) — the per-iteration join operand, persisted for
@@ -299,19 +417,27 @@ def personalized_pagerank(
     (what ranks "nodes related to THESE" rather than globally central
     ones).  Returns ``(node, rank)``.
 
-    Scale shape: identical to :func:`pagerank` — per iteration ONE
-    equi-join of the persisted (src, dst, outdeg) edge operand with the
-    |V|-row rank vector plus one partial-aggregated sum; the seed set
-    is takedown-sized and rides the plan as an ``isin`` literal.  Like
-    the uniform variant (and its DuckDB twin), dangling-node mass is
+    Scale shape: identical to :func:`pagerank` — within
+    ``_DRIVER_MAX_EDGES`` edges a numpy power iteration on the driver
+    (a local relation, recomputable, no localCheckpoint); past it, per
+    iteration ONE equi-join of the persisted (src, dst, outdeg) edge
+    operand with the |V|-row rank vector plus one partial-aggregated
+    sum, the result a materialized localCheckpoint.  ``p(v)`` is
+    Spark's ``isin(seeds)`` on both paths (the driver path collects it
+    beside each edge): duplicate seeds count in ``|seeds|``, seeds
+    absent from the graph take their share of the restart mass with
+    them, and a NULL node restarts with 0.  The seed set is
+    takedown-sized and rides the plan as an ``isin`` literal.  Like the
+    uniform variant (and its DuckDB twin), dangling-node mass is
     dropped, not redistributed.
     """
     seeds = list(seeds)
     if not seeds:
         raise ValueError("seeds must be non-empty")
-    p = F.when(
-        F.col("node").isin(seeds), F.lit(1.0 / len(seeds))
-    ).otherwise(F.lit(0.0))
+
+    def p(node: Column) -> Column:
+        return F.when(node.isin(seeds), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
+
     return _pagerank(
         edges, n_iter, damping, src_col, dst_col,
         "personalized_pagerank: empty edge set", restart=p,

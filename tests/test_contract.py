@@ -35,8 +35,8 @@ EXECUTES_ON_BUILD = {
     "ml_kmeans_assign",
     "curation_filters",
     "dedup_semantic",   # driver-sampled k-means fit + eager CC loop
-    "graph_pagerank",   # eager power iteration (|V| scalar + checkpoints)
-    "graph_ppr",        # same eager loop, personalized restart
+    "graph_pagerank",   # capped edge collect, then numpy power iteration
+    "graph_ppr",        # same collect, personalized restart
     "events_markov_attribution",  # bounded transition-table collect + driver solve
     "source_fixed_width_roundtrip",  # writes the fixed-width file it reads
 }

@@ -71,6 +71,15 @@ SPELLINGS = {
         re.escape('.filter(F.col("item_a")<F.col("item_b"))'),
         {("plda_spark/operators/events.py", "_basket_pairs"): 1},
     ),
+    # the graph operators' driver cutover: one cap, one capped collect
+    "driver edge cap": (
+        re.escape("_DRIVER_MAX_EDGES="),
+        {("plda_spark/operators/graph.py", "<module>"): 1},
+    ),
+    "bounded edge collect": (
+        re.escape(".limit(_DRIVER_MAX_EDGES+1)"),
+        {("plda_spark/operators/graph.py", "_collect_edges"): 1},
+    ),
     "seconds since the epoch": (
         re.escape('cast("timestamp_ltz"))/F.lit(1_000_000.0)'),
         {("plda_spark/_exprs.py", "epoch_secs"): 1},

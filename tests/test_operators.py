@@ -656,8 +656,10 @@ def test_connected_components(spark):
     # the driver union-find (default for bounded pair graphs) and the
     # distributed rounds (forced with _DRIVER_MAX_EDGES = 0) must agree
     # row-for-row — the driver cutover's parity pin
+    from plda_spark.operators import graph
+
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+        mp.setattr(graph, "_DRIVER_MAX_EDGES", 0)
         dist = {r["doc_id"]: r["component"]
                 for r in dedup.connected_components(df).collect()}
     assert dist == comp
@@ -671,6 +673,9 @@ def test_connected_components(spark):
     ("bfs_distances", 1),
     ("connected_components", 1),
     ("kcenter_select", 0),
+    ("pagerank_driver", 0),
+    ("personalized_pagerank_driver", 0),
+    ("connected_components_driver", 0),
 ])
 def test_iterative_operators_release_superseded_cuts(spark, monkeypatch, case, most):
     """An iterative operator releases every lineage cut its result no
@@ -678,7 +683,9 @@ def test_iterative_operators_release_superseded_cuts(spark, monkeypatch, case, m
     own checkpoint (``most``) is still persisted.  Checked without
     forcing a GC, so a release that only drops the Python handle would
     fail.  Ids, not counts: a GC during the call may clean up RDDs that
-    earlier tests left behind."""
+    earlier tests left behind.  The graph operators with a driver path
+    run their distributed loops (cap 0) unless the case ends in
+    ``_driver``; the driver path leaves nothing persisted."""
     from plda_spark.operators import graph, sampling
 
     jsc = spark.sparkContext._jsc
@@ -708,10 +715,10 @@ def test_iterative_operators_release_superseded_cuts(spark, monkeypatch, case, m
             k=4,
         ),
     }
-    # connected_components' iterative path is its distributed rounds
-    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+    if not case.endswith("_driver"):
+        monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
     before = persisted()
-    calls[case]().collect()
+    calls[case.removesuffix("_driver")]().collect()
     assert len(persisted() - before) <= most, case
 
 
@@ -1293,17 +1300,14 @@ def test_rolling_daily_counts_window_semantics(spark):
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
+    """On the driver path (the default for a bounded edge list) and the
+    distributed loop (cap 0)."""
     import numpy as np
 
     from plda_spark.operators import graph
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)]  # node 3: no in-links
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["rank"]
-        for r in graph.pagerank(df, n_iter=12, damping=0.85).collect()
-    }
-
     n, d = 4, 0.85
     out = {0: 2, 1: 1, 2: 1, 3: 1}
     r = np.full(n, 1.0 / n)
@@ -1312,10 +1316,17 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         for s, t in edges:
             nxt[t] += d * r[s] / out[s]
         r = nxt
-    for v in range(n):
-        assert got[v] == pytest.approx(r[v], abs=1e-12), v
-    # node 2 has the most in-links -> highest rank; 3 has none -> lowest
-    assert max(got, key=got.get) == 2 and min(got, key=got.get) == 3
+    for cap in (graph._DRIVER_MAX_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "_DRIVER_MAX_EDGES", cap)
+            got = {
+                row["node"]: row["rank"]
+                for row in graph.pagerank(df, n_iter=12, damping=0.85).collect()
+            }
+        for v in range(n):
+            assert got[v] == pytest.approx(r[v], abs=1e-12), (cap, v)
+        # node 2 has the most in-links -> highest rank; 3 has none -> lowest
+        assert max(got, key=got.get) == 2 and min(got, key=got.get) == 3
 
     with pytest.raises(ValueError):
         graph.pagerank(df, n_iter=0)
@@ -1337,9 +1348,10 @@ def test_key_skew_report(spark):
 
 
 def test_pagerank_random_graphs_match_numpy(spark):
-    """Randomized (seeded) graphs: the distributed power iteration must
-    track the dense numpy iteration to float precision, including
-    dangling nodes and multi-component graphs."""
+    """Randomized (seeded) graphs: the power iteration, on the driver path
+    and the distributed loop (cap 0), must track the dense numpy
+    iteration to float precision, including dangling nodes and
+    multi-component graphs."""
     from plda_spark.operators import graph
 
     for seed in (0, 1, 2):
@@ -1348,10 +1360,6 @@ def test_pagerank_random_graphs_match_numpy(spark):
         m = int(rng.integers(n, 3 * n))
         edges = list({(int(a), int(b)) for a, b in rng.integers(0, n, (m, 2)) if a != b})
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r["node"]: r["rank"]
-            for r in graph.pagerank(df, n_iter=6, damping=0.85).collect()
-        }
         nodes = sorted({v for e in edges for v in e})
         idx = {v: i for i, v in enumerate(nodes)}
         nn, d = len(nodes), 0.85
@@ -1362,9 +1370,101 @@ def test_pagerank_random_graphs_match_numpy(spark):
             for s, t in edges:
                 nxt[idx[t]] += d * r[idx[s]] / out[s]
             r = nxt
-        assert set(got) == set(nodes)
-        for v in nodes:
-            assert got[v] == pytest.approx(r[idx[v]], abs=1e-10), (seed, v)
+        for cap in (graph._DRIVER_MAX_EDGES, 0):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(graph, "_DRIVER_MAX_EDGES", cap)
+                got = {
+                    row["node"]: row["rank"]
+                    for row in graph.pagerank(df, n_iter=6, damping=0.85).collect()
+                }
+            assert set(got) == set(nodes)
+            for v in nodes:
+                assert got[v] == pytest.approx(r[idx[v]], abs=1e-10), (seed, cap, v)
+
+
+# Edge lists on which the driver path must match the distributed loop:
+# (schema, edges, ppr seeds).  NULL ids, duplicate edges, self-loops,
+# dangling nodes, string ids, and seeds repeated or absent from the graph.
+_PAGERANK_GRAPHS = {
+    "duplicates": ("src long, dst long",
+                   [(0, 1), (0, 1), (0, 2), (1, 2), (2, 0), (2, 0)], [0, 0, 1]),
+    "self_loops": ("src long, dst long",
+                   [(0, 0), (0, 1), (1, 1), (1, 2), (2, 0)], [2, 7]),
+    "dangling": ("src long, dst long",
+                 [(0, 1), (1, 2), (0, 3), (4, 0), (5, 6)], [4, 99]),
+    "null_src": ("src long, dst long",
+                 [(0, 1), (None, 1), (None, 2), (1, 0), (2, 1)], [1]),
+    "null_dst": ("src int, dst long",
+                 [(0, 1), (0, None), (1, None), (1, 0), (2, 1)], [0, 2, 2]),
+    "strings": ("src string, dst string",
+                [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", None)],
+                ["a", "zz", "a"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PAGERANK_GRAPHS))
+def test_pagerank_driver_path_matches_spark(spark, case):
+    """Within the cap both PageRank operators run in numpy on the driver;
+    with the cap forced to 0 they run the distributed loop.  The two give
+    the same node set, the same schema, and ranks equal up to the
+    summation order."""
+    from plda_spark.operators import graph
+
+    schema, edges, seeds = _PAGERANK_GRAPHS[case]
+    e = spark.createDataFrame(edges, schema)
+    calls = {
+        "pagerank": lambda n: graph.pagerank(e, n_iter=n),
+        "personalized_pagerank": lambda n: graph.personalized_pagerank(e, seeds, n_iter=n),
+    }
+    for name, call in calls.items():
+        for n_iter in (1, 12):
+            got = {}
+            for cap in (graph._DRIVER_MAX_EDGES, 0):
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(graph, "_DRIVER_MAX_EDGES", cap)
+                    out = call(n_iter)
+                    got[cap] = (out.schema, {r["node"]: r["rank"] for r in out.collect()})
+            (s_drv, r_drv), (s_spark, r_spark) = got.values()
+            assert s_drv == s_spark, (name, n_iter)
+            assert set(r_drv) == set(r_spark), (name, n_iter)
+            for v, rank in r_spark.items():
+                assert r_drv[v] == pytest.approx(rank, rel=1e-12, abs=0), (name, n_iter, v)
+
+
+def test_graph_driver_paths_run_labelled_collect_jobs(spark):
+    """A warm 100-node ``pagerank`` runs at most 3 Spark jobs before it
+    returns, all of them its one bounded collect, labelled
+    ``graph.pagerank:collect`` in the status store; a bounded
+    ``connected_components`` labels its collect
+    ``dedup.connected_components:collect``.  The caller's job group and
+    description come back unchanged."""
+    from plda_spark.operators import graph
+
+    from .test_train import _job_labels
+
+    ids = spark.range(400)
+    e = ids.select((F.col("id") * 7 % 100).alias("src"), (F.col("id") * 13 % 100).alias("dst"))
+    pairs = ids.select(F.col("id").alias("doc_a"), (F.col("id") % 37).alias("doc_b"))
+    calls = {
+        "graph.pagerank": lambda: graph.pagerank(e, n_iter=3),
+        "dedup.connected_components": lambda: dedup.connected_components(pairs),
+    }
+    sc = spark.sparkContext
+    labels = {}
+    try:
+        for op, call in calls.items():
+            call()
+            sc.setJobGroup(op, "caller")
+            call()
+            labels[op] = _job_labels(spark, op)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["node"] for r in graph.pagerank(e, n_iter=3).collect()} == set(range(100))
+    assert 0 < len(labels["graph.pagerank"]) <= 3, labels
+    for op, got in labels.items():
+        assert got and set(got) == {f"{op}:collect"}, labels
 
 
 def test_keep_best_matches_pandas_reference(spark):
@@ -1425,11 +1525,19 @@ def test_semantic_dedup_transitive_clusters(spark):
 
 
 def test_pagerank_empty_edges_raises(spark):
+    """The same ValueError at call time on the driver path and the
+    distributed loop (a cap of -1: no edge list, not even an empty one,
+    fits it)."""
     from plda_spark.operators import graph
 
     empty = spark.createDataFrame([], "src long, dst long")
-    with pytest.raises(ValueError, match="empty edge set"):
-        graph.pagerank(empty, n_iter=2)
+    for cap in (graph._DRIVER_MAX_EDGES, -1):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "_DRIVER_MAX_EDGES", cap)
+            with pytest.raises(ValueError, match=r"^pagerank: empty edge set \(no nodes\)$"):
+                graph.pagerank(empty, n_iter=2)
+            with pytest.raises(ValueError, match=r"^personalized_pagerank: empty edge set$"):
+                graph.personalized_pagerank(empty, [0], n_iter=2)
 
 
 def test_zscore_outliers_hand_computed(spark):

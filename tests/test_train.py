@@ -1068,3 +1068,38 @@ def test_chain_ignores_shuffle_partitions(spark, monkeypatch, path):
         spark.conf.set(conf, old)
     assert np.array_equal(same.raw_model.nwk, other.raw_model.nwk)
     assert same.log_likelihood == other.log_likelihood
+
+
+@pytest.mark.parametrize("path", sorted(_PATHS))
+def test_bigint_counts_train_and_transform(spark, monkeypatch, path):
+    """A BIGINT ``count`` trains on the driver and on the Spark path and
+    scores through ``transform`` exactly as the same INT counts do; a
+    count past INT's range fails each of them with one message, and a
+    non-integral count is refused when the frame is built."""
+    from pyspark.sql import functions as F
+
+    from plda_spark.lda.infer import transform
+
+    _on_path(monkeypatch, path)
+    corpus = synthetic_corpus(spark, n_docs=30, doc_len=20)
+    wide = corpus.withColumn("count", F.col("count").cast("long"))
+    cfg = TrainConfig(num_topics=3, total_iterations=2, burn_in_iterations=0, seed=7,
+                      num_partitions=2, compute_likelihood=True)
+    narrow_res, wide_res = train(corpus, cfg), train(wide, cfg)
+    assert np.array_equal(narrow_res.model.nwk, wide_res.model.nwk)
+    assert narrow_res.log_likelihood == wide_res.log_likelihood
+
+    def theta(df):
+        return sorted((r["doc_id"], r["topic_weights"])
+                      for r in transform(narrow_res.model, df, 4, 2, seed=3).collect())
+
+    assert theta(wide) == theta(corpus)
+
+    huge = wide.withColumn("count", F.when(F.col("doc_id") == 3, F.lit(3_000_000_000))
+                           .otherwise(F.col("count")))
+    with pytest.raises(Exception, match="count out of INT range: 3000000000"):
+        train(huge, cfg)
+    with pytest.raises(Exception, match="count out of INT range: 3000000000"):
+        transform(narrow_res.model, huge, 4, 2).collect()
+    with pytest.raises(ValueError, match="count must be an integral column, got double"):
+        train(corpus.withColumn("count", F.col("count").cast("double")), cfg)
